@@ -152,7 +152,7 @@ def _labels_for(
     ).where(F.col("u") != F.col("v")).persist()
 
     if driver_max_edges and (
-        bounded_row_probe(e.select("u"), driver_max_edges, max_partitions=None)
+        bounded_row_probe(e.select("u"), driver_max_edges, always_count=True)
         <= driver_max_edges
     ):
         pairs = _driver_label_pairs(e)

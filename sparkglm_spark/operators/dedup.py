@@ -7,8 +7,12 @@ first for 100 TB:
 - shingle/jaccard   inverted index (shingle → docs) self-join; frequent-
                     shingle cap bounds the pair blow-up (standard prefix-
                     filtering trick)
-- minhash_lsh       explode-shingles → 1 groupBy for signatures → band
-                    bucket join for candidates → exact-Jaccard verification
+- minhash_lsh       one persisted per-doc shingle-set frame feeds
+                    everything: zero-shuffle Arrow signatures → band
+                    bucket self-join for candidates → exact-Jaccard
+                    verification (packed bitmaps for tiny vocabularies,
+                    candidate ⋈ exploded sets otherwise); tiny-vocab small
+                    corpora skip LSH for exact all-pairs bitmaps
 - simhash           64-bit sign-aggregated token-hash signature, JVM-side
                     (64 sum aggs), chunk-banded candidate join for
                     Hamming ≤ 3
@@ -24,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparkglm_spark.plans.caching import CacheRegistry
+from sparkglm_spark.plans.partitioning import ensure_parallel, too_big_to_probe
 
 # Caches persisted by the pair-finding operators for intra-plan reuse
 # (probe → strategy → verification all read the same shingle scan); each
@@ -123,8 +128,7 @@ def exact_dedup_hashed(
     as a broadcast anti-join — the text column never enters an exchange
     (plan-asserted in tests/test_plans.py). Same winners as `exact_dedup`
     on the text column; `key_col` must be unique."""
-    drop = _dedup_drop_list(df, _content_fp(df, [text_col]), key_col)
-    return _drop_keys(df, drop, key_col, broadcast_drop_list)
+    return exact_dedup(df, [text_col], key_col, broadcast_drop_list)
 
 
 def duplicate_groups(
@@ -216,8 +220,6 @@ def shingles(
     the explode), which lets pair-join consumers size-prefilter WITHOUT a
     per-doc sizes join (at scale, that join is a corpus-sized shuffle or
     an impossible broadcast)."""
-    from sparkglm_spark.plans.partitioning import ensure_parallel
-
     # tiny inputs arrive as one split → the whole shingle/signature chain
     # would run on one core; fan out first (no-op at real scale)
     pre = ensure_parallel(df).select(
@@ -319,15 +321,7 @@ def jaccard_pairs(
         )
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    return (
-        common.withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_at_least(common, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -393,63 +387,55 @@ def minhash_signatures(
 def minhash_lsh_candidates(
     sig: DataFrame, num_perm: int = 128, bands: int = 32, distinct: bool = True
 ) -> DataFrame:
-    """Band the signature (bands × rows_per_band = num_perm), bucket-join:
-    docs sharing any band bucket are candidates. Pairs via self-join on
-    (band, bucket) — the classic LSH plan; bucket key is a hash of the band
-    slice so the shuffle carries 16 bytes, not the slice.
+    """Band the wide signature (`minhash_signatures`' mh_0..mh_{num_perm-1}
+    columns; bands × rows_per_band = num_perm) and bucket-join: docs
+    sharing any band bucket are candidates. The columns pack into one
+    `sig` array and go through the same band-bucket self-join as the
+    planner's array signatures (`_lsh_candidates_from_sigarr`).
 
     `distinct=False` skips the cross-band pair dedup shuffle — correct (and
     much cheaper) when the downstream verifier is a map-side filter that
     dedups its (tiny) output instead of its (huge) input."""
-    _require_banding(num_perm, bands)
-    r = num_perm // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(*[F.col(f"mh_{bi * r + j}") for j in range(r)]).alias("bucket"),
-            )
-            for bi in range(bands)
-        ]
+    sigarr = sig.select(
+        "id", F.array(*[F.col(f"mh_{i}") for i in range(num_perm)]).alias("sig")
     )
-    buckets = sig.select("id", F.explode(band_structs).alias("bb")).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    # materialize before the self-join: otherwise BOTH join sides recompute
-    # the full signature aggregation (the most expensive upstream stage).
-    # The bucket table is tiny — bands × docs rows of (id, band, bucket).
-    buckets = _op_persist(buckets)
-    buckets.count()
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
+    return _lsh_candidates_from_sigarr(sigarr, num_perm, bands, distinct)
+
+
+def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) rows with jaccard ≥ threshold from a pair
+    frame carrying the intersection `inter` and the set sizes sz_a/sz_b:
+    |∩| / (|A|+|B|−|∩|) over exact integer counts, one final division."""
+    return (
+        pairs.withColumn(
+            "jaccard",
+            F.col("inter").cast("double")
+            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
-    return pairs.distinct() if distinct else pairs
 
 
 def _verify_pairs_by_shingle_join(
-    cand: DataFrame, sh: DataFrame, threshold: float
+    cand: DataFrame, sets: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact-Jaccard verification via the inverted index: candidate pairs ⋈
-    shingles. Cost ∝ |candidates| × shingles/doc — the scalable path when
-    LSH prunes well (large-vocab corpora: candidates ≈ output).
+    the exploded `_shingle_sets` frame. Cost ∝ |candidates| × shingles/doc
+    — the scalable path when LSH prunes well (large-vocab corpora:
+    candidates ≈ output).
 
     Candidates are SIZE-PREFILTERED before the expensive shingle join
     (r6): jaccard ≥ t forces min(|A|,|B|)/max ≥ t, so joining the two
-    per-doc sizes onto each candidate and comparing two ints eliminates
+    per-doc sizes (`size(shingles)`, a projection of the sets — no
+    aggregation) onto each candidate and comparing two ints eliminates
     size-mismatched pairs from the |candidates| × shingles/doc work —
     exact, never drops an eligible pair. The sizes ride the grouping keys
     through the intersection count, so they are joined once, not twice."""
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.select(F.col("id").alias("id_a"), "shingle")
-    b = sh.select(F.col("id").alias("id_b"), "shingle")
+    sizes = sets.select("id", F.size("shingles").alias("sz"))
+    sh = sets.select("id", F.explode("shingles").alias("shingle"))
+    a = sh.withColumnRenamed("id", "id_a")
+    b = sh.withColumnRenamed("id", "id_b")
     # per-doc sizes are corpus-sized: no forced broadcast (AQE decides)
     cand2 = (
         cand.join(sizes.withColumnsRenamed({"id": "id_a", "sz": "sz_a"}), "id_a")
@@ -462,55 +448,7 @@ def _verify_pairs_by_shingle_join(
         .groupBy("id_a", "id_b", "sz_a", "sz_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def _bitmap_table(sh: DataFrame, vocab_size: int) -> tuple[DataFrame, int]:
-    """Per-doc shingle-set bitmaps: (id, sz, bm: array<long> of ceil(V/64)
-    words). The vocab is gated tiny (≤ _BITMAP_MAX_VOCAB rows): collect +
-    index it on the driver instead of a no-partition global window (which
-    plans a single-partition WindowExec and floods the log with
-    warnings)."""
-    L = (vocab_size + 63) // 64
-    spark = sh.sparkSession
-    vocab_rows = sorted(r[0] for r in sh.select("shingle").distinct().collect())
-    if len(vocab_rows) > vocab_size:
-        # vocab_size sizes the packed-long array; indices past L·64 would
-        # be SILENTLY dropped by the packer below. A planner that probed
-        # the vocab Python-side can only under-size it if the input frame
-        # changed between evaluations — fail loudly instead.
-        raise ValueError(
-            f"bitmap packer sized for {vocab_size} shingles but the table "
-            f"has {len(vocab_rows)} — the input DataFrame changed between "
-            "the planner's probe and execution (nondeterministic source?); "
-            "persist it first"
-        )
-    vocab = F.broadcast(
-        spark.createDataFrame(
-            [(s, i) for i, s in enumerate(vocab_rows)], "shingle string, idx int"
-        )
-    )
-    bm = (
-        sh.join(vocab, "shingle")
-        .groupBy("id")
-        .agg(F.collect_set("idx").alias("idxs"))
-        .selectExpr(
-            "id",
-            "size(idxs) AS sz",
-            f"transform(sequence(0, {L - 1}), w -> aggregate("
-            "  filter(idxs, i -> int(i / 64) = w),"
-            "  0L, (acc, i) -> acc | shiftleft(1L, int(i % 64)))) AS bm",
-        )
-    )
-    return bm, L
+    return _jaccard_at_least(inter, threshold)
 
 
 def _popcount_inter_expr(L: int) -> Column:
@@ -527,12 +465,10 @@ def _shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
     slicing over the whole corpus owned most of the minhash runtime and
     JVM codegen does the identical set ~5× faster). Sorted for
     deterministic array order; docs with no shingles (len < n) are
-    excluded, matching the explode-based `shingles` path. The probed
-    planner persists this frame and derives BOTH the vocab probe and the
-    bitmap table from it, so the shingling runs once, not once per
-    consumer."""
-    from sparkglm_spark.plans.partitioning import ensure_parallel
-
+    excluded, matching the explode-based `shingles` path.
+    `minhash_dedup_pairs` persists this frame as its ONE corpus-sized
+    cache: the vocab probe, signatures, bitmaps and the inverted-index
+    verify all derive from it, so the shingling runs once."""
     pre = ensure_parallel(df).select(
         F.col(id_col).alias("id"), F.lower(F.col(text_col)).alias("__t")
     )
@@ -612,11 +548,12 @@ def _signatures_from_sets(
 def _lsh_candidates_from_sigarr(
     sigarr: DataFrame, num_perm: int = 128, bands: int = 32, distinct: bool = True
 ) -> DataFrame:
-    """`minhash_lsh_candidates` over array signatures: band-bucket
-    self-join on (id, band, bucket) — 16-byte keys, buckets persisted so
-    both join sides read one computed table. Same pair semantics as the
-    wide-column form (bucket VALUES differ — array vs multi-column
-    xxhash64 — but the join is on slice identity either way)."""
+    """LSH candidates from (id, sig array<long>) signatures: docs sharing
+    any band bucket. Pairs via self-join on (band, bucket) — the classic
+    LSH plan; the bucket key is a hash of the band slice so the shuffle
+    carries 16 bytes, not the slice. The bucket table is persisted before
+    the self-join: otherwise BOTH join sides recompute the signatures
+    (the most expensive upstream stage); it is tiny — bands × docs rows."""
     buckets = _op_persist(_band_buckets(sigarr, num_perm, bands))
     buckets.count()
     a = buckets.alias("a")
@@ -630,30 +567,32 @@ def _lsh_candidates_from_sigarr(
     return pairs.distinct() if distinct else pairs
 
 
-def _allpairs_by_bitmap_from_sets(
+def _bitmap_pairs_from_sets(
     sets: DataFrame,
-    threshold: float,
     vocab: list[str],
-    id_type: str,
+    threshold: float,
+    cand: DataFrame | None = None,
+    broadcast_bitmaps: bool = True,
 ) -> DataFrame:
-    """EXACT all-pairs Jaccard — the cost-based plan when LSH banding
-    degenerates. On a tiny shingle vocabulary the possible shingle sets are
-    few, docs collide in nearly every band, and LSH candidate generation
-    EXCEEDS the full pair count (measured on the sf0.1 documents corpus,
-    vocab=377: 59.2M LSH candidate pairs vs 12.5M total pairs). All-pairs
-    is then strictly cheaper AND exact.
+    """Exact Jaccard over packed per-doc shingle bitmaps — the plan for
+    tiny vocabularies (≤ _BITMAP_MAX_VOCAB), where each doc's set packs
+    into ceil(V/64) longs and |A∩B| is a handful of AND+popcount ops per
+    pair: no join explosion, no per-pair hash set.
 
-    Bitmaps pack each doc's (already-extracted, cached) shingle set into
-    ceil(V/64) longs against the driver-collected vocab — no shuffle.
-    Pairing is a broadcast nested-loop join with a codegen AND+popcount
-    filter — the whole operator is shuffle-free."""
-    if not vocab:
-        # no doc has any shingle (all texts shorter than n) → no pairs;
-        # L = 0 would otherwise build an empty popcount expression
-        spark = sets.sparkSession
-        return spark.createDataFrame(
-            [], f"id_a {id_type}, id_b {id_type}, jaccard double"
-        )
+    Bitmaps come from ONE Arrow pass over the cached `_shingle_sets` frame
+    against the driver-collected vocab — no shuffle. Then:
+      - `cand` None → EXACT all-pairs: a broadcast nested-loop join with
+        the size prefilter in the join condition. The cost-based plan when
+        LSH banding degenerates: on a tiny vocab the possible shingle sets
+        are few, docs collide in nearly every band, and LSH candidate
+        generation EXCEEDS the full pair count (sf0.1 documents corpus,
+        vocab=377: 59.2M LSH candidate pairs vs 12.5M total pairs);
+      - `cand` given → verify those candidates. With `broadcast_bitmaps`
+        (the bitmap table fits the broadcast budget) verification is
+        map-side — two broadcast hash joins + a codegen popcount filter —
+        and the pair dedup runs on the (tiny) OUTPUT, so the caller can
+        skip the cross-band candidate `distinct` shuffle."""
+    id_type = sets.schema["id"].dataType.simpleString()
     L = (len(vocab) + 63) // 64
     index = {s: i for i, s in enumerate(vocab)}
 
@@ -676,6 +615,8 @@ def _allpairs_by_bitmap_from_sets(
             )
             codes = flat.map(index)
             if codes.isna().any():
+                # an index past L·64 would be silently dropped: the vocab
+                # sizes the packed array, so a mismatch must fail loudly
                 raise ValueError(
                     "shingle absent from the planner's vocab scan — "
                     "the input DataFrame changed between evaluations "
@@ -698,79 +639,51 @@ def _allpairs_by_bitmap_from_sets(
                 }
             )
 
-    # persist: bm feeds BOTH join sides (broadcast build + stream), so
-    # without the cache the Arrow bitmap pass runs twice per consumer
-    # (measured ~0.5 s/extra pass warm at sf0.1 — §2.4 "don't recompute")
+    # persist: bm feeds BOTH join sides, so without the cache the Arrow
+    # bitmap pass runs twice per consumer (measured ~0.5 s/extra pass
+    # warm at sf0.1 — §2.4 "don't recompute")
     bm = _op_persist(
         sets.mapInPandas(to_bitmaps, f"id {id_type}, sz int, bm array<long>")
     )
-    a = bm.select(
-        F.col("id").alias("id_a"), F.col("sz").alias("sz_a"), F.col("bm").alias("bm_a")
+    a, b = (
+        bm.select(
+            F.col("id").alias(f"id_{s}"),
+            F.col("sz").alias(f"sz_{s}"),
+            F.col("bm").alias(f"bm_{s}"),
+        )
+        for s in "ab"
     )
-    b = bm.select(
-        F.col("id").alias("id_b"), F.col("sz").alias("sz_b"), F.col("bm").alias("bm_b")
-    )
-    return (
+    if cand is None:
         # size prefilter in the join condition (the similarity-join
         # standard): the popcount projection never runs for rejected pairs
-        a.join(
-            F.broadcast(b),
-            (F.col("id_a") < F.col("id_b")) & _size_prefilter(threshold),
+        pairs = a.join(
+            F.broadcast(b), (F.col("id_a") < F.col("id_b")) & _size_prefilter(threshold)
         )
-        .withColumn("inter", _popcount_inter_expr(L))
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def _verify_pairs_by_bitmap(
-    cand: DataFrame,
-    sh: DataFrame,
-    vocab_size: int,
-    threshold: float,
-    broadcast_bitmaps: bool = False,
-) -> DataFrame:
-    """Exact-Jaccard verification via per-doc shingle bitmaps: when the
-    shingle vocabulary is small (≤ a few thousand), each doc's shingle set
-    packs into ceil(V/64) longs, and |A∩B| is a handful of AND+popcount ops
-    per pair — no join explosion, no per-pair hash set. Decisive on highly
-    self-similar corpora where millions of candidate pairs sit just under
-    the threshold and every one needs exact verification.
-
-    With `broadcast_bitmaps` (doc count small enough that the bitmap table
-    broadcasts) the whole verification is map-side: candidates stream
-    through two broadcast hash joins + a codegen popcount filter, and the
-    pair dedup happens on the (tiny) OUTPUT — so the caller can skip the
-    cross-band candidate `distinct` shuffle entirely."""
-    bm, L = _bitmap_table(sh, vocab_size)
-    a = bm.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"), F.col("bm").alias("bm_a"))
-    b = bm.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"), F.col("bm").alias("bm_b"))
-    if broadcast_bitmaps:
-        a, b = F.broadcast(a), F.broadcast(b)
-    inter = _popcount_inter_expr(L)
-    out = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        # two-int reject before the popcount projection
-        .where(_size_prefilter(threshold))
-        .withColumn("inter", inter)
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    if broadcast_bitmaps:
+    else:
+        if broadcast_bitmaps:
+            a, b = F.broadcast(a), F.broadcast(b)
+        pairs = cand.join(a, "id_a").join(b, "id_b").where(_size_prefilter(threshold))
+    out = _jaccard_at_least(pairs.withColumn("inter", _popcount_inter_expr(L)), threshold)
+    if cand is not None and broadcast_bitmaps:
         out = out.dropDuplicates(["id_a", "id_b"])
     return out
 
+
+# Gates of the minhash_dedup_pairs planner. Every strategy returns the same
+# pairs; each one stays because it wins on an input the repo has (4 cores,
+# pair sets identical):
+#   - tiny-vocab corpus over the doc cap: LSH + bitmap verify 14.7 s vs
+#     LSH + inverted-index verify 146.5 s;
+#   - tiny-vocab small corpus (sf0.1 documents, 5,000 docs, vocab 377):
+#     all-pairs bitmaps 4.7 s vs LSH + bitmap verify 11.5 s;
+#   - large vocabularies have only the inverted-index verify (bitmaps
+#     would exceed 64 words per doc).
+# minhash_match_pairs keeps both of its plans too: on bench.py's
+# dedup_incremental_match shape its numpy fast path took 3.04 s and the
+# exchange plan 10.50 s (median of 5, same 115,816 rows), and the
+# exchange plan is the one that runs over the doc cap. Replacing the
+# exchange plan's HOF est fold with an unrolled 128-term codegen sum made
+# it SLOWER (52.9 s) — do not.
 
 # vocab sizes up to this pack into ≤64 longs per doc: bitmap verification is
 # strictly faster than joining candidates against the inverted index
@@ -790,9 +703,6 @@ _BRUTE_ALLPAIRS_MAX_DOCS = 32_768
 # …and the all-pairs plan must also fit an op budget: n²/2 pair-evals ×
 # ceil(V/64) popcount words ≤ ~4e9 keeps it in low seconds on ~32 cores
 _BRUTE_ALLPAIRS_OPS_BUDGET = 4_000_000_000
-# inputs with more splits than this are certainly over the doc cap —
-# don't even run the count probe (it would scan a derived frame at scale)
-_BRUTE_PROBE_MAX_PARTITIONS = 256
 
 
 @_CACHES.scoped
@@ -811,111 +721,73 @@ def minhash_dedup_pairs(
     P(miss) at j=0.8 is ≈5e-8 → output ≡ exact jaccard_pairs, at a fraction
     of the pair-comparison cost (verification touches only candidates).
 
-    The physical strategy is cost-based on corpus statistics, with probe
-    results reused so no job runs twice: small corpora decide everything
-    from the bounded doc-count + vocab probes; unprobed (at-scale) corpora
-    pay one cheap HLL pass, and the exact fused stats job runs ONLY when
-    the estimate leaves the bitmap plan plausible (its exact vocab size is
-    a correctness input to the bitmap packer). Strategies:
-      - tiny vocab AND small corpus → EXACT all-pairs popcount over
+    Every strategy reads ONE persisted `_shingle_sets` frame (id, sorted
+    distinct shingle array): the vocab probe, the signatures, the bitmaps
+    and the inverted-index verify all derive from it, so the corpus is
+    shingled once and no exploded copy is ever cached. The physical
+    strategy is cost-based on corpus statistics, gated by
+    `too_big_to_probe` (zero jobs):
+      - probed corpora run the bounded vocab probe (≤ _BITMAP_MAX_VOCAB
+        distinct shingles collected, which also materializes the cache);
+      - at-scale corpora run one HLL pass over the cache first, and the
+        bounded vocab probe only when the estimate leaves the bitmap plan
+        plausible (1.2× headroom ≈ 4σ at rsd 5%) — the exact vocab is a
+        correctness input to the bitmap packer, so an estimate never
+        sizes it.
+    Only a tiny vocab pays a count of the cached sets (the all-pairs op
+    budget and the bitmap broadcast budget need it). Strategies:
+      - tiny vocab AND small probed corpus → EXACT all-pairs popcount over
         broadcast bitmaps, no LSH: with few possible shingle sets docs
         collide in nearly every band and LSH candidate generation exceeds
-        the full pair count (see _allpairs_by_bitmap_from_text) — the exact plan is
-        cheaper and shuffle-free;
-      - tiny vocab, large corpus → LSH candidates + bitmap verification;
+        the full pair count (see `_bitmap_pairs_from_sets`) — the exact
+        plan is cheaper and shuffle-free;
+      - tiny vocab otherwise → LSH candidates + bitmap verification;
       - large vocab → LSH candidates + candidate ⋈ inverted-index join,
         whose cost scales with |candidates| ≈ |output| on natural corpora.
-    All three produce the same pairs (candidate recall ≈ 1 at threshold,
+    All produce the same pairs (candidate recall ≈ 1 at threshold,
     verification exact)."""
-    from sparkglm_spark.plans.partitioning import (
-        _plan_size_estimate,
-        _rdd_partitions_if_free,
-    )
-
-    cap = _BRUTE_ALLPAIRS_MAX_DOCS
-    # structural smallness gate, ZERO jobs (r15): partition count when
-    # reading it is free, the optimizer's size estimate otherwise —
-    # the old up-front limit(cap+1).count() cost 3 jobs per call and its
-    # row count is recovered below as a ~free count over the sets cache.
-    # The gate only picks which probing strategy runs; every strategy
-    # produces the same pairs.
-    n_parts = _rdd_partitions_if_free(df)
-    if n_parts is None:
-        structurally_small = _plan_size_estimate(
-            df
-        ) <= _BRUTE_PROBE_MAX_PARTITIONS * (128 << 20)
+    sets = _op_persist(_shingle_sets(df, id_col, text_col, n))
+    at_scale = too_big_to_probe(df)
+    # the first job over `sets` (HLL pass or vocab probe) materializes the
+    # cache every later consumer reads
+    if at_scale and (
+        sets.select(F.explode("shingles").alias("shingle"))
+        .agg(F.approx_count_distinct("shingle"))
+        .first()[0]
+        > _BITMAP_MAX_VOCAB * 1.2
+    ):
+        vocab = None
     else:
-        structurally_small = n_parts <= _BRUTE_PROBE_MAX_PARTITIONS
-    vocab = None
-    if structurally_small:
-        # one Python shingling pass, persisted: the vocab probe (JVM
-        # explode+distinct over it) materializes the cache, and whichever
-        # plan wins — bitmap all-pairs or LSH — reads the same cache
-        # instead of re-shingling the corpus
-        sets = _op_persist(_shingle_sets(df, id_col, text_col, n))
         vocab = _vocab_from_sets(sets, _BITMAP_MAX_VOCAB)
-        # one row per shingled input row, read from the cache the vocab
-        # probe just materialized — the exact count the bitmap packer and
-        # broadcast byte budget need
-        n_docs = sets.count()
-        L = None if vocab is None else (len(vocab) + 63) // 64
-        # all-pairs cost ≈ n²/2 · L word-ops; stay under a few-second budget
-        if (
-            vocab is not None
-            and n_docs <= cap
-            and n_docs * n_docs * L <= _BRUTE_ALLPAIRS_OPS_BUDGET
-        ):
-            id_type = df.schema[id_col].dataType.simpleString()
-            return _allpairs_by_bitmap_from_sets(sets, threshold, vocab, id_type)
-        sh = _op_persist(sets.select("id", F.explode("shingles").alias("shingle")))
-        # the bounded probes already ran — reuse them instead of a stats
-        # job: vocab None ⇒ size is KNOWN to exceed _BITMAP_MAX_VOCAB,
-        # else len(vocab) is the exact size
-        vocab_size = (_BITMAP_MAX_VOCAB + 1) if vocab is None else len(vocab)
-    else:
-        # at-scale path: persist the EXPLODED table (the verification
-        # join's working set, its historical contract); the signature pass
-        # below re-derives sets in its own scan rather than persisting a
-        # second corpus-sized copy
-        sets = None
-        n_docs = cap + 1
-        sh = _op_persist(shingles(df, id_col, text_col, n=n))
-        # unprobed (at-scale) corpus: one cheap HLL pass first; only a
-        # bitmap-plausible estimate pays the exact fused stats job — the
-        # exact vocab size is a correctness input to the bitmap packer
-        # (it sizes the long array), so an estimate is never trusted for
-        # it, but a large estimate (1.2× headroom ≈ 4σ at rsd 5%) safely
-        # rules the bitmap plan out without an exact distinct count.
-        est_vocab = sh.agg(F.approx_count_distinct("shingle")).first()[0]
-        if est_vocab > _BITMAP_MAX_VOCAB * 1.2:
-            vocab_size = int(est_vocab)
-        else:
-            vocab_size, n_docs = sh.agg(
-                F.countDistinct("shingle"), F.countDistinct("id")
-            ).first()
-    # signatures via the zero-shuffle Arrow pass (see _signatures_from_sets
-    # — the explode → 128-min-agg groupBy it replaces owned the LSH path's
-    # runtime); the probed path reads the persisted sets cache, the
-    # at-scale path pays one extra tokenize scan instead of a second
-    # corpus-sized persist
-    sig = _signatures_from_sets(
-        sets if sets is not None else _shingle_sets(df, id_col, text_col, n),
-        num_perm=num_perm,
-        seed=seed,
+    if vocab == []:
+        # no doc has any shingle (all texts shorter than n) → no pairs, and
+        # no strategy runs (an empty vocab would pack zero-word bitmaps)
+        id_type = sets.schema["id"].dataType.simpleString()
+        return sets.sparkSession.createDataFrame(
+            [], f"id_a {id_type}, id_b {id_type}, jaccard double"
+        )
+    sig = _signatures_from_sets(sets, num_perm=num_perm, seed=seed)
+    if vocab is None:
+        cand = _lsh_candidates_from_sigarr(sig, num_perm=num_perm, bands=bands)
+        return _verify_pairs_by_shingle_join(cand, sets, threshold)
+    n_docs = sets.count()
+    L = (len(vocab) + 63) // 64
+    # all-pairs cost ≈ n²/2 · L word-ops; stay under a few-second budget
+    if (
+        not at_scale
+        and n_docs <= _BRUTE_ALLPAIRS_MAX_DOCS
+        and n_docs * n_docs * L <= _BRUTE_ALLPAIRS_OPS_BUDGET
+    ):
+        return _bitmap_pairs_from_sets(sets, vocab, threshold)
+    # broadcast verify is map-side → skip the candidate distinct shuffle
+    # and dedup the (tiny) verified output instead
+    small_corpus = n_docs * (24 + 8 * L) <= _BITMAP_BROADCAST_MAX_BYTES
+    cand = _lsh_candidates_from_sigarr(
+        sig, num_perm=num_perm, bands=bands, distinct=not small_corpus
     )
-    if vocab_size <= _BITMAP_MAX_VOCAB:
-        bm_bytes_per_doc = 24 + 8 * ((vocab_size + 63) // 64)
-        small_corpus = n_docs * bm_bytes_per_doc <= _BITMAP_BROADCAST_MAX_BYTES
-        # broadcast verify is map-side → skip the candidate distinct shuffle
-        # and dedup the (tiny) verified output instead
-        cand = _lsh_candidates_from_sigarr(
-            sig, num_perm=num_perm, bands=bands, distinct=not small_corpus
-        )
-        return _verify_pairs_by_bitmap(
-            cand, sh, vocab_size, threshold, broadcast_bitmaps=small_corpus
-        )
-    cand = _lsh_candidates_from_sigarr(sig, num_perm=num_perm, bands=bands)
-    return _verify_pairs_by_shingle_join(cand, sh, threshold)
+    return _bitmap_pairs_from_sets(
+        sets, vocab, threshold, cand=cand, broadcast_bitmaps=small_corpus
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1163,7 +1035,8 @@ def _require_banding(num_perm: int, bands: int) -> None:
 
 def _band_buckets(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
     """(id, band, bucket) from an array-signature table — 16-byte bucket
-    keys, the same banding arithmetic as `minhash_lsh_candidates`."""
+    keys; the one banding shared by every LSH candidate plan
+    (`_lsh_candidates_from_sigarr`, `minhash_match_pairs`)."""
     _require_banding(num_perm, bands)
     r = num_perm // bands
     bb = F.array(
@@ -1349,36 +1222,20 @@ def minhash_match_pairs(
         # operator. Output row set and values are IDENTICAL (see
         # `_match_pairs_arrow_verify`). Large indexes (either probe
         # over the cap, or the pair×perm op budget exceeded) keep the
-        # exchange-based LSH plan — same bounded-probe routing pattern
-        # as minhash_dedup_pairs' brute all-pairs gate.
+        # exchange-based LSH plan — the size gate minhash_dedup_pairs
+        # also routes on.
         # The probe is a FULL count, not a limit-capped one: a limit
         # probe consumes cached partitions partially, which aborts their
         # block store — the (expensive) signature pass then re-runs for
         # every later consumer. count() materializes the persist that
         # EVERY downstream plan fully scans anyway, so it is never
-        # wasted work; inputs with more splits than the probe cap are
-        # certainly over the doc cap and skip the probe (and any
-        # at-scale materialization) outright.
-        from sparkglm_spark.plans.partitioning import (
-            _plan_size_estimate,
-            _rdd_partitions_if_free,
-        )
-
-        def _certainly_over_cap(idx: DataFrame) -> bool:
-            # partition count only when free (r15: .rdd under AQE
-            # EXECUTES exchange-bearing plans); otherwise the optimizer's
-            # size estimate rules huge derived indexes out of the probe
-            n_parts = _rdd_partitions_if_free(idx)
-            if n_parts is None:
-                return _plan_size_estimate(idx) > _BRUTE_PROBE_MAX_PARTITIONS * (
-                    128 << 20
-                )
-            return n_parts > _BRUTE_PROBE_MAX_PARTITIONS
-
+        # wasted work; inputs `too_big_to_probe` are certainly over the
+        # doc cap and skip the probe (and any at-scale materialization)
+        # outright.
         cap = _BRUTE_ALLPAIRS_MAX_DOCS
-        n_new = cap + 1 if _certainly_over_cap(new_index) else new_index.count()
+        n_new = cap + 1 if too_big_to_probe(new_index) else new_index.count()
         n_known = (
-            (cap + 1 if _certainly_over_cap(known_index) else known_index.count())
+            (cap + 1 if too_big_to_probe(known_index) else known_index.count())
             if n_new <= cap
             else cap + 1
         )

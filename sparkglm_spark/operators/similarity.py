@@ -235,11 +235,9 @@ def cosine_near_dup_pairs(
     instead of raising."""
     from sparkglm_spark.plans.partitioning import bounded_row_probe
 
-    # max_partitions=None: this gate's contract REQUIRES the count (it
-    # must raise past the gate, not guess)
-    over = bounded_row_probe(
-        df.select(id_col), max_collect_rows, max_partitions=None
-    )
+    # always_count: this gate's contract REQUIRES the count (it must
+    # raise past the gate, not guess)
+    over = bounded_row_probe(df.select(id_col), max_collect_rows, always_count=True)
     if over > max_collect_rows:
         raise ValueError(
             f"cosine_near_dup_pairs: corpus exceeds max_collect_rows="

@@ -169,30 +169,36 @@ def require_integral_id(df: DataFrame, col: str, op_name: str) -> None:
         )
 
 
-def bounded_row_probe(
-    df: DataFrame, cap: int, max_partitions: int | None = 256
-) -> int:
+# the size gate's threshold: more splits than this (or, for exchange-
+# bearing plans, more estimated bytes than this many 128 MB splits) and a
+# driver-side probe is not worth its jobs
+_PROBE_MAX_PARTITIONS = 256
+
+
+def too_big_to_probe(df: DataFrame) -> bool:
+    """The one size gate of the cost-based planners: True when `df` is
+    certainly too large for a bounded driver-side probe (a vocab scan, a
+    row count), decided with ZERO jobs. The partition count is read only
+    when free (`_rdd_partitions_if_free`); exchange-bearing plans gate on
+    the optimizer's size estimate instead. Derived (post-shuffle) frames
+    report spark.sql.shuffle.partitions regardless of row count, and at
+    real scale even a limit-capped count pays the full upstream
+    computation, so the gate only picks which probing strategy runs,
+    never what a query computes."""
+    n = _rdd_partitions_if_free(df)
+    if n is None:
+        return _plan_size_estimate(df) > _PROBE_MAX_PARTITIONS * (128 << 20)
+    return n > _PROBE_MAX_PARTITIONS
+
+
+def bounded_row_probe(df: DataFrame, cap: int, always_count: bool = False) -> int:
     """Row count for cost-based planners, bounded two ways: the count runs
     under limit(cap+1) so a huge input stops counting at cap+1 instead of
-    scanning everything, and inputs with more partitions than
-    `max_partitions` skip the probe outright and report cap+1 — derived
-    (post-shuffle) frames report spark.sql.shuffle.partitions regardless of
-    row count, and at real scale even a limit-capped count pays the full
-    upstream computation. Pass max_partitions=None to always count (for
-    callers whose contract REQUIRES the answer, e.g. a hard size gate).
-    Returns the exact count when it is ≤ cap, and any value > cap means
-    "larger than cap"."""
-    if max_partitions is not None:
-        n = _rdd_partitions_if_free(df)
-        if n is None:
-            # exchange-bearing plan: the partition count is not free to
-            # read (it would execute the plan — the very cost this gate
-            # exists to avoid), so gate on the optimizer's size estimate
-            # instead: more than max_partitions 128 MB-ish splits worth
-            # of estimated bytes ⇒ certainly over any row cap worth
-            # probing.
-            if _plan_size_estimate(df) > max_partitions * (128 << 20):
-                return cap + 1
-        elif n > max_partitions:
-            return cap + 1
+    scanning everything, and inputs `too_big_to_probe` skip the probe
+    outright and report cap+1. Pass always_count=True for callers whose
+    contract REQUIRES the answer (e.g. a hard size gate). Returns the
+    exact count when it is ≤ cap, and any value > cap means "larger than
+    cap"."""
+    if not always_count and too_big_to_probe(df):
+        return cap + 1
     return df.limit(cap + 1).count()

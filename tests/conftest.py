@@ -118,9 +118,6 @@ _SLOW_TESTS = {
     "tests/test_ml.py::test_glm_estimator_estimate_dispersion",
     "tests/test_ml.py::test_quantile_pipeline_and_save_load",
     "tests/test_ml.py::test_spark_binary_evaluator_in_cross_validator",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[corpus_ops]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[dedup_clusters]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[dedup_jaccard]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[events_timeseries]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[glm_families_fit]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[glm_fit_orders]",

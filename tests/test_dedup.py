@@ -195,36 +195,107 @@ def test_jaccard_hot_shingle_cap_warns_on_drop(spark, caplog):
     assert any("approximate" in r.message for r in caplog.records)
 
 
+def _at_scale(monkeypatch):
+    """Route minhash_dedup_pairs to its at-scale (HLL-first) branch by
+    making the shared size gate report the input as too big to probe."""
+    monkeypatch.setattr(D, "too_big_to_probe", lambda df: True)
+
+
+def _strategy(cached):
+    """Which physical plan a minhash_dedup_pairs call chose, from the
+    column sets of the frames it persisted: the bitmap plans cache a `bm`
+    table, the LSH plans a (band, bucket) table."""
+    bitmaps = any("bm" in c for c in cached)
+    lsh = any("bucket" in c for c in cached)
+    if not bitmaps:
+        return "lsh+inverted"
+    return "lsh+bitmap" if lsh else "allpairs"
+
+
 def test_minhash_planner_strategies_agree(spark, documents, monkeypatch):
     """The cost-based planner picks between three physical strategies
     (exact all-pairs bitmaps / LSH + bitmap verify / LSH + inverted-index
-    verify). They implement ONE contract — force each path on the same
-    corpus and require identical pairs."""
-    import sparkglm_spark.operators.dedup as D
+    verify) on two branches (probed / at-scale HLL-first). They implement
+    ONE contract — force each path on the same corpus and require
+    identical pairs. Every path reads ONE persisted per-doc shingle-set
+    frame: each call caches exactly one frame with the `shingles` array
+    column and never an exploded `shingle` copy (two corpus-sized caches
+    would double executor storage at scale)."""
+    docs = documents.limit(120).persist()
+    vocab = D.shingles(docs, "doc_id", "text").select("shingle").distinct().count()
 
-    docs = documents.limit(120)
+    def pairs(expect):
+        before = D._CACHES.frames()
+        out = D.minhash_dedup_pairs(docs, "doc_id", "text", threshold=0.8)
+        cached = [
+            f.columns for f in D._CACHES.frames() if not any(f is b for b in before)
+        ]
+        assert sum("shingles" in c for c in cached) == 1, cached
+        assert not any("shingle" in c for c in cached), cached
+        assert _strategy(cached) == expect, cached
+        return {(r.id_a, r.id_b): round(r.jaccard, 9) for r in out.collect()}
 
-    def pairs():
-        return {
-            (r.id_a, r.id_b): round(r.jaccard, 9)
-            for r in D.minhash_dedup_pairs(
-                docs, "doc_id", "text", threshold=0.8
-            ).collect()
+    def forced(expect, **consts):
+        with monkeypatch.context() as m:
+            for name, value in consts.items():
+                m.setattr(D, name, value)
+            return pairs(expect)
+
+    try:
+        brute = pairs("allpairs")  # small corpus + tiny vocab
+        assert brute, "fixture produced no near-dup pairs; test is vacuous"
+        results = {
+            "probed lsh+bitmap": forced("lsh+bitmap", _BRUTE_ALLPAIRS_MAX_DOCS=0),
+            "probed lsh+bitmap, unbroadcast": forced(
+                "lsh+bitmap", _BRUTE_ALLPAIRS_MAX_DOCS=0, _BITMAP_BROADCAST_MAX_BYTES=0
+            ),
+            # vocab probe maxes out → inverted-index verify
+            "probed lsh+inverted": forced("lsh+inverted", _BITMAP_MAX_VOCAB=0),
         }
+        _at_scale(monkeypatch)
+        results.update({
+            # small HLL estimate → bounded vocab probe → bitmap verify
+            "at-scale lsh+bitmap": forced("lsh+bitmap"),
+            # estimate within the 1.2× headroom, exact probe over the cap
+            "at-scale probe over cap": forced("lsh+inverted", _BITMAP_MAX_VOCAB=vocab - 1),
+            # large estimate rules the bitmap plan out without a probe
+            "at-scale lsh+inverted": forced("lsh+inverted", _BITMAP_MAX_VOCAB=0),
+        })
+        for name, got in results.items():
+            assert got == brute, name
+    finally:
+        docs.unpersist()
 
-    brute = pairs()  # small corpus + tiny vocab → all-pairs plan
-    monkeypatch.setattr(D, "_BITMAP_MAX_VOCAB", 0)
-    # probed corpus whose vocab probe maxes out → stats job skipped,
-    # straight to the inverted-index plan
-    lsh_inverted_probed = pairs()
-    monkeypatch.setattr(D, "_BRUTE_ALLPAIRS_MAX_DOCS", 0)
-    lsh_inverted = pairs()  # unprobed + large-vocab estimate → inverted
-    monkeypatch.setattr(D, "_BITMAP_MAX_VOCAB", 4096)
-    lsh_bitmap = pairs()  # unprobed + small vocab → exact stats + bitmap
-    assert brute, "fixture produced no near-dup pairs; test is vacuous"
-    assert brute == lsh_bitmap
-    assert brute == lsh_inverted
-    assert brute == lsh_inverted_probed
+
+def test_too_big_to_probe_gate(documents, monkeypatch):
+    """The one size gate: free partition count for scans, the optimizer's
+    size estimate for exchange-bearing plans, and bounded_row_probe
+    reports cap+1 without counting when it fires unless told to count."""
+    import sparkglm_spark.plans.partitioning as P
+
+    agg = documents.groupBy("source").count()
+    n = documents.count()
+    for df in (documents, agg):
+        assert not P.too_big_to_probe(df)
+    assert P.bounded_row_probe(documents, 5) == 6
+    assert P.bounded_row_probe(documents, 10**9) == n
+    monkeypatch.setattr(P, "_PROBE_MAX_PARTITIONS", 0)
+    for df in (documents, agg):
+        assert P.too_big_to_probe(df)
+    assert P.bounded_row_probe(documents, 10**9) == 10**9 + 1
+    assert P.bounded_row_probe(documents, 10**9, always_count=True) == n
+
+
+def test_bitmap_packer_rejects_shingles_outside_vocab(spark):
+    """The packer sizes its long array from the planner's vocab: a shingle
+    missing from it (the input changed between the probe and execution)
+    must fail loudly, not pack into a silently truncated bitmap."""
+    docs = spark.createDataFrame(
+        [(1, "abcdef"), (2, "abcdeg")], "doc_id long, text string"
+    )
+    sets = D._shingle_sets(docs, "doc_id", "text", 3)
+    with pytest.raises(Exception, match="absent from the planner's vocab scan"):
+        D._bitmap_pairs_from_sets(sets, ["abc", "bcd"], 0.5).collect()
 
 
 def test_short_and_empty_texts_yield_no_shingles_any_strategy(spark):
@@ -258,6 +329,22 @@ def test_brute_plan_handles_empty_vocab(spark):
         [(1, "ab"), (2, ""), (3, None)], "doc_id long, text string"
     )
     out = D.minhash_dedup_pairs(docs, "doc_id", "text", threshold=0.8)
+    assert out.collect() == []
+    assert [f.name for f in out.schema.fields] == ["id_a", "id_b", "jaccard"]
+
+
+def test_at_scale_plan_handles_empty_vocab(spark, monkeypatch):
+    """The at-scale branch sees a zero HLL estimate and an empty exact
+    vocab; it must return an empty pair frame without running any
+    strategy (no LSH bucket table, no bitmaps)."""
+    docs = spark.createDataFrame(
+        [(1, "ab"), (2, ""), (3, None)], "doc_id long, text string"
+    )
+    _at_scale(monkeypatch)
+    before = D._CACHES.frames()
+    out = D.minhash_dedup_pairs(docs, "doc_id", "text", threshold=0.8)
+    cached = [f.columns for f in D._CACHES.frames() if not any(f is b for b in before)]
+    assert cached == [["id", "shingles"]]
     assert out.collect() == []
     assert [f.name for f in out.schema.fields] == ["id_a", "id_b", "jaccard"]
 
