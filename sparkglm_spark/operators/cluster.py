@@ -248,16 +248,17 @@ def near_dup_clusters(
     cluster_id = min doc id in the cluster; is_duplicate marks the rows a
     keep-one-per-cluster dedup would drop (everything but the minimum).
 
-    Sizes: when the components took the cost-gated driver path (the usual
-    case — near-dup pair graphs are tiny next to the corpus), every
-    endpoint's component is already on the driver, so cluster sizes are a
-    driver-side count and the whole output is ONE join of the enriched
-    (id, cluster_id, cluster_size) assignment onto the docs — the sizes
-    groupBy + join-back exchanges disappear (r15, guide §2.4). Component
-    members are exactly the endpoints (backfilled nodes are their own
-    singletons, size 1), so the counts are identical to the groupBy's.
-    The distributed path keeps the sizes join: (cluster_id, count) —
-    O(#clusters) rows."""
+    cluster_size counts the `docs` rows in the cluster: pair endpoints
+    absent from `docs` link clusters but are not counted. When the
+    components took the cost-gated driver path (the usual case — near-dup
+    pair graphs are tiny next to the corpus), every endpoint's component
+    is already on the driver, so the sizes are a driver-side count over
+    the endpoints one broadcast semi-join finds in `docs`, and the output
+    is ONE join of the enriched (id, cluster_id, cluster_size) assignment
+    onto the docs — the sizes groupBy + join-back exchanges disappear
+    (r15, guide §2.4). Docs that are no endpoint are their own singletons,
+    size 1. The distributed path keeps the sizes join: (cluster_id, count)
+    — O(#clusters) rows."""
     labels, driver_pairs = _labels_for(
         pairs, src, dst, docs, id_col, max_iter=50,
         driver_max_edges=2_000_000,
@@ -265,13 +266,19 @@ def near_dup_clusters(
     if driver_pairs is not None:
         from collections import Counter
 
-        csize = Counter(label for _, label in driver_pairs)
+        doc_ids = docs.select(F.col(id_col).cast("long").alias("id"))
+        label_of = dict(driver_pairs)
+        csize = Counter(
+            label_of[r[0]]
+            for r in doc_ids.join(F.broadcast(labels.select("id")), "id", "left_semi")
+            .collect()
+        )
         enriched = labels.sparkSession.createDataFrame(
             [(i, lbl, csize[lbl]) for i, lbl in driver_pairs],
             "id long, cluster_id long, cluster_size long",
         )
         return (
-            docs.select(F.col(id_col).cast("long").alias(id_col))
+            doc_ids.withColumnRenamed("id", id_col)
             .join(enriched.withColumnRenamed("id", id_col), id_col, "left")
             .select(
                 id_col,

@@ -66,40 +66,22 @@ def _count_map_literal(keys: list[str], vals: list[int]) -> Column:
     """string→bigint map literal built as ONE parsed SQL expression.
     `F.lit(list)` constructs the array element-by-element through py4j —
     measured 2.6 s for a 1k-key map (and linearly worse toward the 50k
-    gate); the parser ingests the same literal in milliseconds. The
-    parsed tree constant-folds exactly like the F.lit form (same map,
-    same lookups).
+    gate); the parser ingests the same literal in milliseconds, and the
+    expression constant-folds to the same map.
 
-    Escaping is parser-mode aware (ADVICE r14): quotes are doubled
-    (`''` parses to `'` in BOTH the default and the legacy
-    `spark.sql.parser.escapedStringLiterals=true` modes), and
-    backslashes are `\\`-escaped only in the default mode — the legacy
-    mode keeps them literal, so escaping there would corrupt keys
-    containing backslashes (silent score corruption)."""
-    if not keys:
-        return F.expr(
-            "map_from_arrays(cast(array() as array<string>),"
-            " cast(array() as array<bigint>))"
-        )
-    from pyspark.sql import SparkSession
+    The map travels as hex-encoded UTF-8 JSON: the SQL text holds only
+    [0-9a-f], so the result cannot depend on the parser's string-literal
+    escaping (`spark.sql.parser.escapedStringLiterals` keeps `''` and
+    `\\` literal in legacy mode, which corrupted keys containing quotes
+    or backslashes)."""
+    import json
 
-    spark = SparkSession.getActiveSession()
-    legacy = (
-        spark is not None
-        and str(
-            spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-        ).lower()
-        == "true"
+    payload = json.dumps(
+        dict(zip(keys, (int(v) for v in vals))), ensure_ascii=False
+    ).encode("utf-8")
+    return F.expr(
+        f"from_json(cast(unhex('{payload.hex()}') as string), 'map<string,bigint>')"
     )
-
-    def esc(k: str) -> str:
-        if not legacy:
-            k = k.replace("\\", "\\\\")
-        return k.replace("'", "''")
-
-    ks = ",".join("'" + esc(k) + "'" for k in keys)
-    vs = ",".join(f"{v}L" for v in vals)
-    return F.expr(f"map_from_arrays(array({ks}), array({vs}))")
 
 
 def word_ngrams_expr(text: Column, n: int) -> Column:

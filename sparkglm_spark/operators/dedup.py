@@ -678,12 +678,19 @@ def _bitmap_pairs_from_sets(
 #     all-pairs bitmaps 4.7 s vs LSH + bitmap verify 11.5 s;
 #   - large vocabularies have only the inverted-index verify (bitmaps
 #     would exceed 64 words per doc).
-# minhash_match_pairs keeps both of its plans too: on bench.py's
-# dedup_incremental_match shape its numpy fast path took 3.04 s and the
-# exchange plan 10.50 s (median of 5, same 115,816 rows), and the
-# exchange plan is the one that runs over the doc cap. Replacing the
-# exchange plan's HOF est fold with an unrolled 128-term codegen sum made
-# it SLOWER (52.9 s) — do not.
+# minhash_match_pairs keeps both of its plans too. Its numpy kernel (the
+# new batch broadcast, the known index streamed once) runs for an index of
+# any size while the batch is under _BRUTE_ALLPAIRS_MAX_DOCS: on
+# perfbench dedup_ingest inputs (600-doc batches vs a 33,000-doc index,
+# seed 1, 4 cores) a warm minhash_dedup_against took 1.38-1.57 s and
+# 5 jobs vs 2.83-4.17 s and 11 jobs on the exchange plan, with identical
+# (id_new, id_known, est_jaccard) rows; ten alternating untraced
+# dedup_ingest runs against the exchange plan (seeds 11-20) moved the
+# median throughput from 112.9 to 165.4 rows/s, ahead on every pair. The
+# exchange plan stays for batches over the cap (the kernel would collect
+# them to the driver) and for max_docs_per_bucket. Replacing its HOF est
+# fold with an unrolled 128-term codegen sum made it SLOWER (52.9 s) — do
+# not.
 
 # vocab sizes up to this pack into ≤64 longs per doc: bitmap verification is
 # strictly faster than joining candidates against the inverted index
@@ -698,10 +705,13 @@ _BITMAP_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 # admits few distinct shingle sets, docs collide in nearly every band, and
 # LSH emits MORE pairs than brute force (measured: 59.2M candidates vs
 # 12.5M all-pairs on 5k docs / vocab 377) — exact all-pairs popcount over
-# broadcast bitmaps is strictly cheaper and shuffle-free
+# broadcast bitmaps is strictly cheaper and shuffle-free. It also caps the
+# new batch minhash_match_pairs collects and broadcasts to its kernel.
 _BRUTE_ALLPAIRS_MAX_DOCS = 32_768
 # …and the all-pairs plan must also fit an op budget: n²/2 pair-evals ×
-# ceil(V/64) popcount words ≤ ~4e9 keeps it in low seconds on ~32 cores
+# ceil(V/64) popcount words ≤ ~4e9 keeps it in low seconds on ~32 cores.
+# The match kernel streams the known index in blocks of
+# budget // (num_perm · n_new) rows, so its candidate arrays stay in it too.
 _BRUTE_ALLPAIRS_OPS_BUDGET = 4_000_000_000
 
 
@@ -1055,114 +1065,115 @@ def _band_buckets(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
 
 def _match_pairs_arrow_verify(
     new_index: DataFrame,
+    new_rows,
     known_index: DataFrame,
     threshold: float,
     num_perm: int,
     bands: int,
 ) -> DataFrame:
-    """`minhash_match_pairs` for cost-gated small index pairs: the known
-    side's signatures (gate-bounded — ≤ ~33 MB at the 32k-doc cap) are
-    collected and broadcast, and ONE zero-exchange mapInPandas pass over
-    the new side does the whole band-collision + est verification in
-    numpy: per band, known-side slices are pre-sorted as structured keys
-    once per task and the new side's slices binary-search them
-    (collisions = exact r-slice equality); collision pairs dedup with
-    np.unique per batch (each new doc's pairs are complete within its
-    batch, so per-batch dedup IS the global dedup), and the est count is
-    a vectorized (pairs × num_perm) equality sum, chunked to bound the
-    temporary. est values are matches/num_perm — the identical division
-    the SQL plan computed — and the row set is the banded-collision set:
-    exact slice equality implies bucket-hash equality, so this emits
-    exactly the pairs the exchange plan's xxhash64 bucket join emits,
-    minus only phantom 2⁻⁶⁴ hash-collision candidates (which the est
-    filter would almost surely have dropped anyway).
+    """`minhash_match_pairs`' plan for any index: the NEW side's collected
+    signatures (`new_rows`, gate-bounded — ≤ ~33 MB at the 32k-doc cap)
+    are broadcast, and ONE zero-exchange mapInPandas pass over the KNOWN
+    index does the whole band-collision + est verification in numpy. The
+    known side is streamed once, whatever its size: it is never
+    persisted, counted or shuffled.
 
-    Replaces the r14 broadcast-hash-join + aggregate(zip_with) plan:
-    per-pair HOF est evaluation is CodegenFallback (interpreted lambdas
-    — 315M evals at sf0.1's 2.46M raw collisions), while the numpy
-    equality sum is SIMD; measured 2-2.5× on the match phase with the
-    output frame exactly equal (115,816 rows at sf0.1, ids and est
-    bit-identical)."""
-    _require_banding(num_perm, bands)
+    Per band, the new side's slices are pre-sorted as byte keys once per
+    task and the streamed rows' slices binary-search them (collisions =
+    exact r-slice equality); collision pairs dedup with np.unique per
+    block (each known doc's pairs are complete within its block, so
+    per-block dedup IS the global dedup), and the est count is a
+    vectorized (pairs × num_perm) equality sum, chunked to bound the
+    temporary. Blocks hold ⌊_BRUTE_ALLPAIRS_OPS_BUDGET / (num_perm ·
+    n_new)⌋ streamed rows, so a block's n_new · rows · num_perm stays
+    within the op budget whatever the known side's size. est values are
+    matches/num_perm — the identical division the exchange plan computes
+    — and the row set is the banded-collision set: exact slice equality
+    implies bucket-hash equality, so this emits exactly the pairs the
+    exchange plan's xxhash64 bucket join emits, minus only phantom 2⁻⁶⁴
+    hash-collision candidates (which the est filter would almost surely
+    have dropped anyway)."""
     nid_t = new_index.schema["id"].dataType.simpleString()
     kid_t = known_index.schema["id"].dataType.simpleString()
     schema = f"id_new {nid_t}, id_known {kid_t}, est_jaccard double"
+    if not len(new_rows):
+        return known_index.sparkSession.createDataFrame([], schema)
     r = num_perm // bands
-    pb = known_index.toPandas()
-    if not len(pb):
-        return new_index.sparkSession.createDataFrame([], schema)
-    B = np.vstack(pb["sig"].to_numpy())
-    ids_b = pb["id"].to_numpy()
-    n_b = len(B)
-    b_bcast = new_index.sparkSession.sparkContext.broadcast((B, ids_b))
+    A = np.vstack(new_rows["sig"].to_numpy())
+    ids_a = new_rows["id"].to_numpy()
+    n_a = len(A)
+    block = max(1, _BRUTE_ALLPAIRS_OPS_BUDGET // (num_perm * n_a))
+    # a band's r values as one opaque byte key: sort and search compare
+    # with memcmp, ~4× faster than a structured (r-field) dtype
+    band_key = np.dtype((np.void, A.dtype.itemsize * r))
+    a_bcast = known_index.sparkSession.sparkContext.broadcast((A, ids_a))
     thr = float(threshold)
 
     def gen(batches):
         import pandas as pd
 
-        B_, idsb = b_bcast.value
+        A_, idsa = a_bcast.value
         band_maps = []
         for b0 in range(bands):
-            sl = np.ascontiguousarray(B_[:, b0 * r : (b0 + 1) * r])
-            keys = sl.view([("", sl.dtype)] * r).ravel()
+            sl = np.ascontiguousarray(A_[:, b0 * r : (b0 + 1) * r])
+            keys = sl.view(band_key).ravel()
             order = np.argsort(keys, kind="stable")
             band_maps.append((keys[order], order))
         for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.vstack(pdf["sig"].to_numpy())
-            ids_a = pdf["id"].to_numpy()
-            pis, pjs = [], []
-            for b0, (skeys, order) in enumerate(band_maps):
-                sa = np.ascontiguousarray(A[:, b0 * r : (b0 + 1) * r])
-                ka = sa.view([("", sa.dtype)] * r).ravel()
-                left = np.searchsorted(skeys, ka, side="left")
-                right = np.searchsorted(skeys, ka, side="right")
-                cnt = right - left
-                hit = np.flatnonzero(cnt > 0)
-                if not len(hit):
+            for s0 in range(0, len(pdf), block):
+                blk = pdf.iloc[s0 : s0 + block]
+                B = np.vstack(blk["sig"].to_numpy())
+                pis, pjs = [], []
+                for b0, (skeys, order) in enumerate(band_maps):
+                    sb = np.ascontiguousarray(B[:, b0 * r : (b0 + 1) * r])
+                    kb = sb.view(band_key).ravel()
+                    left = np.searchsorted(skeys, kb, side="left")
+                    right = np.searchsorted(skeys, kb, side="right")
+                    cnt = right - left
+                    hit = np.flatnonzero(cnt > 0)
+                    if not len(hit):
+                        continue
+                    lens = cnt[hit]
+                    starts = left[hit]
+                    total = int(lens.sum())
+                    # flatten the [start, start+len) ranges without a loop
+                    base = np.repeat(
+                        starts - np.concatenate(([0], np.cumsum(lens)[:-1])), lens
+                    )
+                    pis.append(order[np.arange(total) + base])
+                    pjs.append(np.repeat(hit, lens))
+                if not pis:
                     continue
-                lens = cnt[hit]
-                starts = left[hit]
-                total = int(lens.sum())
-                # flatten the [start, start+len) ranges without a loop
-                base = np.repeat(
-                    starts - np.concatenate(([0], np.cumsum(lens)[:-1])), lens
+                pi = np.concatenate(pis)
+                pj = np.concatenate(pjs)
+                _, idx = np.unique(pj.astype(np.int64) * n_a + pi, return_index=True)
+                pi, pj = pi[idx], pj[idx]
+                outs_i, outs_j, outs_e = [], [], []
+                # chunk small: the fancy-indexed A/B copies are (CH × num_perm)
+                # int64 — 8 MB each at 8192, cache-friendly and GC-light even
+                # with 32 concurrent worker processes (65536 caused ~4 GB of
+                # transient churn per match and context-dependent 2× swings)
+                CH = 8_192
+                for s in range(0, len(pi), CH):
+                    a = A_[pi[s : s + CH]]
+                    b = B[pj[s : s + CH]]
+                    est = (a == b).sum(axis=1) / float(num_perm)
+                    keep = est >= thr
+                    outs_i.append(pi[s : s + CH][keep])
+                    outs_j.append(pj[s : s + CH][keep])
+                    outs_e.append(est[keep])
+                ki = np.concatenate(outs_i)
+                if not len(ki):
+                    continue
+                yield pd.DataFrame(
+                    {
+                        "id_new": idsa[ki],
+                        "id_known": blk["id"].to_numpy()[np.concatenate(outs_j)],
+                        "est_jaccard": np.concatenate(outs_e),
+                    }
                 )
-                pjs.append(order[np.arange(total) + base])
-                pis.append(np.repeat(hit, lens))
-            if not pis:
-                continue
-            pi = np.concatenate(pis)
-            pj = np.concatenate(pjs)
-            _, idx = np.unique(pi.astype(np.int64) * n_b + pj, return_index=True)
-            pi, pj = pi[idx], pj[idx]
-            outs_i, outs_j, outs_e = [], [], []
-            # chunk small: the fancy-indexed A/B copies are (CH × num_perm)
-            # int64 — 8 MB each at 8192, cache-friendly and GC-light even
-            # with 32 concurrent worker processes (65536 caused ~4 GB of
-            # transient churn per match and context-dependent 2× swings)
-            CH = 8_192
-            for s in range(0, len(pi), CH):
-                a = A[pi[s : s + CH]]
-                b = B_[pj[s : s + CH]]
-                est = (a == b).sum(axis=1) / float(num_perm)
-                keep = est >= thr
-                outs_i.append(pi[s : s + CH][keep])
-                outs_j.append(pj[s : s + CH][keep])
-                outs_e.append(est[keep])
-            ki = np.concatenate(outs_i)
-            if not len(ki):
-                continue
-            yield pd.DataFrame(
-                {
-                    "id_new": ids_a[ki],
-                    "id_known": idsb[np.concatenate(outs_j)],
-                    "est_jaccard": np.concatenate(outs_e),
-                }
-            )
 
-    return new_index.select("id", "sig").mapInPandas(gen, schema)
+    return known_index.select("id", "sig").mapInPandas(gen, schema)
 
 
 @_CACHES.scoped
@@ -1186,10 +1197,20 @@ def minhash_match_pairs(
     APPROXIMATE by contract (the index holds no shingles to verify
     exactly); batch-mode `minhash_dedup_pairs` remains the exact path.
 
-    Plan: band-bucket equi-join over (id, band, bucket) projections —
-    16-byte keys, candidate pairs dedup'd BEFORE the signatures are
-    fetched, so the ~8·num_perm-byte sig rows enter only the two final
-    id-equi joins, never the banded fan-out.
+    Plan, for an index of any size: the new batch is the small side. Its
+    signatures are collected (at most _BRUTE_ALLPAIRS_MAX_DOCS + 1 rows)
+    and broadcast, and `_match_pairs_arrow_verify` streams the known
+    index once through a numpy band-collision + est kernel — zero
+    exchanges, and the known index is never persisted, counted or
+    shuffled, so a reference corpus costs one scan per batch.
+
+    The exchange plan is the fallback for new sides over the doc cap
+    (either index may then be large) and for `max_docs_per_bucket`:
+    band-bucket equi-join over (id, band, bucket) projections — 16-byte
+    keys, candidate pairs dedup'd BEFORE the signatures are fetched, so
+    the ~8·num_perm-byte sig rows enter only the two final id-equi joins,
+    never the banded fan-out. Both plans return the same rows (see
+    `_match_pairs_arrow_verify`).
 
     `max_docs_per_bucket` (default None = every band collision becomes a
     candidate) drops (band, bucket) keys holding more than the cap on
@@ -1203,50 +1224,24 @@ def minhash_match_pairs(
     missed — on natural large-vocab corpora hot buckets are stop-gram
     noise and the loss is negligible); capping logs a WARNING with the
     dropped-bucket count (the `jaccard_pairs` cap contract)."""
+    _require_banding(num_perm, bands)
+    if max_docs_per_bucket is None and not too_big_to_probe(new_index):
+        # a limit-capped collect, not a count: the kernel needs the rows
+        # anyway, and a new side under the cap is computed exactly once
+        new_rows = (
+            new_index.select("id", "sig")
+            .limit(_BRUTE_ALLPAIRS_MAX_DOCS + 1)
+            .toPandas()
+        )
+        if len(new_rows) <= _BRUTE_ALLPAIRS_MAX_DOCS:
+            return _match_pairs_arrow_verify(
+                new_index, new_rows, known_index, threshold, num_perm, bands
+            )
     # each index is consumed twice (band buckets + the final sig fetch) —
     # and a derived index (minhash_index straight off a corpus) would
-    # otherwise re-run its whole signature aggregation per consumer.
-    # Parquet-backed indexes pay two cheap scans either way; derived ones
-    # save the dominant cost (measured on the sf0.1 headline).
+    # otherwise re-run its whole signature aggregation per consumer
     new_index = _op_persist(new_index)
     known_index = _op_persist(known_index)
-    if max_docs_per_bucket is None:
-        # cost-gated fast path (guide §2.4/§4.2): when BOTH index sides
-        # are small, the whole band-collision + est verification runs as
-        # one zero-exchange numpy pass over the new side with the known
-        # side broadcast — on a degenerate (tiny-vocab, self-similar)
-        # corpus the band join emits candidates approaching all-pairs
-        # (measured at sf0.1: 2.46M raw / 1.69M distinct pairs from
-        # 2.5k × 2.5k docs) and first the distinct exchange (r14), then
-        # the interpreted per-pair HOF est fold (r15) dominated the
-        # operator. Output row set and values are IDENTICAL (see
-        # `_match_pairs_arrow_verify`). Large indexes (either probe
-        # over the cap, or the pair×perm op budget exceeded) keep the
-        # exchange-based LSH plan — the size gate minhash_dedup_pairs
-        # also routes on.
-        # The probe is a FULL count, not a limit-capped one: a limit
-        # probe consumes cached partitions partially, which aborts their
-        # block store — the (expensive) signature pass then re-runs for
-        # every later consumer. count() materializes the persist that
-        # EVERY downstream plan fully scans anyway, so it is never
-        # wasted work; inputs `too_big_to_probe` are certainly over the
-        # doc cap and skip the probe (and any at-scale materialization)
-        # outright.
-        cap = _BRUTE_ALLPAIRS_MAX_DOCS
-        n_new = cap + 1 if too_big_to_probe(new_index) else new_index.count()
-        n_known = (
-            (cap + 1 if too_big_to_probe(known_index) else known_index.count())
-            if n_new <= cap
-            else cap + 1
-        )
-        if (
-            n_new <= cap
-            and n_known <= cap
-            and n_new * n_known * num_perm <= _BRUTE_ALLPAIRS_OPS_BUDGET
-        ):
-            return _match_pairs_arrow_verify(
-                new_index, known_index, threshold, num_perm, bands
-            )
     bn = _band_buckets(new_index, num_perm, bands).withColumnsRenamed(
         {"id": "id_new"}
     )

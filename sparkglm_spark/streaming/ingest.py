@@ -171,8 +171,9 @@ def neardup_ingest_batch(
 
     The batch's signatures are computed ONCE (the zero-shuffle
     `minhash_index` Arrow pass) and reused for both the match and the
-    index append — the batch text never shuffles, matching ships
-    (id, band, bucket) and signature rows only, and removal is a
+    index append — the batch text never shuffles, matching broadcasts the
+    batch's signatures and streams the index once without shuffling it
+    (batches under the doc cap), and removal is a
     broadcast anti-join of matched ids, so the 100 TB wire profile is the
     batch operator's. Within-batch near-dups are NOT resolved — the
     `minhash_dedup_against` contract (run `minhash_dedup_pairs` over the

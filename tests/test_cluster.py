@@ -79,6 +79,34 @@ def test_near_dup_clusters_assignment(spark):
         assert not out[i]["is_duplicate"]
 
 
+def test_near_dup_clusters_paths_agree_on_ids_absent_from_docs(spark, monkeypatch):
+    """Pair endpoints absent from `docs` (6-9) link clusters but are
+    not counted: the driver path and the distributed path (forced by a
+    zero edge cap) both count only `docs` rows per cluster."""
+    import sparkglm_spark.operators.cluster as C
+
+    docs = spark.createDataFrame([(i,) for i in (0, 1, 2, 3, 4, 5)], "doc_id long")
+    # {0,4,5,6,7}: 6 and 7 absent; {1,2,8}: 8 absent, links 1 and 2;
+    # {3,9}: 9 absent
+    pairs = _edges(spark, [(0, 4), (4, 5), (5, 7), (1, 8), (8, 2), (9, 3), (6, 7)])
+
+    def run():
+        return sorted(tuple(r) for r in near_dup_clusters(docs, pairs).collect())
+
+    fast = run()
+    labels_for = C._labels_for
+    monkeypatch.setattr(
+        C,
+        "_labels_for",
+        lambda *a, **kw: labels_for(*a, **{**kw, "driver_max_edges": 0}),
+    )
+    assert run() == fast
+    out = {r[0]: r for r in fast}
+    assert [out[i][1:3] for i in range(6)] == [
+        (0, 3), (1, 2), (1, 2), (3, 1), (0, 3), (0, 3)
+    ]
+
+
 def _union_find(n_nodes, pairs):
     """Reference twin: classic union-find with path compression, then
     relabel every component by its MINIMUM member — the same canonical

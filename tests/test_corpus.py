@@ -462,6 +462,52 @@ def test_unigram_logprob_scores_paths_agree(spark, monkeypatch):
         assert fast[i][1] == pytest.approx(join[i][1], rel=1e-14)
 
 
+@pytest.mark.parametrize("legacy", ["false", "true"])
+def test_count_map_literal_round_trips_in_both_parser_modes(spark, monkeypatch, legacy):
+    """Keys with quotes, backslashes and double quotes come back
+    unchanged whether or not the legacy `escapedStringLiterals` parser
+    mode is on, and the unigram fast path scores them like the join path
+    (the map literal must not depend on string-literal escaping)."""
+    import sparkglm_spark.operators.corpus as corpus
+
+    counts = {
+        "it's": 3,
+        "''": 1,
+        "a\\b": 2,
+        "\\'": 4,
+        '"q"': 5,
+        "\\n": 6,
+        "naïve": 7,
+        "": 8,
+    }
+    docs = spark.createDataFrame(
+        [(1, "it's a\\b \"q\" it's"), (2, "\\' \\n naïve a\\b")],
+        "doc_id long, text string",
+    )
+
+    def scores():
+        return {
+            r["doc_id"]: (r["n_tokens"], r["avg_logprob"])
+            for r in corpus.unigram_logprob_scores(docs).collect()
+        }
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(key, "false")
+    spark.conf.set(key, legacy)
+    try:
+        m = corpus._count_map_literal(list(counts), list(counts.values()))
+        assert spark.range(1).select(m.alias("m")).first()["m"] == counts
+        fast = scores()
+        monkeypatch.setattr(corpus, "_UNIGRAM_MAP_VOCAB_MAX", 0)
+        join = scores()
+    finally:
+        spark.conf.set(key, old)
+    assert set(fast) == set(join) == {1, 2}
+    for i in fast:
+        assert fast[i][0] == join[i][0]
+        assert fast[i][1] == pytest.approx(join[i][1], rel=1e-14)
+
+
 def test_unigram_logprob_scores_external_reference_oov(spark):
     import math
 

@@ -605,12 +605,14 @@ def test_minhash_match_est_jaccard_tracks_exact(spark):
     assert abs(got[0]["est_jaccard"] - exact) <= 4 * sigma + 1e-9
 
 
-def test_minhash_match_pairs_never_joins_signatures_through_bands(documents):
-    """The banded fan-out must carry (id, band, bucket) only — the
-    ~1KB signature arrays enter the two final id-equi joins, not the
-    exploded candidate join."""
+def test_minhash_match_pairs_never_joins_signatures_through_bands(documents, monkeypatch):
+    """The exchange plan's banded fan-out must carry (id, band, bucket)
+    only — the ~1KB signature arrays enter the two final id-equi joins,
+    not the exploded candidate join. A zero doc cap forces the exchange
+    plan (the kernel path has no exchanges to inspect)."""
     from sparkglm_spark.plans.inspect import exchange_schemas
 
+    monkeypatch.setattr(D, "_BRUTE_ALLPAIRS_MAX_DOCS", 0)
     ref = documents.where(F.col("doc_id") % 2 == 0)
     new = documents.where(F.col("doc_id") % 2 == 1)
     out = D.minhash_match_pairs(
@@ -618,9 +620,14 @@ def test_minhash_match_pairs_never_joins_signatures_through_bands(documents):
         D.minhash_index(ref, "doc_id", "text"),
         threshold=0.9,
     )
-    for ex in exchange_schemas(out):
-        if "band" in ex["columns"] or "bucket" in ex["columns"]:
-            assert "sig" not in ex["columns"] and "__sa" not in ex["columns"]
+    banded = [
+        ex
+        for ex in exchange_schemas(out)
+        if "band" in ex["columns"] or "bucket" in ex["columns"]
+    ]
+    assert banded, "expected the banded candidate exchange"
+    for ex in banded:
+        assert "sig" not in ex["columns"] and "__sa" not in ex["columns"]
 
 
 def test_minhash_match_hot_bucket_cap(spark, caplog):
@@ -658,12 +665,28 @@ def test_minhash_match_hot_bucket_cap(spark, caplog):
     assert (999, 998) in full and len(full) == 30 * 30 + 1
 
 
-def test_minhash_match_empty_sides(spark, documents):
-    """Empty new batch or empty index → empty matches, no errors."""
-    idx = D.minhash_index(documents, "doc_id", "text")
-    empty = D.minhash_index(documents.where("doc_id < 0"), "doc_id", "text")
-    assert D.minhash_match_pairs(empty, idx).count() == 0
-    assert D.minhash_match_pairs(idx, empty).count() == 0
+def _kernel_match(new_idx, known_idx, **kw):
+    """minhash_match_pairs on the kernel path, asserting its single-scan
+    invariant: the call caches no frame, and the result plan has no
+    exchange (the known index is streamed once, never shuffled)."""
+    from sparkglm_spark.plans.inspect import exchange_schemas
+
+    before = D._CACHES.frames()
+    out = D.minhash_match_pairs(new_idx, known_idx, **kw)
+    added = [f for f in D._CACHES.frames() if not any(f is b for b in before)]
+    assert not added, [f.columns for f in added]
+    assert exchange_schemas(out) == []
+    return out
+
+
+def test_minhash_match_empty_sides(spark, documents, tmp_path):
+    """Empty new batch or empty index → empty matches, no errors, on the
+    kernel path (no cache, no exchange)."""
+    D.minhash_index(documents, "doc_id", "text").write.parquet(str(tmp_path / "idx"))
+    idx = spark.read.parquet(str(tmp_path / "idx"))
+    empty = idx.where("id < 0")
+    assert _kernel_match(empty, idx).count() == 0
+    assert _kernel_match(idx, empty).count() == 0
     # dedup against an empty index keeps everything
     kept = D.minhash_dedup_against(
         documents, empty, "doc_id", "text"
@@ -699,32 +722,76 @@ def test_index_signatures_equal_wide_signatures_portable(documents):
         assert wide == arr, mode
 
 
-def test_match_pairs_arrow_and_exchange_paths_agree(documents):
-    """r15: the cost-gated numpy arrow-verify path must produce the same
-    (id_new, id_known, est_jaccard) rows as the exchange-based LSH plan
-    (forced by zeroing the ops budget) — est bit-identical."""
+def _sorted_rows(df):
+    return (
+        df.toPandas()
+        .sort_values(["id_new", "id_known"])
+        .reset_index(drop=True)
+    )
+
+
+def _assert_same_rows(got, want):
+    assert len(got) == len(want) and len(got) > 0
+    assert got["id_new"].tolist() == want["id_new"].tolist()
+    assert got["id_known"].tolist() == want["id_known"].tolist()
+    assert got["est_jaccard"].tolist() == want["est_jaccard"].tolist()
+
+
+@pytest.fixture(scope="module")
+def match_indexes(spark, documents, tmp_path_factory):
+    """Parquet-backed (new, known) indexes in the ingest shape: a quarter
+    of the docs form the batch, the rest the known index."""
+    base = tmp_path_factory.mktemp("match")
+    out = []
+    for name, cond in (("new", "doc_id % 4 = 1"), ("known", "doc_id % 4 != 1")):
+        D.minhash_index(documents.where(cond), "doc_id", "text").write.parquet(
+            str(base / name)
+        )
+        out.append(spark.read.parquet(str(base / name)))
+    return tuple(out)
+
+
+def test_match_pairs_arrow_and_exchange_paths_agree(documents, monkeypatch):
+    """The numpy kernel must produce the same (id_new, id_known,
+    est_jaccard) rows as the exchange-based LSH plan (forced by a zero
+    doc cap) — est bit-identical."""
     odd = documents.where(documents.doc_id % 2 == 1)
     even = documents.where(documents.doc_id % 2 == 0)
     idx_new = D.minhash_index(odd, "doc_id", "text")
     idx_known = D.minhash_index(even, "doc_id", "text")
-    fast = (
+    fast = _sorted_rows(
         D.minhash_match_pairs(idx_new, idx_known, threshold=0.6, bands=16)
-        .toPandas()
-        .sort_values(["id_new", "id_known"])
-        .reset_index(drop=True)
     )
-    budget = D._BRUTE_ALLPAIRS_OPS_BUDGET
-    D._BRUTE_ALLPAIRS_OPS_BUDGET = 0
-    try:
-        slow = (
-            D.minhash_match_pairs(idx_new, idx_known, threshold=0.6, bands=16)
-            .toPandas()
-            .sort_values(["id_new", "id_known"])
-            .reset_index(drop=True)
-        )
-    finally:
-        D._BRUTE_ALLPAIRS_OPS_BUDGET = budget
-    assert len(fast) == len(slow) and len(fast) > 0
-    assert fast["id_new"].tolist() == slow["id_new"].tolist()
-    assert fast["id_known"].tolist() == slow["id_known"].tolist()
-    assert fast["est_jaccard"].tolist() == slow["est_jaccard"].tolist()
+    monkeypatch.setattr(D, "_BRUTE_ALLPAIRS_MAX_DOCS", 0)
+    slow = _sorted_rows(
+        D.minhash_match_pairs(idx_new, idx_known, threshold=0.6, bands=16)
+    )
+    _assert_same_rows(fast, slow)
+
+
+def test_match_pairs_ingest_shape_paths_agree(match_indexes, monkeypatch):
+    """The ingest shape: the known index is over the doc cap and the new
+    batch under it. The kernel streams the over-cap known side; a cap
+    just below the batch size forces the exchange plan. Same rows."""
+    new, known = match_indexes
+    n_new = new.count()
+    assert known.count() > n_new
+    monkeypatch.setattr(D, "_BRUTE_ALLPAIRS_MAX_DOCS", n_new)
+    fast = _sorted_rows(_kernel_match(new, known, threshold=0.6, bands=16))
+    monkeypatch.setattr(D, "_BRUTE_ALLPAIRS_MAX_DOCS", n_new - 1)
+    slow = _sorted_rows(D.minhash_match_pairs(new, known, threshold=0.6, bands=16))
+    _assert_same_rows(fast, slow)
+
+
+@pytest.mark.parametrize("rows_per_block", [1, 2, 3])
+def test_match_pairs_kernel_blocks_agree(match_indexes, monkeypatch, rows_per_block):
+    """The op budget bounds the kernel's streamed blocks to
+    budget // (num_perm · n_new) rows; blocks of 1-3 rows must give the
+    rows of the default (one block per Arrow batch)."""
+    new, known = match_indexes
+    want = _sorted_rows(_kernel_match(new, known, threshold=0.6, bands=16))
+    monkeypatch.setattr(
+        D, "_BRUTE_ALLPAIRS_OPS_BUDGET", 128 * new.count() * rows_per_block
+    )
+    got = _sorted_rows(_kernel_match(new, known, threshold=0.6, bands=16))
+    _assert_same_rows(got, want)
