@@ -48,14 +48,11 @@ def get_levels_multi(
     # headroom absorbs HLL error (default rsd 5%); estimates between
     # max_levels and the headroom fall through to the exact check on a
     # harmlessly small collected set.
-    from sparkglm_spark.plans.partitioning import no_aqe
+    from sparkglm_spark.plans.partitioning import collect_small
 
-    # both probes are one-row aggregates: AQE's stage barrier doubles
-    # their job count for nothing (r15, see no_aqe)
-    with no_aqe(df.sparkSession):
-        est = df.agg(
-            *[F.approx_count_distinct(F.col(c)).alias(c) for c in cols]
-        ).first()
+    est = collect_small(
+        df.agg(*[F.approx_count_distinct(F.col(c)).alias(c) for c in cols])
+    )[0]
     too_big = {c: int(est[c]) for c in cols if est[c] > max_levels * 1.5}
     if too_big:
         raise ValueError(
@@ -64,15 +61,16 @@ def get_levels_multi(
         )
     # slice to max_levels+1 BEFORE collecting: bounds what ships to the
     # driver even when the estimate squeaked under the guard.
-    with no_aqe(df.sparkSession):
-        row = df.agg(
+    row = collect_small(
+        df.agg(
             *[
                 F.slice(
                     F.array_sort(F.collect_set(F.col(c))), 1, max_levels + 1
                 ).alias(c)
                 for c in cols
             ]
-        ).first()
+        )
+    )[0]
     out: dict[str, list[str]] = {}
     for c in cols:
         lv = list(row[c])

@@ -210,10 +210,6 @@ def variance_binomial(mu: Column, m: Column) -> Column:
     return mu * (F.lit(1.0) - mu / m)
 
 
-def variance_binomial_np(mu, m):
-    return mu * (1.0 - mu / m)
-
-
 def deviance_binomial_expr(y: Column, mu: Column, m: Column) -> Column:
     """Per-row binomial deviance contribution (× Σ then ×2 → deviance).
     reference: devBinomial, GLM.scala:162-170. Zero-count terms are guarded

@@ -34,7 +34,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparkglm_spark.plans.gram import gram_aggregate
+from sparkglm_spark.plans.gram import gram_aggregate, gram_sums, gram_unpack
+from sparkglm_spark.plans.partitioning import collect_small
 from sparkglm_spark.operators.lm import (
     _encode_formula,
     check_weight_domain,
@@ -564,13 +565,8 @@ def elastic_net_grouped(
     def wgt(e):
         return e if w is None else e * w
 
-    aggs = []
-    for i in range(k):
-        for j in range(i, k):
-            aggs.append(F.sum(wgt(xs[i] * xs[j])).alias(f"__g_{i}_{j}"))
-    for i in range(k):
-        aggs.append(F.sum(wgt(xs[i] * y)).alias(f"__xy_{i}"))
-        aggs.append(F.sum(wgt(xs[i])).alias(f"__xs_{i}"))
+    aggs = gram_sums(xs, w, y, prefix="__")
+    aggs += [F.sum(wgt(xs[i])).alias(f"__xs_{i}") for i in range(k)]
     aggs.append(F.sum(wgt(y)).alias("__sy"))
     aggs.append(F.sum(wgt(y * y)).alias("__syy"))
     aggs.append(F.count(F.lit(1)).alias("__n"))
@@ -613,11 +609,7 @@ def elastic_net_grouped(
             )
             for r in pdf.to_dict("records"):
                 n = int(r["__n"])
-                xtx = np.empty((k, k))
-                for i in range(k):
-                    for j in range(i, k):
-                        xtx[i, j] = xtx[j, i] = r[f"__g_{i}_{j}"]
-                xty = np.array([r[f"__xy_{i}"] for i in range(k)])
+                xtx, xty = gram_unpack(r, k, prefix="__")
                 csums = np.array([r[f"__xs_{i}"] for i in range(k)])
                 sw = None
                 ok_w = True
@@ -936,13 +928,7 @@ def glm_elastic_net(
             c = F.col(x_cols[j])
             aggs0.append(F.sum(wr * c).alias(f"s_{i}"))
             aggs0.append(F.sum(wr * c * c).alias(f"ss_{i}"))
-        from sparkglm_spark.plans.partitioning import no_aqe
-
-        # every collect in this fit is a one-row aggregate over the cached
-        # working frame — AQE's stage barrier doubles the job count for
-        # nothing (r15, see no_aqe)
-        with no_aqe(work.sparkSession):
-            r0 = work.agg(*aggs0).collect()[0]
+        r0 = collect_small(work.agg(*aggs0))[0]
         n = int(r0["n"])
         if n <= 1:
             raise ValueError("need more than one row")
@@ -1030,22 +1016,13 @@ def glm_elastic_net(
                 (wr * fam.deviance_term(y, mu, one)).alias("__devt"),
             )
             w_c, z_c = F.col("__w"), F.col("__z")
-            aggs = []
-            for i in range(k):
-                for j in range(i, k):
-                    aggs.append(F.sum(w_c * xs[i] * xs[j]).alias(f"g_{i}_{j}"))
-                aggs.append(F.sum(w_c * xs[i] * z_c).alias(f"xz_{i}"))
+            aggs = gram_sums(xs, w_c, z_c)
             aggs.append(F.sum(w_c).alias("sw"))
             aggs.append(F.sum(w_c * z_c).alias("swz"))
             aggs.append((F.lit(2.0) * F.sum(F.col("__devt"))).alias("dev"))
-            with no_aqe(work.sparkSession):
-                r = proj.agg(*aggs).collect()[0]
+            r = collect_small(proj.agg(*aggs))[0]
             dev = float(r["dev"])
-            Gw = np.empty((k, k))
-            for i in range(k):
-                for j in range(i, k):
-                    Gw[i, j] = Gw[j, i] = float(r[f"g_{i}_{j}"])
-            gz = np.array([float(r[f"xz_{i}"]) for i in range(k)])
+            Gw, gz = gram_unpack(r, k)
             sw = float(r["sw"])
             swz = float(r["swz"])
             new_beta, theta = _penalized_irls_update(
@@ -1072,13 +1049,14 @@ def glm_elastic_net(
             mu = lnk.unlink(eta, one)
             if family == "binomial":
                 mu = F.least(F.greatest(mu, F.lit(1e-10)), F.lit(1.0 - 1e-10))
-            with no_aqe(work.sparkSession):
-                dev = float(
+            dev = float(
+                collect_small(
                     work.agg(
                         (F.lit(2.0) * F.sum(wr * fam.deviance_term(y, mu, one)))
                         .alias("dev")
-                    ).collect()[0]["dev"]
-                )
+                    )
+                )[0]["dev"]
+            )
     finally:
         work.unpersist()
 
@@ -1113,13 +1091,10 @@ def _collect_fold_rows(proj, aggs) -> dict:
     monkeypatch point for the job-count plan test: the lock-step design's
     load-bearing claim is that EVERY fold model (and the λ warm-start
     machinery) advances from this single aggregation."""
-    from sparkglm_spark.plans.partitioning import no_aqe
-
-    with no_aqe(proj.sparkSession):  # n_folds tiny rows; no AQE barrier
-        return {
-            int(r["__fold"]): r
-            for r in proj.groupBy("__fold").agg(*aggs).collect()
-        }
+    return {
+        int(r["__fold"]): r
+        for r in collect_small(proj.groupBy("__fold").agg(*aggs))
+    }
 
 
 def _glm_enet_pathwise(
@@ -1384,12 +1359,7 @@ def _glm_enet_pathwise(
                 xs = [F.col(c) for c in x_cols]
                 for si in range(len(live)):
                     w_c, z_c = F.col(f"__w{si}"), F.col(f"__z{si}")
-                    for i in range(k):
-                        for j2 in range(i, k):
-                            aggs.append(
-                                F.sum(w_c * xs[i] * xs[j2]).alias(f"g{si}_{i}_{j2}")
-                            )
-                        aggs.append(F.sum(w_c * xs[i] * z_c).alias(f"xz{si}_{i}"))
+                    aggs += gram_sums(xs, w_c, z_c, prefix=f"m{si}_")
                     aggs.append(F.sum(w_c).alias(f"sw{si}"))
                     aggs.append(F.sum(w_c * z_c).alias(f"swz{si}"))
                 rows = _collect_fold_rows(proj, aggs)
@@ -1399,13 +1369,9 @@ def _glm_enet_pathwise(
                     sw = swz = 0.0
                     for g in s["train"]:
                         r = rows[g]
-                        for i in range(k):
-                            for j2 in range(i, k):
-                                v = float(r[f"g{si}_{i}_{j2}"])
-                                Gw[i, j2] += v
-                                if j2 != i:
-                                    Gw[j2, i] += v
-                            gz[i] += float(r[f"xz{si}_{i}"])
+                        g_xtx, g_xty = gram_unpack(r, k, prefix=f"m{si}_")
+                        Gw += g_xtx
+                        gz += g_xty
                         sw += float(r[f"sw{si}"])
                         swz += float(r[f"swz{si}"])
                     new_beta, s["theta"] = _penalized_irls_update(

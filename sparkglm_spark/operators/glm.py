@@ -43,6 +43,8 @@ from sparkglm_spark.operators.lm import (
     prediction_over_raw,
     solve_normal,
 )
+from sparkglm_spark.plans.gram import gram_sums, gram_unpack
+from sparkglm_spark.plans.partitioning import collect_small, ensure_parallel
 
 
 @dataclass
@@ -127,13 +129,6 @@ class GLM:
         base_cols = [y_col, *x_cols] + [
             c for c in (m_col, offset_col, weight_col) if c
         ]
-        from sparkglm_spark.plans.partitioning import ensure_parallel, no_aqe
-
-        # every driver collect in this fit is a ONE-ROW aggregate over the
-        # cached working frame — AQE's per-stage barrier doubles the job
-        # count for nothing (r15, see no_aqe; results bit-identical)
-        _no_aqe = lambda: no_aqe(df.sparkSession)  # noqa: E731
-
         # single-split inputs would otherwise run EVERY IRLS aggregation on
         # one core; the cached working frame is re-read each iteration, so
         # fan it out once up front (no-op when the input is already split)
@@ -152,8 +147,7 @@ class GLM:
                     "slogw"
                 ),
             ]
-        with _no_aqe():
-            row = work.agg(*init_aggs).collect()[0]
+        row = collect_small(work.agg(*init_aggs))[0]
         n = int(row["n"])
         if wt is not None:
             from sparkglm_spark.operators.lm import check_weight_domain
@@ -233,14 +227,9 @@ class GLM:
             ]
 
         def _gram_aggs() -> list[Column]:
-            xs = [F.col(c) for c in x_cols]
-            w_c, z_c = F.col("__w"), F.col("__z")
-            aggs: list[Column] = []
-            for i in range(k):
-                for j in range(i, k):
-                    aggs.append(F.sum(w_c * xs[i] * xs[j]).alias(f"g_{i}_{j}"))
-            for i in range(k):
-                aggs.append(F.sum(w_c * xs[i] * z_c).alias(f"xz_{i}"))
+            aggs = gram_sums(
+                [F.col(c) for c in x_cols], F.col("__w"), F.col("__z")
+            )
             aggs.append((F.lit(2.0) * F.sum(F.col("__devt"))).alias("dev"))
             # piggyback the model-stats sums (Pearson χ², pure-SQL loglik):
             # when the loop exits via convergence, the breaking aggregation
@@ -295,8 +284,7 @@ class GLM:
         if exact_iterations is not None:
             max_iter = exact_iterations
         while n_iter < max_iter:
-            with _no_aqe():
-                agg_row = zw_gram_frame(beta).collect()[0]
+            agg_row = collect_small(zw_gram_frame(beta))[0]
             dev_cur = float(agg_row["dev"])  # deviance of CURRENT β's μ
             if null_dev is None:
                 null_dev = dev_cur  # deviance at μ = ȳ (GLM.scala:271-272,443-444)
@@ -307,13 +295,7 @@ class GLM:
             ):
                 converged = True
                 break
-            xtwx = np.empty((k, k), dtype=np.float64)
-            for i in range(k):
-                for j in range(i, k):
-                    v = float(agg_row[f"g_{i}_{j}"])
-                    xtwx[i, j] = v
-                    xtwx[j, i] = v
-            xtwz = np.array([float(agg_row[f"xz_{i}"]) for i in range(k)])
+            xtwx, xtwz = gram_unpack(agg_row, k)
             beta, xtwxi = solve_normal(xtwx, xtwz)
             dev_prev = dev_cur
             n_iter += 1
@@ -394,12 +376,13 @@ class GLM:
             # one extra SQL pass with the estimated dispersion)
             ll_e = F.lit(0.0)
         if stat_row is None:
-            with _no_aqe():
-                stat_row = work.agg(
+            stat_row = collect_small(
+                work.agg(
                     F.sum(wr * pearson_e).alias("pearson"),
                     F.sum(wr * ll_e).alias("ll"),
                     dev_agg_expr(beta),
-                ).collect()[0]
+                )
+            )[0]
         pearson = float(stat_row["pearson"])
         deviance = float(stat_row["dev"])
 
@@ -431,8 +414,8 @@ class GLM:
             shape = 1.0 / disp
             import math
 
-            with _no_aqe():
-                ll_row = work.agg(
+            ll_row = collect_small(
+                work.agg(
                     F.sum(
                         wr
                         * (
@@ -441,7 +424,8 @@ class GLM:
                             - F.lit(shape) * F.log(mu * F.lit(disp))
                         )
                     ).alias("llp")
-                ).collect()[0]
+                )
+            )[0]
             ll = float(ll_row["llp"]) - nw * math.lgamma(shape)
             aic = -2.0 * ll + 2.0 * (k + 1)  # dispersion counts as a param
         elif fam.name == "tweedie":
@@ -1218,8 +1202,6 @@ def glm_nb(
         theta_iterations = 2 if theta_iterations is None else theta_iterations
     extra = [c for c in (offset_col, weight_col) if c]
     encoded, target, x_cols, levels = _glm_design(df, formula, extra, na_action)
-    from sparkglm_spark.plans.partitioning import ensure_parallel
-
     work = ensure_parallel(
         encoded.select(target, *x_cols, *extra)
     ).persist()

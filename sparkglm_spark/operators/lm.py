@@ -33,7 +33,8 @@ from sparkglm_spark.functions.encoding import (
     omit_na,
 )
 from sparkglm_spark.functions.special import t_pvalue_two_sided
-from sparkglm_spark.plans.gram import gram_aggregate
+from sparkglm_spark.plans.gram import gram_aggregate, gram_sums, gram_unpack
+from sparkglm_spark.plans.partitioning import collect_small
 
 
 def solve_normal(xtx: np.ndarray, xty: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -608,14 +609,8 @@ def lm_grouped(
     def wgt(e: Column) -> Column:
         return e if w is None else e * w
 
-    xs = [F.col(c) for c in x_cols]
     y = F.col(target)
-    aggs: list[Column] = []
-    for i in range(k):
-        for j in range(i, k):
-            aggs.append(F.sum(wgt(xs[i] * xs[j])).alias(f"__g_{i}_{j}"))
-    for i in range(k):
-        aggs.append(F.sum(wgt(xs[i] * y)).alias(f"__xy_{i}"))
+    aggs = gram_sums([F.col(c) for c in x_cols], w, y, prefix="__")
     aggs.append(F.sum(wgt(y)).alias("__sy"))
     aggs.append(F.sum(wgt(y * y)).alias("__syy"))
     aggs.append(F.count(F.lit(1)).alias("__n"))
@@ -644,11 +639,7 @@ def lm_grouped(
             # underscore-prefixed Gram columns)
             for r in pdf.to_dict("records"):
                 n = int(r["__n"])
-                xtx = np.empty((k, k))
-                for i in range(k):
-                    for j in range(i, k):
-                        xtx[i, j] = xtx[j, i] = r[f"__g_{i}_{j}"]
-                xty = np.array([r[f"__xy_{i}"] for i in range(k)])
+                xtx, xty = gram_unpack(r, k, prefix="__")
                 coefs, r2_val = None, None
                 if n >= k:
                     try:
@@ -754,13 +745,8 @@ def fold_gram_collect(
     def wgt(e: Column) -> Column:
         return e if w is None else e * w
 
-    aggs: list[Column] = []
-    for i in range(k):
-        for j in range(i, k):
-            aggs.append(F.sum(wgt(xs[i] * xs[j])).alias(f"g_{i}_{j}"))
-    for i in range(k):
-        aggs.append(F.sum(wgt(xs[i] * y)).alias(f"xy_{i}"))
-        aggs.append(F.sum(wgt(xs[i])).alias(f"xs_{i}"))
+    aggs = gram_sums(xs, w, y)
+    aggs += [F.sum(wgt(xs[i])).alias(f"xs_{i}") for i in range(k)]
     aggs.append(F.sum(wgt(y)).alias("sy"))
     aggs.append(F.sum(wgt(y * y)).alias("syy"))
     aggs.append(F.count(F.lit(1)).alias("n"))
@@ -768,10 +754,7 @@ def fold_gram_collect(
         aggs.append(F.sum(w).alias("sw"))
         aggs.append(F.min(w).alias("minw"))
         aggs.append(F.count(w).alias("nw"))
-    from sparkglm_spark.plans.partitioning import no_aqe
-
-    with no_aqe(encoded.sparkSession):  # n_folds tiny rows; no AQE barrier
-        rows = encoded.groupBy("__fold").agg(*aggs).collect()
+    rows = collect_small(encoded.groupBy("__fold").agg(*aggs))
 
     if w is not None and rows:
         # Σw ≤ 0 over ALL rows would silently degenerate EVERY training
@@ -789,11 +772,7 @@ def fold_gram_collect(
         )
 
     def unpack(r):
-        xtx = np.empty((k, k))
-        for i in range(k):
-            for j in range(i, k):
-                xtx[i, j] = xtx[j, i] = r[f"g_{i}_{j}"]
-        xty = np.array([r[f"xy_{i}"] for i in range(k)])
+        xtx, xty = gram_unpack(r, k)
         col_sums = np.array([r[f"xs_{i}"] for i in range(k)])
         sw = float(r["sw"]) if w is not None else None
         return (
@@ -930,26 +909,11 @@ def robust_standard_errors(
         pred = pred + F.lit(float(model.coefs[i])) * F.col(f"__f{i}")
     e2 = (F.col("__y") - pred) * (F.col("__y") - pred)
 
-    def gram_sums(weight: Column | None) -> list[Column]:
-        out = []
-        for i in range(k):
-            for j in range(i, k):
-                prod = F.col(f"__f{i}") * F.col(f"__f{j}")
-                out.append(
-                    F.sum(prod if weight is None else weight * prod).alias(
-                        f"{'m' if weight is not None else 'g'}_{i}_{j}"
-                    )
-                )
-        return out
-
+    fs = [F.col(f"__f{i}") for i in range(k)]
     if kind in ("HC2", "HC3"):
         # pass 1: X'X alone -> (X'X)^-1 enters the leverage expression
-        row = base.agg(*gram_sums(None)).collect()[0]
-        xtx = np.zeros((k, k))
-        for i in range(k):
-            for j in range(i, k):
-                xtx[i, j] = xtx[j, i] = float(row[f"g_{i}_{j}"])
-        xtxi = np.linalg.inv(xtx)
+        row = base.agg(*gram_sums(fs)).collect()[0]
+        xtxi = np.linalg.inv(gram_unpack(row, k, with_xy=False)[0])
         h = F.lit(0.0)
         for i in range(k):
             for j in range(k):
@@ -957,18 +921,11 @@ def robust_standard_errors(
         u = e2 / (F.lit(1.0) - h)
         if kind == "HC3":
             u = u / (F.lit(1.0) - h)
-        row = base.agg(*gram_sums(u)).collect()[0]
+        row = base.agg(*gram_sums(fs, u, prefix="m")).collect()[0]
     else:
-        row = base.agg(*gram_sums(None), *gram_sums(e2)).collect()[0]
-        xtx = np.zeros((k, k))
-        for i in range(k):
-            for j in range(i, k):
-                xtx[i, j] = xtx[j, i] = float(row[f"g_{i}_{j}"])
-        xtxi = np.linalg.inv(xtx)
-    meat = np.zeros((k, k))
-    for i in range(k):
-        for j in range(i, k):
-            meat[i, j] = meat[j, i] = float(row[f"m_{i}_{j}"])
+        row = base.agg(*gram_sums(fs), *gram_sums(fs, e2, prefix="m")).collect()[0]
+        xtxi = np.linalg.inv(gram_unpack(row, k, with_xy=False)[0])
+    meat = gram_unpack(row, k, prefix="m", with_xy=False)[0]
     if kind == "HC1":
         meat *= n / (n - k)
     v = xtxi @ meat @ xtxi

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparkglm_spark.plans.gram import gram_aggregate
+from sparkglm_spark.plans.partitioning import collect_small
 
 
 def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -124,20 +125,16 @@ def welch_ttest(
     Groups are ordered by their value so the sign of `t` is deterministic."""
     from sparkglm_spark.functions.special import t_pvalue_two_sided
 
-    from sparkglm_spark.plans.partitioning import no_aqe
-
-    with no_aqe(df.sparkSession):  # two tiny rows, no AQE barrier (r15)
-        rows = (
-            df.where(F.col(group_col).isNotNull())
-            .groupBy(group_col)
-            .agg(
-                F.count(value_col).alias("n"),
-                F.avg(value_col).alias("mean"),
-                F.var_samp(value_col).alias("var"),
-            )
-            .orderBy(group_col)
-            .collect()
+    rows = collect_small(
+        df.where(F.col(group_col).isNotNull())
+        .groupBy(group_col)
+        .agg(
+            F.count(value_col).alias("n"),
+            F.avg(value_col).alias("mean"),
+            F.var_samp(value_col).alias("var"),
         )
+        .orderBy(group_col)
+    )
     if len(rows) != 2:
         raise ValueError(
             f"welch_ttest needs exactly 2 groups, found {len(rows)}: "
@@ -675,10 +672,7 @@ def numeric_profile(
             F.max(col).alias(f"__max_{c}"),
             pct.alias(f"__pct_{c}"),
         ]
-    from sparkglm_spark.plans.partitioning import no_aqe
-
-    with no_aqe(df.sparkSession):  # one-row aggregate, no AQE barrier (r15)
-        row = df.agg(*aggs).collect()[0]
+    row = collect_small(df.agg(*aggs))[0]
     out = []
     for c in cols:
         pct = row[f"__pct_{c}"] or [None] * 4
@@ -728,10 +722,10 @@ def oneway_anova(
 
     The k-row collect is bounded: a group column with more than
     `max_groups` distinct levels raises instead of silently pulling
-    millions of rows to the driver (the chi2 ka·kb ≤ 1e6 / top-n
-    key_skew_report convention — the LIMIT is pushed into the plan, so
-    the wire is bounded too). A grouping that wide isn't a k-segment
-    ANOVA question; pre-bucket the column first."""
+    millions of rows to the driver (the chi2 ka·kb ≤ 1e6 convention —
+    the LIMIT is pushed into the plan, so the wire is bounded too). A
+    grouping that wide isn't a k-segment ANOVA question; pre-bucket the
+    column first."""
     from sparkglm_spark.functions.special import f_sf
 
     v = F.col(value_col).cast("double")

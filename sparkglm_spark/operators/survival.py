@@ -50,7 +50,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sparkglm_spark.plans.partitioning import fanout_groups
+from sparkglm_spark.plans.partitioning import collect_small, fanout_groups
 from sparkglm_spark.plans.prefix import global_running_sum
 
 # Euler–Mascheroni constant: E[W] = −γ for the standard minimum
@@ -514,12 +514,7 @@ class _CoxStatsEngine:
                 for j in range(i, k):
                     aggs.append(F.sum(xs[i] * xs[j] * m).alias(f"c{ci}"))
                     ci += 1
-            from sparkglm_spark.plans.partitioning import no_aqe
-
-            # per-iteration 32-row totals agg: AQE's stage barrier adds a
-            # job per Newton iteration for nothing (r15, see no_aqe)
-            with no_aqe(self.part.sparkSession):
-                rows = self.part.groupBy("__pid").agg(*aggs).collect()
+            rows = collect_small(self.part.groupBy("__pid").agg(*aggs))
             run = np.zeros(ncc)
             for r in sorted(rows, key=lambda r: r["__pid"]):
                 offsets[int(r["__pid"])] = run.copy()

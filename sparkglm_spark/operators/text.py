@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparkglm_spark.plans.caching import CacheRegistry
-from sparkglm_spark.plans.partitioning import ensure_parallel
+from sparkglm_spark.plans.partitioning import collect_small, ensure_parallel
 
 # bm25's compact (id, dl, tf…) frame is persisted for its two readers
 # (stats reduction + scoring); the registry bounds cache lifetime across
@@ -900,22 +900,17 @@ def tfidf_vectors(
     # PLUS the grand-total row, whose countDistinct(id) is exactly m —
     # every doc in the arrays frame has ≥1 token hence ≥1 bucket, so the
     # exploded frame covers the same id set the old rows-frame
-    # countDistinct saw. no_aqe: one-collect aggregation, no barrier.
-    from sparkglm_spark.plans.partitioning import no_aqe
-
+    # countDistinct saw.
     exploded = rows.select(
         F.col("id"), F.explode(F.array_distinct("__bkts")).alias("__b")
     )
-    with no_aqe(rows.sparkSession):
-        stats = (
-            exploded.rollup("__b")
-            .agg(
-                F.count(F.lit(1)).alias("__df"),
-                F.countDistinct("id").alias("__m"),
-                F.grouping("__b").alias("__tot"),
-            )
-            .collect()
+    stats = collect_small(
+        exploded.rollup("__b").agg(
+            F.count(F.lit(1)).alias("__df"),
+            F.countDistinct("id").alias("__m"),
+            F.grouping("__b").alias("__tot"),
         )
+    )
     # rollup over an EMPTY frame emits no grand-total row (unlike a
     # global aggregate, which emits one) — an empty/blank corpus means
     # m = 0, matching the old countDistinct-over-empty behavior

@@ -11,6 +11,12 @@ aggregation inside whole-stage codegen — rows stream through, nothing is
 materialized, the shuffle carries exactly one O(k^2) record per task, and the
 same plan runs unchanged on a 1000-executor cluster at 100 TB. The driver
 only ever sees a k×k matrix.
+
+This module owns the Gram column format (the reference's one
+`utils.wlsComponents`, utils.scala:70-112): `gram_sums` builds the
+aggregate list for every fitter — LM, GLM IRLS, elastic net, grouped and
+per-fold — and `gram_unpack` turns its collected row back into the
+symmetric matrix. No other module formats a Gram alias.
 """
 
 from __future__ import annotations
@@ -20,6 +26,8 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from sparkglm_spark.plans.partitioning import collect_small
 
 
 @dataclass
@@ -40,6 +48,44 @@ def _weighted(expr: Column, weight: Column | None) -> Column:
     return expr if weight is None else expr * weight
 
 
+def gram_sums(
+    xs: list[Column],
+    w: Column | None = None,
+    y: Column | None = None,
+    prefix: str = "",
+) -> list[Column]:
+    """The X'WX (and X'Wy) aggregate expressions: Σ(w·xᵢ)·xⱼ for i ≤ j as
+    `{prefix}g_{i}_{j}` and, with `y`, Σ(w·xᵢ)·y as `{prefix}xy_{i}`.
+    The product order is fixed to (w·xᵢ)·xⱼ, so every caller sums the
+    same terms; unweighted it is xᵢ·xⱼ. `prefix` keeps several Gram
+    blocks (grouped keys, per-model blocks) apart in one aggregation."""
+    k = len(xs)
+    wx = xs if w is None else [w * x for x in xs]
+    aggs = [
+        F.sum(wx[i] * xs[j]).alias(f"{prefix}g_{i}_{j}")
+        for i in range(k)
+        for j in range(i, k)
+    ]
+    if y is not None:
+        aggs += [F.sum(wx[i] * y).alias(f"{prefix}xy_{i}") for i in range(k)]
+    return aggs
+
+
+def gram_unpack(
+    row, k: int, prefix: str = "", with_xy: bool = True
+) -> tuple[np.ndarray, np.ndarray | None]:
+    """(X'WX, X'Wy) from one collected `gram_sums` row — a Spark `Row` or
+    a pandas record. X'Wy is None when `with_xy` is false."""
+    xtx = np.empty((k, k), dtype=np.float64)
+    for i in range(k):
+        for j in range(i, k):
+            xtx[i, j] = xtx[j, i] = float(row[f"{prefix}g_{i}_{j}"])
+    xty = None
+    if with_xy:
+        xty = np.array([float(row[f"{prefix}xy_{i}"]) for i in range(k)])
+    return xtx, xty
+
+
 def gram_aggregate(
     df: DataFrame,
     x_cols: list[str],
@@ -53,16 +99,9 @@ def gram_aggregate(
     """
     k = len(x_cols)
     w = F.col(weight_col) if weight_col else None
-    xs = [F.col(c) for c in x_cols]
-
-    aggs: list[Column] = []
-    for i in range(k):
-        for j in range(i, k):
-            aggs.append(F.sum(_weighted(xs[i] * xs[j], w)).alias(f"g_{i}_{j}"))
-    if y_col is not None:
-        y = F.col(y_col)
-        for i in range(k):
-            aggs.append(F.sum(_weighted(xs[i] * y, w)).alias(f"xy_{i}"))
+    y = F.col(y_col) if y_col is not None else None
+    aggs = gram_sums([F.col(c) for c in x_cols], w, y)
+    if y is not None:
         aggs.append(F.sum(_weighted(y, w)).alias("sy"))
         aggs.append(F.sum(_weighted(y * y, w)).alias("syy"))
     aggs.append(F.count(F.lit(1)).alias("n"))
@@ -74,23 +113,10 @@ def gram_aggregate(
         aggs.append(F.min(w).alias("minw"))
         aggs.append(F.count(w).alias("nw"))
 
-    # one-row aggregate: AQE's stage barrier would double the job count
-    # for nothing (r15 — see plans.partitioning.no_aqe)
-    from sparkglm_spark.plans.partitioning import no_aqe
-
-    with no_aqe(df.sparkSession):
-        row = df.agg(*aggs).collect()[0]
-
-    xtx = np.empty((k, k), dtype=np.float64)
-    for i in range(k):
-        for j in range(i, k):
-            v = float(row[f"g_{i}_{j}"])
-            xtx[i, j] = v
-            xtx[j, i] = v
-    xty = None
+    row = collect_small(df.agg(*aggs))[0]
+    xtx, xty = gram_unpack(row, k, with_xy=y is not None)
     sy = syy = None
-    if y_col is not None:
-        xty = np.array([float(row[f"xy_{i}"]) for i in range(k)], dtype=np.float64)
+    if y is not None:
         sy = float(row["sy"])
         syy = float(row["syy"])
     sw = float(row["sw"]) if w is not None else None
@@ -117,7 +143,6 @@ def gram_query(
     exact DECIMAL(38,6) value: decimal→string is bit-identical across
     engines, whereas the final decimal→double cast can differ by 1 ulp
     (DuckDB converts unscaled-int→double then divides — two roundings)."""
-    k = len(x_cols)
     cols = list(x_cols) + ([y_col] if y_col else [])
 
     def prod(i: int, j: int) -> Column:
@@ -135,12 +160,15 @@ def gram_query(
             if decimal:
                 # inputs carry ≤6 decimal digits → (38,6) is exact
                 e = e.cast("decimal(38,6)").cast("string")
-            name = f"{cols[i]}__{cols[j]}"
-            aggs.append(e.alias(name))
-            names.append(name)
+            aggs.append(e.alias(f"c{len(names)}"))
+            names.append(f"{cols[i]}__{cols[j]}")
     wide = df.agg(*aggs)
-    # long format: one row per (i,j) pair → stable for hash comparison
-    stack_expr = "stack({n}, {args}) as (term, value)".format(
-        n=len(names), args=", ".join(f"'{nm}', {nm}" for nm in names)
-    )
-    return wide.selectExpr(stack_expr).orderBy("term")
+    # long format: one row per (i,j) pair → stable for hash comparison.
+    # Column names travel as literals over positional aliases, never
+    # through SQL text, so any column name is safe.
+    pairs = [
+        e for p, nm in enumerate(names) for e in (F.lit(nm), F.col(f"c{p}"))
+    ]
+    return wide.select(
+        F.stack(F.lit(len(names)), *pairs).alias("term", "value")
+    ).orderBy("term")

@@ -10,7 +10,7 @@ it is a no-op (no shuffle inserted).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 
 def _rdd_partitions_if_free(df: DataFrame) -> int | None:
@@ -47,30 +47,28 @@ def _plan_size_estimate(df: DataFrame) -> int:
         return 1 << 62  # unknown → treat as huge (skip the probe)
 
 
-from contextlib import contextmanager
+def collect_small(df: DataFrame) -> list[Row]:
+    """Collect a result of a few rows (a one-row aggregate, per-fold or
+    per-group totals) with adaptive query execution off. This is the one
+    writer of `spark.sql.adaptive.enabled` in the package.
 
-
-@contextmanager
-def no_aqe(spark):
-    """Disable adaptive query execution around an iterative fitter's
-    driver-collected one-row aggregations (r15, guide §1.2). AQE turns
-    every global aggregate into TWO jobs (map-stage materialization +
-    final read) with a scheduling barrier between them; for a fitter
-    whose per-iteration result is ONE row over an already-partitioned
-    cached frame there is nothing to adapt — the exchange carries
-    numPartitions rows regardless of data scale — so the barrier is pure
-    latency (measured: GLM IRLS 12 jobs → 5, bit-identical results, at
-    any scale the same plan runs minus the barrier). The previous value
-    is restored on exit.
+    Why: AQE turns every aggregate collect into TWO jobs (map-stage
+    materialization, then the final read) with a scheduling barrier
+    between them. For a result of a handful of rows there is nothing to
+    adapt — the exchange carries numPartitions rows at any data scale — so
+    the barrier is pure latency (measured: GLM IRLS 12 jobs → 5,
+    bit-identical results). The previous value is restored in a `finally`,
+    also when the collect raises.
 
     PRECONDITION: not thread-safe — the flag is session-global, so a
-    caller must not run concurrent queries that NEED AQE (skew joins,
-    coalescing) while inside. The fitters using this run their
-    iteration loop single-threaded by construction."""
+    concurrent query on the same session that NEEDS AQE (skew joins,
+    coalescing) may plan without it while this collect runs. The fitters
+    calling this run their loops single-threaded by construction."""
+    spark = df.sparkSession
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        yield
+        return df.collect()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
 

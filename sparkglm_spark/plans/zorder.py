@@ -14,9 +14,9 @@ repartitionByRange + sortWithinPartitions).
 Everything is declarative: the z-value is a pure Catalyst expression
 (shift/mask/or over the scaled columns — whole-stage codegen), the range
 partitioner does the global ordering, and the only driver state is the
-k-column min/max row. Reference: the engine's bucketing/partitioned-sink
-family (sources/io.py, plans/bucketing.py); the reference repo has no
-storage layout surface at all.
+k-column min/max row. Reference: the engine's partitioned-sink family
+(sources/io.py); the reference repo has no storage layout surface at
+all.
 """
 
 from __future__ import annotations

@@ -11,20 +11,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def get_spark(app_name: str = "sparkglm", master: str | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -64,7 +50,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         return df
     return spark.read.parquet(path)
-
-
-def read_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_table(spark, sf_dir, t) for t in TABLES}

@@ -14,8 +14,7 @@ choices invert:
   hive-partitions on a low-cardinality predicate column turns future
   `WHERE` clauses into directory pruning (files never opened); pairing it
   with `maxRecordsPerFile` bounds file sizes so a 1000-executor read
-  parallelizes evenly. Bucketed sinks (plans/bucketing.py) do the same for
-  join keys.
+  parallelizes evenly.
 
 `TABLE_SCHEMAS` pins the driver testdata contract (TESTDATA.md) so any
 format carrying these tables — parquet, CSV, JSON, a stream — reads with

@@ -112,35 +112,6 @@ def test_minhash_signatures_partial_agg(spark, documents):
     assert "partial_min" in plan
 
 
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
-    """Both sides written bucketed on the join key -> the join plan has no
-    shuffle (Exchange) on either side."""
-    import os
-
-    from sparkglm_spark.plans.bucketing import bucketed_join, write_bucketed
-
-    warehouse = str(tmp_path_factory.mktemp("warehouse"))
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    od = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    write_bucketed(
-        li.withColumnRenamed("l_orderkey", "orderkey"), "b_lineitem", ["orderkey"], 8,
-        path=os.path.join(warehouse, "b_lineitem"),
-    )
-    write_bucketed(
-        od.withColumnRenamed("o_orderkey", "orderkey"), "b_orders", ["orderkey"], 8,
-        path=os.path.join(warehouse, "b_orders"),
-    )
-    joined = bucketed_join(spark, "b_lineitem", "b_orders", on=["orderkey"])
-    plan = plan_of(joined)
-    assert "SortMergeJoin" in plan
-    assert "Exchange hashpartitioning" not in plan  # no shuffle on either side
-    # and it computes the right thing
-    expect = li.join(od, li.l_orderkey == od.o_orderkey).count()
-    assert joined.count() == expect
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-
-
 def test_asof_join_single_shuffle_no_join_node(spark):
     """The as-of join is union + one window: exactly one hash exchange on
     the key, and NO join operator at all (a SortMergeJoin/NLJ plan here
@@ -678,3 +649,119 @@ def test_glm_enet_cv_grouped_fanout_pinned(spark, lineitem):
     assert len(re.findall(r"\(\d+\) Exchange", body)) == 1
     assert "REPARTITION_BY_NUM" in body
     assert "FlatMapGroupsInPandas" in plan or "MapInPandas" in plan
+
+
+def test_gram_query_takes_any_column_name(spark):
+    """Column names reach the long-format stack as literals, never as SQL
+    text: a space or a quote in a name must not break the query."""
+    from sparkglm_spark.plans.gram import gram_query
+
+    df = spark.createDataFrame(
+        [(1.0, 2.0, 3.0), (4.0, 5.0, 6.0)], "`a b` double, `it's` double, y double"
+    )
+    for decimal in (False, True):
+        got = {r["term"]: float(r["value"]) for r in gram_query(
+            df, ["a b", "it's"], y_col="y", decimal=decimal
+        ).collect()}
+        assert got == {
+            "a b__a b": 17.0, "a b__it's": 22.0, "a b__y": 27.0,
+            "it's__it's": 29.0, "it's__y": 36.0, "y__y": 45.0,
+        }
+
+
+def _jobs_of(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fitter_job_counts_pinned(spark, lineitem, orders):
+    """The fitters' one-row collects run with AQE off (`collect_small`):
+    AQE would split each aggregate collect into a map-stage job and a
+    final job, roughly doubling these counts."""
+    from pyspark.sql import functions as F
+
+    from sparkglm_spark.operators.glm import glm
+    from sparkglm_spark.operators.lm import lm
+    from sparkglm_spark.operators.survival import coxph
+
+    gl = orders.withColumn("is_f", (F.col("o_orderstatus") == "F").cast("double"))
+    cx = orders.select(
+        (F.col("o_totalprice") / 1000.0).alias("t"),
+        (F.col("o_orderpriority") < "3").cast("double").alias("ev"),
+        (F.col("o_custkey") % 100 / 100.0).alias("x"),
+    )
+    got = {
+        "lm": _jobs_of(spark, "pin_lm", lambda: lm(
+            lineitem, "l_extendedprice ~ l_quantity + l_discount + l_returnflag"
+        )),
+        "glm": _jobs_of(spark, "pin_glm", lambda: glm(
+            gl, "is_f ~ o_totalprice + o_orderpriority", exact_iterations=3
+        )),
+        "coxph": _jobs_of(spark, "pin_coxph", lambda: coxph(
+            cx, "t", "ev", ["x"], exact_iterations=3
+        )),
+    }
+    assert got == {"lm": 3, "glm": 8, "coxph": 12}
+
+
+def test_collect_small_restores_aqe_after_a_failed_collect(spark):
+    from pyspark.sql import functions as F
+
+    from sparkglm_spark.plans.partitioning import collect_small
+
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    df = spark.range(10).agg(
+        F.sum(F.when(F.col("id") > 5, F.raise_error(F.lit("boom"))).otherwise(
+            F.col("id")
+        )).alias("s")
+    )
+    with pytest.raises(Exception, match="boom"):
+        collect_small(df)
+    assert spark.conf.get(key) == before
+    assert collect_small(spark.range(3).agg(F.sum("id").alias("s")))[0]["s"] == 3
+    assert spark.conf.get(key) == before
+
+
+def test_no_session_conf_writes_outside_two_helpers():
+    """Session-global conf is written in exactly two places: the AQE flip
+    in `collect_small` and the nanos-as-long flag in `session.read_table`.
+    Any other `conf.set(` would make a result depend on shared state."""
+    import ast
+    import pathlib
+
+    import sparkglm_spark
+
+    root = pathlib.Path(sparkglm_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        fns = [
+            n for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "set"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"
+            ):
+                # innermost enclosing function (ast.walk is breadth-first)
+                owner = [
+                    f.name for f in fns if f.lineno <= node.lineno <= f.end_lineno
+                ]
+                found.append(
+                    (path.relative_to(root).as_posix(), owner[-1] if owner else None)
+                )
+    assert sorted(found) == [
+        ("plans/partitioning.py", "collect_small"),
+        ("plans/partitioning.py", "collect_small"),
+        ("session.py", "read_table"),
+    ]

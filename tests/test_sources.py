@@ -155,26 +155,21 @@ def test_write_training_shards_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_convenience_readers_and_twins(spark, sf_dir):
-    """Small public conveniences stay covered: read_tables loads every
-    testdata table, stream_from_events_table yields a streaming frame with
-    the batch schema, bpe_token_count matches its expression twin, and
-    variance_binomial_np matches the SQL kernel."""
-    import numpy as np
+    """Small public conveniences stay covered: read_table loads a testdata
+    table, stream_from_events_table yields a streaming frame with the
+    batch schema, and bpe_token_count matches its expression twin."""
     from pyspark.sql import functions as F
 
-    from sparkglm_spark.functions.links import variance_binomial_np
     from sparkglm_spark.operators.text import bpe_token_count, bpe_token_count_expr
-    from sparkglm_spark.session import read_tables
+    from sparkglm_spark.session import read_table
     from sparkglm_spark.streaming.events import stream_from_events_table
 
-    tables = read_tables(spark, sf_dir)
-    assert set(tables) >= {"lineitem", "orders", "documents", "events"}
-    assert tables["region"].count() == 5
+    assert read_table(spark, sf_dir, "region").count() == 5
 
     s = stream_from_events_table(spark, sf_dir)
-    assert s.isStreaming and s.schema == tables["events"].schema
+    assert s.isStreaming and s.schema == read_table(spark, sf_dir, "events").schema
 
-    docs = tables["documents"].limit(50)
+    docs = read_table(spark, sf_dir, "documents").limit(50)
     got = {r["doc_id"]: r["n_tokens_bpe"] for r in bpe_token_count(docs).collect()}
     want = {
         r["doc_id"]: r["w"]
@@ -183,9 +178,6 @@ def test_convenience_readers_and_twins(spark, sf_dir):
         ).collect()
     }
     assert got == want and len(got) == 50
-
-    mu, m = np.array([0.2, 1.5, 4.0]), np.array([1.0, 2.0, 8.0])
-    np.testing.assert_allclose(variance_binomial_np(mu, m), mu * (1 - mu / m))
 
 
 # ---------------------------------------------------------------------------

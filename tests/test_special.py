@@ -61,43 +61,6 @@ def test_betainc_symmetry():
     assert special.betainc(0.5, 0.5, 0.5) == pytest.approx(0.5, abs=1e-12)
 
 
-def test_salted_join_equals_plain_join(spark, sf_dir):
-    import os
-    from sparkglm_spark.plans.skew import salted_join
-
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
-    plain = orders.join(cust, orders.o_custkey == cust.c_custkey).select(
-        "o_orderkey", "c_custkey"
-    )
-    salted = salted_join(
-        orders.withColumnRenamed("o_custkey", "c_custkey"), cust, on=["c_custkey"]
-    ).select("o_orderkey", "c_custkey")
-    a = sorted(map(tuple, plain.collect()))
-    b = sorted(map(tuple, salted.collect()))
-    assert a == b and len(a) > 0
-
-
-def test_key_skew_report_ranks_hot_keys(spark):
-    from sparkglm_spark.plans.skew import key_skew_report
-
-    rows = [("hot", i) for i in range(900)] + [
-        (f"k{i % 20}", i) for i in range(100)
-    ]
-    df = spark.createDataFrame(rows, "k string, v long")
-    rep = key_skew_report(df, ["k"], top_n=3).collect()
-    assert rep[0]["k"] == "hot"
-    assert rep[0]["n_rows"] == 900
-    assert rep[0]["share"] == pytest.approx(0.9)
-    # 21 keys, 1000 rows -> mean ~47.6; hot is ~18.9x the mean
-    assert rep[0]["ratio_to_mean"] == pytest.approx(900 / (1000 / 21))
-    assert len(rep) == 3
-    with pytest.raises(ValueError, match="key_cols"):
-        key_skew_report(df, [])
-    with pytest.raises(ValueError, match="top_n"):
-        key_skew_report(df, ["k"], top_n=0)
-
-
 def test_chisq_sf_closed_form_goldens():
     """Even-df χ² survival has exact closed forms (Poisson-sum identity);
     df=1 reduces to erfc — independent of the series/Lentz implementation."""
