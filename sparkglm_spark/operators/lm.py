@@ -912,7 +912,7 @@ def robust_standard_errors(
     fs = [F.col(f"__f{i}") for i in range(k)]
     if kind in ("HC2", "HC3"):
         # pass 1: X'X alone -> (X'X)^-1 enters the leverage expression
-        row = base.agg(*gram_sums(fs)).collect()[0]
+        row = collect_small(base.agg(*gram_sums(fs)))[0]
         xtxi = np.linalg.inv(gram_unpack(row, k, with_xy=False)[0])
         h = F.lit(0.0)
         for i in range(k):
@@ -921,9 +921,11 @@ def robust_standard_errors(
         u = e2 / (F.lit(1.0) - h)
         if kind == "HC3":
             u = u / (F.lit(1.0) - h)
-        row = base.agg(*gram_sums(fs, u, prefix="m")).collect()[0]
+        row = collect_small(base.agg(*gram_sums(fs, u, prefix="m")))[0]
     else:
-        row = base.agg(*gram_sums(fs), *gram_sums(fs, e2, prefix="m")).collect()[0]
+        row = collect_small(
+            base.agg(*gram_sums(fs), *gram_sums(fs, e2, prefix="m"))
+        )[0]
         xtxi = np.linalg.inv(gram_unpack(row, k, with_xy=False)[0])
     meat = gram_unpack(row, k, prefix="m", with_xy=False)[0]
     if kind == "HC1":

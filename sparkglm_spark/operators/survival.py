@@ -45,6 +45,7 @@ time (risk sets are nested, so each S·(t) is a suffix sum):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -1067,62 +1068,9 @@ def ph_assumption_test(
 def _bucket_pair_stats(pdf_t, pdf_e, pdf_r, pdf_w=None):
     """Within-bucket pair counts for Harrell's C (numpy, one bucket's
     rows): over pairs with t_i < t_j STRICTLY and i an event, count
-    (concordant: r_i > r_j) and (risk ties: r_i == r_j). BIT (Fenwick)
-    over risk ranks, times processed descending so the tree always holds
-    exactly the rows with LATER time. `pdf_w` (r13): case weights — the
-    tree accumulates ω MASSES and each event row contributes ω_q·(tree
-    prefix), so a pair (i, j) counts ω_i·ω_j (frequency-weight pair
-    semantics; integer ω ≡ replication EXACTLY — integer-valued float64
-    sums are exact). The unweighted branch is byte-unchanged int
-    arithmetic."""
-    order = np.argsort(pdf_t, kind="mergesort")
-    t, e, r = pdf_t[order], pdf_e[order], pdf_r[order]
-    w = pdf_w[order] if pdf_w is not None else None
-    # dense risk ranks 1..m (BIT is 1-indexed)
-    uniq = np.unique(r)
-    rank = np.searchsorted(uniq, r) + 1
-    m = len(uniq)
-    weighted = w is not None
-    bit = np.zeros(m + 1, dtype=np.float64 if weighted else np.int64)
-
-    def bit_add(i, x):
-        while i <= m:
-            bit[i] += x
-            i += i & (-i)
-
-    def bit_sum(i):  # prefix mass/count of ranks <= i
-        s = bit.dtype.type(0)
-        while i > 0:
-            s += bit[i]
-            i -= i & (-i)
-        return s
-
-    conc = ties = 0.0 if weighted else 0
-    n = len(t)
-    i = n - 1
-    while i >= 0:
-        k = i
-        while k >= 0 and t[k] == t[i]:
-            k -= 1
-        # rows (k, i] share time t[i]; BIT holds rows with time > t[i]
-        for q in range(k + 1, i + 1):
-            if e[q] == 1.0:
-                wq = w[q] if weighted else 1
-                conc += wq * bit_sum(rank[q] - 1)
-                ties += wq * (bit_sum(rank[q]) - bit_sum(rank[q] - 1))
-        for q in range(k + 1, i + 1):
-            bit_add(rank[q], w[q] if weighted else 1)
-        i = k
-    return conc, ties
-
-
-def _bucket_pair_stats_vec(pdf_t, pdf_e, pdf_r, pdf_w=None):
-    """Vectorized twin of `_bucket_pair_stats` (bit-for-bit identical
-    counts — fuzz-asserted in tests): the per-row Python Fenwick loop is
-    O(n log n) PYTHON operations, which dominates the within-bucket task
-    at the 4096-bucket clamp (~250k rows/bucket ⇒ millions of
-    interpreter ops per task). This replaces it with OFFLINE bit-plane
-    counting — pure numpy, O(bits(m) · n log n) vectorized work:
+    (concordant: r_i > r_j) and (risk ties: r_i == r_j). OFFLINE
+    bit-plane counting — pure numpy, O(bits(m) · n log n) vectorized
+    work, no per-row interpreter loop:
 
     For event row q, concordant = #{j: t_j > t_q, rank_j < rank_q}
                   = #{rank_j < rank_q} − #{t_j ≤ t_q, rank_j < rank_q}.
@@ -1137,8 +1085,7 @@ def _bucket_pair_stats_vec(pdf_t, pdf_e, pdf_r, pdf_w=None):
     `pdf_w` (r13): case weights — every insert carries its ω instead of
     1 (segmented cumsums of ω), every query scales by ω_q, so a pair
     counts ω_i·ω_j; integer-ω float64 sums are exact (replication
-    identity holds exactly). Unweighted stays int64 — byte-identical
-    counts."""
+    identity holds exactly). Unweighted counts are int64."""
     order = np.argsort(pdf_t, kind="mergesort")
     t, e, r = pdf_t[order], pdf_e[order], pdf_r[order]
     weighted = pdf_w is not None
@@ -1157,7 +1104,7 @@ def _bucket_pair_stats_vec(pdf_t, pdf_e, pdf_r, pdf_w=None):
     # at equal (segment, time-group) inserts sort first, so a query
     # counts inserts with gidx_j <= gidx_q (same-time rows included in
     # the ≤ side — they are then excluded from conc by the subtraction,
-    # matching the Fenwick's strict-time semantics)
+    # giving the strict-time semantics)
     item_rank = np.concatenate([rank, rank[qmask]])
     item_g = np.concatenate([gidx, gidx[qmask]])
     item_isq = np.concatenate(
@@ -1218,30 +1165,10 @@ def _bucket_pair_stats_vec(pdf_t, pdf_e, pdf_r, pdf_w=None):
 
 
 _CINDEX_ROWS_PER_BUCKET = 50_000
-_CINDEX_VEC_THRESHOLD = 2000  # below this the Python Fenwick is cheaper
 # distinct-risk cardinality under which the cumulative bucketing is
 # driver math over the collected per-risk counts (a few MB) instead of
 # the distributed prefix plan — a bounded limit-probe gates it exactly
 _CINDEX_RISK_DRIVER_MAX = 100_000
-
-
-def _levenberg_lams(hess) -> list:
-    """Damping ladder for the AFT Newton: λ values up to 100·max|diag H|
-    (past the largest eigenvalue H − λI is negative definite, so the
-    damped step ascends after halving). A non-finite diagonal (an
-    overflowed exp(z) on wild start data) clamps the cap to 1e12 —
-    `100·inf` would otherwise make the `while lam <= cap` ladder loop
-    forever (inf <= inf), hanging the driver or an executor task."""
-    diag_mag = float(np.max(np.abs(np.diag(hess))))
-    if not np.isfinite(diag_mag):
-        diag_mag = 1e12
-    lam_cap = 100.0 * max(1.0, diag_mag)
-    lams = [0.0]
-    lam = 1e-3
-    while lam <= lam_cap:
-        lams.append(lam)
-        lam *= 100.0
-    return lams
 
 
 def concordance_index(
@@ -1277,7 +1204,8 @@ def concordance_index(
         per-bucket offsets from a tiny codegen aggregate (r14; the
         same partition-once engine as the Cox fit);
       - within-bucket pairs count EXACTLY inside each bucket's Arrow
-        batch (applyInPandas, Fenwick tree over risk ranks — O(n_b log)),
+        batch (applyInPandas, bit-plane dominance counting over risk
+        ranks — O(bits · n_b log n_b) numpy),
         so the driver sees B partial rows;
       - #comparable = Σ_events #(t_j > t_i) from the same probe grid.
     `n_buckets` trades the per-task batch size (≈ n/B rows) against the
@@ -1287,12 +1215,12 @@ def concordance_index(
     `median_mode="auto"` and the union-find probe): B = ceil(n /
     50k rows-per-bucket), clamped to [16, 4096] — small inputs get a
     narrow probe grid, 1e9-row inputs still cap each within-bucket
-    Fenwick batch at a few hundred-k rows. Pass an int to override.
+    batch at a few hundred-k rows. Pass an int to override.
     `time_bucket` floors the time axis first (changes the statistic by
     coarsening ties, exactly as in `coxph`).
 
     `weight_col` (r13): per-row FREQUENCY (case) weights — a pair (i, j)
-    counts ω_i·ω_j, so every grid sum and Fenwick/bit-plane accumulator
+    counts ω_i·ω_j, so every grid sum and bit-plane accumulator
     carries ω masses and an INTEGER weight is exactly row replication
     for c_index AND all the pair counts (integer-valued float64 sums
     are exact — the identity asserts equality, not approx). Weighted
@@ -1544,15 +1472,7 @@ def concordance_index(
         def bucket_counts(pdf):
             import pandas as pd
 
-            # vectorized bit-plane counter above the threshold (identical
-            # counts, fuzz-asserted); interpreter-loop Fenwick below it
-            # where numpy overhead would dominate
-            fn = (
-                _bucket_pair_stats_vec
-                if len(pdf) >= _CINDEX_VEC_THRESHOLD
-                else _bucket_pair_stats
-            )
-            c, s = fn(
+            c, s = _bucket_pair_stats(
                 pdf["__t"].to_numpy(np.float64),
                 pdf["__e"].to_numpy(np.float64),
                 pdf["__r"].to_numpy(np.float64),
@@ -2050,6 +1970,342 @@ class WeibullAFT:
         return out
 
 
+class _AFTTerms(NamedTuple):
+    """Per-row AFT log-likelihood terms in the (P, Q) chain-rule frame,
+    Spark Columns or numpy arrays alike. z_L = (ln t − x'β)/σ and
+    z_R = (ln t2 − x'β)/σ; P = ∂ℓ/∂z_L, Q = ∂ℓ/∂z_R, PLL/QRR their second
+    derivatives, M = ∂²ℓ/∂z_L∂z_R, C = ∂ℓ/∂ln σ at fixed z (−δ: the
+    event density's −ln σ). Single-z kernels (codes 0/1) leave the z_R
+    side None."""
+
+    ll: object
+    zl: object
+    P: object
+    PLL: object
+    C: object
+    zr: object = None
+    Q: object = None
+    QRR: object = None
+    M: object = None
+
+
+def _norm_mills(v):
+    """(h, ln Φ̄) of the standard normal at `v` (numpy): the Mills ratio
+    h = φ/Φ̄ and the log survival. Φ̄ underflows past v ≈ 38, where the
+    asymptotes h → v + 1/v and ln Φ̄ → −v²/2 − ln(v√(2π)) take over."""
+    from sparkglm_spark.functions import special as _sp
+
+    with np.errstate(over="ignore", invalid="ignore", divide="ignore"):
+        sf = _sp.norm_sf(v)
+        ok = sf > 0.0
+        safe = np.where(ok, sf, 1.0)
+        h = np.where(
+            ok, _sp.norm_pdf(v) / safe, v + 1.0 / np.where(v != 0, v, 1.0)
+        )
+        lsf = np.where(
+            ok,
+            np.log(safe),
+            -0.5 * v * v - np.log(np.abs(v) * np.sqrt(2.0 * np.pi)),
+        )
+    return h, lsf
+
+
+def _mills_udf():
+    """`_norm_mills` as ONE Arrow pandas-UDF column (struct h, lsf) — the
+    lognormal censored tail's only Python; deterministic, so Spark
+    dedupes the repeated call inside one aggregation."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("h double, lsf double")
+    def _mills(zv):
+        import pandas as pd
+
+        h, lsf = _norm_mills(zv.to_numpy(dtype=np.float64))
+        return pd.DataFrame({"h": h, "lsf": lsf})
+
+    return _mills
+
+
+def _aft_col_terms(dist, d, zl, ls, zr=None, mills=None) -> _AFTTerms:
+    """The AFT kernel as Spark Columns: `d` the Surv code, `ls` ln σ (a
+    float, or a per-row Column when stratified). `zr` given selects the
+    weibull codes-0-3 (P, Q) kernel; `mills` is `_mills_udf()` for
+    lognormal."""
+    if dist == "loglogistic":
+        sg = F.lit(1.0) / (F.lit(1.0) + F.exp(-zl))  # e^z/(1+e^z)
+        # softplus ln(1+e^z): the z > 30 branch avoids exp overflow
+        sp = F.when(zl > 30.0, zl).otherwise(F.log1p(F.exp(zl)))
+        ev = d == 1.0
+        return _AFTTerms(
+            ll=F.when(ev, zl - ls - 2.0 * sp).otherwise(-sp),
+            zl=zl,
+            P=F.when(ev, F.lit(1.0) - 2.0 * sg).otherwise(-sg),
+            PLL=F.when(ev, -2.0 * sg * (F.lit(1.0) - sg)).otherwise(
+                -sg * (F.lit(1.0) - sg)
+            ),
+            C=F.when(ev, F.lit(-1.0)).otherwise(F.lit(0.0)),
+        )
+    if dist == "lognormal":
+        hl = mills(zl)
+        h = hl.getField("h")
+        ev = d == 1.0
+        return _AFTTerms(
+            ll=F.when(
+                ev, -0.5 * zl * zl - F.lit(0.5 * np.log(2.0 * np.pi)) - ls
+            ).otherwise(hl.getField("lsf")),
+            zl=zl,
+            P=F.when(ev, -zl).otherwise(-h),
+            PLL=F.when(ev, F.lit(-1.0)).otherwise(h * (zl - h)),
+            C=F.when(ev, F.lit(-1.0)).otherwise(F.lit(0.0)),
+        )
+    if zr is None:
+        u = F.exp(zl)
+        return _AFTTerms(ll=d * (zl - ls) - u, zl=zl, P=d - u, PLL=-u, C=-d)
+    # codes 0-3: left rows live on the Q side (z_R = z(t)), interval
+    # rows on both with the cross term M = −P·Q
+    ul, ur = F.exp(zl), F.exp(zr)
+    sl, sr = F.exp(-ul), F.exp(-ur)
+    f2 = -F.expm1(-ur)          # 1 − e^{−u}: the left-tail mass
+    d3 = sl - sr                # the interval mass
+    P = (
+        F.when(d == 1.0, F.lit(1.0) - ul)
+        .when(d == 0.0, -ul)
+        .when(d == 2.0, F.lit(0.0))
+        .otherwise(-ul * sl / d3)
+    )
+    Q = (
+        F.when(d == 2.0, ur * sr / f2)
+        .when(d == 3.0, ur * sr / d3)
+        .otherwise(F.lit(0.0))
+    )
+    # Spark's log(<=0) is NULL, which a SUM silently SKIPS — an
+    # underflowed tail mass must read −inf so the line-search rejects
+    # the state, not vanish from the likelihood
+    neg_inf = F.lit(float("-inf"))
+    return _AFTTerms(
+        ll=(
+            F.when(d == 1.0, zl - ls - ul)
+            .when(d == 0.0, -ul)
+            .when(d == 2.0, F.when(f2 > 0.0, F.log(f2)).otherwise(neg_inf))
+            .otherwise(F.when(d3 > 0.0, F.log(d3)).otherwise(neg_inf))
+        ),
+        zl=zl,
+        P=P,
+        PLL=(
+            F.when(d == 2.0, F.lit(0.0))
+            .when(d == 3.0, P * (F.lit(1.0) - ul) - P * P)
+            .otherwise(-ul)
+        ),
+        C=F.when(d == 1.0, F.lit(-1.0)).otherwise(F.lit(0.0)),
+        zr=zr,
+        Q=Q,
+        QRR=F.when(
+            (d == 2.0) | (d == 3.0), Q * (F.lit(1.0) - ur) - Q * Q
+        ).otherwise(F.lit(0.0)),
+        M=F.when(d == 3.0, -P * Q).otherwise(F.lit(0.0)),
+    )
+
+
+def _aft_np_terms(dist, e, zl, ls, zr=None) -> _AFTTerms:
+    """`_aft_col_terms` over numpy arrays (`e` the Surv codes, `ls` a
+    float) — the same four kernels, with explicit guards where Spark
+    relies on NULL/−inf semantics."""
+    ev = e == 1.0
+    with np.errstate(over="ignore", invalid="ignore", divide="ignore"):
+        if dist == "loglogistic":
+            sg = 1.0 / (1.0 + np.exp(-zl))
+            sp = np.where(
+                zl > 30.0, zl, np.log1p(np.exp(np.minimum(zl, 30.0)))
+            )
+            return _AFTTerms(
+                ll=np.where(ev, zl - ls - 2.0 * sp, -sp),
+                zl=zl,
+                P=np.where(ev, 1.0 - 2.0 * sg, -sg),
+                PLL=np.where(ev, -2.0 * sg * (1.0 - sg), -sg * (1.0 - sg)),
+                C=np.where(ev, -1.0, 0.0),
+            )
+        if dist == "lognormal":
+            h, lsf = _norm_mills(zl)
+            return _AFTTerms(
+                ll=np.where(
+                    ev, -0.5 * zl * zl - 0.5 * np.log(2.0 * np.pi) - ls, lsf
+                ),
+                zl=zl,
+                P=np.where(ev, -zl, -h),
+                PLL=np.where(ev, -1.0, h * (zl - h)),
+                C=np.where(ev, -1.0, 0.0),
+            )
+        if zr is None:
+            u = np.exp(zl)
+            return _AFTTerms(ll=e * (zl - ls) - u, zl=zl, P=e - u, PLL=-u,
+                             C=-e)
+        ul, ur = np.exp(zl), np.exp(zr)
+        sl, sr = np.exp(-ul), np.exp(-ur)
+        f2 = -np.expm1(-ur)
+        d3 = sl - sr
+        f2s = np.where(f2 > 0, f2, 1.0)
+        d3s = np.where(d3 > 0, d3, 1.0)
+        P = np.select(
+            [ev, e == 0.0, e == 2.0],
+            [1.0 - ul, -ul, 0.0],
+            default=np.where(d3 > 0, -ul * sl / d3s, np.nan),
+        )
+        Q = np.select(
+            [e == 2.0, e == 3.0],
+            [np.where(f2 > 0, ur * sr / f2s, np.nan),
+             np.where(d3 > 0, ur * sr / d3s, np.nan)],
+            default=0.0,
+        )
+        tails = (e == 2.0) | (e == 3.0)
+        return _AFTTerms(
+            ll=np.select(
+                [ev, e == 0.0, e == 2.0],
+                [zl - ls - ul, -ul,
+                 np.where(f2 > 0, np.log(f2s), -np.inf)],
+                default=np.where(d3 > 0, np.log(d3s), -np.inf),
+            ),
+            zl=zl,
+            P=P,
+            PLL=np.select(
+                [e == 2.0, e == 3.0], [0.0, P * (1.0 - ul) - P * P],
+                default=-ul,
+            ),
+            C=np.where(ev, -1.0, 0.0),
+            zr=zr,
+            Q=Q,
+            QRR=np.where(tails, Q * (1.0 - ur) - Q * Q, 0.0),
+            M=np.where(e == 3.0, -P * Q, 0.0),
+        )
+
+
+def _aft_sums(t: _AFTTerms, xs, w, inv, inv2) -> list:
+    """The ω-weighted Newton summands on (β, ln σ): [ℓ, g_β…, g_lnσ,
+    then the upper triangle of H row by row] — `_aft_unpack`'s order.
+    With ∂z/∂β_i = −x_i/σ for both z's and ∂z/∂ln σ = −z, this is the
+    exact chain rule; `inv`/`inv2` are 1/σ and 1/σ² (floats, or per-row
+    Columns when stratified). Without a z_R side the Q, QRR and M terms
+    drop out."""
+    if t.Q is None:
+        A, B = t.P, t.PLL
+        g_s = t.C - t.zl * t.P
+        h_bs = A + t.zl * t.PLL
+        h_ss = t.zl * t.P + t.zl * t.zl * t.PLL
+    else:
+        A = t.P + t.Q
+        B = t.PLL + 2.0 * t.M + t.QRR
+        g_s = t.C - t.zl * t.P - t.zr * t.Q
+        h_bs = A + t.zl * (t.PLL + t.M) + t.zr * (t.M + t.QRR)
+        h_ss = (
+            t.zl * t.P
+            + t.zr * t.Q
+            + t.zl * t.zl * t.PLL
+            + 2.0 * t.zl * t.zr * t.M
+            + t.zr * t.zr * t.QRR
+        )
+    k = len(xs)
+    out = [w * t.ll]
+    out += [w * (x * A * (-inv)) for x in xs]
+    out.append(w * g_s)
+    for i in range(k):
+        out += [w * (xs[i] * xs[j] * B * inv2) for j in range(i, k)]
+        out.append(w * (xs[i] * h_bs * inv))
+    out.append(w * h_ss)
+    return out
+
+
+def _aft_unpack(vals, k):
+    """Totals of `_aft_sums` → (ll, grad, hess) over the k+1 state."""
+    vals = [float(v) for v in vals]
+    grad = np.array(vals[1:k + 2])
+    hess = np.zeros((k + 1, k + 1))
+    it = iter(vals[k + 2:])
+    for i in range(k + 1):
+        for j in range(i, k + 1):
+            hess[i, j] = hess[j, i] = next(it)
+    return vals[0], grad, hess
+
+
+def _levenberg_lams(hess) -> list:
+    """Damping ladder for the AFT Newton: λ values up to 100·max|diag H|
+    (past the largest eigenvalue H − λI is negative definite, so the
+    damped step ascends after halving). A non-finite diagonal (an
+    overflowed exp(z) on wild start data) clamps the cap to 1e12 —
+    `100·inf` would otherwise make the `while lam <= cap` ladder loop
+    forever (inf <= inf), hanging the driver or an executor task."""
+    diag_mag = float(np.max(np.abs(np.diag(hess))))
+    if not np.isfinite(diag_mag):
+        diag_mag = 1e12
+    lam_cap = 100.0 * max(1.0, diag_mag)
+    lams = [0.0]
+    lam = 1e-3
+    while lam <= lam_cap:
+        lams.append(lam)
+        lam *= 100.0
+    return lams
+
+
+def _aft_newton(stats_at, ll_at, state, exact_iterations, tol, max_iter):
+    """Newton ascent on the AFT state (β, ln σ…) shared by `weibull_aft`
+    and `_aft_newton_dense`: `stats_at(state)` → (ll, grad, hess),
+    `ll_at(state)` → ll (the cheap line-search probe).
+
+    `exact_iterations=N` runs exactly N undamped steps. Otherwise each
+    step tries the Newton direction, then Levenberg damping H − λI up
+    the Hessian-scaled ladder (far from the optimum H need not be
+    negative definite), with step-halving until the log-likelihood
+    rises; it stops when ll changes by ≤ tol relative. A stall with no
+    ascent direction claims convergence only when ‖grad‖ ≈ 0 (a saddle
+    must not pass for a maximum). Returns (state, ll, cov, se, n_iter,
+    converged); an indefinite −H at an unconverged stop reports NaN se
+    instead of the sqrt of a negative variance."""
+    dim = len(state)
+    n_iter = 0
+    converged = False
+    ll = -np.inf
+    iters = exact_iterations if exact_iterations is not None else max_iter
+    for _ in range(iters):
+        ll0, grad, hess = stats_at(state)
+        if exact_iterations is None:
+            improved = False
+            for lam in _levenberg_lams(hess):
+                try:
+                    step = np.linalg.solve(hess - lam * np.eye(dim), grad)
+                except np.linalg.LinAlgError:
+                    continue
+                scale_f = 1.0
+                for _ in range(10):
+                    ns = state - scale_f * step
+                    ll1 = ll_at(ns)
+                    if np.isfinite(ll1) and ll1 > ll0:
+                        improved = True
+                        break
+                    scale_f *= 0.5
+                if improved:
+                    break
+            if not improved:
+                converged = bool(
+                    np.linalg.norm(grad) <= 1e-6 * (1.0 + abs(ll0))
+                )
+                break
+            state = ns
+        else:
+            state = state - np.linalg.solve(hess, grad)
+        n_iter += 1
+        if (
+            exact_iterations is None
+            and np.isfinite(ll)
+            and abs(ll0 - ll) <= tol * (abs(ll0) + tol)
+        ):
+            converged = True
+            break
+        ll = ll0
+    ll, _, hess = stats_at(state)
+    cov = np.linalg.inv(-hess)
+    diag = np.diag(cov)
+    se = np.where(diag >= 0, np.sqrt(np.abs(diag)), np.nan)
+    return state, ll, cov, se, n_iter, converged or exact_iterations is not None
+
+
 def weibull_aft(
     df: DataFrame,
     time_col: str,
@@ -2096,7 +2352,7 @@ def weibull_aft(
     weights and Σω ≤ 0 raise via the shared `check_weight_domain` guard,
     riding the same validation job; an all-zero event-weight mass raises
     (σ unidentified, like the unweighted no-events case). Unweighted
-    path multiplies by lit(1.0) — bitwise-unchanged.
+    sums multiply by lit(1.0), which is exact.
 
     `strata_col=g` (r14): per-stratum SCALE σ_g with one shared β — the
     R `survreg(… + strata(g))` semantics (each stratum gets its own
@@ -2121,10 +2377,9 @@ def weibull_aft(
     per-row contribution generalizes through ONE (P, Q) chain-rule
     frame — P = ∂ℓ/∂z_L, Q = ∂ℓ/∂z_R with z_L = (ln t − x'β)/σ,
     z_R = (ln t2 − x'β)/σ (left rows live entirely on the Q side,
-    interval rows on both; exact/right rows reproduce the original
-    expressions exactly) — so each Newton iteration STAYS one
-    aggregation job of CASE-kernel sums; a pure right/event input takes
-    the original code path bitwise-unchanged. The start regresses ln t
+    interval rows on both) — so each Newton iteration stays one
+    aggregation job of CASE-kernel sums. A pure right/event input uses
+    the single-z kernel (P = δ − u, no z_R side). The start regresses ln t
     (ln √(t·t2) for interval rows) over the location-informative
     (code ≠ 0) rows; identification needs more such rows than
     coefficients. The left tail ln(1 − e^{−u}) evaluates via expm1
@@ -2135,13 +2390,15 @@ def weibull_aft(
     `dist` (r14 — the R `survreg(dist=)` error-distribution switch):
     'weibull' (default — everything above), 'loglogistic' (W standard
     logistic: proportional ODDS in time, the AFT that allows
-    non-monotone hazards) and 'lognormal' (W standard normal). The
-    Newton is the SAME single-z chain-rule frame with per-distribution
-    (ℓ, A = dℓ/dz, B = d²ℓ/dz²) kernels: loglogistic is pure codegen
-    (sigmoid/softplus), lognormal routes the censored tail's Mills
-    ratio h = φ/Φ̄ through one Arrow pandas-UDF column per aggregation
-    (the probit-link precedent) with the asymptotic h → z + 1/z guard
-    past Φ̄ underflow. σ starts from the residual scale over sd(W)
+    non-monotone hazards) and 'lognormal' (W standard normal). Each
+    distribution only changes the per-row kernel (ℓ, P = dℓ/dz,
+    PLL = d²ℓ/dz²) of the same frame — the sums, their unpacking and
+    the Newton loop are shared (`_aft_sums`, `_aft_unpack`,
+    `_aft_newton`): loglogistic is pure codegen (sigmoid/softplus),
+    lognormal routes the censored tail's Mills ratio h = φ/Φ̄ through
+    one Arrow pandas-UDF column per aggregation (the probit-link
+    precedent) with the asymptotic h → z + 1/z guard past Φ̄
+    underflow. σ starts from the residual scale over sd(W)
     (π/√3 logistic, 1 normal); no intercept shift (their W means are
     0). Non-weibull dists support right censoring only for now (codes
     2/3 or strata raise)."""
@@ -2203,7 +2460,7 @@ def weibull_aft(
                 ).otherwise(0)
             ).alias("bad_t2")
         ]
-    chk = df.agg(
+    chk = collect_small(df.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum((ec == 1.0).cast("double")).alias("ne"),
         F.sum((ec != 0.0).cast("double")).alias("nloc"),
@@ -2231,7 +2488,7 @@ def weibull_aft(
         ),
         *t2_aggs,
         *wchk_aggs,
-    ).collect()[0]
+    ))[0]
     if chk["bad_t"]:
         raise ValueError(
             f"{chk['bad_t']} rows have null/non-positive time or a null "
@@ -2342,14 +2599,14 @@ def weibull_aft(
         if strata_col:
             # per-stratum identification check + the stratum order
             # (one bounded collect — strata are Newton-state entries)
-            srows = work.groupBy("__s").agg(
+            srows = collect_small(work.groupBy("__s").agg(
                 F.sum("__d").alias("de"),
                 *(
                     [F.sum(F.col("__w") * F.col("__d")).alias("we")]
                     if weight_col
                     else []
                 ),
-            ).collect()
+            ))
             for r in srows:
                 if float(r["de"] or 0.0) == 0.0:
                     raise ValueError(
@@ -2401,437 +2658,83 @@ def weibull_aft(
             beta[0] += _EULER_GAMMA * float(np.exp(log_s))
         xs = [F.col(c) for c in names]
         # ω multiplies every per-subject likelihood term; lit(1.0)·x is
-        # IEEE-exact, so the unweighted aggregates are bitwise-unchanged
+        # IEEE-exact, so unweighted sums equal the plain ones
         wv = F.col("__w") if weight_col else F.lit(1.0)
-
-        def stats_at(b, ls):
-            sigma = float(np.exp(ls))
-            eta = F.lit(0.0)
-            for col, bb in zip(xs, b):
-                eta = eta + F.lit(float(bb)) * col
-            z = (F.col("__lt") - eta) / F.lit(sigma)
-            u = F.exp(z)
-            d = F.col("__d")
-            gz = d - u                      # dℓ/dz
-            aggs = [F.sum(wv * (d * (z - F.lit(ls)) - u)).alias("ll")]
-            for i in range(k):
-                aggs.append(
-                    F.sum(wv * (xs[i] * gz * F.lit(-1.0 / sigma))).alias(f"g_{i}")
-                )
-            aggs.append(F.sum(wv * (-d - z * gz)).alias(f"g_{k}"))
-            for i in range(k):
-                for j in range(i, k):
-                    aggs.append(
-                        F.sum(
-                            wv * (xs[i] * xs[j] * (-u) * F.lit(1.0 / sigma**2))
-                        ).alias(f"h_{i}_{j}")
-                    )
-                aggs.append(
-                    F.sum(wv * (xs[i] * (gz - u * z) * F.lit(1.0 / sigma))).alias(
-                        f"h_{i}_{k}"
-                    )
-                )
-            aggs.append(F.sum(wv * (z * gz - z * z * u)).alias(f"h_{k}_{k}"))
-            row = work.agg(*aggs).collect()[0]
-            ll = float(row["ll"])
-            grad = np.array([float(row[f"g_{i}"]) for i in range(k + 1)])
-            hess = np.zeros((k + 1, k + 1))
-            for i in range(k + 1):
-                for j in range(i, k + 1):
-                    hess[i, j] = hess[j, i] = float(row[f"h_{i}_{j}"])
-            return ll, grad, hess
-
-        def ll_at(b, ls):
-            # line-search probe: ONE scalar sum, not the full O(k²)
-            # gradient/Hessian aggregation
-            sigma = float(np.exp(ls))
-            eta = F.lit(0.0)
-            for col, bb in zip(xs, b):
-                eta = eta + F.lit(float(bb)) * col
-            z = (F.col("__lt") - eta) / F.lit(sigma)
-            row = work.agg(
-                F.sum(wv * (F.col("__d") * (z - F.lit(ls)) - F.exp(z))).alias("ll")
-            ).collect()[0]
-            return float(row["ll"])
-
-        # ---- non-weibull error distributions (r14 — survreg dist=):
-        # the single-z chain-rule frame with per-dist (ℓ, A, B) kernels.
-        # g_i = −(1/σ)Σωx_iA, g_s = Σω(C − zA), H_ij = Σωx_ix_jB/σ²,
-        # H_is = Σωx_i(A + zB)/σ, H_ss = Σω(zA + z²B) — the weibull
-        # fast path is this frame at A = δ−u, B = −u.
-        if dist == "lognormal":
-            # ONE Arrow UDF per fit computing BOTH Mills-ratio pieces
-            # from a single norm_sf pass (review r14 pass 3 — was two
-            # UDFs, each re-created per iteration, each re-evaluating
-            # Φ̄); deterministic, so Spark dedupes the repeated call
-            # expression inside one aggregation
-            from pyspark.sql.functions import pandas_udf
-
-            from sparkglm_spark.functions import special as _sp
-
-            @pandas_udf("h double, lsf double")
-            def _mills(zv):
-                import pandas as pd
-
-                v = zv.to_numpy(dtype=np.float64)
-                sf = _sp.norm_sf(v)
-                ok = sf > 0.0
-                # Φ̄ underflows past z ≈ 38: h(z) → z + 1/z and
-                # ln Φ̄(z) → −z²/2 − ln(z√(2π))
-                h = np.where(
-                    ok,
-                    _sp.norm_pdf(v) / np.where(ok, sf, 1.0),
-                    v + 1.0 / np.where(v != 0, v, 1.0),
-                )
-                lsf = np.where(
-                    ok,
-                    np.log(np.where(ok, sf, 1.0)),
-                    -0.5 * v * v - np.log(np.abs(v) * np.sqrt(2.0 * np.pi)),
-                )
-                return pd.DataFrame({"h": h, "lsf": lsf})
-
-        def _dist_kernels(b, ls):
-            sigma = float(np.exp(ls))
-            eta = F.lit(0.0)
-            for col, bb in zip(xs, b):
-                eta = eta + F.lit(float(bb)) * col
-            z = (F.col("__lt") - eta) / F.lit(sigma)
-            d = F.col("__d")
-            if dist == "loglogistic":
-                sg = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))  # e^z/(1+e^z)
-                # softplus ln(1+e^z): the z > 30 branch avoids exp overflow
-                sp = F.when(z > 30.0, z).otherwise(F.log1p(F.exp(z)))
-                A = F.when(d == 1.0, F.lit(1.0) - 2.0 * sg).otherwise(-sg)
-                B = F.when(d == 1.0, -2.0 * sg * (F.lit(1.0) - sg)).otherwise(
-                    -sg * (F.lit(1.0) - sg)
-                )
-                llrow = F.when(d == 1.0, z - F.lit(ls) - 2.0 * sp).otherwise(
-                    -sp
-                )
-            else:  # lognormal — censored tail through the Mills ratio
-                hl = _mills(z)
-                h = hl.getField("h")
-                A = F.when(d == 1.0, -z).otherwise(-h)
-                B = F.when(d == 1.0, F.lit(-1.0)).otherwise(h * (z - h))
-                llrow = F.when(
-                    d == 1.0,
-                    -0.5 * z * z - F.lit(0.5 * np.log(2.0 * np.pi)) - F.lit(ls),
-                ).otherwise(hl.getField("lsf"))
-            C = F.when(d == 1.0, F.lit(-1.0)).otherwise(F.lit(0.0))
-            return sigma, z, A, B, C, llrow
-
-        def stats_at_dist(b, ls):
-            sigma, z, A, B, C, llrow = _dist_kernels(b, ls)
-            aggs = [F.sum(wv * llrow).alias("ll")]
-            for i in range(k):
-                aggs.append(
-                    F.sum(wv * (xs[i] * A * F.lit(-1.0 / sigma))).alias(
-                        f"g_{i}"
-                    )
-                )
-            aggs.append(F.sum(wv * (C - z * A)).alias(f"g_{k}"))
-            for i in range(k):
-                for j in range(i, k):
-                    aggs.append(
-                        F.sum(
-                            wv * (xs[i] * xs[j] * B * F.lit(1.0 / sigma**2))
-                        ).alias(f"h_{i}_{j}")
-                    )
-                aggs.append(
-                    F.sum(
-                        wv * (xs[i] * (A + z * B) * F.lit(1.0 / sigma))
-                    ).alias(f"h_{i}_{k}")
-                )
-            aggs.append(F.sum(wv * (z * A + z * z * B)).alias(f"h_{k}_{k}"))
-            row = work.agg(*aggs).collect()[0]
-            ll = float(row["ll"])
-            grad = np.array([float(row[f"g_{i}"]) for i in range(k + 1)])
-            hess = np.zeros((k + 1, k + 1))
-            for i in range(k + 1):
-                for j in range(i, k + 1):
-                    hess[i, j] = hess[j, i] = float(row[f"h_{i}_{j}"])
-            return ll, grad, hess
-
-        def ll_at_dist(b, ls):
-            *_r, llrow = _dist_kernels(b, ls)
-            row = work.agg(F.sum(wv * llrow).alias("ll")).collect()[0]
-            v = row["ll"]
-            return float(v) if v is not None else float("-inf")
-
-        # ---- mixed-censoring kernels (r14): the (P, Q) chain-rule
-        # frame. P = ∂ℓ/∂z_L, Q = ∂ℓ/∂z_R; left rows are Q-side-only
-        # with z_R = z(t), interval rows carry both sides and the cross
-        # term M = ∂²ℓ/∂z_L∂z_R = −P·Q. With ∂z/∂β_i = −x_i/σ for BOTH
-        # z's and ∂z/∂ln σ = −z, the sums below are the exact chain
-        # rule; the codes-{0,1} specialization reproduces the fast
-        # path's expressions term-for-term (P = δ − u, P_LL = −u).
-        def _mixed_kernels(b, ls):
-            sigma = float(np.exp(ls))
-            eta = F.lit(0.0)
-            for col, bb in zip(xs, b):
-                eta = eta + F.lit(float(bb)) * col
-            c = F.col("__d")
-            zl = (F.col("__lt") - eta) / F.lit(sigma)
-            if time2_col:
-                zr = F.when(
-                    c == 3.0, (F.col("__lt2") - eta) / F.lit(sigma)
-                ).otherwise(zl)
-            else:
-                zr = zl
-            ul, ur = F.exp(zl), F.exp(zr)
-            sl, sr = F.exp(-ul), F.exp(-ur)
-            f2 = -F.expm1(-ur)          # 1 − e^{−u}: the left-tail mass
-            d3 = sl - sr                # the interval mass
-            P = (
-                F.when(c == 1.0, F.lit(1.0) - ul)
-                .when(c == 0.0, -ul)
-                .when(c == 2.0, F.lit(0.0))
-                .otherwise(-ul * sl / d3)
-            )
-            Q = (
-                F.when(c == 2.0, ur * sr / f2)
-                .when(c == 3.0, ur * sr / d3)
-                .otherwise(F.lit(0.0))
-            )
-            PLL = (
-                F.when(c == 2.0, F.lit(0.0))
-                .when(c == 3.0, P * (F.lit(1.0) - ul) - P * P)
-                .otherwise(-ul)
-            )
-            QRR = F.when(
-                (c == 2.0) | (c == 3.0),
-                Q * (F.lit(1.0) - ur) - Q * Q,
-            ).otherwise(F.lit(0.0))
-            M = F.when(c == 3.0, -P * Q).otherwise(F.lit(0.0))
-            # Spark's log(<=0) is NULL, which a SUM silently SKIPS — an
-            # underflowed tail mass must read −inf so the line-search
-            # rejects the state, not vanish from the likelihood
-            neg_inf = F.lit(float("-inf"))
-            llrow = (
-                F.when(c == 1.0, zl - F.lit(ls) - ul)
-                .when(c == 0.0, -ul)
-                .when(c == 2.0, F.when(f2 > 0.0, F.log(f2)).otherwise(neg_inf))
-                .otherwise(F.when(d3 > 0.0, F.log(d3)).otherwise(neg_inf))
-            )
-            return sigma, c, zl, zr, P, Q, PLL, QRR, M, llrow
-
-        def stats_at_mixed(b, ls):
-            sigma, c, zl, zr, P, Q, PLL, QRR, M, llrow = _mixed_kernels(b, ls)
-            A = P + Q
-            Cc = F.when(c == 1.0, F.lit(-1.0)).otherwise(F.lit(0.0))
-            aggs = [F.sum(wv * llrow).alias("ll")]
-            for i in range(k):
-                aggs.append(
-                    F.sum(wv * (xs[i] * A * F.lit(-1.0 / sigma))).alias(
-                        f"g_{i}"
-                    )
-                )
-            aggs.append(F.sum(wv * (Cc - zl * P - zr * Q)).alias(f"g_{k}"))
-            B2 = PLL + F.lit(2.0) * M + QRR
-            for i in range(k):
-                for j in range(i, k):
-                    aggs.append(
-                        F.sum(
-                            wv * (xs[i] * xs[j] * B2 * F.lit(1.0 / sigma**2))
-                        ).alias(f"h_{i}_{j}")
-                    )
-                aggs.append(
-                    F.sum(
-                        wv
-                        * (
-                            xs[i]
-                            * (A + zl * (PLL + M) + zr * (M + QRR))
-                            * F.lit(1.0 / sigma)
-                        )
-                    ).alias(f"h_{i}_{k}")
-                )
-            aggs.append(
-                F.sum(
-                    wv
-                    * (
-                        zl * P
-                        + zr * Q
-                        + zl * zl * PLL
-                        + F.lit(2.0) * zl * zr * M
-                        + zr * zr * QRR
-                    )
-                ).alias(f"h_{k}_{k}")
-            )
-            row = work.agg(*aggs).collect()[0]
-            ll = float(row["ll"])
-            grad = np.array([float(row[f"g_{i}"]) for i in range(k + 1)])
-            hess = np.zeros((k + 1, k + 1))
-            for i in range(k + 1):
-                for j in range(i, k + 1):
-                    hess[i, j] = hess[j, i] = float(row[f"h_{i}_{j}"])
-            return ll, grad, hess
-
-        def ll_at_mixed(b, ls):
-            *_rest, llrow = _mixed_kernels(b, ls)
-            row = work.agg(F.sum(wv * llrow).alias("ll")).collect()[0]
-            v = row["ll"]
-            return float(v) if v is not None else float("-inf")
-
-        # ---- stratified twins (r14): same per-row expressions with σ
-        # read through a per-stratum literal chain, aggregated
-        # groupBy(stratum) — STILL one job per iteration; the driver
-        # assembles the (k+S)-state gradient/Hessian from S compact
-        # rows (β-block sums add, σ-blocks are per-stratum, the
-        # cross-stratum σ Hessian is identically 0)
-        sidx = {v: i for i, v in enumerate(strata)}
+        mills = _mills_udf() if dist == "lognormal" else None
 
         def _chain(vals):
+            # per-row stratum value: a when-chain over the stratum literals
             expr = None
             for v, x in zip(strata, vals):
                 w_ = (F.col("__s") == F.lit(v), F.lit(float(x)))
                 expr = F.when(*w_) if expr is None else expr.when(*w_)
             return expr.otherwise(F.lit(float("nan")))
 
-        def _strat_exprs(b, lsv):
-            sigs = np.exp(np.asarray(lsv, dtype=np.float64))
-            inv = _chain(1.0 / sigs)
+        def terms_at(st):
             eta = F.lit(0.0)
-            for col, bb in zip(xs, b):
+            for col, bb in zip(xs, st[:k]):
                 eta = eta + F.lit(float(bb)) * col
-            z = (F.col("__lt") - eta) * inv
-            return z, inv, sigs
+            if strata_col:
+                sigs = np.exp(np.asarray(st[k:], dtype=np.float64))
+                inv, inv2 = _chain(1.0 / sigs), _chain(1.0 / sigs ** 2)
+                ls = _chain(st[k:])
+                zl = (F.col("__lt") - eta) * inv
+            else:
+                ls = float(st[k])
+                sigma = float(np.exp(ls))
+                inv, inv2 = 1.0 / sigma, 1.0 / sigma**2
+                zl = (F.col("__lt") - eta) / F.lit(sigma)
+            zr = None
+            if mixed:
+                zr = zl
+                if time2_col:
+                    zr = F.when(
+                        F.col("__d") == 3.0,
+                        (F.col("__lt2") - eta) / F.lit(sigma),
+                    ).otherwise(zl)
+            terms = _aft_col_terms(dist, F.col("__d"), zl, ls, zr, mills)
+            return terms, inv, inv2
 
-        def stats_at_strat(b, lsv):
-            z, inv, sigs = _strat_exprs(b, lsv)
-            inv2 = _chain(1.0 / sigs ** 2)
-            lse = _chain(lsv)
-            u = F.exp(z)
-            d = F.col("__d")
-            gz = d - u
-            aggs = [F.sum(wv * (d * (z - lse) - u)).alias("ll")]
-            for i in range(k):
-                aggs.append(F.sum(wv * (xs[i] * gz * (-inv))).alias(f"g_{i}"))
-            aggs.append(F.sum(wv * (-d - z * gz)).alias("g_s"))
-            for i in range(k):
-                for j in range(i, k):
-                    aggs.append(
-                        F.sum(wv * (xs[i] * xs[j] * (-u) * inv2)).alias(
-                            f"h_{i}_{j}"
-                        )
-                    )
-                aggs.append(
-                    F.sum(wv * (xs[i] * (gz - u * z) * inv)).alias(f"h_{i}_s")
-                )
-            aggs.append(F.sum(wv * (z * gz - z * z * u)).alias("h_s_s"))
-            rows = work.groupBy("__s").agg(*aggs).collect()
-            dim = k + len(strata)
-            ll = 0.0
-            grad = np.zeros(dim)
-            hess = np.zeros((dim, dim))
+        # a stratified fit runs the same sums per stratum: the β-block
+        # sums add across the S rows, the σ entries are per stratum (the
+        # cross-stratum σ Hessian is exactly 0); unstratified is one row
+        sidx = {v: k + i for i, v in enumerate(strata)}
+
+        def stats_at(st):
+            terms, inv, inv2 = terms_at(st)
+            sums = _aft_sums(terms, xs, wv, inv, inv2)
+            aggs = [F.sum(v).alias(f"s{j}") for j, v in enumerate(sums)]
+            rows = collect_small(
+                work.groupBy("__s").agg(*aggs) if strata_col
+                else work.agg(*aggs)
+            )
+            dim = len(st)
+            ll, grad, hess = 0.0, np.zeros(dim), np.zeros((dim, dim))
             for r in rows:
-                si = k + sidx[r["__s"]]
-                ll += float(r["ll"])
-                for i in range(k):
-                    grad[i] += float(r[f"g_{i}"])
-                    for j in range(i, k):
-                        v_ = float(r[f"h_{i}_{j}"])
-                        hess[i, j] += v_
-                        if i != j:
-                            hess[j, i] += v_
-                    hv = float(r[f"h_{i}_s"])
-                    hess[i, si] = hess[si, i] = hv
-                grad[si] = float(r["g_s"])
-                hess[si, si] = float(r["h_s_s"])
+                si = sidx[r["__s"]] if strata_col else k
+                ll_r, g, h = _aft_unpack(r[-len(sums):], k)
+                ll += ll_r
+                grad[:k] += g[:k]
+                grad[si] = g[k]
+                hess[:k, :k] += h[:k, :k]
+                hess[:k, si] = hess[si, :k] = h[:k, k]
+                hess[si, si] = h[k, k]
             return ll, grad, hess
 
-        def ll_at_strat(b, lsv):
-            z, _inv, _sigs = _strat_exprs(b, lsv)
-            lse = _chain(lsv)
-            row = work.agg(
-                F.sum(
-                    wv * (F.col("__d") * (z - lse) - F.exp(z))
-                ).alias("ll")
-            ).collect()[0]
-            return float(row["ll"])
+        def ll_at(st):
+            # line-search probe: ONE scalar sum, not the O(k²) aggregate
+            terms, _, _ = terms_at(st)
+            v = collect_small(work.agg(F.sum(wv * terms.ll)))[0][0]
+            return float(v) if v is not None else float("-inf")
 
-        n_strata = len(strata) if strata_col else 1
-        dim = k + n_strata
-        if strata_col:
-            f_stats = lambda st: stats_at_strat(st[:k], st[k:])  # noqa: E731
-            f_ll = lambda st: ll_at_strat(st[:k], st[k:])  # noqa: E731
-        elif mixed:
-            f_stats = lambda st: stats_at_mixed(st[:k], float(st[k]))  # noqa: E731
-            f_ll = lambda st: ll_at_mixed(st[:k], float(st[k]))  # noqa: E731
-        elif dist != "weibull":
-            f_stats = lambda st: stats_at_dist(st[:k], float(st[k]))  # noqa: E731
-            f_ll = lambda st: ll_at_dist(st[:k], float(st[k]))  # noqa: E731
-        else:
-            f_stats = lambda st: stats_at(st[:k], float(st[k]))  # noqa: E731
-            f_ll = lambda st: ll_at(st[:k], float(st[k]))  # noqa: E731
-        state = np.concatenate([beta, np.full(n_strata, log_s)])
-
-        n_iter = 0
-        converged = False
-        ll = -np.inf
-        hess = -np.eye(dim)
-        iters = exact_iterations if exact_iterations is not None else max_iter
-        for _ in range(iters):
-            ll0, grad, hess = f_stats(state)
-            if exact_iterations is None:
-                # Newton direction with step-halving; when the Hessian is
-                # not negative definite (far from the optimum) the Newton
-                # direction can fail to ascend — fall back to Levenberg
-                # damping (H − λI), which interpolates toward plain
-                # gradient ascent as λ grows. The ladder must SCALE with
-                # the Hessian magnitude: a fixed 1e3 cap never makes
-                # H − λI negative definite when |H| ~ 1e5+ (real-data
-                # probe r9 — the fit stalled at a saddle and reported
-                # convergence with negative variances)
-                lams = _levenberg_lams(hess)
-                improved = False
-                for lam in lams:
-                    try:
-                        step = np.linalg.solve(
-                            hess - lam * np.eye(dim), grad
-                        )
-                    except np.linalg.LinAlgError:
-                        continue
-                    scale_f = 1.0
-                    for _ in range(10):
-                        ns = state - scale_f * step
-                        ll1 = f_ll(ns)
-                        if np.isfinite(ll1) and ll1 > ll0:
-                            improved = True
-                            break
-                        scale_f *= 0.5
-                    if improved:
-                        break
-                if not improved:
-                    # no ascent direction found anywhere on the ladder —
-                    # converged ONLY if the gradient really is ~0 (a
-                    # stalled saddle must not masquerade as a maximum)
-                    converged = bool(
-                        np.linalg.norm(grad) <= 1e-6 * (1.0 + abs(ll0))
-                    )
-                    break
-                state = ns
-            else:
-                step = np.linalg.solve(hess, grad)
-                state = state - step
-            n_iter += 1
-            if (
-                exact_iterations is None
-                and np.isfinite(ll)
-                and abs(ll0 - ll) <= tol * (abs(ll0) + tol)
-            ):
-                converged = True
-                break
-            ll = ll0
-        ll, _, hess = f_stats(state)
+        state, ll, cov, se, n_iter, converged = _aft_newton(
+            stats_at, ll_at,
+            np.concatenate([beta, np.full(len(strata) or 1, log_s)]),
+            exact_iterations, tol, max_iter,
+        )
         beta = state[:k]
     finally:
         work.unpersist()
-    cov = np.linalg.inv(-hess)
-    # an unconverged stop can leave −H indefinite: report NaN se
-    # explicitly (converged=False already flags the fit) instead of a
-    # RuntimeWarning-laden sqrt of a negative variance
-    diag = np.diag(cov)
-    se = np.where(diag >= 0, np.sqrt(np.abs(diag)), np.nan)
     return WeibullAFT(
         xnames=names,
         time_col=time_col,
@@ -2845,7 +2748,7 @@ def weibull_aft(
         n=n,
         n_events=n_events,
         iter=n_iter,
-        converged=converged or exact_iterations is not None,
+        converged=converged,
         cov_params=cov,
         weight_col=weight_col,
         strata_col=strata_col,
@@ -3120,21 +3023,21 @@ def _aft_newton_dense(t, e, X, exact_iterations, tol, max_iter,
     """numpy twin of `weibull_aft`'s Newton-on-(β, ln σ) — the in-memory
     engine for `weibull_aft_grouped` (the `_cox_newton_dense` pattern):
     same OLS-on-event-rows start with the σ/1.283 residual-scale init
-    and the γσ intercept correction (see `weibull_aft`), same per-row
-    gradient/Hessian entries, same Levenberg fallback and
-    step-halving ascent guard, same ll-change stop. `w` (r13): case
-    weights — ω on every likelihood sum, the WLS start over event rows
-    (raw-count σ denominator, the `LM.fit(weight_col=)` convention).
+    and the γσ intercept correction (see `weibull_aft`), and the same
+    Newton — `_aft_np_terms` fills the per-row frame that
+    `_aft_col_terms` fills on Spark, `_aft_sums`/`_aft_unpack` make the
+    gradient/Hessian from it, `_aft_newton` runs the loop. `w` (r13):
+    case weights — ω on every likelihood sum, the WLS start over event
+    rows (raw-count σ denominator, the `LM.fit(weight_col=)` convention).
     Returns (beta, log_s, se, loglik, n_iter, converged) or raises
     LinAlgError on a singular start/information (caller maps to the
     NULL row).
 
     `t2` (r14): interval upper bounds for code-3 rows — `e` then carries
-    the full R Surv codes {0,1,2,3} and the kernels switch to the
-    distributed fitter's (P, Q) mixed-censoring frame (see
-    `weibull_aft`); codes-{0,1} inputs keep the original expressions
-    bitwise. `dist` (r14): 'loglogistic'/'lognormal' single-z kernels —
-    right censoring only, mirrors the distributed fitter."""
+    the full R Surv codes {0,1,2,3} and the (P, Q) mixed-censoring
+    kernel applies (see `weibull_aft`). `dist` (r14):
+    'loglogistic'/'lognormal' — right censoring only, like the
+    distributed fitter."""
     n, k = X.shape
     lt = np.log(t)
     e = np.asarray(e, dtype=np.float64)
@@ -3172,223 +3075,28 @@ def _aft_newton_dense(t, e, X, exact_iterations, tol, max_iter,
     if intercept_idx is not None and dist == "weibull":
         beta[intercept_idx] += _EULER_GAMMA * float(np.exp(log_s))
 
-    def _kernels_mixed(b, ls):
+    xs = [X[:, i] for i in range(k)]
+
+    def terms_at(st):
+        ls = float(st[k])
         sigma = float(np.exp(ls))
-        zl = (lt - X @ b) / sigma
-        zr = (lt2 - X @ b) / sigma
-        with np.errstate(over="ignore", invalid="ignore", divide="ignore"):
-            ul, ur = np.exp(zl), np.exp(zr)
-            sl, sr = np.exp(-ul), np.exp(-ur)
-            f2 = -np.expm1(-ur)
-            d3 = sl - sr
-            P = np.select(
-                [e == 1.0, e == 0.0, e == 2.0],
-                [1.0 - ul, -ul, 0.0],
-                default=np.where(d3 > 0, -ul * sl / np.where(d3 > 0, d3, 1.0),
-                                 np.nan),
-            )
-            Q = np.select(
-                [e == 2.0, e == 3.0],
-                [
-                    np.where(f2 > 0, ur * sr / np.where(f2 > 0, f2, 1.0),
-                             np.nan),
-                    np.where(d3 > 0, ur * sr / np.where(d3 > 0, d3, 1.0),
-                             np.nan),
-                ],
-                default=0.0,
-            )
-            PLL = np.select(
-                [e == 2.0, e == 3.0], [0.0, P * (1.0 - ul) - P * P],
-                default=-ul,
-            )
-            QRR = np.where(
-                (e == 2.0) | (e == 3.0), Q * (1.0 - ur) - Q * Q, 0.0
-            )
-            M = np.where(e == 3.0, -P * Q, 0.0)
-            llrow = np.select(
-                [e == 1.0, e == 0.0, e == 2.0],
-                [
-                    zl - ls - ul,
-                    -ul,
-                    np.where(f2 > 0, np.log(np.where(f2 > 0, f2, 1.0)),
-                             -np.inf),
-                ],
-                default=np.where(d3 > 0, np.log(np.where(d3 > 0, d3, 1.0)),
-                                 -np.inf),
-            )
-        return sigma, zl, zr, P, Q, PLL, QRR, M, llrow
+        xb = X @ st[:k]
+        zr = (lt2 - xb) / sigma if mixed else None
+        return _aft_np_terms(dist, e, (lt - xb) / sigma, ls, zr), sigma
 
-    def stats_at_mixed(b, ls):
-        sigma, zl, zr, P, Q, PLL, QRR, M, llrow = _kernels_mixed(b, ls)
-        A = P + Q
-        Cc = np.where(e == 1.0, -1.0, 0.0)
-        ll = float((w * llrow).sum())
-        grad = np.empty(k + 1)
-        grad[:k] = (X * (w * A * (-1.0 / sigma))[:, None]).sum(axis=0)
-        grad[k] = float((w * (Cc - zl * P - zr * Q)).sum())
-        B2 = PLL + 2.0 * M + QRR
-        hess = np.empty((k + 1, k + 1))
-        hess[:k, :k] = (X.T @ (X * (w * B2)[:, None])) / sigma**2
-        hk = (
-            X
-            * (w * (A + zl * (PLL + M) + zr * (M + QRR)) / sigma)[:, None]
-        ).sum(axis=0)
-        hess[:k, k] = hess[k, :k] = hk
-        hess[k, k] = float(
-            (
-                w
-                * (zl * P + zr * Q + zl * zl * PLL + 2.0 * zl * zr * M
-                   + zr * zr * QRR)
-            ).sum()
-        )
-        return ll, grad, hess
+    def stats_at(st):
+        terms, sigma = terms_at(st)
+        sums = _aft_sums(terms, xs, w, 1.0 / sigma, 1.0 / sigma**2)
+        return _aft_unpack([v.sum() for v in sums], k)
 
-    def _np_dist_ab(z):
-        # (A, B, llrow) per dist for codes {0,1} (right censoring)
-        with np.errstate(over="ignore", invalid="ignore", divide="ignore"):
-            if dist == "loglogistic":
-                sg = 1.0 / (1.0 + np.exp(-z))
-                sp = np.where(z > 30.0, z, np.log1p(np.exp(np.minimum(z, 30.0))))
-                A = np.where(e == 1.0, 1.0 - 2.0 * sg, -sg)
-                B = np.where(e == 1.0, -2.0 * sg * (1.0 - sg),
-                             -sg * (1.0 - sg))
-                llrow = np.where(e == 1.0, z - 0.0 - 2.0 * sp, -sp)
-            else:  # lognormal
-                from sparkglm_spark.functions import special as _sp
+    def ll_at(st):
+        return float((w * terms_at(st)[0].ll).sum())
 
-                sf = _sp.norm_sf(z)
-                ok = sf > 0.0
-                h = np.where(
-                    ok,
-                    _sp.norm_pdf(z) / np.where(ok, sf, 1.0),
-                    z + 1.0 / np.where(z != 0, z, 1.0),
-                )
-                lsf = np.where(
-                    ok,
-                    np.log(np.where(ok, sf, 1.0)),
-                    -0.5 * z * z - np.log(np.abs(z) * np.sqrt(2.0 * np.pi)),
-                )
-                A = np.where(e == 1.0, -z, -h)
-                B = np.where(e == 1.0, -1.0, h * (z - h))
-                llrow = np.where(
-                    e == 1.0,
-                    -0.5 * z * z - 0.5 * np.log(2.0 * np.pi),
-                    lsf,
-                )
-        return A, B, llrow
-
-    def stats_at_distnp(b, ls):
-        sigma = float(np.exp(ls))
-        z = (lt - X @ b) / sigma
-        A, B, llrow = _np_dist_ab(z)
-        # the event rows' −ln σ explicit term
-        ll = float((w * (llrow - np.where(e == 1.0, ls, 0.0))).sum())
-        Cc = np.where(e == 1.0, -1.0, 0.0)
-        grad = np.empty(k + 1)
-        grad[:k] = (X * (w * A * (-1.0 / sigma))[:, None]).sum(axis=0)
-        grad[k] = float((w * (Cc - z * A)).sum())
-        hess = np.empty((k + 1, k + 1))
-        hess[:k, :k] = (X.T @ (X * (w * B)[:, None])) / sigma**2
-        hk = (X * (w * (A + z * B) / sigma)[:, None]).sum(axis=0)
-        hess[:k, k] = hess[k, :k] = hk
-        hess[k, k] = float((w * (z * A + z * z * B)).sum())
-        return ll, grad, hess
-
-    def stats_at_simple(b, ls):
-        sigma = float(np.exp(ls))
-        z = (lt - X @ b) / sigma
-        u = np.exp(z)
-        gz = e - u
-        ll = float((w * (e * (z - ls) - u)).sum())
-        grad = np.empty(k + 1)
-        grad[:k] = (X * (w * gz * (-1.0 / sigma))[:, None]).sum(axis=0)
-        grad[k] = float((w * (-e - z * gz)).sum())
-        hess = np.empty((k + 1, k + 1))
-        hess[:k, :k] = (X.T @ (X * (-w * u)[:, None])) / sigma**2
-        hk = (X * (w * (gz - u * z) / sigma)[:, None]).sum(axis=0)
-        hess[:k, k] = hess[k, :k] = hk
-        hess[k, k] = float((w * (z * gz - z * z * u)).sum())
-        return ll, grad, hess
-
-    if mixed:
-        stats_at = stats_at_mixed
-    elif dist != "weibull":
-        stats_at = stats_at_distnp
-    else:
-        stats_at = stats_at_simple
-
-    def ll_at(b, ls):
-        if mixed:
-            *_r, llrow = _kernels_mixed(b, ls)
-            return float((w * llrow).sum())
-        if dist != "weibull":
-            sigma = float(np.exp(ls))
-            z = (lt - X @ b) / sigma
-            _A, _B, llrow = _np_dist_ab(z)
-            return float(
-                (w * (llrow - np.where(e == 1.0, ls, 0.0))).sum()
-            )
-        sigma = float(np.exp(ls))
-        z = (lt - X @ b) / sigma
-        with np.errstate(over="ignore"):
-            return float((w * (e * (z - ls) - np.exp(z))).sum())
-
-    n_iter = 0
-    converged = False
-    ll = -np.inf
-    iters = exact_iterations if exact_iterations is not None else max_iter
-    for _ in range(iters):
-        ll0, grad, hess = stats_at(beta, log_s)
-        if exact_iterations is None:
-            # Hessian-scaled Levenberg ladder + grad-zero convergence
-            # test — the same r9 saddle fix as the distributed fitter
-            lams = _levenberg_lams(hess)
-            improved = False
-            for lam in lams:
-                try:
-                    step = np.linalg.solve(hess - lam * np.eye(k + 1), grad)
-                except np.linalg.LinAlgError:
-                    continue
-                scale_f = 1.0
-                for _ in range(10):
-                    nb = beta - scale_f * step[:k]
-                    nls = log_s - scale_f * step[k]
-                    ll1 = ll_at(nb, nls)
-                    if np.isfinite(ll1) and ll1 > ll0:
-                        improved = True
-                        break
-                    scale_f *= 0.5
-                if improved:
-                    break
-            if not improved:
-                converged = bool(
-                    np.linalg.norm(grad) <= 1e-6 * (1.0 + abs(ll0))
-                )
-                break
-            beta, log_s = nb, nls
-        else:
-            step = np.linalg.solve(hess, grad)
-            beta = beta - step[:k]
-            log_s = log_s - step[k]
-        n_iter += 1
-        if (
-            exact_iterations is None
-            and np.isfinite(ll)
-            and abs(ll0 - ll) <= tol * (abs(ll0) + tol)
-        ):
-            converged = True
-            break
-        ll = ll0
-    ll, _, hess = stats_at(beta, log_s)
-    cov = np.linalg.inv(-hess)
-    # the same unconverged-stop contract as the distributed fitter: an
-    # indefinite −H (stall away from the optimum, max_iter exhausted)
-    # reports the coefficients with NaN se and converged=False — NOT a
-    # LinAlgError, which the grouped caller would misreport as a
-    # degenerate-data NULL row
-    diag = np.diag(cov)
-    se = np.where(diag >= 0, np.sqrt(np.abs(diag)), np.nan)
-    return beta, log_s, se, ll, n_iter, converged or exact_iterations is not None
+    state, ll, _cov, se, n_iter, converged = _aft_newton(
+        stats_at, ll_at, np.append(beta, log_s), exact_iterations, tol,
+        max_iter,
+    )
+    return state[:k], float(state[k]), se, ll, n_iter, converged
 
 
 def survreg(
@@ -3425,8 +3133,9 @@ def weibull_aft_grouped(
 ) -> DataFrame:
     """One Weibull AFT model per segment — `weibull_aft` scaled out to
     many groups with no per-group driver work (the `coxph_grouped`
-    pattern: each group's rows land in one Arrow batch and fit by the
-    `_aft_newton_dense` numpy twin of the distributed Newton — same
+    pattern: each group's rows land in one Arrow batch and fit by
+    `_aft_newton_dense`, which runs the distributed fit's per-row
+    kernels over numpy and the same `_aft_sums`/`_aft_newton` — same
     start, damping and stopping rule, asserted against per-slice
     `weibull_aft` fits in tests).
 
@@ -3438,14 +3147,13 @@ def weibull_aft_grouped(
 
     `dist` (r14): 'loglogistic'/'lognormal' per-group fits (right
     censoring only — a group with codes 2/3 under a non-weibull dist
-    NULL-degrades); the `_aft_newton_dense` kernels are shared with
-    the distributed `weibull_aft(dist=)`.
+    NULL-degrades), with the kernels of `weibull_aft(dist=)`.
 
     `time2_col` (r14): the mixed-censoring twin — `event_col` carries
     the full R Surv codes {0,1,2,3} exactly as in
-    `weibull_aft(time2_col=)` (the `_aft_newton_dense` kernels are
-    SHARED, so a group fit here matches the distributed mixed fit on
-    the slice); a group whose code-3 rows lack a finite t2 > t, or
+    `weibull_aft(time2_col=)` (the same (P, Q) kernel, so a group fit
+    here matches the distributed mixed fit on the slice); a group
+    whose code-3 rows lack a finite t2 > t, or
     whose codes fall outside the vocabulary, NULL-degrades.
 
     Degenerate groups (too few location-informative rows, null/
@@ -3635,22 +3343,11 @@ def aft_residuals(
         from pyspark.sql.functions import pandas_udf
         from pyspark.sql.types import DoubleType
 
-        from sparkglm_spark.functions import special as _sp
-
         @pandas_udf(DoubleType())
         def _nlsf(zv):
             import pandas as pd
 
-            v = zv.to_numpy(dtype=np.float64)
-            sf = _sp.norm_sf(v)
-            ok = sf > 0.0
-            return pd.Series(
-                np.where(
-                    ok,
-                    -np.log(np.where(ok, sf, 1.0)),
-                    0.5 * v * v + np.log(np.abs(v) * np.sqrt(2.0 * np.pi)),
-                )
-            )
+            return pd.Series(-_norm_mills(zv.to_numpy(dtype=np.float64))[1])
 
         u = _nlsf(z)
     else:

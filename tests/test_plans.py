@@ -686,8 +686,8 @@ def test_fitter_job_counts_pinned(spark, lineitem, orders):
     from pyspark.sql import functions as F
 
     from sparkglm_spark.operators.glm import glm
-    from sparkglm_spark.operators.lm import lm
-    from sparkglm_spark.operators.survival import coxph
+    from sparkglm_spark.operators.lm import lm, robust_standard_errors
+    from sparkglm_spark.operators.survival import coxph, weibull_aft
 
     gl = orders.withColumn("is_f", (F.col("o_orderstatus") == "F").cast("double"))
     cx = orders.select(
@@ -695,18 +695,41 @@ def test_fitter_job_counts_pinned(spark, lineitem, orders):
         (F.col("o_orderpriority") < "3").cast("double").alias("ev"),
         (F.col("o_custkey") % 100 / 100.0).alias("x"),
     )
+    # the oracle's planted Weibull AFT input (orders_distributions)
+    u = ((F.col("o_orderkey") % 9973).cast("double") + 0.5) / 9974.0
+    aft_in = orders.select(
+        F.exp(
+            F.lit(10.0)
+            + 0.5 * ((F.col("o_custkey") % 100) / 100.0)
+            + 0.7 * F.log(-F.log(1.0 - u))
+        ).alias("t"),
+        F.when(F.col("o_custkey") % 5 == 0, 0.0).otherwise(1.0).alias("ev"),
+        ((F.col("o_custkey") % 100) / 100.0).alias("x"),
+    )
+    formula = "l_extendedprice ~ l_quantity + l_discount + l_returnflag"
+    # fit outside the job groups: hc1/hc3 count the sandwich alone
+    fit = lm(lineitem, formula)
     got = {
-        "lm": _jobs_of(spark, "pin_lm", lambda: lm(
-            lineitem, "l_extendedprice ~ l_quantity + l_discount + l_returnflag"
-        )),
+        "lm": _jobs_of(spark, "pin_lm", lambda: lm(lineitem, formula)),
         "glm": _jobs_of(spark, "pin_glm", lambda: glm(
             gl, "is_f ~ o_totalprice + o_orderpriority", exact_iterations=3
         )),
         "coxph": _jobs_of(spark, "pin_coxph", lambda: coxph(
             cx, "t", "ev", ["x"], exact_iterations=3
         )),
+        "weibull_aft": _jobs_of(spark, "pin_aft", lambda: weibull_aft(
+            aft_in, "t", "ev", ["x"], exact_iterations=3
+        )),
+        "hc1": _jobs_of(spark, "pin_hc1", lambda: robust_standard_errors(
+            lineitem, fit, kind="HC1"
+        )),
+        "hc3": _jobs_of(spark, "pin_hc3", lambda: robust_standard_errors(
+            lineitem, fit, kind="HC3"
+        )),
     }
-    assert got == {"lm": 3, "glm": 8, "coxph": 12}
+    assert got == {
+        "lm": 3, "glm": 8, "coxph": 12, "weibull_aft": 6, "hc1": 1, "hc3": 2,
+    }
 
 
 def test_collect_small_restores_aqe_after_a_failed_collect(spark):

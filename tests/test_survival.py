@@ -1161,13 +1161,20 @@ def test_coxph_grouped_nonbinary_event_metadata(spark):
     assert r.estimate is None and r.n_events == 2
 
 
-def test_bucket_pair_stats_vectorized_parity(spark):
-    """The vectorized bit-plane within-bucket counter must produce
-    bit-identical (conc, ties) to the Python Fenwick on adversarial tie
-    structures — all-tied times, all-tied risks, mixed, singletons —
-    and the distributed concordance_index must agree across the
-    vec/Fenwick threshold."""
+def test_bucket_pair_stats_vectorized_parity():
+    """The bit-plane within-bucket counter equals an O(n²) all-pairs
+    count — exactly, unweighted and weighted (integer-valued ω keeps the
+    float sums exact) — on adversarial tie structures: all-tied times,
+    all-tied risks, mixed, singletons."""
     import sparkglm_spark.operators.survival as sv
+
+    def all_pairs(t, e, r, w):
+        # pair (i, j): i an event, t_i < t_j strictly
+        comp = (e[:, None] == 1.0) & (t[:, None] < t[None, :])
+        ww = w[:, None] * w[None, :]
+        conc = (ww * (comp & (r[:, None] > r[None, :]))).sum()
+        ties = (ww * (comp & (r[:, None] == r[None, :]))).sum()
+        return conc, ties
 
     rng = np.random.default_rng(19)
     for trial in range(200):
@@ -1177,25 +1184,13 @@ def test_bucket_pair_stats_vectorized_parity(spark):
         t = rng.integers(0, nt, n).astype(float)
         e = (rng.random(n) < 0.5).astype(float)
         r = rng.integers(0, nr, n).astype(float)
-        assert sv._bucket_pair_stats(t, e, r) == sv._bucket_pair_stats_vec(
-            t, e, r
-        ), (trial, n, nt, nr)
-    # end-to-end: force the vectorized path with a tiny threshold
-    rows = [
-        (float(1 + (i * 7) % 37), float(i % 2), float((i * 13) % 11))
-        for i in range(300)
-    ]
-    df = spark.createDataFrame(rows, "t double, ev double, r double")
-    base = sv.concordance_index(df, "t", "ev", "r", n_buckets=2)
-    orig = sv._CINDEX_VEC_THRESHOLD
-    try:
-        sv._CINDEX_VEC_THRESHOLD = 1
-        vec = sv.concordance_index(df, "t", "ev", "r", n_buckets=2)
-        sv._CINDEX_VEC_THRESHOLD = 10**9
-        fen = sv.concordance_index(df, "t", "ev", "r", n_buckets=2)
-    finally:
-        sv._CINDEX_VEC_THRESHOLD = orig
-    assert vec == fen == base
+        conc, ties = sv._bucket_pair_stats(t, e, r)
+        assert (conc, ties) == all_pairs(t, e, r, np.ones(n)), (trial, n)
+        assert isinstance(conc, int)
+        w = rng.integers(0, 4, n).astype(float)
+        assert sv._bucket_pair_stats(t, e, r, w) == all_pairs(t, e, r, w), (
+            trial, n,
+        )
 
 
 def test_coxph_weighted_replication_identity(spark):
@@ -1570,8 +1565,7 @@ def test_concordance_index_weighted_replication_identity(spark):
     o0 = concordance_index(df, "t", "e", "r")
     assert o1["c_index"] == o0["c_index"]
     assert float(o1["n_concordant"]) == float(o0["n_concordant"])
-    # force BOTH kernels across the same weighted data: many buckets
-    # (tiny batches -> Python Fenwick) vs one bucket (vectorized)
+    # bucketing is irrelevant under weights: many tiny buckets vs one
     om = concordance_index(df, "t", "e", "r", n_buckets=64, weight_col="w")
     o1b = concordance_index(df, "t", "e", "r", n_buckets=1, weight_col="w")
     assert om["c_index"] == pytest.approx(o1b["c_index"], rel=1e-14)
@@ -2813,3 +2807,134 @@ class TestSurvregDists:
         })
         with pytest.raises(ValueError, match="left-censored"):
             weibull_aft(spark.createDataFrame(pdf), "t", "c", ["x"])
+
+
+def _aft_frame_case(kind, n=200, seed=5, far_tail=True):
+    """A planted AFT frame for one kernel: (dist, codes, ln t, ln t2,
+    X, ω, state). With `far_tail`, `lognormal` carries a censored row at
+    z = 40, past the Mills asymptote (Φ̄ underflows near z ≈ 38)."""
+    rng = np.random.default_rng(seed)
+    x = rng.uniform(-1.0, 1.0, n)
+    X = np.column_stack([np.ones(n), x])
+    state = np.array([1.0, 0.5, np.log(0.7)])
+    xb = X @ state[:2]
+    lt = xb + 0.7 * rng.normal(size=n)
+    e = (rng.random(n) < 0.7).astype(float)
+    lt2 = lt.copy()
+    dist = kind
+    if kind == "weibull_interval":
+        dist = "weibull"
+        e = rng.integers(0, 4, n).astype(float)
+        lt2 = np.where(e == 3.0, lt + rng.uniform(0.2, 1.0, n), lt)
+    if kind == "lognormal" and far_tail:
+        e[0], lt[0] = 0.0, xb[0] + 40.0 * 0.7
+    w = rng.integers(1, 4, n).astype(float)
+    return dist, e, lt, lt2, X, w, state
+
+
+class TestAFTFrame:
+    """The shared (P, Q) frame: `_aft_sums` is the exact chain rule of
+    each kernel's ℓ, and the Spark and numpy kernels agree."""
+
+    KINDS = ["weibull", "weibull_interval", "loglogistic", "lognormal"]
+
+    @staticmethod
+    def _np_stats(kind_case, st):
+        from sparkglm_spark.operators.survival import (
+            _aft_np_terms,
+            _aft_sums,
+            _aft_unpack,
+        )
+
+        dist, e, lt, lt2, X, w, _ = kind_case
+        k = X.shape[1]
+        ls = float(st[k])
+        sigma = float(np.exp(ls))
+        xb = X @ st[:k]
+        zr = (lt2 - xb) / sigma if np.any(e >= 2.0) else None
+        terms = _aft_np_terms(dist, e, (lt - xb) / sigma, ls, zr)
+        sums = _aft_sums(terms, [X[:, i] for i in range(k)], w,
+                         1.0 / sigma, 1.0 / sigma**2)
+        return _aft_unpack([v.sum() for v in sums], k)
+
+    def _check_chain_rule(self, case, hess_rtol):
+        st0 = case[-1]
+        ll, grad, hess = self._np_stats(case, st0)
+        eye = np.eye(len(st0))
+        h = 1e-6
+        fd_g = np.array([
+            (self._np_stats(case, st0 + h * d)[0]
+             - self._np_stats(case, st0 - h * d)[0]) / (2 * h)
+            for d in eye
+        ])
+        np.testing.assert_allclose(grad, fd_g, rtol=1e-6,
+                                   atol=1e-6 * np.abs(fd_g).max())
+        h = 1e-5
+        fd_h = np.array([
+            (self._np_stats(case, st0 + h * d)[1]
+             - self._np_stats(case, st0 - h * d)[1]) / (2 * h)
+            for d in eye
+        ])
+        np.testing.assert_allclose(hess, fd_h, rtol=hess_rtol,
+                                   atol=hess_rtol * np.abs(fd_h).max())
+        assert np.isfinite(ll)
+
+    @pytest.mark.parametrize("kind", KINDS)
+    def test_sums_are_the_chain_rule(self, kind):
+        case = _aft_frame_case(kind)
+        if kind != "lognormal":
+            self._check_chain_rule(case, 1e-6)
+            return
+        # the Mills asymptote h → z + 1/z gives ∂P/∂z = −1 + 1/z², while
+        # PLL = h(z − h) reads −1 − 1/z²: past z ≈ 38 a row's Hessian
+        # term is exact only to O(1/z²). The gradient stays exact, and
+        # without that row so does the Hessian.
+        self._check_chain_rule(case, 1e-3)
+        self._check_chain_rule(
+            _aft_frame_case(kind, far_tail=False), 1e-6
+        )
+
+    @pytest.mark.parametrize("kind", KINDS)
+    def test_spark_and_numpy_kernels_agree(self, spark, kind):
+        import pandas as pd
+
+        from sparkglm_spark.operators.survival import (
+            _aft_col_terms,
+            _aft_np_terms,
+            _aft_sums,
+            _mills_udf,
+        )
+
+        dist, e, lt, lt2, X, w, st = _aft_frame_case(kind)
+        mixed = kind == "weibull_interval"
+        ls = float(st[2])
+        sigma = float(np.exp(ls))
+        xb = X @ st[:2]
+        zr = (lt2 - xb) / sigma if mixed else None
+        np_sums = _aft_sums(
+            _aft_np_terms(dist, e, (lt - xb) / sigma, ls, zr),
+            [X[:, 0], X[:, 1]], w, 1.0 / sigma, 1.0 / sigma**2,
+        )
+        df = spark.createDataFrame(pd.DataFrame({
+            "lt": lt, "lt2": lt2, "d": e, "one": X[:, 0], "x": X[:, 1],
+            "w": w,
+        }))
+        xs = [F.col("one"), F.col("x")]
+        eta = F.lit(0.0) + F.lit(float(st[0])) * xs[0] + F.lit(float(st[1])) * xs[1]
+        zl = (F.col("lt") - eta) / F.lit(sigma)
+        zrc = (
+            F.when(F.col("d") == 3.0, (F.col("lt2") - eta) / F.lit(sigma))
+            .otherwise(zl) if mixed else None
+        )
+        terms = _aft_col_terms(
+            dist, F.col("d"), zl, ls, zrc,
+            _mills_udf() if dist == "lognormal" else None,
+        )
+        col_sums = _aft_sums(terms, xs, F.col("w"), 1.0 / sigma,
+                             1.0 / sigma**2)
+        row = df.agg(*[F.sum(v) for v in col_sums]).collect()[0]
+        np.testing.assert_allclose(
+            np.array(list(row), dtype=np.float64),
+            np.array([v.sum() for v in np_sums]),
+            rtol=1e-12,
+        )
