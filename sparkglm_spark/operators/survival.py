@@ -20,13 +20,18 @@ time (risk sets are nested, so each S·(t) is a suffix sum):
   stratified), partition id tagged as a column, persisted — and every
   Newton iteration is then shuffle-free over that cache: one tiny
   per-partition totals pass giving each partition its exclusive suffix
-  OFFSET on the driver, and one pass computing tie-aware within-
-  partition cumulative risk sums + offset and the Breslow event sums
-  (one partial row per partition). The driver sees O(n_part·k²) per
-  iteration. (r14: the previous shape re-ran a groupBy(time) exchange,
-  a range repartition + sampling job, a window exchange and a global
-  agg PER ITERATION — 4 exchanges each — for a partitioning that never
-  changes across iterations.)
+  OFFSET on the driver, and one pass running the Breslow kernel
+  `_breslow_sums` (tie-aware within-partition cumulative risk sums +
+  offset, then the event sums; one partial row per partition). The
+  driver sees O(n_part·k²) per iteration. (r14: the previous shape
+  re-ran a groupBy(time) exchange, a range repartition + sampling job,
+  a window exchange and a global agg PER ITERATION — 4 exchanges each —
+  for a partitioning that never changes across iterations.)
+
+  The Cox fit is written once: `_breslow_sums` is the one Breslow
+  kernel and `_cox_newton_loop` the one Newton loop. `coxph` runs them
+  over the engine's cached partitions; `coxph_grouped` runs them per
+  group (`_cox_newton_dense`) on the numpy twin of `_counting_arms`.
 
   ONE-SHOT risk-set consumers (baseline hazard, Schoenfeld residuals,
   log-rank, KM) keep the per-time groupBy + range-partitioned
@@ -51,6 +56,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sparkglm_spark.plans.gram import gram_sums
 from sparkglm_spark.plans.partitioning import collect_small, fanout_groups
 from sparkglm_spark.plans.prefix import global_running_sum
 
@@ -372,15 +378,73 @@ def _suffix_sums(
     )
 
 
+def _breslow_sums(t, ev, sgn, w, X, beta, off) -> np.ndarray:
+    """The Breslow event sums of one risk-set-complete frame — the one
+    kernel both Cox backends run (`_CoxStatsEngine` per cached partition
+    or stratum, `_cox_newton_dense` per group). Rows are `_counting_arms`
+    arms: time `t`, event mass `ev`, sign `sgn` (+1 exit, −1 entry), case
+    weight `w`, covariates `X`; `off` is the risk-mass suffix of the rows
+    outside this frame with later times (0 for a whole frame).
+
+    The risk masses m = sgn·ω·exp(x'β) form the `gram_sums` layout over
+    [1, x…] — (m·zᵢ)·zⱼ for i ≤ j, i.e. S0, S1 and the S2 triangle — and
+    are suffix-cumulated by descending time; every row of a tie run reads
+    the cum at the run's last index (Breslow). Returns
+    [Σd·ln S0, Σd, Σd·x, Σd·S1/S0, the triangle of Σd·(S2/S0 − S1S1'/S0²)]
+    over event rows (d = ω·ev), `_cox_unpack`'s order.
+
+    SQL null conventions are kept: a row whose risk mass is NaN drops out
+    of the risk sums (its event mass still counts, its non-finite
+    event×covariate terms are skipped), log(S0 ≤ 0) and /0 terms are
+    skipped like Spark's NULL log/division; ±inf propagates as SQL
+    SUM(Infinity) does."""
+    k = X.shape[1]
+    Z = np.column_stack([np.ones(len(t)), X])
+    m = sgn * w * np.exp(X @ beta)
+    V = np.column_stack(
+        [(m * Z[:, i]) * Z[:, j] for i in range(k + 1) for j in range(i, k + 1)]
+    )
+    np.nan_to_num(V, copy=False, nan=0.0, posinf=np.inf, neginf=-np.inf)
+    order = np.argsort(-t, kind="stable")
+    ts = t[order]
+    C = np.cumsum(V[order], axis=0)
+    cums = C[np.searchsorted(-ts, -ts, side="right") - 1] + off
+    d = (w * ev)[order]
+    out = np.zeros(2 + 2 * k + k * (k + 1) // 2)
+    out[1] = d.sum()
+    em = d > 0
+    if not em.any():
+        return out
+    de, E = d[em], cums[em]
+    S0 = E[:, 0]
+    out[2 : 2 + k] = np.nansum(de[:, None] * X[order][em], axis=0)
+    ok = S0 > 0
+    out[0] = np.dot(de[ok], np.log(S0[ok]))
+    nz = S0 != 0.0
+    dn, S0n, E = de[nz], S0[nz], E[nz]
+    E1 = E[:, 1 : 1 + k]
+    out[2 + k : 2 + 2 * k] = (dn[:, None] * E1 / S0n[:, None]).sum(axis=0)
+    for c, (i, j) in enumerate(zip(*np.triu_indices(k))):
+        out[2 + 2 * k + c] = np.dot(
+            dn, E[:, 1 + k + c] / S0n - E1[:, i] * E1[:, j] / (S0n * S0n)
+        )
+    return out
+
+
+def _cox_unpack(vals, beta, k):
+    """(ll, grad, info) at β from one `_breslow_sums` vector (summed over
+    partitions or strata)."""
+    sdx = vals[2 : 2 + k]
+    info = np.empty((k, k))
+    iu = np.triu_indices(k)
+    info[iu] = info[iu[::-1]] = vals[2 + 2 * k :]
+    return float(beta @ sdx - vals[0]), sdx - vals[2 + k : 2 + 2 * k], info
+
+
 class _CoxStatsEngine:
     """Per-iteration Cox sufficient statistics over a ONCE-partitioned,
-    cached per-row frame (r14 optimization; guide §2.4 "remove shuffles
-    outright"). The old per-iteration plan re-ran, PER NEWTON STEP:
-    groupBy(time) hash exchange → repartitionByRange (plus its
-    range-bounds sampling job re-executing the groupBy) → a pid-window
-    hash exchange → the final single-partition agg — 4 exchanges and
-    ~5 jobs per iteration for statistics whose PARTITIONING never
-    changes across iterations (only β does).
+    cached per-row frame (r14; guide §2.4 "remove shuffles outright"):
+    only β changes across Newton steps, never the partitioning.
 
     Setup (once per fit): the `_counting_arms` per-row frame is
     range-partitioned by DESCENDING time — equal times never split
@@ -388,27 +452,23 @@ class _CoxStatsEngine:
     hash-partitioned by stratum when stratified (risk sets never cross
     strata), tagged with its partition id as a COLUMN, and persisted.
 
-    Per iteration, over that cache:
+    `stats_at(β)` over that cache returns the summed `_breslow_sums`
+    vector:
       unstratified — TWO shuffle-free jobs:
-        1. totals: mapInPandas partial sums of the β-weighted risk
-           masses per partition → ≤ n_part tiny rows collected; the
+        1. totals: a codegen `gram_sums` aggregate of the β-weighted
+           risk masses per partition → ≤ n_part tiny rows collected; the
            driver turns them into each partition's exclusive suffix
            OFFSET (earlier pids hold later times);
-        2. final: mapInPandas per partition — sort by time desc,
-           tie-aware (RANGE-frame) cumulative risk sums + offset,
-           accumulate the Breslow event sums → ONE partial row per
-           partition, summed on the driver in pid order.
-      stratified — no offsets needed: ONE job (step 2 with per-stratum
-      resets inside each partition).
+        2. final: mapInPandas runs `_breslow_sums` on each partition with
+           its offset → ONE partial row per partition, summed on the
+           driver in pid order.
+      stratified — no offsets needed: ONE job (step 2, the kernel run
+      per stratum inside each partition with a zero offset).
 
-    Identical math to the per-time plan (every row at time t reads the
+    Identical math to a per-time plan (every row at time t reads the
     same suffix sums, so summing event ROWS ≡ summing event TIMES with
-    d_t masses); floating-point association differs, as it already did
-    across partitionings. SQL null conventions are preserved: a row
-    whose risk mass is non-finite drops out of the risk sums (its event
-    mass still counts, its non-finite event×covariate terms are
-    skipped — F.sum over NULL products), log(S0 ≤ 0) and /0 terms are
-    skipped like Spark's NULL log/division."""
+    d_t masses); floating-point association differs, as it already does
+    across partitionings."""
 
     def __init__(
         self,
@@ -447,130 +507,43 @@ class _CoxStatsEngine:
         self.part = part.withColumn(
             "__pid", F.spark_partition_id()
         ).persist()
-        fin_names = (
-            ["dlogs0", "n_events"]
-            + [f"sdx_{i}" for i in range(self.k)]
-            + [f"gs_{i}" for i in range(self.k)]
-            + [f"h_{i}_{j}" for i in range(self.k) for j in range(i, self.k)]
-        )
-        self._fin_names = fin_names
-        self._fin_schema = "__pid int, " + ", ".join(
-            f"{c} double" for c in fin_names
-        )
 
     def unpersist(self) -> None:
         self.part.unpersist()
 
-    def stats_at(self, beta: np.ndarray) -> dict:
+    def stats_at(self, beta: np.ndarray) -> np.ndarray:
         import pandas as pd
 
         k, strata = self.k, self.strata
-        ncc = 1 + k + k * (k + 1) // 2
         b = np.asarray(beta, dtype=np.float64).copy()
-
-        def _values(pdf) -> np.ndarray:
-            """(n, ncc) β-weighted risk-mass terms with SQL null-skip:
-            any non-finite η/x poisons only that row's risk terms."""
-            X = np.column_stack(
-                [pdf[f"__x{i}"].to_numpy(np.float64) for i in range(k)]
-            ) if k else np.zeros((len(pdf), 0))
-            m = (
-                pdf["__sgn"].to_numpy(np.float64)
-                * pdf["__w"].to_numpy(np.float64)
-                * np.exp(X @ b)
-            )
-            V = np.empty((len(pdf), ncc))
-            V[:, 0] = m
-            for i in range(k):
-                V[:, 1 + i] = X[:, i] * m
-            c = 1 + k
-            for i in range(k):
-                for j in range(i, k):
-                    V[:, c] = X[:, i] * X[:, j] * m
-                    c += 1
-            # NaN (SQL NULL x/η) → skip that row's risk terms; ±inf
-            # (exp overflow) propagates exactly as SQL SUM(Infinity) does
-            np.nan_to_num(
-                V, copy=False, nan=0.0, posinf=np.inf, neginf=-np.inf
-            )
-            return V, X
-
+        xnames = [f"__x{i}" for i in range(k)]
         offsets: dict[int, np.ndarray] = {}
         if not strata:
             # totals stay pure codegen: partial aggregation reduces each
-            # cached partition to ONE row before the 32-row exchange — no
+            # cached partition to ONE row before the tiny exchange — no
             # Python boundary for this pass (guide §2.3 "aggregate before
             # you shuffle")
-            xs = [F.col(f"__x{i}") for i in range(k)]
+            xs = [F.col(c) for c in xnames]
             eta = F.lit(0.0)
             for col, bv in zip(xs, b):
                 eta = eta + F.lit(float(bv)) * col
             m = F.col("__sgn") * F.col("__w") * F.exp(eta)
-            aggs = [F.sum(m).alias("c0")]
-            ci = 1
-            for i in range(k):
-                aggs.append(F.sum(xs[i] * m).alias(f"c{ci}"))
-                ci += 1
-            for i in range(k):
-                for j in range(i, k):
-                    aggs.append(F.sum(xs[i] * xs[j] * m).alias(f"c{ci}"))
-                    ci += 1
-            rows = collect_small(self.part.groupBy("__pid").agg(*aggs))
-            run = np.zeros(ncc)
-            for r in sorted(rows, key=lambda r: r["__pid"]):
-                offsets[int(r["__pid"])] = run.copy()
-                run = run + np.array(
-                    [float(r[f"c{i}"] or 0.0) for i in range(ncc)]
+            rows = collect_small(
+                self.part.groupBy("__pid").agg(
+                    *gram_sums([F.lit(1.0)] + xs, w=m)
                 )
+            )
+            run = 0.0
+            for r in sorted(rows, key=lambda r: r["__pid"]):
+                offsets[int(r["__pid"])] = run
+                run = run + np.array([float(v or 0.0) for v in r[1:]])
 
-        fin_names = self._fin_names
-
-        def _accumulate(pdf, off: np.ndarray, acc: np.ndarray) -> None:
-            """Suffix-cumulate one contiguous (stratum-complete) frame
-            sorted however it arrived; add the Breslow event sums."""
-            t = pdf["__t"].to_numpy(np.float64)
-            order = np.argsort(-t, kind="stable")
-            V, X = _values(pdf)
-            ts = t[order]
-            C = np.cumsum(V[order], axis=0)
-            # RANGE-frame ties: every row of a tie run reads the cum at
-            # the run's LAST index (all tied rows included)
-            last = np.searchsorted(-ts, -ts, side="right") - 1
-            cums = C[last] + off
-            d = (pdf["__w"].to_numpy(np.float64) * pdf["__ev"].to_numpy(np.float64))[
-                order
-            ]
-            acc[1] += d.sum()  # n_events mass
-            ev_mask = d > 0
-            if not ev_mask.any():
-                return
-            de = d[ev_mask]
-            S0 = cums[ev_mask, 0]
-            Xe = X[order][ev_mask]
-            # sdx: skip non-finite x terms (SQL NULL-product skip)
-            acc[2 : 2 + k] += np.nansum(de[:, None] * Xe, axis=0)
-            ok = S0 > 0  # log(≤0) → SQL NULL → skipped
-            acc[0] += float(np.dot(de[ok], np.log(S0[ok])))
-            nz = S0 != 0.0  # x/0 → SQL NULL → skipped
-            dn, S0n = de[nz], S0[nz]
-            E1 = cums[ev_mask, 1 : 1 + k][nz]
-            gs = (dn[:, None] * E1 / S0n[:, None]).sum(axis=0)
-            acc[2 + k : 2 + 2 * k] += gs
-            c = 1 + k
-            h_at = 2 + 2 * k
-            for i in range(k):
-                for j in range(i, k):
-                    E2 = cums[ev_mask, c][nz]
-                    acc[h_at] += float(
-                        np.dot(
-                            dn,
-                            E2 / S0n - E1[:, i] * E1[:, j] / (S0n * S0n),
-                        )
-                    )
-                    c += 1
-                    h_at += 1
-
-        nfin = len(fin_names)
+        def kernel(pdf, off):
+            return _breslow_sums(
+                *(pdf[c].to_numpy(np.float64)
+                  for c in ("__t", "__ev", "__sgn", "__w")),
+                pdf[xnames].to_numpy(np.float64), b, off,
+            )
 
         def final(batches):
             pdfs = [p for p in batches if len(p)]
@@ -578,21 +551,21 @@ class _CoxStatsEngine:
                 return
             pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
             pid = int(pdf["__pid"].iloc[0])
-            acc = np.zeros(nfin)
             if strata:
-                for _, g in pdf.groupby("__s", sort=False, dropna=False):
-                    _accumulate(g, np.zeros(ncc), acc)
+                acc = sum(
+                    kernel(g, 0.0)
+                    for _, g in pdf.groupby("__s", sort=False, dropna=False)
+                )
             else:
-                _accumulate(pdf, offsets.get(pid, np.zeros(ncc)), acc)
-            yield pd.DataFrame(
-                {"__pid": [pid], **{c: [acc[i]] for i, c in enumerate(fin_names)}}
-            )
+                acc = kernel(pdf, offsets.get(pid, 0.0))
+            yield pd.DataFrame({"__pid": [pid], "v": [acc]})
 
-        rows = self.part.mapInPandas(final, self._fin_schema).collect()
-        out = np.zeros(nfin)
-        for r in sorted(rows, key=lambda r: r["__pid"]):
-            out += np.array([float(r[c]) for c in fin_names])
-        return dict(zip(fin_names, out))
+        rows = self.part.mapInPandas(
+            final, "__pid int, v array<double>"
+        ).collect()
+        return sum(
+            np.array(r["v"]) for r in sorted(rows, key=lambda r: r["__pid"])
+        )
 
 
 def coxph(
@@ -625,7 +598,9 @@ def coxph(
 
     `exact_iterations=N`: exactly N Newton steps, no convergence test —
     the deterministic trajectory a SQL oracle can replay. Otherwise stop
-    when |Δll| ≤ tol·(|ll| + tol).
+    when |Δll| ≤ tol·(|ll| + tol). A degenerate fit — singular
+    information (e.g. a covariate constant over every risk set) or a
+    non-finite Newton step — raises ValueError.
 
     `time_bucket=w` floors the time axis to width-w buckets BEFORE the
     per-time aggregation — the knob that bounds the distinct-time
@@ -701,7 +676,7 @@ def coxph(
             F.min(wtc).alias("minw"),
             F.count(wtc).alias("n_w"),
         ]
-    chk = df.agg(*chk_aggs).collect()[0]
+    chk = collect_small(df.agg(*chk_aggs))[0]
     if chk["nulls"]:
         raise ValueError(f"{chk['nulls']} rows have null time/event/entry")
     if chk["bad"]:
@@ -750,60 +725,30 @@ def coxph(
         strata_col=strata_col, weight_col=weight_col, entry_col=entry_col,
     )
     try:
-        beta = np.zeros(k)
-        ll_prev: float | None = None
-        null_ll: float | None = None
-        n_iter = 0
-        converged = False
-        iters = exact_iterations if exact_iterations is not None else max_iter
-        ll = float("nan")
-        info = np.eye(k)
-        for _ in range(iters):
-            row = engine.stats_at(beta)
-            sdx = np.array([float(row[f"sdx_{i}"]) for i in range(k)])
-            ll = float(beta @ sdx - float(row["dlogs0"]))
-            if null_ll is None:
-                null_ll = ll if not np.any(beta) else None
-            grad = sdx - np.array([float(row[f"gs_{i}"]) for i in range(k)])
-            info = np.zeros((k, k))
-            for i in range(k):
-                for j in range(i, k):
-                    info[i, j] = info[j, i] = float(row[f"h_{i}_{j}"])
-            beta = beta + np.linalg.solve(info, grad)
-            n_iter += 1
-            if (
-                exact_iterations is None
-                and ll_prev is not None
-                and abs(ll - ll_prev) <= tol * (abs(ll) + tol)
-            ):
-                converged = True
-                break
-            ll_prev = ll
-        # ll/info above are at the PRE-step β; recompute at the final β so
-        # the reported loglik/se correspond to the returned coefficients
-        row = engine.stats_at(beta)
-        sdx = np.array([float(row[f"sdx_{i}"]) for i in range(k)])
-        ll = float(beta @ sdx - float(row["dlogs0"]))
-        info = np.zeros((k, k))
-        for i in range(k):
-            for j in range(i, k):
-                info[i, j] = info[j, i] = float(row[f"h_{i}_{j}"])
+        fit = _cox_newton_loop(
+            lambda b: _cox_unpack(engine.stats_at(b), b, k),
+            k, exact_iterations, tol, max_iter,
+        )
     finally:
         engine.unpersist()
-    cov = np.linalg.inv(info)
+    if fit is None:
+        raise ValueError(
+            "degenerate Cox fit: singular information matrix or a "
+            "non-finite Newton step (a constant or collinear covariate?)"
+        )
     return CoxPH(
         xnames=list(x_cols),
         time_col=time_col,
         event_col=event_col,
-        coefs=beta,
-        se=np.sqrt(np.diag(cov)),
-        loglik=ll,
-        null_loglik=float(null_ll) if null_ll is not None else float("nan"),
+        coefs=fit.beta,
+        se=np.sqrt(np.diag(fit.cov)),
+        loglik=fit.loglik,
+        null_loglik=fit.null_loglik,
         n=n,
         n_events=n_events,
-        iter=n_iter,
-        converged=converged or exact_iterations is not None,
-        cov_params=cov,
+        iter=fit.n_iter,
+        converged=fit.converged,
+        cov_params=fit.cov,
         time_bucket=time_bucket,
         strata_col=strata_col,
         weight_col=weight_col,
@@ -1256,7 +1201,7 @@ def concordance_index(
         ]
         if weighted else []
     )
-    chk = base.agg(
+    chk = collect_small(base.agg(
         *wchk,
         F.count(F.lit(1)).alias("n"),
         F.sum("__e").alias("ne"),
@@ -1278,7 +1223,7 @@ def concordance_index(
         F.sum(
             ((F.col("__e") != 0.0) & (F.col("__e") != 1.0)).cast("int")
         ).alias("bad"),
-    ).collect()[0]
+    ))[0]
     if chk["nulls"]:
         raise ValueError(f"{chk['nulls']} rows have null/NaN time/event/risk")
     if chk["bad"]:
@@ -1382,7 +1327,9 @@ def concordance_index(
         # driver turns them into each partition's exclusive suffix
         # offsets (earlier pids hold later times) AND the per-bucket
         # grand totals the old plan paid a separate btot job for.
-        ptot = cells.groupBy("__pid", "__b").agg(F.sum("c").alias("c")).collect()
+        ptot = collect_small(
+            cells.groupBy("__pid", "__b").agg(F.sum("c").alias("c"))
+        )
         by_pid: dict[int, np.ndarray] = {}
         for r in ptot:
             by_pid.setdefault(int(r["__pid"]), np.zeros(n_buckets))[
@@ -1449,9 +1396,9 @@ def concordance_index(
                 {"__pid": [pid], "cross": [cross], "comp": [comp]}
             )
 
-        crows = cells.mapInPandas(
+        crows = collect_small(cells.mapInPandas(
             cross_kernel, "__pid int, cross double, comp double"
-        ).collect()
+        ))
         cross_conc = comparable = 0.0
         for r in sorted(crows, key=lambda r: r["__pid"]):
             cross_conc += float(r["cross"])
@@ -1481,13 +1428,12 @@ def concordance_index(
             return pd.DataFrame({"conc": [c], "ties": [s]})
 
         wcols = ["__t", "__e", "__r", "__b"] + (["__w"] if weighted else [])
-        wrow = (
+        wrow = collect_small(
             fanout_groups(work.select(*wcols), ["__b"])
             .groupBy("__b")
             .applyInPandas(bucket_counts, out_schema)
             .agg(F.sum("conc").alias("wc"), F.sum("ties").alias("wt"))
-            .collect()[0]
-        )
+        )[0]
     finally:
         cells.unpersist()
         work.unpersist()
@@ -1505,91 +1451,52 @@ def concordance_index(
 
 
 def _cox_newton_dense(t, e, X, exact_iterations, tol, max_iter, entry=None):
-    """Dense per-segment Breslow Newton (numpy, one worker's Arrow batch).
-    Returns (beta, se, loglik, n_iter, converged) or None when degenerate
-    (no events, singular information, non-finite trajectory). With
-    `entry` (counting-process rows, r14) the risk sums run over the
-    COMBINED exit(+)/entry(−) signed axis — the numpy twin of
-    `_counting_arms` — and are read off at the exit event times; the
-    entry=None path is byte-unchanged."""
-    n, k = X.shape
-    order = np.argsort(t, kind="mergesort")
-    ts, es, Xs = t[order], e[order], X[order]
-    uniq, starts = np.unique(ts, return_index=True)
-    d_t = np.add.reduceat(es, starts)
-    dx = np.add.reduceat(es[:, None] * Xs, starts, axis=0)
-    ev_mask = d_t > 0
-    if not ev_mask.any():
-        return None
-    sdx = dx[ev_mask].sum(axis=0)
+    """Dense per-segment Cox fit (numpy, one worker's Arrow batch): the
+    numpy twin of `_counting_arms` — exit arms (sgn +1, ev = event), plus
+    entry arms (sgn −1, ev 0) when `entry` is set (counting-process rows)
+    — through the one Breslow kernel `_breslow_sums` with unit weights
+    and a zero offset, and the one Newton loop `_cox_newton_loop`.
+    Returns its `_CoxFit`, or None when degenerate (no events, singular
+    information, non-finite trajectory)."""
+    k = X.shape[1]
+    sgn = 1.0
     if entry is not None:
-        t_comb = np.concatenate([ts, entry[order]])
-        sgn_comb = np.concatenate([np.ones(n), -np.ones(n)])
-        X_comb = np.vstack([Xs, Xs])
-        ord2 = np.argsort(t_comb, kind="mergesort")
-        tc, sgnc, Xc = t_comb[ord2], sgn_comb[ord2], X_comb[ord2]
-        uniq_c, starts_c = np.unique(tc, return_index=True)
-        # exit times are a subset of the combined axis: exact positions
-        ev_pos = np.searchsorted(uniq_c, uniq[ev_mask])
+        sgn = np.repeat([1.0, -1.0], len(t))
+        t, e = np.concatenate([t, entry]), np.concatenate([e, np.zeros(len(e))])
+        X = np.vstack([X, X])
+    return _cox_newton_loop(
+        lambda b: _cox_unpack(_breslow_sums(t, e, sgn, 1.0, X, b, 0.0), b, k),
+        k, exact_iterations, tol, max_iter,
+    )
 
-        def stats_at(beta):
-            w = sgnc * np.exp(Xc @ beta)
-            wx = w[:, None] * Xc
-            s0 = np.cumsum(np.add.reduceat(w, starts_c)[::-1])[::-1]
-            s1 = np.cumsum(
-                np.add.reduceat(wx, starts_c, axis=0)[::-1], axis=0
-            )[::-1]
-            wxx = wx[:, :, None] * Xc[:, None, :]
-            s2 = np.cumsum(
-                np.add.reduceat(wxx, starts_c, axis=0)[::-1], axis=0
-            )[::-1]
-            d = d_t[ev_mask]
-            S0, S1, S2 = s0[ev_pos], s1[ev_pos], s2[ev_pos]
-            ll = float(beta @ sdx - (d * np.log(S0)).sum())
-            m = S1 / S0[:, None]
-            grad = sdx - (d[:, None] * m).sum(axis=0)
-            info = (
-                d[:, None, None]
-                * (S2 / S0[:, None, None] - m[:, :, None] * m[:, None, :])
-            ).sum(axis=0)
-            return ll, grad, info
 
-        return _cox_newton_loop(
-            stats_at, k, exact_iterations, tol, max_iter
-        )
-
-    def stats_at(beta):
-        w = np.exp(Xs @ beta)
-        wx = w[:, None] * Xs
-        # per-time totals -> suffix (risk-set) sums; S2 via per-row outers
-        s0 = np.cumsum(np.add.reduceat(w, starts)[::-1])[::-1]
-        s1 = np.cumsum(np.add.reduceat(wx, starts, axis=0)[::-1], axis=0)[::-1]
-        wxx = wx[:, :, None] * Xs[:, None, :]
-        s2 = np.cumsum(np.add.reduceat(wxx, starts, axis=0)[::-1], axis=0)[::-1]
-        d, S0, S1, S2 = d_t[ev_mask], s0[ev_mask], s1[ev_mask], s2[ev_mask]
-        ll = float(beta @ sdx - (d * np.log(S0)).sum())
-        m = S1 / S0[:, None]
-        grad = sdx - (d[:, None] * m).sum(axis=0)
-        info = (
-            d[:, None, None] * (S2 / S0[:, None, None] - m[:, :, None] * m[:, None, :])
-        ).sum(axis=0)
-        return ll, grad, info
-
-    return _cox_newton_loop(stats_at, k, exact_iterations, tol, max_iter)
+class _CoxFit(NamedTuple):
+    beta: np.ndarray
+    cov: np.ndarray
+    loglik: float
+    null_loglik: float
+    n_iter: int
+    converged: bool
 
 
 def _cox_newton_loop(stats_at, k, exact_iterations, tol, max_iter):
-    """The shared Newton-from-0 driver loop over a `stats_at(beta) ->
-    (ll, grad, info)` closure — identical trajectory/stop rule to the
-    distributed `coxph`, with the final-state ll/se recompute."""
+    """The one Cox Newton-from-0 loop (R coxph's start) over a
+    `stats_at(beta) -> (ll, grad, info)` closure — `coxph` and
+    `_cox_newton_dense` both run it. `exact_iterations=N` takes exactly
+    N steps; otherwise stop when |Δll| ≤ tol·(|ll| + tol). ll/cov are
+    recomputed at the returned β; `null_loglik` is the ll at β = 0.
+    Returns None on a singular information matrix or a non-finite
+    step or β."""
     beta = np.zeros(k)
-    ll_prev = None
+    ll_prev = null_ll = None
     n_iter = 0
     converged = False
     iters = exact_iterations if exact_iterations is not None else max_iter
     try:
         for _ in range(iters):
             ll, grad, info = stats_at(beta)
+            if null_ll is None:
+                null_ll = ll
             step = np.linalg.solve(info, grad)
             if not np.all(np.isfinite(step)):
                 return None
@@ -1609,8 +1516,9 @@ def _cox_newton_loop(stats_at, k, exact_iterations, tol, max_iter):
         return None
     if not np.all(np.isfinite(beta)):
         return None
-    return beta, np.sqrt(np.diag(cov)), ll, n_iter, (
-        converged or exact_iterations is not None
+    return _CoxFit(
+        beta, cov, ll, ll if null_ll is None else null_ll, n_iter,
+        converged or exact_iterations is not None,
     )
 
 
@@ -1631,20 +1539,21 @@ def coxph_grouped(
     shape; pattern set by `glm_grouped`, operators/glm.py:585).
 
     Each group's rows materialize in its worker's Arrow batch
-    (`applyInPandas`) and fit by the same Breslow Newton-from-0 the
+    (`applyInPandas`) and fit by the same Breslow kernel
+    (`_breslow_sums`) and Newton loop (`_cox_newton_loop`) the
     distributed `coxph` runs — for one huge segment use `coxph` itself,
-    whose per-iteration aggregation never materializes rows. The numpy
-    twin reproduces the distributed trajectory exactly (same per-time
-    suffix sums, same final-state se/loglik recompute), asserted in
-    tests against `coxph` on per-group slices.
+    whose per-iteration aggregation never materializes rows. Only the
+    summation order differs from `coxph` (one frame here, partitions
+    plus offsets there), asserted in tests against `coxph` on per-group
+    slices.
 
     Degenerate groups (no events, singular information, diverging
     Newton) yield NULL estimate/se rather than garbage. `time_bucket`
     floors the time axis inside the plan, as in `coxph`.
 
     `entry_col` (r14): per-group COUNTING-PROCESS fits — same
-    (start, stop] semantics as `coxph(entry_col=)` via the dense
-    signed-axis twin in `_cox_newton_dense`. The distributed fitter
+    (start, stop] semantics as `coxph(entry_col=)` via the signed entry
+    arms `_cox_newton_dense` adds. The distributed fitter
     REFUSES invalid intervals; here, per the grouped-fitter dirty-group
     policy, a group with any null/non-finite entry or entry ≥ time
     degenerates to the NULL row instead of poisoning the job.
@@ -1725,9 +1634,10 @@ def coxph_grouped(
             term=[], estimate=[], se=[], loglik=[], n_rows=[], n_events=[],
             iterations=[], converged=[],
         )
-        beta, se, ll, it, conv = res if res is not None else (
-            None, None, None, 0, False
+        beta, cov, ll, _, it, conv = res if res is not None else (
+            None, None, None, None, 0, False
         )
+        se = np.sqrt(np.diag(cov)) if cov is not None else None
         for i, name in enumerate(names):
             for c in gcols:
                 cols[c].append(pdf[c].iloc[0])
@@ -1992,20 +1902,22 @@ class _AFTTerms(NamedTuple):
 def _norm_mills(v):
     """(h, ln Φ̄) of the standard normal at `v` (numpy): the Mills ratio
     h = φ/Φ̄ and the log survival. Φ̄ underflows past v ≈ 38, where the
-    asymptotes h → v + 1/v and ln Φ̄ → −v²/2 − ln(v√(2π)) take over."""
+    asymptotes h → v + 1/v − 2/v³ and ln Φ̄ → −v²/2 − ln(v√(2π)) − 1/v²
+    take over. Both carry the 1/v³ order: then dh/dv and h(v − h), the
+    two readings of the kernel's ∂P/∂z, agree to O(1/v⁴), and
+    d ln Φ̄/dv = −h exactly."""
     from sparkglm_spark.functions import special as _sp
 
     with np.errstate(over="ignore", invalid="ignore", divide="ignore"):
         sf = _sp.norm_sf(v)
         ok = sf > 0.0
         safe = np.where(ok, sf, 1.0)
-        h = np.where(
-            ok, _sp.norm_pdf(v) / safe, v + 1.0 / np.where(v != 0, v, 1.0)
-        )
+        iv = 1.0 / np.where(v != 0, v, 1.0)
+        h = np.where(ok, _sp.norm_pdf(v) / safe, v + iv - 2.0 * iv**3)
         lsf = np.where(
             ok,
             np.log(safe),
-            -0.5 * v * v - np.log(np.abs(v) * np.sqrt(2.0 * np.pi)),
+            -0.5 * v * v - np.log(np.abs(v) * np.sqrt(2.0 * np.pi)) - iv * iv,
         )
     return h, lsf
 

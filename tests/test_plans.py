@@ -687,7 +687,11 @@ def test_fitter_job_counts_pinned(spark, lineitem, orders):
 
     from sparkglm_spark.operators.glm import glm
     from sparkglm_spark.operators.lm import lm, robust_standard_errors
-    from sparkglm_spark.operators.survival import coxph, weibull_aft
+    from sparkglm_spark.operators.survival import (
+        concordance_index,
+        coxph,
+        weibull_aft,
+    )
 
     gl = orders.withColumn("is_f", (F.col("o_orderstatus") == "F").cast("double"))
     cx = orders.select(
@@ -717,6 +721,9 @@ def test_fitter_job_counts_pinned(spark, lineitem, orders):
         "coxph": _jobs_of(spark, "pin_coxph", lambda: coxph(
             cx, "t", "ev", ["x"], exact_iterations=3
         )),
+        "cindex": _jobs_of(spark, "pin_cindex", lambda: concordance_index(
+            cx, "t", "ev", "x"
+        )),
         "weibull_aft": _jobs_of(spark, "pin_aft", lambda: weibull_aft(
             aft_in, "t", "ev", ["x"], exact_iterations=3
         )),
@@ -728,7 +735,8 @@ def test_fitter_job_counts_pinned(spark, lineitem, orders):
         )),
     }
     assert got == {
-        "lm": 3, "glm": 8, "coxph": 12, "weibull_aft": 6, "hc1": 1, "hc3": 2,
+        "lm": 3, "glm": 8, "coxph": 11, "cindex": 10, "weibull_aft": 6,
+        "hc1": 1, "hc3": 2,
     }
 
 
