@@ -13,6 +13,7 @@ required (grouped binomial, poisson).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -218,3 +219,47 @@ def get_family(
         raise ValueError(
             f"unknown family {name!r}; supported: {sorted(FAMILIES)}"
         ) from None
+
+
+def deviance_np(
+    family: str, y, mu, w, var_power: float = 1.5, nb_alpha: float = 1.0
+) -> float:
+    """ω-weighted deviance 2·Σ ωᵢ·(½ unit deviance) at μ — the numpy twin
+    of the `deviance_term` expressions above, for the numpy grouped
+    fitters (binomial's μ clamp is the caller's). Families: binomial,
+    poisson, gamma, tweedie, negbinomial; the quasi twins share their
+    base family's deviance. Gaussian is not covered."""
+    family = {"quasibinomial": "binomial", "quasipoisson": "poisson"}.get(
+        family, family
+    )
+    with np.errstate(divide="ignore", invalid="ignore"):
+        if family == "binomial":
+            t1 = np.where(y > 0, y * np.log(y / mu), 0.0)
+            t2 = np.where(y < 1, (1 - y) * np.log((1 - y) / (1 - mu)), 0.0)
+            return float(2.0 * (w * (t1 + t2)).sum())
+        if family == "gamma":
+            # −log(y/μ) + (y−μ)/μ (y > 0 guarded upstream)
+            return float(2.0 * (w * (-np.log(y / mu) + (y - mu) / mu)).sum())
+        if family == "tweedie":
+            # 1 < p < 2; y = 0 keeps only the tail μ^(2−p)/(2−p)
+            p = var_power
+            tail = mu ** (2.0 - p) / (2.0 - p)
+            full = (
+                y ** (2.0 - p) / ((1.0 - p) * (2.0 - p))
+                - y * mu ** (1.0 - p) / (1.0 - p)
+                + tail
+            )
+            return float(2.0 * (w * np.where(y == 0, tail, full)).sum())
+        if family == "negbinomial":
+            # y·ln(y/μ) − (y+1/α)·ln((1+αy)/(1+αμ)); y = 0 keeps
+            # (1/α)·ln(1+αμ)
+            a = nb_alpha
+            zero = (1.0 / a) * np.log(1.0 + a * mu)
+            full = np.where(
+                y > 0, y * np.log(np.where(y > 0, y, 1.0) / mu), 0.0
+            ) - (y + 1.0 / a) * np.log((1.0 + a * y) / (1.0 + a * mu))
+            return float(2.0 * (w * np.where(y == 0, zero, full)).sum())
+        if family != "poisson":
+            raise ValueError(f"deviance_np does not cover family {family!r}")
+        t1 = np.where(y > 0, y * np.log(y / mu), 0.0)
+        return float(2.0 * (w * (t1 - (y - mu))).sum())

@@ -34,13 +34,64 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparkglm_spark.functions.families import deviance_np
 from sparkglm_spark.plans.gram import gram_aggregate, gram_sums, gram_unpack
 from sparkglm_spark.plans.partitioning import collect_small
 from sparkglm_spark.operators.lm import (
+    _design,
     _encode_formula,
     check_weight_domain,
     prediction_over_raw,
 )
+
+
+def _intercept_split(x_cols: list[str]):
+    """(index of the unpenalized intercept or None, feature indices)."""
+    i0 = x_cols.index("intercept") if "intercept" in x_cols else None
+    return i0, [i for i in range(len(x_cols)) if i != i0]
+
+
+def _enet_penalty(lam, alpha, standardize, s):
+    """Per-coordinate (λ1ⱼ, λ2ⱼ) of the standardized problem with scales
+    `s` (1 for constant features). `standardize=False` un-standardizes
+    both penalties IN θ-SPACE, MLlib's `standardization=false`:
+    L1Updater gets λ1/σⱼ and L2Regularization (applyFeaturesStd path)
+    λ2·θⱼ²/σⱼ² (golden-matched vs MLlib, linear and logistic)."""
+    if standardize:
+        p = len(s)
+        return np.full(p, alpha * lam), np.full(p, (1.0 - alpha) * lam)
+    return alpha * lam / s, (1.0 - alpha) * lam / (s * s)
+
+
+def _cd_sweeps(A, b, nw, l1, l2, live, theta, n_sweeps, tol):
+    """The one soft-threshold coordinate-descent sweep, for the linear fit
+    (`_cd_enet`) and the prox-Newton subproblem
+    (`_penalized_irls_update`) alike: minimizes
+    (1/(2·nw))[θ'Aθ − 2b'θ] + Σ λ1ⱼ|θⱼ| + λ2ⱼ/2·θⱼ² over the scaled A, b.
+
+        ρⱼ = (bⱼ − Σ_{k≠j} Aⱼₖθₖ)/nw
+        θⱼ ← S(ρⱼ, λ1ⱼ) / (Aⱼⱼ/nw + λ2ⱼ)
+
+    Updates `theta` in place; a dead coordinate (`live` False — a
+    constant feature) stays at 0. Stops when no coordinate moved more
+    than `tol`; `tol=None` runs exactly `n_sweeps` sweeps. Returns
+    (sweeps, converged)."""
+    denom = np.diag(A) / nw + l2
+    sweeps = 0
+    for _ in range(n_sweeps):
+        max_d = 0.0
+        for j in range(len(b)):
+            if not live[j]:
+                theta[j] = 0.0
+                continue
+            rho = (b[j] - A[j] @ theta + A[j, j] * theta[j]) / nw
+            t_new = np.sign(rho) * max(abs(rho) - l1[j], 0.0) / denom[j]
+            max_d = max(max_d, abs(t_new - theta[j]))
+            theta[j] = t_new
+        sweeps += 1
+        if tol is not None and max_d <= tol:
+            return sweeps, True
+    return sweeps, tol is None
 
 
 def _cd_enet(
@@ -65,20 +116,16 @@ def _cd_enet(
     entirely from Gram sufficient statistics. Returns (beta in ORIGINAL
     scale and `x_cols` order, sweeps, converged, sse).
 
-    Per-coordinate update (soft-threshold):
-        ρⱼ = (bⱼ − Σ_{k≠j} Aⱼₖθₖ)/n
-        θⱼ ← S(ρⱼ, λ1ⱼ) / (Aⱼⱼ/n + λ2ⱼ)
-    with A = X̂'X̂, b = X̂'ŷ assembled from the raw Gram via
-    Aⱼₖ = (Gⱼₖ − n·mⱼ·mₖ)/(σⱼσₖ). `exact_sweeps=N` runs exactly N
-    cyclic sweeps from θ = 0 with no convergence test (deterministic
-    trajectory — the oracle-pin hook, same convention as the GLM/Cox/AFT
-    fixed-iteration kernels). With `sum_w` the statistics are the
+    The sweep is `_cd_sweeps` over A = X̂'X̂, b = X̂'ŷ assembled from
+    the raw Gram via Aⱼₖ = (Gⱼₖ − n·mⱼ·mₖ)/(σⱼσₖ). `exact_sweeps=N`
+    runs exactly N cyclic sweeps from θ = 0 with no convergence test
+    (deterministic trajectory — the oracle-pin hook, same convention as
+    the GLM/Cox/AFT fixed-iteration kernels). With `sum_w` the statistics are the
     W-weighted ones (xtx = X'WX, xty = X'Wy, sum_y = Σwy, …) and every
     statistical n becomes Σw — the MLlib weightCol convention (probed
     exact: population stds over Σw, objective 1/(2Σw))."""
-    has_int = "intercept" in x_cols
-    i0 = x_cols.index("intercept") if has_int else None
-    feats = [i for i in range(len(x_cols)) if i != i0]
+    i0, feats = _intercept_split(x_cols)
+    has_int = i0 is not None
     p = len(feats)
     lam = float(reg_param)
     alpha = float(elastic_net_param)
@@ -90,7 +137,7 @@ def _cd_enet(
     # MLlib LinearRegression scales by the CENTERED POPULATION std
     # (denominator n — probed at 1e-15 agreement; its 1/weightSum
     # normalization differs from LogisticRegression's SAMPLE-std
-    # summarizer, see _cd_wls_penalized) and the label std even when
+    # summarizer, see _enet_start) and the label std even when
     # fitIntercept=false — only the centering of the DATA follows the
     # intercept flag (golden-matched vs LinearRegression both ways)
     nw = float(sum_w) if sum_w is not None else float(n)
@@ -138,38 +185,13 @@ def _cd_enet(
     s_out = np.where(live, sig, 1.0)
     A = A / np.outer(s_out, s_out)
     b = b / (s_out * sig_y)
-    lam_t = lam / sig_y
-    if standardize:
-        l1 = np.full(p, alpha * lam_t)
-        l2 = np.full(p, (1.0 - alpha) * lam_t)
-    else:
-        # MLlib standardization=false: both penalties are un-standardized
-        # per coordinate IN θ-SPACE — L1Updater gets effectiveL1/σⱼ and
-        # L2Regularization (applyFeaturesStd path) gets effectiveL2·θⱼ²/σⱼ²,
-        # with effective* = λ·{α, 1−α}/σ_y (golden-matched vs MLlib)
-        l1 = alpha * lam_t / s_out
-        l2 = (1.0 - alpha) * lam_t / (s_out * s_out)
-
+    l1, l2 = _enet_penalty(lam / sig_y, alpha, standardize, s_out)
     theta = np.zeros(p) if theta0 is None else np.asarray(theta0, float).copy()
-    denom = np.diag(A) / nw + l2
-    sweeps = 0
-    converged = False
-    n_sweeps = exact_sweeps if exact_sweeps is not None else max_sweeps
-    for _ in range(n_sweeps):
-        max_d = 0.0
-        for j in range(p):
-            if not live[j]:
-                continue
-            rho = (b[j] - A[j] @ theta + A[j, j] * theta[j]) / nw
-            t_new = np.sign(rho) * max(abs(rho) - l1[j], 0.0) / denom[j]
-            max_d = max(max_d, abs(t_new - theta[j]))
-            theta[j] = t_new
-        sweeps += 1
-        if exact_sweeps is None and max_d <= tol:
-            converged = True
-            break
-    if exact_sweeps is not None:
-        converged = True
+    sweeps, converged = _cd_sweeps(
+        A, b, nw, l1, l2, live, theta,
+        exact_sweeps if exact_sweeps is not None else max_sweeps,
+        None if exact_sweeps is not None else tol,
+    )
 
     beta = np.zeros(len(x_cols))
     bf = np.where(live, theta * sig_y / s_out, 0.0)
@@ -547,8 +569,6 @@ def elastic_net_grouped(
     estimate, n_rows, n_nonzero, sweeps, converged."""
     from pyspark.sql import types as T
 
-    from sparkglm_spark.operators.lm import _design
-
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
     if exact_sweeps is not None and exact_sweeps < 1:
@@ -664,61 +684,185 @@ def elastic_net_grouped(
     return fanout_groups(gram, []).mapInPandas(solve_groups, out_schema)
 
 
-def _cd_wls_penalized(
-    A: np.ndarray,
-    b: np.ndarray,
-    n: int,
-    sig: np.ndarray,
-    lam: float,
-    alpha: float,
-    standardize: bool,
-    theta: np.ndarray,
-    max_sweeps: int,
-    tol: float,
-) -> np.ndarray:
-    """Inner solver of the penalized IRLS (glmnet's middle loop): cyclic
-    coordinate descent on (1/(2n))[θ'Ãθ − 2b̃'θ] + λ1ⱼ‖θ‖₁-ish with
-    Ã = A/(σσ'), b̃ = b/σ over the FIXED upfront feature stds. A/b are
-    the weighted-CENTERED raw-scale normal-equation pieces of the
-    current quadratic approximation. Updates θ in place and returns it;
-    constant features (σ = 0) stay at 0."""
-    p = len(b)
-    live = sig > 0.0
-    s = np.where(live, sig, 1.0)
-    At = A / np.outer(s, s)
-    bt = b / s
-    if standardize:
-        l1 = np.full(p, alpha * lam)
-        l2 = np.full(p, (1.0 - alpha) * lam)
-    else:
-        l1 = alpha * lam / s
-        l2 = (1.0 - alpha) * lam / (s * s)
-    denom = np.diag(At) / n + l2
-    for _ in range(max_sweeps):
-        max_d = 0.0
-        for j in range(p):
-            if not live[j]:
-                theta[j] = 0.0
-                continue
-            rho = (bt[j] - At[j] @ theta + At[j, j] * theta[j]) / n
-            t_new = np.sign(rho) * max(abs(rho) - l1[j], 0.0) / denom[j]
-            max_d = max(max_d, abs(t_new - theta[j]))
-            theta[j] = t_new
-        if max_d <= tol:
-            break
-    return theta
+# ---------------------------------------------------------------------------
+# Penalized GLM — glmnet's prox-Newton (penalized IRLS), written once.
+# Every fitter below runs the same steps: `_glm_enet_spec` checks the
+# arguments; the training moments (`_Moments`) go through `_enet_start`
+# for the fixed standardization, the intercept start and the degeneracy
+# verdict; `_irls_lockstep` advances a list of models one
+# `_penalized_irls_update` per statistics pass; `_lambda_path` walks the λ
+# grid. Only the statistics backend differs: `_SparkEnet` (one aggregate
+# per pass over the whole frame) or `_NpGroup` (numpy over one group's
+# Arrow batch).
+# ---------------------------------------------------------------------------
+
+_ENET_FAMILIES = ("binomial", "poisson", "gamma", "tweedie", "negbinomial")
 
 
-def _penalized_irls_update(
-    Gw, gz, sw, swz, k, feats, i0, sig, nw, lam, alpha, standardize,
-    theta, max_sweeps, cd_tol,
-):
-    """ONE prox-Newton quadratic-subproblem solve from the zw-Gram
-    pieces: weighted centering against the free intercept, the
-    `_cd_wls_penalized` sweep, σ-unscaling, intercept back-solve.
-    Shared by `glm_elastic_net`, `_glm_enet_pathwise` and
-    `glm_elastic_net_grouped` (code-review r11: the block had drifted
-    into three copies). Returns (new_beta, theta)."""
+@dataclass(frozen=True)
+class _GLMEnetSpec:
+    """The checked arguments every penalized-GLM fit shares."""
+
+    family: str
+    fam: object  # the families.py plug-in (var_power / nb_alpha bound)
+    alpha: float
+    standardize: bool
+    max_iter: int
+    tol: float
+    max_sweeps: int
+    exact: int | None
+    var_power: float
+    nb_alpha: float
+
+
+def _glm_enet_spec(
+    who, family, lams, elastic_net_param, standardize, max_iter, tol,
+    max_sweeps, exact_iterations, var_power, nb_alpha,
+) -> _GLMEnetSpec:
+    """The argument check of every penalized-GLM entry point (`who` names
+    it in the family error). `lams` is the λ grid; None skips the λ
+    checks (a per-group λ column, checked per group). A bad tweedie
+    `var_power` or negbinomial `nb_alpha` raises here, also on the
+    grouped surfaces whose numpy kernels would otherwise return
+    plausible-but-wrong deviances."""
+    from sparkglm_spark.functions.families import get_family
+
+    if family not in _ENET_FAMILIES:
+        raise ValueError(
+            f"{who} supports {'/'.join(_ENET_FAMILIES)}, got {family!r}"
+        )
+    if lams is not None:
+        if not lams:
+            raise ValueError("reg_params must be non-empty")
+        if any(float(v) < 0.0 for v in lams):
+            raise ValueError("reg_param must be >= 0")
+    alpha = float(elastic_net_param)
+    if not 0.0 <= alpha <= 1.0:
+        raise ValueError("elastic_net_param must be in [0, 1]")
+    if exact_iterations is not None and exact_iterations < 1:
+        raise ValueError("exact_iterations must be >= 1")
+    return _GLMEnetSpec(
+        family=family,
+        fam=get_family(family, float(var_power), float(nb_alpha)),
+        alpha=alpha,
+        standardize=standardize,
+        max_iter=max_iter,
+        tol=tol,
+        max_sweeps=max_sweeps,
+        exact=exact_iterations,
+        var_power=float(var_power),
+        nb_alpha=float(nb_alpha),
+    )
+
+
+def _enet_label_domain_error(family: str, ymin: float, ymax: float):
+    """Shared penalized-fitter label-domain check: None when [ymin, ymax]
+    lies in the family's support, else the raise/NULL-degrade message.
+    binomial [0, 1]; poisson/tweedie/negbinomial ≥ 0; gamma STRICTLY
+    > 0 (its deviance has log(y))."""
+    if family == "binomial" and (ymin < 0.0 or ymax > 1.0):
+        return (
+            f"binomial label must lie in [0, 1]; observed [{ymin}, {ymax}]"
+        )
+    if family in ("poisson", "tweedie", "negbinomial") and ymin < 0.0:
+        return f"{family} label must be >= 0; observed min = {ymin}"
+    if family == "gamma" and ymin <= 0.0:
+        return f"gamma label must be > 0; observed min = {ymin}"
+    return None
+
+
+@dataclass
+class _Moments:
+    """A training set's upfront sums: n, Σω, Σω², Σωy, Σωx, Σωx², Σωo
+    over the features (ω = 1 unweighted). `sww` is None unweighted,
+    `soff` None without an offset."""
+
+    n: int
+    sw: float
+    sww: float | None
+    sy: float
+    sx: np.ndarray
+    sxx: np.ndarray
+    soff: float | None
+
+
+@dataclass
+class _EnetState:
+    """One model of a lock-step penalized IRLS: `j` is its held-out fold
+    (None for a full-data model), `train` the backend's handle on its
+    training rows, `sig` its fixed feature stds, `nw` its Σω."""
+
+    j: int | None
+    n: int
+    nw: float
+    sig: np.ndarray
+    beta: np.ndarray
+    theta: np.ndarray
+    train: object
+    iters: int = 0
+    conv: bool = False
+    active: bool = True
+
+
+def _np_link_init(fam_name: str, mu0: float) -> float:
+    """Intercept-start link: binomial logit with the μ clamp, log with
+    the underflow floor (a no-op behind `_enet_start`'s ȳ > 0 verdict)."""
+    if fam_name == "binomial":
+        mu0 = min(max(mu0, 1e-10), 1 - 1e-10)
+        return float(np.log(mu0 / (1 - mu0)))
+    return float(np.log(max(mu0, 1e-300)))
+
+
+def _enet_start(mo: _Moments, family: str, k: int, i0, j=None, train=None):
+    """The one start of every penalized-GLM model: moments → fixed
+    standardization σ, intercept start and degeneracy verdict. Returns
+    (state, None), or (None, reason) when nothing can be fitted: ≤ 1
+    row, Σω ≤ 0, ≤ 1 effective row, or a constant binomial / all-zero
+    count label. The single fits raise the reason; the path/CV engines
+    skip the model; the grouped fitters NULL the group.
+
+    σ uses MLlib's weighted summarizer variance (Σωx² − Σω·m²)/(Σω −
+    Σω²/Σω) — the RELIABILITY-weights denominator (probed, see
+    `glm_elastic_net`); unweighted it is the sample n − 1. The start is
+    glmnet's β = 0, intercept = link(ȳ), minus the mean offset so the
+    start's η ≈ link(ȳ) at the typical row (a Newton start, not a fit
+    convention)."""
+    if mo.n <= 1:
+        return None, "need more than one row"
+    nw = mo.sw
+    if nw <= 0.0:
+        return None, "weights sum to <= 0"
+    sdenom = nw - mo.sww / nw if mo.sww is not None else float(mo.n - 1)
+    if sdenom <= 0.0:
+        return None, (
+            "weights carry <= 1 effective row (Σw − Σw²/Σw <= 0) — the "
+            "weighted std is undefined"
+        )
+    ybar = mo.sy / nw
+    if family == "binomial" and not 0.0 < ybar < 1.0:
+        return None, "binomial label is constant 0 or 1"
+    if family != "binomial" and ybar <= 0.0:
+        return None, f"{family} label sums to 0 — no signal to fit"
+    ms = mo.sx / nw
+    sig = np.sqrt(np.maximum((mo.sxx - nw * ms * ms) / sdenom, 0.0))
+    beta = np.zeros(k)
+    if i0 is not None:
+        beta[i0] = _np_link_init(family, ybar)
+        if mo.soff is not None:
+            beta[i0] -= mo.soff / nw
+    state = _EnetState(
+        j=j, n=mo.n, nw=nw, sig=sig, beta=beta,
+        theta=np.zeros(len(sig)), train=train,
+    )
+    return state, None
+
+
+def _penalized_irls_update(Gw, gz, sw, swz, feats, i0, s, lam, spec):
+    """ONE prox-Newton quadratic-subproblem solve from the zw-Gram pieces
+    (X'WX, X'Wz, Σw, Σwz at the model's current β): weighted centering
+    against the free intercept, the `_cd_sweeps` sweep over the fixed
+    stds, σ-unscaling, intercept back-solve. Updates `s.theta` in place;
+    returns the new β."""
     Gf = Gw[np.ix_(feats, feats)]
     bf = gz[feats]
     if i0 is not None:
@@ -728,16 +872,219 @@ def _penalized_irls_update(
     else:
         A = Gf
         bvec = bf
-    theta = _cd_wls_penalized(
-        A, bvec, nw, sig, lam, alpha, standardize, theta, max_sweeps, cd_tol
+    live = s.sig > 0.0
+    sd = np.where(live, s.sig, 1.0)
+    l1, l2 = _enet_penalty(lam, spec.alpha, spec.standardize, sd)
+    _cd_sweeps(
+        A / np.outer(sd, sd), bvec / sd, s.nw, l1, l2, live, s.theta,
+        spec.max_sweeps, spec.tol * 0.01,
     )
-    new_beta = np.zeros(k)
-    bfeat = np.where(sig > 0, theta / np.where(sig > 0, sig, 1.0), 0.0)
-    for idx, j in enumerate(feats):
-        new_beta[j] = bfeat[idx]
+    new_beta = np.zeros(len(gz))
+    bfeat = np.where(live, s.theta / sd, 0.0)
+    new_beta[feats] = bfeat
     if i0 is not None:
         new_beta[i0] = (swz - wx @ bfeat) / sw
-    return new_beta, theta
+    return new_beta
+
+
+def _irls_lockstep(states, stats_of, lam, spec, feats, i0) -> None:
+    """glmnet's outer loop, once for every fitter: each pass asks
+    `stats_of(live)` for every live model's (X'WX, X'Wz, Σw, Σwz) — one
+    Spark aggregate or a numpy Gram per model — then takes one
+    `_penalized_irls_update` per model. A model stops when no
+    coefficient moved more than `tol`; `spec.exact=N` runs exactly N
+    passes with no convergence test (the oracle-pin hook; every model
+    then reports converged). Updates the states in place: β, θ,
+    `iters`, `conv`."""
+    for s in states:
+        s.active, s.iters, s.conv = True, 0, False
+    for _ in range(spec.exact if spec.exact is not None else spec.max_iter):
+        live = [s for s in states if s.active]
+        if not live:
+            break
+        for s, (Gw, gz, sw, swz) in zip(live, stats_of(live)):
+            new_beta = _penalized_irls_update(
+                Gw, gz, sw, swz, feats, i0, s, lam, spec
+            )
+            delta = float(np.max(np.abs(new_beta - s.beta))) if len(gz) else 0.0
+            s.beta = new_beta
+            s.iters += 1
+            if spec.exact is None and delta <= spec.tol:
+                s.conv, s.active = True, False
+    if spec.exact is not None:
+        for s in states:
+            s.conv = True
+
+
+def _lambda_path(reg_params, fit_lambda):
+    """The λ-path driver: fits each DISTINCT λ once, descending
+    (glmnet's pathwise order — the models `fit_lambda(λ)` advances
+    carry β/θ into the next λ as a warm start, so later λs converge in
+    1-3 iterations), and returns one (λ, records) pair per INPUT λ,
+    descending, duplicates sharing their records. A None from
+    `fit_lambda` aborts the path and returns None."""
+    lam_in = sorted((float(v) for v in reg_params), reverse=True)
+    by_lam: dict[float, object] = {}
+    for lam in lam_in:
+        if lam not in by_lam:
+            by_lam[lam] = fit_lambda(lam)
+            if by_lam[lam] is None:
+                return None
+    return [(lam, by_lam[lam]) for lam in lam_in]
+
+
+class _SparkEnet:
+    """The Spark statistics backend: the persisted model frame (`work`,
+    the caller unpersists it) and the one spelling of every per-row
+    column the distributed penalized fits aggregate."""
+
+    def __init__(self, encoded, x_cols, target, spec, offset_col, weight_col,
+                 keep=()):
+        from sparkglm_spark.functions.links import get_link
+        from sparkglm_spark.plans.partitioning import ensure_parallel
+
+        extra = [c for c in (offset_col, weight_col) if c]
+        self.work = ensure_parallel(
+            encoded.select(*keep, target, *x_cols, *extra)
+        ).persist()
+        self.spec = spec
+        self.lnk = get_link(spec.fam.default_link)
+        self.k = len(x_cols)
+        self.i0, self.feats = _intercept_split(x_cols)
+        self.xs = [F.col(c) for c in x_cols]
+        self.y = F.col(target)
+        self.off = F.col(offset_col).cast("double") if offset_col else None
+        self.wt = F.col(weight_col).cast("double") if weight_col else None
+        self.wr = self.wt if self.wt is not None else F.lit(1.0)  # prior ω
+        self.weight_col = weight_col
+
+    def moments_aggs(self) -> list:
+        """The upfront pass: n, Σωy, the label range, the weight-domain
+        sums and the (ω-weighted but IRLS-unweighted) feature moments of
+        the fixed standardization — MLlib's summarizer."""
+        wr, y = self.wr, self.y
+        aggs = [
+            F.count(F.lit(1)).alias("n"),
+            F.sum(wr * y).alias("sy"),
+            F.min(y).alias("ymin"),
+            F.max(y).alias("ymax"),
+        ]
+        if self.wt is not None:
+            aggs += [
+                F.sum(self.wt).alias("sw0"),
+                F.sum(self.wt * self.wt).alias("sww"),
+                F.min(self.wt).alias("minw"),
+                F.count(self.wt).alias("n_w"),
+            ]
+        if self.off is not None:
+            aggs.append(F.sum(wr * self.off).alias("soff"))
+        for i, j in enumerate(self.feats):
+            c = self.xs[j]
+            aggs.append(F.sum(wr * c).alias(f"s_{i}"))
+            aggs.append(F.sum(wr * c * c).alias(f"ss_{i}"))
+        return aggs
+
+    def check(self, rows) -> None:
+        """Raise on input no model can fit, from the moments rows of all
+        data: ≤ 1 row, a bad weight column (shared guard:
+        operators/lm.py::check_weight_domain), or labels outside the
+        family's support — the IRLS clamp bounds μ, not y, so a y = −3
+        would silently corrupt the working response (glm raises
+        likewise)."""
+        n = sum(int(r["n"]) for r in rows)
+        if n <= 1:
+            raise ValueError("need more than one row")
+        if self.wt is not None:
+            check_weight_domain(
+                self.weight_col,
+                n=n,
+                n_w=sum(int(r["n_w"]) for r in rows),
+                min_w=min(
+                    (float(r["minw"]) for r in rows if r["minw"] is not None),
+                    default=None,
+                ),
+                sum_w=sum(float(r["sw0"]) for r in rows),
+            )
+        dom_err = _enet_label_domain_error(
+            self.spec.family,
+            min(float(r["ymin"]) for r in rows),
+            max(float(r["ymax"]) for r in rows),
+        )
+        if dom_err:
+            raise ValueError(dom_err)
+
+    def start(self, rows, j=None, train=None):
+        """`_enet_start` over the summed moments rows of a training set."""
+
+        def tot(key):
+            return sum(float(r[key]) for r in rows)
+
+        n = sum(int(r["n"]) for r in rows)
+        p = len(self.feats)
+        mo = _Moments(
+            n=n,
+            sw=tot("sw0") if self.wt is not None else float(n),
+            sww=tot("sww") if self.wt is not None else None,
+            sy=tot("sy"),
+            sx=np.array([tot(f"s_{i}") for i in range(p)]),
+            sxx=np.array([tot(f"ss_{i}") for i in range(p)]),
+            soff=tot("soff") if self.off is not None else None,
+        )
+        return _enet_start(mo, self.spec.family, self.k, self.i0, j, train)
+
+    def irls_cols(self, beta):
+        """(w, z, ω·deviance term) at β — the one Spark spelling of an
+        IRLS step's per-row quantities. η = Xβ + offset; binomial clamps
+        μ to [1e-10, 1−1e-10] before w and z; z is the working response
+        of the LINEAR part only (the fixed offset drops out of the WLS
+        subproblem — the glm convention)."""
+        fam, one = self.spec.fam, F.lit(1.0)
+        eta_lin = F.lit(0.0)
+        for c, bb in zip(self.xs, beta):
+            eta_lin = eta_lin + F.lit(float(bb)) * c
+        eta = eta_lin if self.off is None else eta_lin + self.off
+        mu = self.lnk.unlink(eta, one)
+        if self.spec.family == "binomial":
+            mu = F.least(F.greatest(mu, F.lit(1e-10)), F.lit(1.0 - 1e-10))
+        grad = self.lnk.lprime(mu, one)
+        w = self.wr / (fam.variance(mu, one) * grad * grad)
+        z = eta_lin + (self.y - mu) * grad
+        return w, z, self.wr * fam.deviance_term(self.y, mu, one)
+
+    def aggregate(self, betas, zw: bool, dev: bool, keep=()):
+        """One projection and its aggregate list over the models `betas`
+        (model si): with `zw` the zw-Gram sums — `m{si}_` Gram/X'Wz,
+        `sw{si}` = Σw, `swz{si}` = Σwz; with `dev` `dv{si}` = 2·Σω·
+        deviance term. `keep` columns (the fold key) ride along."""
+        sel, aggs = [*keep, *self.xs], []
+        for si, beta in enumerate(betas):
+            w, z, devt = self.irls_cols(beta)
+            if zw:
+                sel += [w.alias(f"__w{si}"), z.alias(f"__z{si}")]
+                w_c, z_c = F.col(f"__w{si}"), F.col(f"__z{si}")
+                aggs += gram_sums(self.xs, w_c, z_c, prefix=f"m{si}_")
+                aggs.append(F.sum(w_c).alias(f"sw{si}"))
+                aggs.append(F.sum(w_c * z_c).alias(f"swz{si}"))
+            if dev:
+                sel.append(devt.alias(f"__d{si}"))
+                aggs.append(
+                    (F.lit(2.0) * F.sum(F.col(f"__d{si}"))).alias(f"dv{si}")
+                )
+        return self.work.select(*sel), aggs
+
+    def zw_unpack(self, rows, si):
+        """Model si's (X'WX, X'Wz, Σw, Σwz), summed over `rows` (its
+        training folds' blocks — Gram additivity)."""
+        Gw = np.zeros((self.k, self.k))
+        gz = np.zeros(self.k)
+        sw = swz = 0.0
+        for r in rows:
+            g_xtx, g_xty = gram_unpack(r, self.k, prefix=f"m{si}_")
+            Gw += g_xtx
+            gz += g_xty
+            sw += float(r[f"sw{si}"])
+            swz += float(r[f"swz{si}"])
+        return Gw, gz, sw, swz
 
 
 @dataclass
@@ -841,7 +1188,8 @@ def glm_elastic_net(
     weighted Gram over [intercept]+features carries Σw / ΣWx / X'WX /
     X'Wz / deviance in one pass), then the quadratic subproblem solves
     by weighted-centered coordinate descent on the DRIVER — the same
-    100 TB cost profile per iteration as the unpenalized `glm`.
+    100 TB cost profile per iteration as the unpenalized `glm`. This is
+    the one-model, one-λ case of the shared loop (`_irls_lockstep`).
 
     Families: binomial/logit (Bernoulli y ∈ [0,1]), poisson/log
     (y ≥ 0), gamma/log (r13; y > 0; working weight μ²/V = 1,
@@ -866,217 +1214,59 @@ def glm_elastic_net(
     convergence test (deterministic trajectory — the oracle-pin hook;
     with a single covariate the inner CD is exact in one update, so
     the whole trajectory is closed-form)."""
-    from sparkglm_spark.functions.families import get_family
-    from sparkglm_spark.functions.links import get_link
-
-    if family not in _ENET_FAMILIES:
-        raise ValueError(
-            f"glm_elastic_net supports {'/'.join(_ENET_FAMILIES)}, "
-            f"got {family!r}"
-        )
-    lam = float(reg_param)
-    alpha = float(elastic_net_param)
-    if not 0.0 <= alpha <= 1.0:
-        raise ValueError("elastic_net_param must be in [0, 1]")
-    if lam < 0.0:
-        raise ValueError("reg_param must be >= 0")
-    if exact_iterations is not None and exact_iterations < 1:
-        raise ValueError("exact_iterations must be >= 1")
-    fam = get_family(family, var_power, nb_alpha)  # var_power: tweedie; nb_alpha: negbinomial
-    lnk = get_link(fam.default_link)
-    extra = [c for c in (offset_col, weight_col) if c]
-    encoded, x_cols, target, levels = _encode_formula(
-        df, formula, na_action, extra_cols=extra,
+    spec = _glm_enet_spec(
+        "glm_elastic_net", family, [reg_param], elastic_net_param,
+        standardize, max_iter, tol, max_sweeps, exact_iterations,
+        var_power, nb_alpha,
     )
-    has_int = "intercept" in x_cols
-    i0 = x_cols.index("intercept") if has_int else None
-    feats = [i for i in range(len(x_cols)) if i != i0]
-    fnames = [x_cols[i] for i in feats]
-    k = len(x_cols)
-    p = len(feats)
-
-    from sparkglm_spark.plans.partitioning import ensure_parallel
-
-    work = ensure_parallel(
-        encoded.select(target, *x_cols, *extra)
-    ).persist()
+    lam = float(reg_param)
+    encoded, x_cols, target, levels = _encode_formula(
+        df, formula, na_action,
+        extra_cols=[c for c in (offset_col, weight_col) if c],
+    )
+    fr = _SparkEnet(encoded, x_cols, target, spec, offset_col, weight_col)
     try:
-        y = F.col(target)
-        one = F.lit(1.0)
-        off = F.col(offset_col).cast("double") if offset_col else None
-        wt = F.col(weight_col).cast("double") if weight_col else None
-        wr = wt if wt is not None else one  # per-row prior weight ω
-        # upfront pass: n, ȳ, and the (ω-weighted but IRLS-unweighted)
-        # feature moments for the fixed standardization (computed once —
-        # MLlib's summarizer, which weights by ω when weightCol is set)
-        aggs0 = [
-            F.count(F.lit(1)).alias("n"),
-            F.sum(wr * y).alias("sy"),
-            F.min(y).alias("ymin"),
-            F.max(y).alias("ymax"),
-        ]
-        if wt is not None:
-            aggs0 += [
-                F.sum(wt).alias("sw0"),
-                F.sum(wt * wt).alias("sww"),
-                F.min(wt).alias("minw"),
-                F.count(wt).alias("n_w"),
-            ]
-        if off is not None:
-            aggs0.append(F.sum(wr * off).alias("soff"))
-        for i, j in enumerate(feats):
-            c = F.col(x_cols[j])
-            aggs0.append(F.sum(wr * c).alias(f"s_{i}"))
-            aggs0.append(F.sum(wr * c * c).alias(f"ss_{i}"))
-        r0 = collect_small(work.agg(*aggs0))[0]
-        n = int(r0["n"])
-        if n <= 1:
-            raise ValueError("need more than one row")
-        if wt is not None:
-            # weight-domain guards ride the same aggregation (shared
-            # guard: operators/lm.py::check_weight_domain; the sww term
-            # adds the ≤-1-effective-row reliability-denominator check)
-            check_weight_domain(
-                weight_col,
-                n=n,
-                n_w=int(r0["n_w"]),
-                min_w=r0["minw"],
-                sum_w=float(r0["sw0"]),
-                sum_w2=float(r0["sww"]),
-            )
-        # label-domain guards ride the same upfront aggregation: the
-        # mean-only checks below can't see individual out-of-domain rows
-        # (the IRLS clamp bounds μ, not y — a y = −3 would silently
-        # corrupt the working response/deviance). glm raises likewise.
-        ymin, ymax = float(r0["ymin"]), float(r0["ymax"])
-        dom_err = _enet_label_domain_error(family, ymin, ymax)
-        if dom_err:
-            raise ValueError(dom_err)
-        nw = float(r0["sw0"]) if wt is not None else float(n)
-        # std denominator: MLlib's weighted summarizer uses the
-        # RELIABILITY-weights form Σω − Σω²/Σω (probed — see docstring);
-        # with unit weights Σω² = n, so it IS the unweighted n−1
-        sdenom = (
-            nw - float(r0["sww"]) / nw if wt is not None else float(n - 1)
-        )
-        y_mean = float(r0["sy"]) / nw
-        ms = np.array([float(r0[f"s_{i}"]) for i in range(p)]) / nw
-        sig = np.sqrt(
-            np.maximum(
-                (np.array([float(r0[f"ss_{i}"]) for i in range(p)]) - nw * ms * ms)
-                / sdenom,
-                0.0,
-            )
-        )
-
-        # family domain guards (cheap second scan avoided: trust + clamp)
-        if family == "binomial" and not 0.0 < y_mean < 1.0:
-            raise ValueError("binomial label is constant 0 or 1")
-        if family in ("poisson", "tweedie", "negbinomial") and y_mean <= 0.0:
-            raise ValueError(
-                f"{family} label sums to 0 — no signal to fit"
-            )
-
-        beta = np.zeros(k)
-        if has_int:
-            # standard glmnet start: β = 0, intercept = link(ȳ); with an
-            # offset, subtract its mean so the start's η ≈ link(ȳ) at
-            # the typical row (a Newton start, not a fit convention —
-            # the trajectory converges to the same optimum either way)
-            mu0 = min(max(y_mean, 1e-10), 1 - 1e-10) if family == "binomial" else y_mean
-            beta[i0] = float(lnk.link_np(np.array([mu0]), 1.0)[0]) if hasattr(
-                lnk, "link_np"
-            ) else float(np.log(mu0 / (1 - mu0)) if family == "binomial" else np.log(mu0))
-            if off is not None:
-                beta[i0] -= float(r0["soff"]) / nw
-
-        theta = np.zeros(p)
-        xs = [F.col(c) for c in x_cols]
+        r0 = collect_small(fr.work.agg(*fr.moments_aggs()))[0]
+        fr.check([r0])
+        s, err = fr.start([r0])
+        if err:
+            raise ValueError(err)
         dev = None
-        converged = False
-        n_iter = 0
-        if exact_iterations is not None:
-            max_iter = exact_iterations
-        for _ in range(max_iter):
-            eta_lin = F.lit(0.0)
-            for c, bb in zip(xs, beta):
-                eta_lin = eta_lin + F.lit(float(bb)) * c
-            eta = eta_lin if off is None else eta_lin + off
-            mu = lnk.unlink(eta, one)
-            if family == "binomial":
-                mu = F.least(F.greatest(mu, F.lit(1e-10)), F.lit(1.0 - 1e-10))
-            grad = lnk.lprime(mu, one)
-            w = wr / (fam.variance(mu, one) * grad * grad)
-            # working response for the LINEAR part only — the offset is
-            # fixed, so it drops out of the WLS subproblem (z = η−off +
-            # (y−μ)g', the glm convention at glm.py:181)
-            z = eta_lin + (y - mu) * grad
-            proj = work.select(
-                *xs, w.alias("__w"), z.alias("__z"),
-                (wr * fam.deviance_term(y, mu, one)).alias("__devt"),
-            )
-            w_c, z_c = F.col("__w"), F.col("__z")
-            aggs = gram_sums(xs, w_c, z_c)
-            aggs.append(F.sum(w_c).alias("sw"))
-            aggs.append(F.sum(w_c * z_c).alias("swz"))
-            aggs.append((F.lit(2.0) * F.sum(F.col("__devt"))).alias("dev"))
+
+        def stats_of(live):
+            nonlocal dev
+            proj, aggs = fr.aggregate([live[0].beta], zw=True, dev=True)
             r = collect_small(proj.agg(*aggs))[0]
-            dev = float(r["dev"])
-            Gw, gz = gram_unpack(r, k)
-            sw = float(r["sw"])
-            swz = float(r["swz"])
-            new_beta, theta = _penalized_irls_update(
-                Gw, gz, sw, swz, k, feats, i0, sig, nw, lam, alpha,
-                standardize, theta, max_sweeps, tol * 0.01,
-            )
-            delta = float(np.max(np.abs(new_beta - beta))) if k else 0.0
-            beta = new_beta
-            n_iter += 1
-            if exact_iterations is None and delta <= tol:
-                converged = True
-                break
-        if exact_iterations is not None:
-            converged = True
-        elif not converged and n_iter > 0:
+            dev = float(r["dv0"])
+            return [fr.zw_unpack([r], 0)]
+
+        _irls_lockstep([s], stats_of, lam, spec, fr.feats, fr.i0)
+        if exact_iterations is None and not s.conv and s.iters > 0:
             # stopped at max_iter: the loop's deviance is one iteration
             # stale (see GLMElasticNet.deviance) — recompute at the
             # returned β with one scalar-only aggregation
-            eta = F.lit(0.0)
-            for c, bb in zip(xs, beta):
-                eta = eta + F.lit(float(bb)) * c
-            if off is not None:
-                eta = eta + off
-            mu = lnk.unlink(eta, one)
-            if family == "binomial":
-                mu = F.least(F.greatest(mu, F.lit(1e-10)), F.lit(1.0 - 1e-10))
-            dev = float(
-                collect_small(
-                    work.agg(
-                        (F.lit(2.0) * F.sum(wr * fam.deviance_term(y, mu, one)))
-                        .alias("dev")
-                    )
-                )[0]["dev"]
-            )
+            proj, aggs = fr.aggregate([s.beta], zw=False, dev=True)
+            dev = float(collect_small(proj.agg(*aggs))[0]["dv0"])
     finally:
-        work.unpersist()
+        fr.work.unpersist()
 
     return GLMElasticNet(
         xnames=list(x_cols),
         yname=target,
-        coefs=beta,
+        coefs=s.beta,
         family=family,
-        link=fam.default_link,
+        link=spec.fam.default_link,
         reg_param=lam,
-        elastic_net_param=alpha,
+        elastic_net_param=spec.alpha,
         standardize=standardize,
         deviance=dev if dev is not None else float("nan"),
-        nrow=n,
-        iter=n_iter,
-        converged=converged,
+        nrow=s.n,
+        iter=s.iters,
+        converged=s.conv,
         levels=levels,
         call=(
             f"glm_elastic_net({formula}, family={family}, reg_param={lam}, "
-            f"elastic_net_param={alpha}"
+            f"elastic_net_param={spec.alpha}"
             + (f", var_power={var_power}" if family == "tweedie" else "")
             + (f", nb_alpha={nb_alpha}" if family == "negbinomial" else "")
             + (f", weight_col={weight_col}" if weight_col else "")
@@ -1103,19 +1293,11 @@ def _glm_enet_pathwise(
     reg_params: list[float],
     fold_expr,
     n_folds: int,
-    elastic_net_param: float,
-    family: str,
-    standardize: bool,
+    spec: _GLMEnetSpec,
     na_action: str,
-    max_iter: int,
-    tol: float,
-    max_sweeps: int,
     offset_col: str | None,
-    exact_iterations: int | None,
+    weight_col: str | None,
     mode: str,
-    weight_col: str | None = None,
-    var_power: float = 1.5,
-    nb_alpha: float = 1.0,
 ):
     """Shared engine of `glm_elastic_net_cv` (mode='cv') and
     `glm_elastic_net_path` (mode='path') — pathwise penalized IRLS with
@@ -1123,8 +1305,7 @@ def _glm_enet_pathwise(
     iteration. `weight_col` applies the `glm_elastic_net(weight_col=)`
     convention per model: all statistical n's become the model's
     training Σω (assembled fold-additively like the moments), feature
-    stds use the reliability-weights denominator Σω − Σω²/Σω (the
-    probed MLlib summarizer convention — see `glm_elastic_net`), IRLS
+    stds use the reliability-weights denominator Σω − Σω²/Σω, IRLS
     working weights and deviances pick up ω, and weight-domain
     violations raise upfront; a training set with ≤ 1 effective row
     degenerates that fold (skipped like a constant-label fold).
@@ -1140,40 +1321,17 @@ def _glm_enet_pathwise(
     * mode='path': a single full-data model, same machinery with one
       constant fold group.
 
-    λs run DESCENDING with warm starts (glmnet's pathwise design), so
-    each λ's IRLS usually converges in 1-3 iterations after the first.
-    Per-model standardization uses the model's own TRAINING sample stds
-    (assembled from per-fold Σx/Σx² — the convention a cold fit on the
-    filtered training rows would use, parity-tested at 1e-8). Total
-    jobs: 1 upfront moments pass + Σ_λ(iterations) Gram passes + a
-    final deviance pass evaluating every (λ, model) at its CONVERGED β
-    (so reported deviances describe the returned fits, not the
-    penultimate iterate — the `GLMElasticNet.deviance` lesson applied
-    from birth).
+    λs run DESCENDING with warm starts (`_lambda_path`). Per-model
+    standardization uses the model's own TRAINING stds (assembled from
+    per-fold Σx/Σx² — the convention a cold fit on the filtered training
+    rows would use, parity-tested at 1e-8). Total jobs: 1 upfront
+    moments pass + Σ_λ(iterations) Gram passes + a final deviance pass
+    evaluating every (λ, model) at its CONVERGED β (so reported
+    deviances describe the returned fits, not the penultimate iterate).
 
-    Returns (rows, x_cols, has_int, n_total) where rows is a list of
-    dicts, one per (λ, state)."""
-    from sparkglm_spark.functions.families import get_family
-    from sparkglm_spark.functions.links import get_link
-    from sparkglm_spark.plans.partitioning import ensure_parallel
-
-    if family not in _ENET_FAMILIES:
-        raise ValueError(
-            f"glm_elastic_net supports {'/'.join(_ENET_FAMILIES)}, "
-            f"got {family!r}"
-        )
-    if not reg_params:
-        raise ValueError("reg_params must be non-empty")
-    alpha = float(elastic_net_param)
-    if not 0.0 <= alpha <= 1.0:
-        raise ValueError("elastic_net_param must be in [0, 1]")
-    if any(float(l) < 0.0 for l in reg_params):
-        raise ValueError("reg_param must be >= 0")
-    if exact_iterations is not None and exact_iterations < 1:
-        raise ValueError("exact_iterations must be >= 1")
-    fam = get_family(family, var_power, nb_alpha)
-    lnk = get_link(fam.default_link)
-
+    Returns (path, x_cols, has_int, n_total): `path` is one (λ, records)
+    pair per input λ, a record per model — a dict of lam, j, beta, n_t,
+    iters, conv, dev_train, dev_val, n_v."""
     if mode == "cv":
         if isinstance(fold_expr, str):
             fold_expr = F.col(fold_expr)
@@ -1181,66 +1339,17 @@ def _glm_enet_pathwise(
     else:
         base = df.withColumn("__fold", F.lit(0))
         n_folds = 1
-    extra = [c for c in (offset_col, weight_col) if c]
     encoded, x_cols, target, _levels = _encode_formula(
-        base, formula, na_action, extra_cols=["__fold"] + extra,
+        base, formula, na_action,
+        extra_cols=["__fold"] + [c for c in (offset_col, weight_col) if c],
     )
-    has_int = "intercept" in x_cols
-    i0 = x_cols.index("intercept") if has_int else None
-    feats = [i for i in range(len(x_cols)) if i != i0]
-    k = len(x_cols)
-    p = len(feats)
-    y = F.col(target)
-    one = F.lit(1.0)
-    off = F.col(offset_col).cast("double") if offset_col else None
-    wt = F.col(weight_col).cast("double") if weight_col else None
-    wr = wt if wt is not None else one  # per-row prior weight ω
-
-    work = ensure_parallel(
-        encoded.select("__fold", target, *x_cols, *extra)
-    ).persist()
+    fr = _SparkEnet(
+        encoded, x_cols, target, spec, offset_col, weight_col, keep=["__fold"]
+    )
+    fold = [F.col("__fold")]
     try:
         # ------ upfront pass: per-fold moments (one job) ------
-        aggs0 = [
-            F.count(F.lit(1)).alias("n"),
-            F.sum(wr * y).alias("sy"),
-            F.min(y).alias("ymin"),
-            F.max(y).alias("ymax"),
-        ]
-        if wt is not None:
-            aggs0 += [
-                F.sum(wt).alias("sw0"),
-                F.sum(wt * wt).alias("sww"),
-                F.min(wt).alias("minw"),
-                F.count(wt).alias("n_w"),
-            ]
-        if off is not None:
-            aggs0.append(F.sum(wr * off).alias("soff"))
-        for i, j in enumerate(feats):
-            c = F.col(x_cols[j])
-            aggs0.append(F.sum(wr * c).alias(f"s_{i}"))
-            aggs0.append(F.sum(wr * c * c).alias(f"ss_{i}"))
-        groups = _collect_fold_rows(work, aggs0)
-        if wt is not None and groups:
-            # weight-domain guards over ALL rows, assembled from the
-            # same per-fold aggregation (shared guard: operators/lm.py::
-            # check_weight_domain); an EMPTY groups dict falls through
-            # to the n_total guard below (code-review r11: the old
-            # inline min() crashed on it)
-            check_weight_domain(
-                weight_col,
-                n=sum(int(r["n"]) for r in groups.values()),
-                n_w=sum(int(r["n_w"]) for r in groups.values()),
-                min_w=min(
-                    (
-                        float(r["minw"])
-                        for r in groups.values()
-                        if r["minw"] is not None
-                    ),
-                    default=None,
-                ),
-                sum_w=sum(float(r["sw0"]) for r in groups.values()),
-            )
+        groups = _collect_fold_rows(fr.work, fr.moments_aggs())
         bad = sorted(g for g in groups if not 0 <= g < n_folds)
         if bad:
             raise ValueError(
@@ -1248,63 +1357,22 @@ def _glm_enet_pathwise(
                 "fold_expr or n_folds (a dropped fold would bias every "
                 "training set)"
             )
+        fr.check(list(groups.values()))
         n_total = sum(int(r["n"]) for r in groups.values())
-        if n_total <= 1:
-            raise ValueError("need more than one row")
-        ymin = min(float(r["ymin"]) for r in groups.values())
-        ymax = max(float(r["ymax"]) for r in groups.values())
-        dom_err = _enet_label_domain_error(family, ymin, ymax)
-        if dom_err:
-            raise ValueError(dom_err)
 
-
-        # ------ per-state fixed stats from group-moment additivity ------
+        # ------ per-model starts from group-moment additivity ------
         states = []
-        for j in (range(n_folds) if mode == "cv" else [None]):
-            tg = [g for g in groups if g != j] if mode == "cv" else list(groups)
+        for j in range(n_folds) if mode == "cv" else [None]:
             if mode == "cv" and j not in groups:
                 continue  # no validation rows — nothing to report
-            n_t = sum(int(groups[g]["n"]) for g in tg)
-            if n_t <= 1:
-                continue
-            if wt is not None:
-                nw_t = sum(float(groups[g]["sw0"]) for g in tg)
-                sww_t = sum(float(groups[g]["sww"]) for g in tg)
-                if nw_t <= 0.0 or nw_t - sww_t / nw_t <= 0.0:
-                    continue  # ≤ 1 effective training row — degenerate
-                sdenom = nw_t - sww_t / nw_t
-            else:
-                nw_t = float(n_t)
-                sdenom = float(n_t - 1)
-            sy_t = sum(float(groups[g]["sy"]) for g in tg)
-            ybar = sy_t / nw_t
-            if family == "binomial" and not 0.0 < ybar < 1.0:
-                continue  # constant training label — degenerate fold
-            if family != "binomial" and ybar <= 0.0:
-                continue  # log init needs ybar > 0 (all-zero fold)
-            ms = np.array(
-                [sum(float(groups[g][f"s_{i}"]) for g in tg) for i in range(p)]
-            ) / nw_t
-            ss = np.array(
-                [sum(float(groups[g][f"ss_{i}"]) for g in tg) for i in range(p)]
-            )
-            sig = np.sqrt(np.maximum((ss - nw_t * ms * ms) / sdenom, 0.0))
-            beta = np.zeros(k)
-            if has_int:
-                beta[i0] = _np_link_init(family, ybar)
-                if off is not None:
-                    soff_t = sum(float(groups[g]["soff"]) for g in tg)
-                    beta[i0] -= soff_t / nw_t
-            states.append(
-                dict(
-                    j=j, train=tg, n_t=n_t, nw_t=nw_t, sig=sig,
-                    beta=beta, theta=np.zeros(p),
-                )
-            )
+            tg = [g for g in groups if g != j]
+            s, _err = fr.start([groups[g] for g in tg], j=j, train=tg)
+            if s is not None:
+                states.append(s)
         if not states:
-            # ADVICE r11: in path mode this IS the single full-data model
-            # — fail with the single-fit vocabulary, not fold-speak (and
-            # never return an empty frame for degenerate data)
+            # in path mode this IS the single full-data model — fail with
+            # the single-fit vocabulary, not fold-speak (and never return
+            # an empty frame for degenerate data)
             if mode == "path":
                 raise ValueError(
                     "degenerate input: constant label or <= 1 effective "
@@ -1313,137 +1381,46 @@ def _glm_enet_pathwise(
                 )
             raise ValueError("no fittable fold models (degenerate folds)")
 
-        # ------ pathwise λ loop, folds in lock-step ------
-        def state_exprs(s):
-            eta_lin = F.lit(0.0)
-            for c_name, bb in zip(x_cols, s["beta"]):
-                eta_lin = eta_lin + F.lit(float(bb)) * F.col(c_name)
-            eta = eta_lin if off is None else eta_lin + off
-            mu = lnk.unlink(eta, one)
-            if family == "binomial":
-                mu = F.least(F.greatest(mu, F.lit(1e-10)), F.lit(1.0 - 1e-10))
-            grad = lnk.lprime(mu, one)
-            w = wr / (fam.variance(mu, one) * grad * grad)
-            z = eta_lin + (y - mu) * grad
-            return w, z
+        def stats_of(live):
+            rows = _collect_fold_rows(
+                *fr.aggregate([s.beta for s in live], zw=True, dev=False,
+                              keep=fold)
+            )
+            return [
+                fr.zw_unpack([rows[g] for g in s.train], si)
+                for si, s in enumerate(live)
+            ]
 
-        results = []  # one dict per (λ, state)
-        # duplicate input λs fit ONCE (code-review r11: a duplicate
-        # re-ran the whole lock-step IRLS only for its results to be
-        # discarded); rows are re-expanded to the input multiset after
-        # the deviance pass
-        lam_in_sorted = sorted((float(v) for v in reg_params), reverse=True)
-        lams = sorted(set(lam_in_sorted), reverse=True)
-        for lam in lams:
-            for s in states:
-                s["active"] = True
-                s["iters"] = 0
-                s["conv"] = False
-            n_pass = exact_iterations if exact_iterations is not None else max_iter
-            for _ in range(n_pass):
-                live = [s for s in states if s["active"]]
-                if not live:
-                    break
-                sel = [F.col("__fold")] + [F.col(c) for c in x_cols]
-                aggs = []
-                for si, s in enumerate(live):
-                    # no per-iteration deviance column: nothing reads it —
-                    # the FINAL chunked pass evaluates every (λ, model) at
-                    # its returned β (code-review r11: the dead dv{si}
-                    # agg cost one full-data deviance scan per live model
-                    # per iteration)
-                    w, z = state_exprs(s)
-                    sel.append(w.alias(f"__w{si}"))
-                    sel.append(z.alias(f"__z{si}"))
-                proj = work.select(*sel)
-                xs = [F.col(c) for c in x_cols]
-                for si in range(len(live)):
-                    w_c, z_c = F.col(f"__w{si}"), F.col(f"__z{si}")
-                    aggs += gram_sums(xs, w_c, z_c, prefix=f"m{si}_")
-                    aggs.append(F.sum(w_c).alias(f"sw{si}"))
-                    aggs.append(F.sum(w_c * z_c).alias(f"swz{si}"))
-                rows = _collect_fold_rows(proj, aggs)
-                for si, s in enumerate(live):
-                    Gw = np.zeros((k, k))
-                    gz = np.zeros(k)
-                    sw = swz = 0.0
-                    for g in s["train"]:
-                        r = rows[g]
-                        g_xtx, g_xty = gram_unpack(r, k, prefix=f"m{si}_")
-                        Gw += g_xtx
-                        gz += g_xty
-                        sw += float(r[f"sw{si}"])
-                        swz += float(r[f"swz{si}"])
-                    new_beta, s["theta"] = _penalized_irls_update(
-                        Gw, gz, sw, swz, k, feats, i0, s["sig"], s["nw_t"],
-                        lam, alpha, standardize, s["theta"], max_sweeps,
-                        tol * 0.01,
-                    )
-                    delta = float(np.max(np.abs(new_beta - s["beta"])))
-                    s["beta"] = new_beta
-                    s["iters"] += 1
-                    if exact_iterations is None and delta <= tol:
-                        s["conv"] = True
-                        s["active"] = False
-            if exact_iterations is not None:
-                for s in states:
-                    s["conv"] = True
-            for s in states:
-                results.append(
-                    dict(
-                        lam=lam, j=s["j"], beta=s["beta"].copy(),
-                        n_t=s["n_t"], iters=s["iters"], conv=s["conv"],
-                    )
-                )
+        def fit_lambda(lam):
+            _irls_lockstep(states, stats_of, lam, spec, fr.feats, fr.i0)
+            return [
+                dict(lam=lam, j=s.j, beta=s.beta, n_t=s.n, iters=s.iters,
+                     conv=s.conv)
+                for s in states
+            ]
+
+        path = _lambda_path(reg_params, fit_lambda)
 
         # ------ final deviance pass: every (λ, model) at its FINAL β ------
-        # (chunked if the grid is huge — ≤64 deviance columns per pass)
-        dev_cols = {}
-        chunk = 64
-        for lo in range(0, len(results), chunk):
-            part = results[lo : lo + chunk]
-            sel = [F.col("__fold")]
-            for ri, res in enumerate(part):
-                eta = F.lit(0.0)
-                for c_name, bb in zip(x_cols, res["beta"]):
-                    eta = eta + F.lit(float(bb)) * F.col(c_name)
-                if off is not None:
-                    eta = eta + off
-                mu = lnk.unlink(eta, one)
-                if family == "binomial":
-                    mu = F.least(F.greatest(mu, F.lit(1e-10)), F.lit(1.0 - 1e-10))
-                sel.append((wr * fam.deviance_term(y, mu, one)).alias(f"__fd{ri}"))
-            proj = work.select(*sel)
-            aggs = [
-                (F.lit(2.0) * F.sum(F.col(f"__fd{ri}"))).alias(f"dv{ri}")
-                for ri in range(len(part))
-            ]
-            rows = _collect_fold_rows(proj, aggs)
+        # (distinct λs only; ≤64 deviance columns per pass)
+        results = [r for recs in dict(path).values() for r in recs]
+        for lo in range(0, len(results), 64):
+            part = results[lo : lo + 64]
+            rows = _collect_fold_rows(
+                *fr.aggregate([r["beta"] for r in part], zw=False, dev=True,
+                              keep=fold)
+            )
             for ri, res in enumerate(part):
                 per_group = {g: float(rows[g][f"dv{ri}"]) for g in rows}
-                dev_cols[lo + ri] = per_group
-        for idx, res in enumerate(results):
-            per_group = dev_cols[idx]
-            if res["j"] is None:
-                res["dev_train"] = sum(per_group.values())
-                res["dev_val"] = None
-                res["n_v"] = 0
-            else:
+                j = res["j"]
                 res["dev_train"] = sum(
-                    v for g, v in per_group.items() if g != res["j"]
+                    v for g, v in per_group.items() if g != j
                 )
-                res["dev_val"] = per_group.get(res["j"])
-                res["n_v"] = int(groups[res["j"]]["n"]) if res["j"] in groups else 0
-        if len(lams) != len(lam_in_sorted):
-            # re-expand duplicate input λs (row dicts shared read-only —
-            # both wrappers only read them)
-            by_lam_rows: dict[float, list] = {}
-            for r in results:
-                by_lam_rows.setdefault(r["lam"], []).append(r)
-            results = [r for lam in lam_in_sorted for r in by_lam_rows[lam]]
+                res["dev_val"] = per_group.get(j) if j is not None else None
+                res["n_v"] = int(groups[j]["n"]) if j is not None else 0
     finally:
-        work.unpersist()
-    return results, x_cols, has_int, n_total
+        fr.work.unpersist()
+    return path, x_cols, fr.i0 is not None, n_total
 
 
 def glm_elastic_net_cv(
@@ -1493,16 +1470,18 @@ def glm_elastic_net_cv(
     Returns one row per (reg_param, fold): reg_param, fold, n_train,
     n_val, deviance_train, deviance_val, n_nonzero, iterations,
     converged."""
-    results, x_cols, _has_int, _n = _glm_enet_pathwise(
-        df, formula, reg_params, fold_expr, n_folds, elastic_net_param,
-        family, standardize, na_action, max_iter, tol, max_sweeps,
-        offset_col, exact_iterations, mode="cv", weight_col=weight_col,
-        var_power=var_power,
-        nb_alpha=nb_alpha,
+    spec = _glm_enet_spec(
+        "glm_elastic_net", family, reg_params, elastic_net_param,
+        standardize, max_iter, tol, max_sweeps, exact_iterations,
+        var_power, nb_alpha,
+    )
+    path, x_cols, _has_int, _n = _glm_enet_pathwise(
+        df, formula, reg_params, fold_expr, n_folds, spec, na_action,
+        offset_col, weight_col, mode="cv",
     )
     out = [
         (
-            float(r["lam"]),
+            lam,
             int(r["j"]),
             int(r["n_t"]),
             int(r["n_v"]),
@@ -1512,7 +1491,8 @@ def glm_elastic_net_cv(
             int(r["iters"]),
             bool(r["conv"]),
         )
-        for r in results
+        for lam, recs in path
+        for r in recs
     ]
     return df.sparkSession.createDataFrame(
         out,
@@ -1562,30 +1542,24 @@ def glm_elastic_net_path(
 
     Returns one (reg_param, term) row block per input λ: reg_param,
     term, estimate, n_nonzero, iterations, deviance, aic, bic."""
-    results, x_cols, has_int, n_total = _glm_enet_pathwise(
-        df, formula, reg_params, None, 1, elastic_net_param,
-        family, standardize, na_action, max_iter, tol, max_sweeps,
-        offset_col, exact_iterations, mode="path", weight_col=weight_col,
-        var_power=var_power,
-        nb_alpha=nb_alpha,
+    spec = _glm_enet_spec(
+        "glm_elastic_net", family, reg_params, elastic_net_param,
+        standardize, max_iter, tol, max_sweeps, exact_iterations,
+        var_power, nb_alpha,
     )
-    # one block per INPUT λ (duplicates produce duplicate blocks — the
-    # elastic_net_path contract); the engine deduplicates nothing
-    by_lam: dict[float, dict] = {}
-    for r in results:
-        by_lam.setdefault(r["lam"], r)
+    path, x_cols, has_int, n_total = _glm_enet_pathwise(
+        df, formula, reg_params, None, 1, spec, na_action, offset_col,
+        weight_col, mode="path",
+    )
     out = []
-    for lam_in in sorted((float(v) for v in reg_params), reverse=True):
-        r = by_lam[lam_in]
+    for lam, (r,) in path:
         nz = _count_nonzero(x_cols, r["beta"])
         dof = nz + (1 if has_int else 0)
         dev = float(r["dev_train"])
         aic = dev + 2.0 * dof
         bic = dev + float(np.log(n_total)) * dof
         for nm, c in zip(x_cols, r["beta"]):
-            out.append(
-                (lam_in, nm, float(c), nz, int(r["iters"]), dev, aic, bic)
-            )
+            out.append((lam, nm, float(c), nz, int(r["iters"]), dev, aic, bic))
     return df.sparkSession.createDataFrame(
         out,
         "reg_param double, term string, estimate double, n_nonzero int, "
@@ -1593,34 +1567,18 @@ def glm_elastic_net_path(
     )
 
 
-def _np_link_init(fam_name: str, mu0: float) -> float:
-    """Shared intercept-init link — binomial logit with the μ clamp,
-    poisson log with the underflow floor: ONE definition for
-    `_glm_enet_pathwise`, `glm_elastic_net_grouped` and
-    `glm_elastic_net_cv_grouped` (review r12: three copies had
-    appeared — the `_np_glm_irls_kernels` lesson again; upstream
-    ybar-domain guards make the poisson floor a no-op, so the grouped
-    paths are bitwise-unchanged)."""
-    if fam_name == "binomial":
-        mu0 = min(max(mu0, 1e-10), 1 - 1e-10)
-        return float(np.log(mu0 / (1 - mu0)))
-    return float(np.log(max(mu0, 1e-300)))
-
-
 def _np_glm_irls_kernels(
     fam_name: str, y, eta_lin, ov, var_power: float = 1.5,
     nb_alpha: float = 1.0,
 ):
-    """One IRLS step's per-row kernels, numpy twin of the distributed
-    engine's (μ, w, z) projection — shared by `glm_elastic_net_grouped`
-    and `glm_elastic_net_cv_grouped` (the `_penalized_irls_update`
-    dedup lesson applied before a third copy could drift). η = Xβ + o;
-    binomial clamps μ to [1e-10, 1−1e-10] BEFORE the weight/working
-    response (the `glm_elastic_net` convention). Log-link working
-    weight w = μ²/V(μ): poisson μ, gamma 1, tweedie μ^(2−p) (r13)."""
+    """One IRLS step's per-row kernels, numpy twin of `_SparkEnet.
+    irls_cols`. η = Xβ + o; binomial clamps μ to [1e-10, 1−1e-10]
+    BEFORE the weight/working response (the `glm_elastic_net`
+    convention). Log-link working weight w = μ²/V(μ): poisson μ, gamma
+    1, tweedie μ^(2−p), negbinomial μ/(1+αμ)."""
     eta = eta_lin + ov
     # errstate: a deviance-only caller discards z, but an underflowed
-    # poisson μ = 0 would still warn on (y−μ)/μ (code-review r12)
+    # poisson μ = 0 would still warn on (y−μ)/μ
     with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
         if fam_name == "binomial":
             mu = np.clip(1 / (1 + np.exp(-eta)), 1e-10, 1 - 1e-10)
@@ -1635,93 +1593,122 @@ def _np_glm_irls_kernels(
             elif fam_name == "negbinomial":
                 # log link, V = mu + alpha*mu^2: w = mu^2/V = mu/(1+alpha*mu)
                 w = mu / (1.0 + nb_alpha * mu)
-            else:  # poisson (quasi twins route through their base)
+            else:  # poisson
                 w = mu
             z = eta_lin + (y - mu) / mu
     return mu, w, z
 
 
-def _np_glm_deviance(
-    fam_name: str, y, mu, wv, var_power: float = 1.5,
-    nb_alpha: float = 1.0,
-) -> float:
-    """ω-weighted deviance at μ, numpy twin of the engine's final
-    deviance pass (binomial clamp already applied by the caller)."""
-    with np.errstate(divide="ignore", invalid="ignore"):
-        if fam_name == "binomial":
-            t1 = np.where(y > 0, y * np.log(y / mu), 0.0)
-            t2 = np.where(y < 1, (1 - y) * np.log((1 - y) / (1 - mu)), 0.0)
-            return float(2.0 * (wv * (t1 + t2)).sum())
-        if fam_name == "gamma":
-            # −log(y/μ) + (y−μ)/μ (y > 0 guarded upstream)
-            return float(
-                2.0 * (wv * (-np.log(y / mu) + (y - mu) / mu)).sum()
-            )
-        if fam_name == "tweedie":
-            # ½·unit deviance for 1 < p < 2; y = 0 keeps only the tail
-            # μ^(2−p)/(2−p) (the families.py when() twin)
-            p = var_power
-            tail = mu ** (2.0 - p) / (2.0 - p)
-            full = (
-                y ** (2.0 - p) / ((1.0 - p) * (2.0 - p))
-                - y * mu ** (1.0 - p) / (1.0 - p)
-                + tail
-            )
-            return float(2.0 * (wv * np.where(y == 0, tail, full)).sum())
-        if fam_name == "negbinomial":
-            # NB2 unit deviance (families.py twin): y*ln(y/mu) -
-            # (y+1/a)*ln((1+ay)/(1+a*mu)); y = 0 keeps (1/a)*ln(1+a*mu)
-            a = nb_alpha
-            zero = (1.0 / a) * np.log(1.0 + a * mu)
-            full = np.where(y > 0, y * np.log(np.where(y > 0, y, 1.0) / mu), 0.0) - (
-                y + 1.0 / a
-            ) * np.log((1.0 + a * y) / (1.0 + a * mu))
-            return float(2.0 * (wv * np.where(y == 0, zero, full)).sum())
-        t1 = np.where(y > 0, y * np.log(y / mu), 0.0)
-        return float(2.0 * (wv * (t1 - (y - mu))).sum())
+class _NpGroup:
+    """The numpy statistics backend: one group's Arrow batch as arrays,
+    with the moments, IRLS statistics and deviances the Spark backend
+    aggregates. A state's `train` is (mask, X, y, ω, offset) over its
+    training rows (mask None = every row of the group)."""
 
-
-_ENET_FAMILIES = ("binomial", "poisson", "gamma", "tweedie", "negbinomial")
-
-
-def _check_tweedie_var_power(family: str, var_power: float) -> None:
-    """Tweedie's (1, 2) p-domain raise for entry-point guards — ONE
-    definition (review r13: the same 4-line block had appeared in all
-    three grouped fitters; the grouped twins call the numpy kernels
-    directly, so without an upfront check a bad p returns
-    plausible-but-wrong deviances where the single fit raises)."""
-    if family == "tweedie":
-        from sparkglm_spark.functions.families import get_family
-
-        get_family(family, float(var_power))
-
-
-def _check_nb_alpha(family: str, nb_alpha: float) -> None:
-    """negbinomial's alpha > 0 raise for entry-point guards — the
-    `_check_tweedie_var_power` twin (r14): the grouped fitters call the
-    numpy kernels directly, so a bad alpha would NULL-degrade where the
-    single fit raises."""
-    if family == "negbinomial":
-        from sparkglm_spark.functions.families import get_family
-
-        get_family(family, alpha=float(nb_alpha))
-
-
-def _enet_label_domain_error(family: str, ymin: float, ymax: float):
-    """Shared penalized-fitter label-domain check: None when [ymin, ymax]
-    lies in the family's support, else the raise/NULL-degrade message
-    (one definition for all four fitters — the `_np_link_init` dedup
-    lesson). binomial [0, 1]; poisson/tweedie/negbinomial ≥ 0; gamma
-    STRICTLY > 0 (its deviance has log(y))."""
-    if family == "binomial" and (ymin < 0.0 or ymax > 1.0):
-        return (
-            f"binomial label must lie in [0, 1]; observed [{ymin}, {ymax}]"
+    def __init__(self, pdf, names, target, weight_col, offset_col, spec):
+        self.X = pdf[names].to_numpy(dtype=np.float64)
+        self.y = pdf[target].to_numpy(dtype=np.float64)
+        self.n = n = len(self.y)
+        self.wv = (
+            pdf[weight_col].to_numpy(dtype=np.float64)
+            if weight_col is not None
+            else np.ones(n)
         )
-    if family in ("poisson", "tweedie", "negbinomial") and ymin < 0.0:
-        return f"{family} label must be >= 0; observed min = {ymin}"
-    if family == "gamma" and ymin <= 0.0:
-        return f"gamma label must be > 0; observed min = {ymin}"
-    return None
+        self.ov = (
+            pdf[offset_col].to_numpy(dtype=np.float64)
+            if offset_col is not None
+            else np.zeros(n)
+        )
+        self.weighted = weight_col is not None
+        self.offset = offset_col is not None
+        self.spec = spec
+        self.i0, self.feats = _intercept_split(names)
+
+    def clean(self) -> bool:
+        """The group-level NULL policy: more than one row, every value
+        finite, ω ≥ 0 and labels in the family's support."""
+        return bool(
+            self.n > 1
+            and np.all(np.isfinite(self.X))
+            and np.all(np.isfinite(self.y))
+            and np.all(np.isfinite(self.wv))
+            and np.all(self.wv >= 0.0)
+            and np.all(np.isfinite(self.ov))
+            and _enet_label_domain_error(
+                self.spec.family, float(self.y.min()), float(self.y.max())
+            ) is None
+        )
+
+    def start(self, mask=None, j=None):
+        """`_enet_start` over the rows `mask` (None = all); None when
+        the training set is degenerate."""
+        if mask is None:
+            X, y, w, o = self.X, self.y, self.wv, self.ov
+        else:
+            X, y, w, o = self.X[mask], self.y[mask], self.wv[mask], self.ov[mask]
+        Xf = X[:, self.feats]
+        mo = _Moments(
+            n=len(y),
+            sw=float(w.sum()),
+            sww=float((w * w).sum()) if self.weighted else None,
+            sy=float((w * y).sum()),
+            sx=(w[:, None] * Xf).sum(0),
+            sxx=(w[:, None] * Xf * Xf).sum(0),
+            soff=float((w * o).sum()) if self.offset else None,
+        )
+        s, _err = _enet_start(
+            mo, self.spec.family, self.X.shape[1], self.i0, j,
+            (mask, X, y, w, o),
+        )
+        return s
+
+    def stats_of(self, live):
+        sp = self.spec
+        out = []
+        for s in live:
+            _mask, X, y, w, o = s.train
+            _mu, w0, z = _np_glm_irls_kernels(
+                sp.family, y, X @ s.beta, o, sp.var_power, sp.nb_alpha
+            )
+            wirls = w * w0
+            Xw = X * wirls[:, None]
+            out.append(
+                (X.T @ Xw, Xw.T @ z, float(wirls.sum()),
+                 float((wirls * z).sum()))
+            )
+        return out
+
+    def fit(self, states, lam) -> None:
+        _irls_lockstep(states, self.stats_of, lam, self.spec, self.feats,
+                       self.i0)
+
+    def mu_at(self, beta):
+        """μ over every row of the group at β."""
+        sp = self.spec
+        return _np_glm_irls_kernels(
+            sp.family, self.y, self.X @ beta, self.ov, sp.var_power,
+            sp.nb_alpha,
+        )[0]
+
+    def deviance(self, mu, mask=None) -> float:
+        """ω-weighted deviance of rows `mask` (None = all) at μ."""
+        sp = self.spec
+        y, w = self.y, self.wv
+        if mask is not None:
+            y, mu, w = y[mask], mu[mask], w[mask]
+        return deviance_np(sp.family, y, mu, w, sp.var_power, sp.nb_alpha)
+
+
+def _apply_grouped(encoded, group_cols, cols, fit_group, schema):
+    """Run `fit_group` once per group over the group keys plus `cols`
+    (None entries skipped), fanned out to the shuffle width."""
+    from sparkglm_spark.plans.partitioning import fanout_groups
+
+    gcols = list(group_cols)
+    sel = [*gcols, *[c for c in cols if c]]
+    return fanout_groups(encoded.select(*sel), gcols).groupBy(
+        *gcols
+    ).applyInPandas(fit_group, schema)
 
 
 def glm_elastic_net_grouped(
@@ -1751,12 +1738,12 @@ def glm_elastic_net_grouped(
     Like `glm_grouped` (and unlike `elastic_net_grouped`'s pure-Gram
     shape) the penalized IRLS re-weights every iteration, so each
     group's rows materialize in its worker's Arrow batch and the numpy
-    fold replicates `glm_elastic_net`'s exact conventions: upfront
-    (reliability-weighted, when `weight_col`) sample feature stds,
-    glmnet prox-Newton with the weighted-centered CD subproblem
-    (`_cd_wls_penalized` — the SAME solver the distributed fit calls),
-    unpenalized intercept, μ-clamp for binomial. `offset_col` follows
-    the `glm_elastic_net` contract (η = Xβ + offset).
+    backend (`_NpGroup`) runs the SAME start, sweep and loop as
+    `glm_elastic_net`: upfront (reliability-weighted, when
+    `weight_col`) sample feature stds, glmnet prox-Newton with the
+    weighted-centered CD subproblem, unpenalized intercept, μ-clamp for
+    binomial. `offset_col` follows the `glm_elastic_net` contract
+    (η = Xβ + offset).
 
     Degenerate groups — n ≤ 1, out-of-domain labels, constant labels,
     bad weights (null/negative/NaN/Σω ≤ 0/≤ 1 effective row),
@@ -1765,8 +1752,7 @@ def glm_elastic_net_grouped(
     `na_action='omit'` a null OR NaN weight/offset drops its ROW before
     the fit like any other modeling column (na.drop treats NaN as
     missing) — the NULL policy catches what remains:
-    negative/Σω ≤ 0, and null/NaN under 'keep'. ADVICE r11, review
-    r12).
+    negative/Σω ≤ 0, and null/NaN under 'keep').
     `deviance` is evaluated at the RETURNED
     β (unlike the single fit's historical exit convention — a fresh
     surface gets the clean contract; this holds under
@@ -1786,75 +1772,56 @@ def glm_elastic_net_grouped(
     iterations, converged, deviance."""
     from pyspark.sql import types as T
 
-    from sparkglm_spark.operators.lm import _design
-
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
-    if family not in _ENET_FAMILIES:
-        raise ValueError(
-            f"glm_elastic_net_grouped supports {'/'.join(_ENET_FAMILIES)}, "
-            f"got {family!r}"
-        )
-    if isinstance(reg_param, str):
-        if reg_param not in df.columns:
+    lam_col = reg_param if isinstance(reg_param, str) else None
+    spec = _glm_enet_spec(
+        "glm_elastic_net_grouped", family,
+        None if lam_col else [reg_param], elastic_net_param, standardize,
+        max_iter, tol, max_sweeps, exact_iterations, var_power, nb_alpha,
+    )
+    if lam_col:
+        if lam_col not in df.columns:
             raise ValueError(
-                f"reg_param column {reg_param!r} not in the input frame"
+                f"reg_param column {lam_col!r} not in the input frame"
             )
-        # collision / type guards (review r12: a group-col or formula
-        # collision crashed mid-job with an opaque worker error, and a
-        # non-numeric column aborted every healthy group's Arrow batch)
-        if reg_param in group_cols:
+        # collision / type guards: a group-col or formula collision
+        # crashed mid-job with an opaque worker error, and a non-numeric
+        # column aborted every healthy group's Arrow batch
+        if lam_col in group_cols:
             raise ValueError(
-                f"reg_param column {reg_param!r} is also a group column"
+                f"reg_param column {lam_col!r} is also a group column"
             )
-        if reg_param in (weight_col, offset_col):
+        if lam_col in (weight_col, offset_col):
             raise ValueError(
-                f"reg_param column {reg_param!r} is also the "
+                f"reg_param column {lam_col!r} is also the "
                 "weight/offset column"
             )
         from sparkglm_spark.formula import parse_formula
 
         parsed0 = parse_formula(formula)
-        if reg_param == parsed0.target or reg_param in parsed0.predictors:
+        if lam_col == parsed0.target or lam_col in parsed0.predictors:
             raise ValueError(
-                f"reg_param column {reg_param!r} is referenced by the "
+                f"reg_param column {lam_col!r} is referenced by the "
                 "formula — a penalty cannot also be a modeling column"
             )
-        t = df.schema[reg_param].dataType.simpleString()
+        t = df.schema[lam_col].dataType.simpleString()
         if t not in ("double", "float", "int", "bigint", "smallint",
                      "tinyint") and not t.startswith("decimal"):
             raise ValueError(
-                f"reg_param column {reg_param!r} must be numeric, got {t}"
+                f"reg_param column {lam_col!r} must be numeric, got {t}"
             )
-        lam, lam_col = None, reg_param
-    else:
-        lam, lam_col = float(reg_param), None
-        if lam < 0.0:
-            raise ValueError("reg_param must be >= 0")
-    alpha = float(elastic_net_param)
-    if not 0.0 <= alpha <= 1.0:
-        raise ValueError("elastic_net_param must be in [0, 1]")
-    if exact_iterations is not None and exact_iterations < 1:
-        raise ValueError("exact_iterations must be >= 1")
-    _check_tweedie_var_power(family, var_power)
-    _check_nb_alpha(family, nb_alpha)
     encoded, x_cols, target = _design(
-        df, formula,
-        list(group_cols) + ([lam_col] if lam_col else []),
-        na_action=na_action,
-        weight_col=weight_col, offset_col=offset_col,
+        df, formula, list(group_cols) + ([lam_col] if lam_col else []),
+        na_action=na_action, weight_col=weight_col, offset_col=offset_col,
     )
     if lam_col:
         # double-cast so EVERY numeric λ type reaches the Arrow batch as
-        # float64 (review r12: a DecimalType column ships
-        # decimal.Decimal objects whose None crashed to_numpy instead of
-        # NULL-degrading; a double NULL becomes NaN → isfinite → NULL)
+        # float64 (a DecimalType column ships decimal.Decimal objects
+        # whose None crashed to_numpy instead of NULL-degrading; a double
+        # NULL becomes NaN → isfinite → NULL)
         encoded = encoded.withColumn(lam_col, F.col(lam_col).cast("double"))
-    k = len(x_cols)
-    has_int = "intercept" in x_cols
-    i0 = x_cols.index("intercept") if has_int else None
-    feats = [i for i in range(k) if i != i0]
-    out_schema = T.StructType(
+    schema = T.StructType(
         [df.schema[c] for c in group_cols]
         + [
             T.StructField("term", T.StringType()),
@@ -1868,136 +1835,49 @@ def glm_elastic_net_grouped(
     )
     names = list(x_cols)
     gcols = list(group_cols)
-    fam_name, std = family, standardize
-    vp = float(var_power)
-    na = float(nb_alpha)
-    wname, oname = weight_col, offset_col
-    lamname = lam_col
-    exact_n = exact_iterations
+    lam = None if lam_col else float(reg_param)
 
     def fit_group(pdf):
         import pandas as pd
 
-        X = pdf[names].to_numpy(dtype=np.float64)
-        y = pdf[target].to_numpy(dtype=np.float64)
-        n = len(y)
-        wv = (
-            pdf[wname].to_numpy(dtype=np.float64)
-            if wname is not None
-            else np.ones(n)
-        )
-        ov = (
-            pdf[oname].to_numpy(dtype=np.float64)
-            if oname is not None
-            else np.zeros(n)
-        )
-        beta, it, conv, dev, nz = None, 0, False, None, None
-        nw = float(wv.sum())
-        sdenom = nw - float((wv * wv).sum()) / nw if nw > 0 else 0.0
-        ok = (
-            n > 1
-            and np.all(np.isfinite(X))
-            and np.all(np.isfinite(y))
-            and np.all(np.isfinite(wv))
-            and np.all(np.isfinite(ov))
-            and np.all(wv >= 0.0)
-            and nw > 0.0
-            and sdenom > 0.0
-        )
-        lam_g = lam
-        if ok and lamname is not None:
-            lv = pdf[lamname].to_numpy(dtype=np.float64)
+        g = _NpGroup(pdf, names, target, weight_col, offset_col, spec)
+        gkey = tuple(pdf[c].iloc[0] for c in gcols)
+        ok, lam_g = g.clean(), lam
+        if ok and lam_col is not None:
             # per-group λ: constant within the group, finite, ≥ 0 —
             # anything else NULL-degrades (the grouped policy)
-            if (
+            lv = pdf[lam_col].to_numpy(dtype=np.float64)
+            ok = bool(
                 np.all(np.isfinite(lv))
                 and float(lv.min()) >= 0.0
                 and float(lv.min()) == float(lv.max())
-            ):
-                lam_g = float(lv[0])
-            else:
-                ok = False
-        if ok:
-            # the shared four-fitter domain rule (one definition —
-            # review r13: three hand-written boolean twins had appeared)
-            ok = _enet_label_domain_error(
-                fam_name, float(y.min()), float(y.max())
-            ) is None
-        if ok:
-            ybar = float((wv * y).sum()) / nw
-            if fam_name == "binomial":
-                ok = 0.0 < ybar < 1.0
-            else:
-                ok = ybar > 0.0
-        if ok:
-            Xf = X[:, feats]
-            m_f = (wv[:, None] * Xf).sum(0) / nw
-            ss_f = (wv[:, None] * Xf * Xf).sum(0)
-            sig = np.sqrt(np.maximum((ss_f - nw * m_f * m_f) / sdenom, 0.0))
-            b = np.zeros(k)
-            if has_int:
-                b[i0] = _np_link_init(fam_name, ybar)
-                if oname is not None:
-                    b[i0] -= float((wv * ov).sum()) / nw
-            theta = np.zeros(len(feats))
-            n_pass = exact_n if exact_n is not None else max_iter
+            )
+            lam_g = float(lv[0])
+        s = g.start() if ok else None
+        beta, dev, nz = None, None, None
+        if s is not None:
             try:
-                for _ in range(n_pass):
-                    eta_lin = X @ b
-                    _mu, w0, z = _np_glm_irls_kernels(
-                        fam_name, y, eta_lin, ov, vp, na
-                    )
-                    wirls = wv * w0
-                    sw = float(wirls.sum())
-                    swz = float((wirls * z).sum())
-                    Xw = X * wirls[:, None]
-                    Gw = X.T @ Xw
-                    gz = Xw.T @ z
-                    nb, theta = _penalized_irls_update(
-                        Gw, gz, sw, swz, k, feats, i0, sig, nw, lam_g,
-                        alpha, std, theta, max_sweeps, tol * 0.01,
-                    )
-                    delta = float(np.max(np.abs(nb - b)))
-                    b = nb
-                    it += 1
-                    if exact_n is None and delta <= tol:
-                        conv = True
-                        break
-                if exact_n is not None:
-                    conv = True
+                g.fit([s], lam_g)
                 # deviance at the RETURNED beta
-                mu, _w0, _z = _np_glm_irls_kernels(fam_name, y, X @ b, ov, vp, na)
-                dev = _np_glm_deviance(fam_name, y, mu, wv, vp, na)
-                if not np.all(np.isfinite(b)) or not np.isfinite(dev):
-                    b, dev = None, None
-                else:
-                    beta = b
+                d = g.deviance(g.mu_at(s.beta))
+                if np.all(np.isfinite(s.beta)) and np.isfinite(d):
+                    beta, dev = s.beta, d
                     nz = _count_nonzero(names, beta)
             except (ValueError, np.linalg.LinAlgError):
                 beta = None
-        cols: dict[str, list] = {c: [] for c in gcols}
-        cols.update(
-            term=[], estimate=[], n_rows=[], n_nonzero=[], iterations=[],
-            converged=[], deviance=[],
-        )
-        for i, name in enumerate(names):
-            for c in gcols:
-                cols[c].append(pdf[c].iloc[0])
-            cols["term"].append(name)
-            cols["estimate"].append(
-                float(beta[i]) if beta is not None else None
+        it, conv = (s.iters, s.conv) if s is not None else (0, False)
+        rows = [
+            gkey + (
+                nm, float(beta[i]) if beta is not None else None, g.n, nz,
+                it, bool(conv) if beta is not None else False, dev,
             )
-            cols["n_rows"].append(n)
-            cols["n_nonzero"].append(nz)
-            cols["iterations"].append(it)
-            cols["converged"].append(bool(conv) if beta is not None else False)
-            cols["deviance"].append(dev if beta is not None else None)
-        return pd.DataFrame(cols)
+            for i, nm in enumerate(names)
+        ]
+        return pd.DataFrame(rows, columns=schema.fieldNames())
 
-    from sparkglm_spark.plans.partitioning import fanout_groups
-
-    return fanout_groups(encoded, gcols).groupBy(*gcols).applyInPandas(
-        fit_group, out_schema
+    return _apply_grouped(
+        encoded, gcols, [target, *x_cols, weight_col, offset_col, lam_col],
+        fit_group, schema,
     )
 
 
@@ -2023,16 +1903,15 @@ def glm_elastic_net_path_grouped(
     sibling `glm_elastic_net_path` lacked: one warm-started descending-λ
     coefficient path per group, for per-tenant regularization
     diagnostics (which features enter at which λ, per segment). Each
-    group's rows land in one Arrow batch and the numpy twin replays the
-    single-fit path's exact conventions: fixed upfront stds
-    (reliability-weighted under `weight_col`), glmnet prox-Newton via
-    the shared `_penalized_irls_update`/`_np_glm_irls_kernels`, λs
-    DESCENDING with warm starts (β carries across λs), deviance per λ
-    at ITS final β, and deviance-based aic/bic with the lasso-df
-    estimate (df = n_nonzero + intercept; bic's ln(n) keeps the ROW
-    count — the glmnet nobs convention). Duplicate input λs re-expand
-    to duplicate row blocks (the path contract). Families per
-    `glm_elastic_net` (binomial/poisson/gamma/tweedie(`var_power`)).
+    group's rows land in one Arrow batch and the numpy backend replays
+    the single-fit path's exact conventions: fixed upfront stds
+    (reliability-weighted under `weight_col`), the shared prox-Newton
+    loop, λs DESCENDING with warm starts (`_lambda_path`; β carries
+    across λs), deviance per λ at ITS final β, and deviance-based
+    aic/bic with the lasso-df estimate (df = n_nonzero + intercept;
+    bic's ln(n) keeps the ROW count — the glmnet nobs convention).
+    Duplicate input λs re-expand to duplicate row blocks (the path
+    contract). Families per `glm_elastic_net`.
 
     Degenerate groups (n ≤ 1, out-of-domain/constant labels, bad
     weights/offsets, non-finite values, solver failure) emit NULL
@@ -2043,35 +1922,18 @@ def glm_elastic_net_path_grouped(
     iterations, deviance, aic, bic, converged."""
     from pyspark.sql import types as T
 
-    from sparkglm_spark.operators.lm import _design
-
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
-    if family not in _ENET_FAMILIES:
-        raise ValueError(
-            f"glm_elastic_net_path_grouped supports "
-            f"{'/'.join(_ENET_FAMILIES)}, got {family!r}"
-        )
-    if not reg_params:
-        raise ValueError("reg_params must be non-empty")
-    if any(float(l) < 0.0 for l in reg_params):
-        raise ValueError("reg_param must be >= 0")
-    alpha = float(elastic_net_param)
-    if not 0.0 <= alpha <= 1.0:
-        raise ValueError("elastic_net_param must be in [0, 1]")
-    if exact_iterations is not None and exact_iterations < 1:
-        raise ValueError("exact_iterations must be >= 1")
-    _check_tweedie_var_power(family, var_power)
-    _check_nb_alpha(family, nb_alpha)
+    spec = _glm_enet_spec(
+        "glm_elastic_net_path_grouped", family, reg_params,
+        elastic_net_param, standardize, max_iter, tol, max_sweeps,
+        exact_iterations, var_power, nb_alpha,
+    )
     encoded, x_cols, target = _design(
         df, formula, list(group_cols), na_action=na_action,
         weight_col=weight_col, offset_col=offset_col,
     )
-    k = len(x_cols)
-    has_int = "intercept" in x_cols
-    i0 = x_cols.index("intercept") if has_int else None
-    feats = [i for i in range(k) if i != i0]
-    out_schema = T.StructType(
+    schema = T.StructType(
         [df.schema[c] for c in group_cols]
         + [
             T.StructField("reg_param", T.DoubleType()),
@@ -2087,138 +1949,50 @@ def glm_elastic_net_path_grouped(
     )
     names = list(x_cols)
     gcols = list(group_cols)
-    fam_name, std = family, standardize
-    vp = float(var_power)
-    na = float(nb_alpha)
-    wname, oname = weight_col, offset_col
-    lam_in_sorted = sorted((float(v) for v in reg_params), reverse=True)
-    lams = sorted(set(lam_in_sorted), reverse=True)
-    exact_n = exact_iterations
+    lam_in = sorted((float(v) for v in reg_params), reverse=True)
 
     def fit_group(pdf):
         import pandas as pd
 
-        X = pdf[names].to_numpy(dtype=np.float64)
-        y = pdf[target].to_numpy(dtype=np.float64)
-        n = len(y)
-        wv = (
-            pdf[wname].to_numpy(dtype=np.float64)
-            if wname is not None
-            else np.ones(n)
-        )
-        ov = (
-            pdf[oname].to_numpy(dtype=np.float64)
-            if oname is not None
-            else np.zeros(n)
-        )
+        g = _NpGroup(pdf, names, target, weight_col, offset_col, spec)
         gkey = tuple(pdf[c].iloc[0] for c in gcols)
+        s = g.start() if g.clean() else None
 
-        def null_rows():
-            return pd.DataFrame(
-                [
-                    gkey + (lam, nm, None, None, 0, None, None, None, False)
-                    for lam in lam_in_sorted
-                    for nm in names
-                ],
-                columns=[f.name for f in out_schema],
-            )
+        def fit_lambda(lam):
+            g.fit([s], lam)
+            # deviance/aic/bic at THIS λ's final β (the path convention)
+            dev = g.deviance(g.mu_at(s.beta))
+            if not np.all(np.isfinite(s.beta)) or not np.isfinite(dev):
+                return None
+            nz = _count_nonzero(names, s.beta)
+            dof = nz + (1 if g.i0 is not None else 0)
+            return (s.beta, nz, s.iters, dev, dev + 2.0 * dof,
+                    dev + float(np.log(g.n)) * dof, s.conv)
 
-        nw = float(wv.sum())
-        sdenom = nw - float((wv * wv).sum()) / nw if nw > 0 else 0.0
-        ok = (
-            n > 1
-            and np.all(np.isfinite(X))
-            and np.all(np.isfinite(y))
-            and np.all(np.isfinite(wv))
-            and np.all(wv >= 0.0)
-            and np.all(np.isfinite(ov))
-            and nw > 0.0
-            and sdenom > 0.0
-        )
-        if ok:
-            # the shared four-fitter domain rule (one definition —
-            # review r13: three hand-written boolean twins had appeared)
-            ok = _enet_label_domain_error(
-                fam_name, float(y.min()), float(y.max())
-            ) is None
-        if ok:
-            ybar = float((wv * y).sum()) / nw
-            if fam_name == "binomial":
-                ok = 0.0 < ybar < 1.0
-            else:
-                ok = ybar > 0.0
-        if not ok:
-            return null_rows()
-        Xf = X[:, feats]
-        m_f = (wv[:, None] * Xf).sum(0) / nw
-        ss_f = (wv[:, None] * Xf * Xf).sum(0)
-        sig = np.sqrt(np.maximum((ss_f - nw * m_f * m_f) / sdenom, 0.0))
-        b = np.zeros(k)
-        if has_int:
-            b[i0] = _np_link_init(fam_name, ybar)
-            if oname is not None:
-                b[i0] -= float((wv * ov).sum()) / nw
-        theta = np.zeros(len(feats))
-        by_lam: dict[float, tuple] = {}
-        try:
-            for lam_g in lams:
-                it, conv = 0, False
-                n_pass = exact_n if exact_n is not None else max_iter
-                for _ in range(n_pass):
-                    eta_lin = X @ b
-                    _mu, w0, z = _np_glm_irls_kernels(
-                        fam_name, y, eta_lin, ov, vp, na
-                    )
-                    wirls = wv * w0
-                    sw = float(wirls.sum())
-                    swz = float((wirls * z).sum())
-                    Xw = X * wirls[:, None]
-                    Gw = X.T @ Xw
-                    gz = Xw.T @ z
-                    nb, theta = _penalized_irls_update(
-                        Gw, gz, sw, swz, k, feats, i0, sig, nw, lam_g,
-                        alpha, std, theta, max_sweeps, tol * 0.01,
-                    )
-                    delta = float(np.max(np.abs(nb - b)))
-                    b = nb
-                    it += 1
-                    if exact_n is None and delta <= tol:
-                        conv = True
-                        break
-                if exact_n is not None:
-                    conv = True
-                # deviance/aic/bic at THIS λ's final β (the path
-                # convention — same evaluation the single fit makes)
-                mu, _w0, _z = _np_glm_irls_kernels(fam_name, y, X @ b, ov, vp, na)
-                dev = _np_glm_deviance(fam_name, y, mu, wv, vp, na)
-                nz = _count_nonzero(names, b)
-                dof = nz + (1 if has_int else 0)
-                aic = dev + 2.0 * dof
-                bic = dev + float(np.log(n)) * dof
-                if not np.all(np.isfinite(b)) or not np.isfinite(dev):
-                    return null_rows()
-                by_lam[lam_g] = (b.copy(), nz, it, dev, aic, bic, conv)
-        except (ValueError, np.linalg.LinAlgError):
-            return null_rows()
-        rows = []
-        for lam_in in lam_in_sorted:  # duplicate input λs re-expand
-            bb, nz, it, dev, aic, bic, conv = by_lam[lam_in]
-            for j, nm in enumerate(names):
-                rows.append(
-                    gkey
-                    + (lam_in, nm, float(bb[j]), nz, it, dev, aic, bic,
-                       bool(conv))
-                )
-        return pd.DataFrame(rows, columns=[f.name for f in out_schema])
+        path = None
+        if s is not None:
+            try:
+                path = _lambda_path(reg_params, fit_lambda)
+            except (ValueError, np.linalg.LinAlgError):
+                path = None
+        if path is None:
+            rows = [
+                gkey + (lam, nm, None, None, 0, None, None, None, False)
+                for lam in lam_in
+                for nm in names
+            ]
+        else:
+            rows = [
+                gkey + (lam, nm, float(b[j]), nz, it, dev, aic, bic,
+                        bool(conv))
+                for lam, (b, nz, it, dev, aic, bic, conv) in path
+                for j, nm in enumerate(names)
+            ]
+        return pd.DataFrame(rows, columns=schema.fieldNames())
 
-    from sparkglm_spark.plans.partitioning import fanout_groups
-
-    sel = [*gcols, target, *x_cols]
-    for c in (wname, oname):
-        if c:
-            sel.append(c)
-    return fanout_groups(encoded.select(*sel), gcols).groupBy(*gcols).applyInPandas(
-        fit_group, out_schema
+    return _apply_grouped(
+        encoded, gcols, [target, *x_cols, weight_col, offset_col],
+        fit_group, schema,
     )
 
 
@@ -2249,15 +2023,14 @@ def glm_elastic_net_cv_grouped(
     r11 #8).
 
     Like `glm_elastic_net_grouped`, each group's rows materialize in
-    one Arrow batch and a numpy twin replays the distributed engine's
-    exact conventions per fold model: training-only moments
+    one Arrow batch and the numpy backend replays the distributed
+    engine's exact conventions per fold model: training-only moments
     (reliability-weighted stds Σω − Σω²/Σω under `weight_col`), logit/
-    log init minus the mean offset, glmnet prox-Newton through the
-    SAME `_penalized_irls_update`/`_np_glm_irls_kernels` the other
-    fitters call, λs DESCENDING with per-fold warm starts, held-out
-    deviance at each λ's final β — so a (group, λ, fold) row matches
-    `glm_elastic_net_cv` run cold on that group's frame (tested at
-    1e-8).
+    log init minus the mean offset, the SAME lock-step prox-Newton loop
+    over the fold models, λs DESCENDING with per-fold warm starts,
+    held-out deviance at each λ's final β — so a (group, λ, fold) row
+    matches `glm_elastic_net_cv` run cold on that group's frame (tested
+    at 1e-8).
 
     Degeneracy policy (grouped NULL): a fold model with ≤ 1 effective
     training row or a constant training label is SKIPPED (the engine
@@ -2287,22 +2060,13 @@ def glm_elastic_net_cv_grouped(
     the data — the warning fires on the shape you can see upfront)."""
     from pyspark.sql import types as T
 
-    from sparkglm_spark.operators.lm import _design
-
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
-    if family not in _ENET_FAMILIES:
-        raise ValueError(
-            f"glm_elastic_net_cv_grouped supports "
-            f"{'/'.join(_ENET_FAMILIES)}, got {family!r}"
-        )
-    if not reg_params:
-        raise ValueError("reg_params must be non-empty")
-    alpha = float(elastic_net_param)
-    if not 0.0 <= alpha <= 1.0:
-        raise ValueError("elastic_net_param must be in [0, 1]")
-    if any(float(l) < 0.0 for l in reg_params):
-        raise ValueError("reg_param must be >= 0")
+    spec = _glm_enet_spec(
+        "glm_elastic_net_cv_grouped", family, reg_params,
+        elastic_net_param, standardize, max_iter, tol, max_sweeps,
+        exact_iterations, var_power, nb_alpha,
+    )
     if n_folds < 2:
         raise ValueError(f"n_folds must be >= 2, got {n_folds!r}")
     if len(set(float(v) for v in reg_params)) >= 25:
@@ -2318,28 +2082,20 @@ def glm_elastic_net_cv_grouped(
             UserWarning,
             stacklevel=2,
         )
-    if exact_iterations is not None and exact_iterations < 1:
-        raise ValueError("exact_iterations must be >= 1")
-    _check_tweedie_var_power(family, var_power)
-    _check_nb_alpha(family, nb_alpha)
     if isinstance(fold_expr, str):
         fold_expr = F.col(fold_expr)
     base = df.withColumn("__fold", fold_expr.cast("int"))
     if na_action == "omit":
-        # engine parity (code-review r12): glm_elastic_net_cv routes
-        # '__fold' through _encode_formula's NA-omit, so a null fold id
-        # drops its ROW; _design treats keep_cols as pass-through, which
-        # would otherwise NULL the whole group on one bad row
+        # engine parity: glm_elastic_net_cv routes '__fold' through
+        # _encode_formula's NA-omit, so a null fold id drops its ROW;
+        # _design treats keep_cols as pass-through, which would
+        # otherwise NULL the whole group on one bad row
         base = base.where(F.col("__fold").isNotNull())
     encoded, x_cols, target = _design(
         base, formula, list(group_cols) + ["__fold"], na_action=na_action,
         weight_col=weight_col, offset_col=offset_col,
     )
-    k = len(x_cols)
-    has_int = "intercept" in x_cols
-    i0 = x_cols.index("intercept") if has_int else None
-    feats = [i for i in range(k) if i != i0]
-    out_schema = T.StructType(
+    schema = T.StructType(
         [df.schema[c] for c in group_cols]
         + [
             T.StructField("reg_param", T.DoubleType()),
@@ -2355,176 +2111,57 @@ def glm_elastic_net_cv_grouped(
     )
     names = list(x_cols)
     gcols = list(group_cols)
-    fam_name, std = family, standardize
-    vp = float(var_power)
-    na = float(nb_alpha)
-    wname, oname = weight_col, offset_col
-    lam_in_sorted = sorted((float(v) for v in reg_params), reverse=True)
-    lams = sorted(set(lam_in_sorted), reverse=True)
+    lam_in = sorted((float(v) for v in reg_params), reverse=True)
     nf = int(n_folds)
-    exact_n = exact_iterations
 
     def fit_group(pdf):
         import pandas as pd
 
-        X = pdf[names].to_numpy(dtype=np.float64)
-        y = pdf[target].to_numpy(dtype=np.float64)
-        fd = pdf["__fold"].to_numpy()
-        n = len(y)
-        wv = (
-            pdf[wname].to_numpy(dtype=np.float64)
-            if wname is not None
-            else np.ones(n)
-        )
-        ov = (
-            pdf[oname].to_numpy(dtype=np.float64)
-            if oname is not None
-            else np.zeros(n)
-        )
-        rows: list[tuple] = []
+        g = _NpGroup(pdf, names, target, weight_col, offset_col, spec)
         gkey = tuple(pdf[c].iloc[0] for c in gcols)
-
-        def null_rows():
-            return [
-                gkey + (lam, None, None, None, None, None, None, None, None)
-                for lam in lam_in_sorted
-            ]
-
-        ok = (
-            n > 1
-            and np.all(np.isfinite(X))
-            and np.all(np.isfinite(y))
-            and np.all(np.isfinite(wv))
-            and np.all(wv >= 0.0)
-            and np.all(np.isfinite(ov))
-            and bool(np.all((fd >= 0) & (fd < nf)))
-        )
-        if ok:
-            # the shared four-fitter domain rule (one definition —
-            # review r13: three hand-written boolean twins had appeared)
-            ok = _enet_label_domain_error(
-                fam_name, float(y.min()), float(y.max())
-            ) is None
-        if not ok:
-            return pd.DataFrame(null_rows(), columns=[f.name for f in out_schema])
-
-        # per-fold states with training-only fixed stats (engine parity)
+        fd = pdf["__fold"].to_numpy()
         states = []
-        present = set(int(j) for j in np.unique(fd))
-        for j in sorted(present):
-            tr = fd != j
-            n_t = int(tr.sum())
-            if n_t <= 1:
-                continue
-            wt_t = wv[tr]
-            nw_t = float(wt_t.sum())
-            if wname is not None:
-                sww_t = float((wt_t * wt_t).sum())
-                if nw_t <= 0.0 or nw_t - sww_t / nw_t <= 0.0:
-                    continue
-                sdenom = nw_t - sww_t / nw_t
-            else:
-                sdenom = float(n_t - 1)
-            if nw_t <= 0.0:
-                continue
-            ybar = float((wt_t * y[tr]).sum()) / nw_t
-            if fam_name == "binomial" and not 0.0 < ybar < 1.0:
-                continue
-            if fam_name != "binomial" and ybar <= 0.0:
-                continue
-            Xf = X[tr][:, feats]
-            ms = (wt_t[:, None] * Xf).sum(0) / nw_t
-            ss = (wt_t[:, None] * Xf * Xf).sum(0)
-            sig = np.sqrt(np.maximum((ss - nw_t * ms * ms) / sdenom, 0.0))
-            beta = np.zeros(k)
-            if has_int:
-                beta[i0] = _np_link_init(fam_name, ybar)
-                if oname is not None:
-                    beta[i0] -= float((wt_t * ov[tr]).sum()) / nw_t
-            states.append(
-                dict(j=j, tr=tr, n_t=n_t, nw_t=nw_t, sig=sig,
-                     beta=beta, theta=np.zeros(len(feats)),
-                     # fold slices cached ONCE — re-fancy-indexing per
-                     # (λ, fold) copied the training design L·F times
-                     # per group (review r12)
-                     Xt=X[tr], yt=y[tr], wt=wt_t, ot=ov[tr])
-            )
-        if not states:
-            return pd.DataFrame(null_rows(), columns=[f.name for f in out_schema])
+        if g.clean() and bool(np.all((fd >= 0) & (fd < nf))):
+            # per-fold models with training-only fixed stats (engine
+            # parity); fold slices are cut ONCE, not per (λ, fold)
+            for j in sorted(set(int(v) for v in np.unique(fd))):
+                s = g.start(fd != j, j)
+                if s is not None:
+                    states.append(s)
 
-        by_lam: dict[float, list] = {}
-        try:
-            for lam in lams:
-                recs = []
-                for s in states:
-                    tr = s["tr"]
-                    Xt, yt, wt_t, ot = s["Xt"], s["yt"], s["wt"], s["ot"]
-                    b, theta = s["beta"], s["theta"]
-                    it, conv = 0, False
-                    n_pass = exact_n if exact_n is not None else max_iter
-                    for _ in range(n_pass):
-                        eta_lin = Xt @ b
-                        _mu, w0, z = _np_glm_irls_kernels(
-                            fam_name, yt, eta_lin, ot, vp, na
-                        )
-                        wirls = wt_t * w0
-                        sw = float(wirls.sum())
-                        swz = float((wirls * z).sum())
-                        Xw = Xt * wirls[:, None]
-                        Gw = Xt.T @ Xw
-                        gz = Xw.T @ z
-                        nb, theta = _penalized_irls_update(
-                            Gw, gz, sw, swz, k, feats, i0, s["sig"],
-                            s["nw_t"], lam, alpha, std, theta,
-                            max_sweeps, tol * 0.01,
-                        )
-                        delta = float(np.max(np.abs(nb - b)))
-                        b = nb
-                        it += 1
-                        if exact_n is None and delta <= tol:
-                            conv = True
-                            break
-                    if exact_n is not None:
-                        conv = True
-                    s["beta"], s["theta"] = b, theta
-                    # held-out split at the final beta
-                    mu_all, _w, _z = _np_glm_irls_kernels(
-                        fam_name, y, X @ b, ov, vp, na
-                    )
-                    dev_t = _np_glm_deviance(fam_name, yt, mu_all[tr], wt_t, vp, na)
-                    va = ~tr
-                    dev_v = _np_glm_deviance(
-                        fam_name, y[va], mu_all[va], wv[va], vp, na
-                    )
-                    # emit the row even if the fit diverged (NaN/inf
-                    # deviances) — the engine does, and a silently
-                    # missing (λ, fold) cell would break the cold-parity
-                    # contract (code-review r12)
-                    recs.append(
-                        gkey
-                        + (
-                            lam, int(s["j"]), int(s["n_t"]),
-                            int(n - s["n_t"]), dev_t, dev_v,
-                            _count_nonzero(names, b), it, bool(conv),
-                        )
-                    )
-                by_lam[lam] = recs
-        except (ValueError, np.linalg.LinAlgError):
-            return pd.DataFrame(null_rows(), columns=[f.name for f in out_schema])
-        for lam in lam_in_sorted:  # duplicate input λs re-expand
-            rows.extend(by_lam.get(lam, []))
-        if not rows:
-            rows = null_rows()
-        return pd.DataFrame(rows, columns=[f.name for f in out_schema])
+        def fit_lambda(lam):
+            g.fit(states, lam)
+            recs = []
+            for s in states:
+                # held-out split at the final beta; the row is emitted
+                # even if the fit diverged (NaN/inf deviances) — the
+                # engine does, and a silently missing (λ, fold) cell
+                # would break the cold-parity contract
+                mu = g.mu_at(s.beta)
+                mask = s.train[0]
+                recs.append(gkey + (
+                    lam, int(s.j), int(s.n), int(g.n - s.n),
+                    g.deviance(mu, mask), g.deviance(mu, ~mask),
+                    _count_nonzero(names, s.beta), s.iters, bool(s.conv),
+                ))
+            return recs
 
-    from sparkglm_spark.plans.partitioning import fanout_groups
+        path = None
+        if states:
+            try:
+                path = _lambda_path(reg_params, fit_lambda)
+            except (ValueError, np.linalg.LinAlgError):
+                path = None
+        if path is None:
+            rows = [gkey + (lam,) + (None,) * 8 for lam in lam_in]
+        else:
+            rows = [r for _lam, recs in path for r in recs]
+        return pd.DataFrame(rows, columns=schema.fieldNames())
 
-    sel = [*gcols, "__fold", target, *x_cols]
-    for c in (wname, oname):
-        if c:
-            sel.append(c)
-    return fanout_groups(encoded.select(*sel), gcols).groupBy(*gcols).applyInPandas(
-        fit_group, out_schema
+    return _apply_grouped(
+        encoded, gcols,
+        ["__fold", target, *x_cols, weight_col, offset_col],
+        fit_group, schema,
     )
 
 

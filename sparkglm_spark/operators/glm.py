@@ -36,7 +36,7 @@ from sparkglm_spark.functions.encoding import (
     model_matrix_levels,
     omit_na,
 )
-from sparkglm_spark.functions.families import get_family
+from sparkglm_spark.functions.families import deviance_np, get_family
 from sparkglm_spark.functions.links import get_link
 from sparkglm_spark.operators.lm import (
     linear_combination,
@@ -881,48 +881,6 @@ def glm_grouped(
                             return mu ** (2.0 - p_tw)
                         return mu / (1.0 + a_nb * mu)  # negbinomial
 
-                    def deviance(y, mu):
-                        # every branch sums the per-row term ω-weighted
-                        # (wv is all-ones unweighted — bitwise no-op)
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            if logit:
-                                t1 = np.where(y > 0, y * np.log(y / mu), 0.0)
-                                t2 = np.where(
-                                    y < 1,
-                                    (1 - y) * np.log((1 - y) / (1 - mu)),
-                                    0.0,
-                                )
-                                return float(2.0 * (wv * (t1 + t2)).sum())
-                            if fam in ("poisson", "quasipoisson"):
-                                t1 = np.where(y > 0, y * np.log(y / mu), 0.0)
-                                return float(2.0 * (wv * (t1 - (y - mu))).sum())
-                            if fam == "gamma":
-                                return float(
-                                    2.0
-                                    * (wv * (-np.log(y / mu) + (y - mu) / mu)).sum()
-                                )
-                            if fam == "tweedie":
-                                p = p_tw
-                                tail = mu ** (2.0 - p) / (2.0 - p)
-                                full = (
-                                    np.where(y > 0, y ** (2.0 - p), 0.0)
-                                    / ((1.0 - p) * (2.0 - p))
-                                    - y * mu ** (1.0 - p) / (1.0 - p)
-                                    + tail
-                                )
-                                return float(
-                                    2.0 * (wv * np.where(y == 0, tail, full)).sum()
-                                )
-                            a = a_nb  # negbinomial
-                            ratio = (1.0 + a * y) / (1.0 + a * mu)
-                            full = np.where(
-                                y > 0, y * np.log(np.where(y > 0, y, 1.0) / mu), 0.0
-                            ) - (y + 1.0 / a) * np.log(ratio)
-                            zero = (1.0 / a) * np.log(1.0 + a * mu)
-                            return float(
-                                2.0 * (wv * np.where(y == 0, zero, full)).sum()
-                            )
-
                     dev_old, delta = 1e308, 1.0
                     it_cap = n_exact if n_exact is not None else max_iter
                     while (
@@ -942,7 +900,7 @@ def glm_grouped(
                             mu = np.clip(1.0 / (1.0 + np.exp(-ef)), 1e-10, 1 - 1e-10)
                         else:
                             mu = np.exp(ef)
-                        dev = deviance(y, mu)
+                        dev = deviance_np(fam, y, mu, wv, p_tw, a_nb)
                         if not np.isfinite(dev):
                             beta = None
                             break

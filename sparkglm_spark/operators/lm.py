@@ -676,7 +676,6 @@ def check_weight_domain(
     n_w: int,
     min_w: float | None,
     sum_w: float | None,
-    sum_w2: float | None = None,
 ) -> None:
     """THE weight-domain guard (code-review r11: five hand-duplicated
     variants had already drifted — this is now the single point of
@@ -685,9 +684,9 @@ def check_weight_domain(
     boolean twin because its per-group policy is NULL, not raise).
     Raises ValueError on: null weights (they silently DROP rows from
     F.sum while still counting in n), negative weights (corrupt every
-    moment; MLlib raises likewise), Σw ≤ 0 (no statistical mass), and —
-    when `sum_w2` is given — ≤ 1 effective row (Σw − Σw²/Σw ≤ 0, the
-    reliability-weights std denominator)."""
+    moment; MLlib raises likewise) and Σw ≤ 0 (no statistical mass).
+    The penalized GLM's ≤ 1-effective-row refusal (Σw − Σw²/Σw ≤ 0) is
+    its start's verdict (`enet._enet_start`)."""
     import math
 
     if n_w < n:
@@ -707,15 +706,6 @@ def check_weight_domain(
     if sum_w is not None and float(sum_w) <= 0.0:
         raise ValueError(
             f"weights in {weight_col!r} sum to {float(sum_w)} — need Σw > 0"
-        )
-    if (
-        sum_w2 is not None
-        and sum_w is not None
-        and float(sum_w) - float(sum_w2) / float(sum_w) <= 0.0
-    ):
-        raise ValueError(
-            f"weights in {weight_col!r} carry <= 1 effective row "
-            "(Σw − Σw²/Σw <= 0) — the weighted std is undefined"
         )
 
 

@@ -598,7 +598,8 @@ def coxph(
 
     `exact_iterations=N`: exactly N Newton steps, no convergence test —
     the deterministic trajectory a SQL oracle can replay. Otherwise stop
-    when |Δll| ≤ tol·(|ll| + tol). A degenerate fit — singular
+    when |Δll| ≤ tol·(|ll| + tol). A degenerate fit — a constant
+    covariate (caught by the validation aggregate's min/max), singular
     information (e.g. a covariate constant over every risk set) or a
     non-finite Newton step — raises ValueError.
 
@@ -676,6 +677,8 @@ def coxph(
             F.min(wtc).alias("minw"),
             F.count(wtc).alias("n_w"),
         ]
+    for i, c in enumerate(x_cols):
+        chk_aggs += [F.min(c).alias(f"xmin_{i}"), F.max(c).alias(f"xmax_{i}")]
     chk = collect_small(df.agg(*chk_aggs))[0]
     if chk["nulls"]:
         raise ValueError(f"{chk['nulls']} rows have null time/event/entry")
@@ -695,6 +698,15 @@ def coxph(
     n, n_events = int(chk["n"]), int(float(chk["ne"]))
     if n_events == 0:
         raise ValueError("no events (event_col all zero) — nothing to fit")
+    for i, c in enumerate(x_cols):
+        # a constant covariate leaves the information at rounding noise
+        # rather than exactly singular, so the Newton loop would return
+        # a garbage estimate instead of failing
+        if chk[f"xmin_{i}"] is not None and chk[f"xmin_{i}"] == chk[f"xmax_{i}"]:
+            raise ValueError(
+                f"degenerate Cox fit: covariate {c!r} is constant "
+                f"({chk[f'xmin_{i}']}) — its coefficient is not identifiable"
+            )
     if weight_col:
         from sparkglm_spark.operators.lm import check_weight_domain
 
@@ -1547,8 +1559,9 @@ def coxph_grouped(
     plus offsets there), asserted in tests against `coxph` on per-group
     slices.
 
-    Degenerate groups (no events, singular information, diverging
-    Newton) yield NULL estimate/se rather than garbage. `time_bucket`
+    Degenerate groups (no events, a covariate constant within the
+    group, singular information, diverging Newton) yield NULL
+    estimate/se rather than garbage. `time_bucket`
     floors the time axis inside the plan, as in `coxph`.
 
     `entry_col` (r14): per-group COUNTING-PROCESS fits — same
@@ -1621,6 +1634,9 @@ def coxph_grouped(
             and len(e_valid) == n
             and np.all(np.isfinite(t))
             and np.all(np.isfinite(X))
+            # a constant covariate: information at rounding noise, not
+            # exactly singular — NULL instead of a garbage estimate
+            and np.all(np.ptp(X, axis=0) > 0.0)
             and np.all((e == 0.0) | (e == 1.0))
             and (
                 not has_entry

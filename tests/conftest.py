@@ -119,7 +119,6 @@ _SLOW_TESTS = {
     "tests/test_ml.py::test_quantile_pipeline_and_save_load",
     "tests/test_ml.py::test_spark_binary_evaluator_in_cross_validator",
     "tests/test_oracle_parity.py::test_query_matches_oracle[events_timeseries]",
-    "tests/test_oracle_parity.py::test_query_matches_oracle[glm_families_fit]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[lineitem_corr]",
     "tests/test_oracle_parity.py::test_query_matches_oracle[orders_distributions]",
     "tests/test_pipeline.py::test_full_training_data_journey_composes",

@@ -1433,7 +1433,9 @@ def test_glm_enet_grouped_exact_iterations(spark):
     """The r12 oracle-pin hook: exact_iterations=N runs exactly N
     penalized-IRLS solves per group (no convergence exit), matches the
     single-fit glm_elastic_net(exact_iterations=N) per slice at 1e-12,
-    and reports iterations=N / converged=True (the engine convention)."""
+    and reports iterations=N / converged=True (the engine convention).
+    The path and CV grouped twins match glm_elastic_net_path/_cv on one
+    group at 1e-12 too."""
     from sparkglm_spark.operators.enet import (
         glm_elastic_net,
         glm_elastic_net_grouped,
@@ -1468,6 +1470,69 @@ def test_glm_enet_grouped_exact_iterations(spark):
 
     with pytest.raises(ValueError, match="exact_iterations"):
         glm_elastic_net_grouped(df, "y ~ x1", ["g"], 0.02, exact_iterations=0)
+
+    # the path and CV twins on one group: the numpy backend and the Spark
+    # lock-step engine run the same start, sweep and loop, so only the
+    # summation order differs — binomial, and poisson with prior weights
+    # and an offset
+    from sparkglm_spark.operators.enet import (
+        glm_elastic_net_cv,
+        glm_elastic_net_cv_grouped,
+        glm_elastic_net_path,
+        glm_elastic_net_path_grouped,
+    )
+
+    n = 150
+    x1 = rng.normal(0, 1, n)
+    off = rng.uniform(-0.5, 0.5, n)
+    wv = rng.uniform(0.5, 2.0, n)
+    yp = rng.poisson(np.exp(0.3 + 0.4 * x1 + off))
+    pois = spark.createDataFrame(
+        [("a", float(yp[i]), float(x1[i]), float(wv[i]), float(off[i]), i % 2)
+         for i in range(n)],
+        "g string, y double, x1 double, w double, o double, f int",
+    )
+    binom = df.where(F.col("g") == "a").withColumn(
+        "f", F.pmod(F.xxhash64("x1"), F.lit(2)).cast("int")
+    )
+    lams = [0.05, 0.02]
+
+    def close(a, b):
+        return a == pytest.approx(b, rel=1e-12, abs=1e-12)
+
+    for data, kw in (
+        (binom, dict(family="binomial")),
+        (pois, dict(family="poisson", weight_col="w", offset_col="o")),
+    ):
+        kw = dict(elastic_net_param=0.5, exact_iterations=2, **kw)
+        path = glm_elastic_net_path(data, "y ~ x1", lams, **kw).collect()
+        pg = {
+            (r.reg_param, r.term): r
+            for r in glm_elastic_net_path_grouped(
+                data, "y ~ x1", ["g"], lams, **kw
+            ).collect()
+        }
+        assert len(pg) == len(path) == 4
+        for r in path:
+            t = pg[(r.reg_param, r.term)]
+            assert (t.n_nonzero, t.iterations) == (r.n_nonzero, r.iterations)
+            for c in ("estimate", "deviance", "aic", "bic"):
+                assert close(t[c], r[c]), (kw["family"], r.reg_param, c)
+        cv = glm_elastic_net_cv(data, "y ~ x1", lams, "f", 2, **kw).collect()
+        cg = {
+            (r.reg_param, r.fold): r
+            for r in glm_elastic_net_cv_grouped(
+                data, "y ~ x1", ["g"], lams, "f", 2, **kw
+            ).collect()
+        }
+        assert len(cg) == len(cv) == 4
+        for r in cv:
+            t = cg[(r.reg_param, r.fold)]
+            for c in ("n_train", "n_val", "n_nonzero", "iterations",
+                      "converged"):
+                assert t[c] == r[c], (kw["family"], r.reg_param, c)
+            for c in ("deviance_train", "deviance_val"):
+                assert close(t[c], r[c]), (kw["family"], r.reg_param, c)
 
 
 def test_glm_enet_path_exact_iterations_and_degenerate_raise(spark):

@@ -685,6 +685,13 @@ def test_fitter_job_counts_pinned(spark, lineitem, orders):
     final job, roughly doubling these counts."""
     from pyspark.sql import functions as F
 
+    from sparkglm_spark.operators.enet import (
+        elastic_net,
+        glm_elastic_net,
+        glm_elastic_net_cv,
+        glm_elastic_net_grouped,
+        glm_elastic_net_path,
+    )
     from sparkglm_spark.operators.glm import glm
     from sparkglm_spark.operators.lm import lm, robust_standard_errors
     from sparkglm_spark.operators.survival import (
@@ -710,6 +717,13 @@ def test_fitter_job_counts_pinned(spark, lineitem, orders):
         F.when(F.col("o_custkey") % 5 == 0, 0.0).otherwise(1.0).alias("ev"),
         ((F.col("o_custkey") % 100) / 100.0).alias("x"),
     )
+    en = lineitem.select(
+        (F.col("l_returnflag") == "R").cast("double").alias("y"),
+        (F.col("l_quantity") / 50.0).alias("x"),
+        (F.col("l_discount") * 10.0).alias("x2"),
+        (F.col("l_orderkey") % 2).cast("int").alias("f"),
+        (F.col("l_orderkey") % 3).alias("g"),
+    )
     formula = "l_extendedprice ~ l_quantity + l_discount + l_returnflag"
     # fit outside the job groups: hc1/hc3 count the sandwich alone
     fit = lm(lineitem, formula)
@@ -733,10 +747,34 @@ def test_fitter_job_counts_pinned(spark, lineitem, orders):
         "hc3": _jobs_of(spark, "pin_hc3", lambda: robust_standard_errors(
             lineitem, fit, kind="HC3"
         )),
+        # penalized fitters: 1 moments pass + one aggregate per IRLS pass
+        # (+ 1 final deviance pass on the path/CV engine)
+        "glm_enet": _jobs_of(spark, "pin_genet", lambda: glm_elastic_net(
+            en, "y ~ x + x2", 0.01, 0.5, exact_iterations=3
+        )),
+        "glm_enet_cv": _jobs_of(spark, "pin_genet_cv", lambda: (
+            glm_elastic_net_cv(
+                en, "y ~ x + x2", [0.05, 0.01], "f", n_folds=2,
+                elastic_net_param=0.5, exact_iterations=2,
+            ).collect()
+        )),
+        "glm_enet_path": _jobs_of(spark, "pin_genet_path", lambda: (
+            glm_elastic_net_path(
+                en, "y ~ x + x2", [0.05, 0.01], 0.5, exact_iterations=2
+            ).collect()
+        )),
+        "glm_enet_grouped": _jobs_of(spark, "pin_genet_grp", lambda: (
+            glm_elastic_net_grouped(en, "y ~ x + x2", ["g"], 0.01, 0.5)
+            .collect()
+        )),
+        "elastic_net": _jobs_of(spark, "pin_enet", lambda: elastic_net(
+            en, "x ~ x2 + y", 0.01, 0.5
+        )),
     }
     assert got == {
         "lm": 3, "glm": 8, "coxph": 11, "cindex": 10, "weibull_aft": 6,
-        "hc1": 1, "hc3": 2,
+        "hc1": 1, "hc3": 2, "glm_enet": 5, "glm_enet_cv": 8,
+        "glm_enet_path": 8, "glm_enet_grouped": 2, "elastic_net": 1,
     }
 
 

@@ -156,6 +156,31 @@ def test_coxph_degenerate_information_raises(surv_data):
         coxph(df.withColumn("z", F.lit(0.0)), "time", "event", ["z"])
 
 
+def test_coxph_constant_covariate_is_refused(orders):
+    """A covariate constant over the rows leaves the Cox information at
+    rounding noise rather than exactly singular, so the Newton loop used
+    to return a garbage estimate. coxph now refuses it by name (from its
+    validation aggregate's min/max), and coxph_grouped gives the NULL row
+    for every group where the covariate is constant."""
+    from sparkglm_spark.operators.survival import coxph_grouped
+
+    cx = orders.select(
+        (F.col("o_totalprice") / 1000.0).alias("t"),
+        (F.col("o_orderpriority") < "3").cast("double").alias("ev"),
+        (F.col("o_custkey") % 100 / 100.0).alias("x"),
+        (F.col("o_orderkey") % 7).alias("g"),
+        ((F.col("o_orderkey") % 7) / 7.0).alias("xc"),
+    )
+    with pytest.raises(ValueError, match="covariate 'xc' is constant"):
+        coxph(cx.where(F.col("g") == 1), "t", "ev", ["x", "xc"])
+    got = coxph_grouped(cx, "t", "ev", ["x", "xc"], ["g"]).collect()
+    assert len(got) == 14
+    assert all(r.estimate is None and r.se is None for r in got)
+    # the covariate that varies within each group still fits
+    ok = coxph_grouped(cx, "t", "ev", ["x"], ["g"]).collect()
+    assert all(r.estimate is not None for r in ok)
+
+
 def _brute_breslow_ll(start, stop, ev, w, X, beta):
     """Breslow partial loglik straight from its definition: each event
     row i against the (start, stop] risk set {j : start_j < t_i ≤ stop_j}."""
