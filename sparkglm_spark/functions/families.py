@@ -221,6 +221,10 @@ def get_family(
         ) from None
 
 
+# the quasi families share their base family's numpy kernels
+_NP_BASE = {"quasibinomial": "binomial", "quasipoisson": "poisson"}
+
+
 def deviance_np(
     family: str, y, mu, w, var_power: float = 1.5, nb_alpha: float = 1.0
 ) -> float:
@@ -229,9 +233,7 @@ def deviance_np(
     fitters (binomial's μ clamp is the caller's). Families: binomial,
     poisson, gamma, tweedie, negbinomial; the quasi twins share their
     base family's deviance. Gaussian is not covered."""
-    family = {"quasibinomial": "binomial", "quasipoisson": "poisson"}.get(
-        family, family
-    )
+    family = _NP_BASE.get(family, family)
     with np.errstate(divide="ignore", invalid="ignore"):
         if family == "binomial":
             t1 = np.where(y > 0, y * np.log(y / mu), 0.0)
@@ -263,3 +265,63 @@ def deviance_np(
             raise ValueError(f"deviance_np does not cover family {family!r}")
         t1 = np.where(y > 0, y * np.log(y / mu), 0.0)
         return float(2.0 * (w * (t1 - (y - mu))).sum())
+
+
+def loglik_np(family: str, y, mu, m=None, nb_alpha: float = 1.0):
+    """Per-row log-likelihood at μ for the families whose density needs
+    lgamma: grouped binomial (y successes of m, μ = m·p), poisson and
+    negbinomial (exact NB2 pmf at fixed α: lnΓ(y+1/α) − lnΓ(1/α) −
+    lnΓ(y+1) + y·ln(αμ/(1+αμ)) − (1/α)·ln(1+αμ))."""
+    from sparkglm_spark.functions import special
+
+    if family == "binomial":
+        return special.binom_logpmf(y, m, mu / m)
+    if family == "poisson":
+        return (
+            np.where(y > 0, y * np.log(mu), 0.0) - mu - special.lgamma(y + 1.0)
+        )
+    if family != "negbinomial":
+        raise ValueError(f"loglik_np does not cover family {family!r}")
+    a = nb_alpha
+    ia = 1.0 / a
+    return (
+        special.lgamma(y + ia)
+        - special.lgamma(np.full_like(y, ia))
+        - special.lgamma(y + 1.0)
+        + np.where(y > 0, y * np.log(a * mu / (1.0 + a * mu)), 0.0)
+        - ia * np.log(1.0 + a * mu)
+    )
+
+
+def irls_mu_np(family: str, eta):
+    """μ at the linear predictor η (offset included) under the default
+    link: logit for binomial, with μ clamped to [1e-10, 1−1e-10]; log for
+    poisson, gamma, tweedie and negbinomial."""
+    with np.errstate(over="ignore"):
+        if _NP_BASE.get(family, family) == "binomial":
+            return np.clip(1 / (1 + np.exp(-eta)), 1e-10, 1 - 1e-10)
+        return np.exp(eta)
+
+
+def irls_wz_np(
+    family: str, y, mu, eta_lin, var_power: float = 1.5, nb_alpha: float = 1.0
+):
+    """One IRLS pass's working weight w and working response z at μ,
+    with η_lin the linear predictor WITHOUT the offset (z excludes it
+    too). The weight is (dμ/dη)²/V(μ) at the default link: μ(1−μ) for
+    binomial; for the log link μ²/V(μ) — poisson μ, gamma 1, tweedie
+    μ^(2−p), negbinomial μ/(1+αμ)."""
+    family = _NP_BASE.get(family, family)
+    # an underflowed μ = 0 only warns here; the deviance flags the pass
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        if family == "binomial":
+            return mu * (1 - mu), eta_lin + (y - mu) / (mu * (1 - mu))
+        if family == "gamma":
+            w = np.ones_like(mu)
+        elif family == "tweedie":
+            w = mu ** (2.0 - var_power)
+        elif family == "negbinomial":
+            w = mu / (1.0 + nb_alpha * mu)
+        else:  # poisson
+            w = mu
+        return w, eta_lin + (y - mu) / mu

@@ -34,12 +34,17 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparkglm_spark.functions.families import deviance_np
+from sparkglm_spark.functions.families import (
+    deviance_np,
+    irls_mu_np,
+    irls_wz_np,
+)
 from sparkglm_spark.plans.gram import gram_aggregate, gram_sums, gram_unpack
-from sparkglm_spark.plans.partitioning import collect_small
+from sparkglm_spark.plans.partitioning import apply_grouped, collect_small
 from sparkglm_spark.operators.lm import (
     _design,
     _encode_formula,
+    _group_arrays,
     check_weight_domain,
     prediction_over_raw,
 )
@@ -1567,38 +1572,6 @@ def glm_elastic_net_path(
     )
 
 
-def _np_glm_irls_kernels(
-    fam_name: str, y, eta_lin, ov, var_power: float = 1.5,
-    nb_alpha: float = 1.0,
-):
-    """One IRLS step's per-row kernels, numpy twin of `_SparkEnet.
-    irls_cols`. η = Xβ + o; binomial clamps μ to [1e-10, 1−1e-10]
-    BEFORE the weight/working response (the `glm_elastic_net`
-    convention). Log-link working weight w = μ²/V(μ): poisson μ, gamma
-    1, tweedie μ^(2−p), negbinomial μ/(1+αμ)."""
-    eta = eta_lin + ov
-    # errstate: a deviance-only caller discards z, but an underflowed
-    # poisson μ = 0 would still warn on (y−μ)/μ
-    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        if fam_name == "binomial":
-            mu = np.clip(1 / (1 + np.exp(-eta)), 1e-10, 1 - 1e-10)
-            w = mu * (1 - mu)
-            z = eta_lin + (y - mu) / (mu * (1 - mu))
-        else:
-            mu = np.exp(eta)
-            if fam_name == "gamma":
-                w = np.ones_like(mu)
-            elif fam_name == "tweedie":
-                w = mu ** (2.0 - var_power)
-            elif fam_name == "negbinomial":
-                # log link, V = mu + alpha*mu^2: w = mu^2/V = mu/(1+alpha*mu)
-                w = mu / (1.0 + nb_alpha * mu)
-            else:  # poisson
-                w = mu
-            z = eta_lin + (y - mu) / mu
-    return mu, w, z
-
-
 class _NpGroup:
     """The numpy statistics backend: one group's Arrow batch as arrays,
     with the moments, IRLS statistics and deviances the Spark backend
@@ -1606,19 +1579,10 @@ class _NpGroup:
     training rows (mask None = every row of the group)."""
 
     def __init__(self, pdf, names, target, weight_col, offset_col, spec):
-        self.X = pdf[names].to_numpy(dtype=np.float64)
-        self.y = pdf[target].to_numpy(dtype=np.float64)
-        self.n = n = len(self.y)
-        self.wv = (
-            pdf[weight_col].to_numpy(dtype=np.float64)
-            if weight_col is not None
-            else np.ones(n)
+        self.X, self.y, self.wv, self.ov, self.ok = _group_arrays(
+            pdf, names, target, weight_col, offset_col
         )
-        self.ov = (
-            pdf[offset_col].to_numpy(dtype=np.float64)
-            if offset_col is not None
-            else np.zeros(n)
-        )
+        self.n = len(self.y)
         self.weighted = weight_col is not None
         self.offset = offset_col is not None
         self.spec = spec
@@ -1626,14 +1590,13 @@ class _NpGroup:
 
     def clean(self) -> bool:
         """The group-level NULL policy: more than one row, every value
-        finite, ω ≥ 0 and labels in the family's support."""
+        finite, the shared ω/offset verdict and labels in the family's
+        support."""
         return bool(
             self.n > 1
+            and self.ok
             and np.all(np.isfinite(self.X))
             and np.all(np.isfinite(self.y))
-            and np.all(np.isfinite(self.wv))
-            and np.all(self.wv >= 0.0)
-            and np.all(np.isfinite(self.ov))
             and _enet_label_domain_error(
                 self.spec.family, float(self.y.min()), float(self.y.max())
             ) is None
@@ -1667,8 +1630,10 @@ class _NpGroup:
         out = []
         for s in live:
             _mask, X, y, w, o = s.train
-            _mu, w0, z = _np_glm_irls_kernels(
-                sp.family, y, X @ s.beta, o, sp.var_power, sp.nb_alpha
+            eta = X @ s.beta
+            w0, z = irls_wz_np(
+                sp.family, y, irls_mu_np(sp.family, eta + o), eta,
+                sp.var_power, sp.nb_alpha,
             )
             wirls = w * w0
             Xw = X * wirls[:, None]
@@ -1684,11 +1649,7 @@ class _NpGroup:
 
     def mu_at(self, beta):
         """μ over every row of the group at β."""
-        sp = self.spec
-        return _np_glm_irls_kernels(
-            sp.family, self.y, self.X @ beta, self.ov, sp.var_power,
-            sp.nb_alpha,
-        )[0]
+        return irls_mu_np(self.spec.family, self.X @ beta + self.ov)
 
     def deviance(self, mu, mask=None) -> float:
         """ω-weighted deviance of rows `mask` (None = all) at μ."""
@@ -1697,18 +1658,6 @@ class _NpGroup:
         if mask is not None:
             y, mu, w = y[mask], mu[mask], w[mask]
         return deviance_np(sp.family, y, mu, w, sp.var_power, sp.nb_alpha)
-
-
-def _apply_grouped(encoded, group_cols, cols, fit_group, schema):
-    """Run `fit_group` once per group over the group keys plus `cols`
-    (None entries skipped), fanned out to the shuffle width."""
-    from sparkglm_spark.plans.partitioning import fanout_groups
-
-    gcols = list(group_cols)
-    sel = [*gcols, *[c for c in cols if c]]
-    return fanout_groups(encoded.select(*sel), gcols).groupBy(
-        *gcols
-    ).applyInPandas(fit_group, schema)
 
 
 def glm_elastic_net_grouped(
@@ -1770,8 +1719,6 @@ def glm_elastic_net_grouped(
     NULL-degrades like every other grouped degeneracy. Returns long
     format: group_cols…, term, estimate, n_rows, n_nonzero,
     iterations, converged, deviance."""
-    from pyspark.sql import types as T
-
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
     lam_col = reg_param if isinstance(reg_param, str) else None
@@ -1821,27 +1768,11 @@ def glm_elastic_net_grouped(
         # whose None crashed to_numpy instead of NULL-degrading; a double
         # NULL becomes NaN → isfinite → NULL)
         encoded = encoded.withColumn(lam_col, F.col(lam_col).cast("double"))
-    schema = T.StructType(
-        [df.schema[c] for c in group_cols]
-        + [
-            T.StructField("term", T.StringType()),
-            T.StructField("estimate", T.DoubleType()),
-            T.StructField("n_rows", T.LongType()),
-            T.StructField("n_nonzero", T.IntegerType()),
-            T.StructField("iterations", T.IntegerType()),
-            T.StructField("converged", T.BooleanType()),
-            T.StructField("deviance", T.DoubleType()),
-        ]
-    )
     names = list(x_cols)
-    gcols = list(group_cols)
     lam = None if lam_col else float(reg_param)
 
     def fit_group(pdf):
-        import pandas as pd
-
         g = _NpGroup(pdf, names, target, weight_col, offset_col, spec)
-        gkey = tuple(pdf[c].iloc[0] for c in gcols)
         ok, lam_g = g.clean(), lam
         if ok and lam_col is not None:
             # per-group λ: constant within the group, finite, ≥ 0 —
@@ -1866,18 +1797,20 @@ def glm_elastic_net_grouped(
             except (ValueError, np.linalg.LinAlgError):
                 beta = None
         it, conv = (s.iters, s.conv) if s is not None else (0, False)
-        rows = [
-            gkey + (
+        return [
+            (
                 nm, float(beta[i]) if beta is not None else None, g.n, nz,
                 it, bool(conv) if beta is not None else False, dev,
             )
             for i, nm in enumerate(names)
         ]
-        return pd.DataFrame(rows, columns=schema.fieldNames())
 
-    return _apply_grouped(
-        encoded, gcols, [target, *x_cols, weight_col, offset_col, lam_col],
-        fit_group, schema,
+    return apply_grouped(
+        encoded, df.schema, group_cols,
+        [target, *x_cols, weight_col, offset_col, lam_col],
+        "term string, estimate double, n_rows bigint, n_nonzero int, "
+        "iterations int, converged boolean, deviance double",
+        fit_group,
     )
 
 
@@ -1920,8 +1853,6 @@ def glm_elastic_net_path_grouped(
     N solves per λ (warm starts still carry β — the pin hook). Returns
     long format: group_cols…, reg_param, term, estimate, n_nonzero,
     iterations, deviance, aic, bic, converged."""
-    from pyspark.sql import types as T
-
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
     spec = _glm_enet_spec(
@@ -1933,29 +1864,11 @@ def glm_elastic_net_path_grouped(
         df, formula, list(group_cols), na_action=na_action,
         weight_col=weight_col, offset_col=offset_col,
     )
-    schema = T.StructType(
-        [df.schema[c] for c in group_cols]
-        + [
-            T.StructField("reg_param", T.DoubleType()),
-            T.StructField("term", T.StringType()),
-            T.StructField("estimate", T.DoubleType()),
-            T.StructField("n_nonzero", T.IntegerType()),
-            T.StructField("iterations", T.IntegerType()),
-            T.StructField("deviance", T.DoubleType()),
-            T.StructField("aic", T.DoubleType()),
-            T.StructField("bic", T.DoubleType()),
-            T.StructField("converged", T.BooleanType()),
-        ]
-    )
     names = list(x_cols)
-    gcols = list(group_cols)
     lam_in = sorted((float(v) for v in reg_params), reverse=True)
 
     def fit_group(pdf):
-        import pandas as pd
-
         g = _NpGroup(pdf, names, target, weight_col, offset_col, spec)
-        gkey = tuple(pdf[c].iloc[0] for c in gcols)
         s = g.start() if g.clean() else None
 
         def fit_lambda(lam):
@@ -1976,23 +1889,24 @@ def glm_elastic_net_path_grouped(
             except (ValueError, np.linalg.LinAlgError):
                 path = None
         if path is None:
-            rows = [
-                gkey + (lam, nm, None, None, 0, None, None, None, False)
+            return [
+                (lam, nm, None, None, 0, None, None, None, False)
                 for lam in lam_in
                 for nm in names
             ]
-        else:
-            rows = [
-                gkey + (lam, nm, float(b[j]), nz, it, dev, aic, bic,
-                        bool(conv))
-                for lam, (b, nz, it, dev, aic, bic, conv) in path
-                for j, nm in enumerate(names)
-            ]
-        return pd.DataFrame(rows, columns=schema.fieldNames())
+        return [
+            (lam, nm, float(b[j]), nz, it, dev, aic, bic, bool(conv))
+            for lam, (b, nz, it, dev, aic, bic, conv) in path
+            for j, nm in enumerate(names)
+        ]
 
-    return _apply_grouped(
-        encoded, gcols, [target, *x_cols, weight_col, offset_col],
-        fit_group, schema,
+    return apply_grouped(
+        encoded, df.schema, group_cols,
+        [target, *x_cols, weight_col, offset_col],
+        "reg_param double, term string, estimate double, "
+        "n_nonzero int, iterations int, deviance double, aic double, "
+        "bic double, converged boolean",
+        fit_group,
     )
 
 
@@ -2058,8 +1972,6 @@ def glm_elastic_net_cv_grouped(
     of ≥ 25 λs here emits a UserWarning pointing at the lock-step
     route (work per group grows with the grid; rows per group with
     the data — the warning fires on the shape you can see upfront)."""
-    from pyspark.sql import types as T
-
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
     spec = _glm_enet_spec(
@@ -2095,30 +2007,12 @@ def glm_elastic_net_cv_grouped(
         base, formula, list(group_cols) + ["__fold"], na_action=na_action,
         weight_col=weight_col, offset_col=offset_col,
     )
-    schema = T.StructType(
-        [df.schema[c] for c in group_cols]
-        + [
-            T.StructField("reg_param", T.DoubleType()),
-            T.StructField("fold", T.IntegerType()),
-            T.StructField("n_train", T.LongType()),
-            T.StructField("n_val", T.LongType()),
-            T.StructField("deviance_train", T.DoubleType()),
-            T.StructField("deviance_val", T.DoubleType()),
-            T.StructField("n_nonzero", T.IntegerType()),
-            T.StructField("iterations", T.IntegerType()),
-            T.StructField("converged", T.BooleanType()),
-        ]
-    )
     names = list(x_cols)
-    gcols = list(group_cols)
     lam_in = sorted((float(v) for v in reg_params), reverse=True)
     nf = int(n_folds)
 
     def fit_group(pdf):
-        import pandas as pd
-
         g = _NpGroup(pdf, names, target, weight_col, offset_col, spec)
-        gkey = tuple(pdf[c].iloc[0] for c in gcols)
         fd = pdf["__fold"].to_numpy()
         states = []
         if g.clean() and bool(np.all((fd >= 0) & (fd < nf))):
@@ -2139,7 +2033,7 @@ def glm_elastic_net_cv_grouped(
                 # would break the cold-parity contract
                 mu = g.mu_at(s.beta)
                 mask = s.train[0]
-                recs.append(gkey + (
+                recs.append((
                     lam, int(s.j), int(s.n), int(g.n - s.n),
                     g.deviance(mu, mask), g.deviance(mu, ~mask),
                     _count_nonzero(names, s.beta), s.iters, bool(s.conv),
@@ -2153,15 +2047,16 @@ def glm_elastic_net_cv_grouped(
             except (ValueError, np.linalg.LinAlgError):
                 path = None
         if path is None:
-            rows = [gkey + (lam,) + (None,) * 8 for lam in lam_in]
-        else:
-            rows = [r for _lam, recs in path for r in recs]
-        return pd.DataFrame(rows, columns=schema.fieldNames())
+            return [(lam,) + (None,) * 8 for lam in lam_in]
+        return [r for _lam, recs in path for r in recs]
 
-    return _apply_grouped(
-        encoded, gcols,
+    return apply_grouped(
+        encoded, df.schema, group_cols,
         ["__fold", target, *x_cols, weight_col, offset_col],
-        fit_group, schema,
+        "reg_param double, fold int, n_train bigint, n_val bigint, "
+        "deviance_train double, deviance_val double, n_nonzero int, "
+        "iterations int, converged boolean",
+        fit_group,
     )
 
 

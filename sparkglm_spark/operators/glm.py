@@ -36,7 +36,13 @@ from sparkglm_spark.functions.encoding import (
     model_matrix_levels,
     omit_na,
 )
-from sparkglm_spark.functions.families import deviance_np, get_family
+from sparkglm_spark.functions.families import (
+    deviance_np,
+    get_family,
+    irls_mu_np,
+    irls_wz_np,
+    loglik_np,
+)
 from sparkglm_spark.functions.links import get_link
 from sparkglm_spark.operators.lm import (
     linear_combination,
@@ -45,6 +51,51 @@ from sparkglm_spark.operators.lm import (
 )
 from sparkglm_spark.plans.gram import gram_sums, gram_unpack
 from sparkglm_spark.plans.partitioning import collect_small, ensure_parallel
+
+
+def _check_iterations(exact_iterations: int | None, max_iter: int) -> None:
+    """The iteration-count guard of the unpenalized GLM entry points, run
+    on the driver before any job."""
+    if exact_iterations is not None and exact_iterations < 1:
+        raise ValueError(f"exact_iterations must be >= 1, got {exact_iterations}")
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+
+
+@dataclass
+class _IrlsRun:
+    beta: np.ndarray | None  # the last solve's β (None: no solve ran)
+    cov: object  # the last solve's second value ((X'WX)⁻¹ or None)
+    iters: int  # solves run
+    converged: bool
+    dev_start: float | None  # deviance at the start (the null deviance)
+    stats: object  # the breaking pass's statistics when converged
+
+
+def _irls(stats_at, solve, exact, tol, max_iter) -> _IrlsRun:
+    """The unpenalized GLM IRLS loop (fitSingleBinomial GLM.scala:254-315),
+    one for every backend. Each pass gets `stats_at(β) -> (deviance,
+    stats)` at the current β — at the caller's start μ when β is None —
+    and stops once |Δdeviance| ≤ `tol` from the second pass on (the
+    reference's absolute test, SURVEY §2.13.3); otherwise `solve(stats) ->
+    (β, cov)` runs and counts. `exact=N` runs exactly N solves with no
+    test. `stats_at` returning None (a non-finite deviance) ends the loop
+    unconverged."""
+    beta = cov = dev_prev = dev_start = None
+    n = 0
+    while n < (exact if exact is not None else max_iter):
+        got = stats_at(beta)
+        if got is None:
+            break
+        dev, stats = got
+        if dev_start is None:
+            dev_start = dev
+        if exact is None and dev_prev is not None and abs(dev - dev_prev) <= tol:
+            return _IrlsRun(beta, cov, n, True, dev_start, stats)
+        beta, cov = solve(stats)
+        dev_prev = dev
+        n += 1
+    return _IrlsRun(beta, cov, n, False, dev_start, None)
 
 
 @dataclass
@@ -107,6 +158,7 @@ class GLM:
         Zero weights are allowed (the row carries no information and is
         excluded from nobs, like R); null/negative weights and Σω ≤ 0
         raise upfront. Composes with `m_col` and `offset_col`."""
+        _check_iterations(exact_iterations, max_iter)
         fam = get_family(family, var_power, alpha=nb_alpha)
         if link is None:
             link = fam.default_link
@@ -177,33 +229,46 @@ class GLM:
                 return F.lit(y_mean)
             return lnk.unlink(linear_combination(x_cols, beta) + offset, m)
 
-        def dev_agg_expr(beta: np.ndarray | None) -> Column:
-            return (
-                F.lit(2.0) * F.sum(wr * fam.deviance_term(y, mu_expr(beta), m))
-            ).alias("dev")
+        def pearson_row(mu: Column) -> Column:  # GLM.scala:89-101
+            return wr * ((y - mu) * (y - mu) / fam.variance(mu, m))
 
-        # per-row loglik as a pure-SQL function of μ, when expressible:
-        # Bernoulli binomial (log C(1,y) = 0, GLM.scala:132-143); gaussian/
-        # gamma derive ll from the deviance so a zero placeholder suffices.
-        # Grouped binomial / poisson need lgamma (Arrow pandas UDF) and keep
-        # the separate stats pass instead of paying the UDF per iteration.
-        if fam.name == "binomial" and m_col is None:
+        # per-row loglik as a Column of μ: pure SQL for the Bernoulli
+        # binomial (log C(1,y) = 0, GLM.scala:132-143); grouped binomial,
+        # poisson and negbinomial need lgamma (`loglik_np` in an Arrow
+        # pandas UDF); a zero for the rest, whose ll derives from the
+        # deviance (gaussian, gamma) or does not exist (quasi, tweedie).
+        # The SQL forms ride every IRLS pass, so a converged fit runs no
+        # stats job; the UDF families (and tweedie) keep the separate
+        # stats pass instead of paying the UDF per pass.
+        bernoulli = fam.name == "binomial" and m_col is None
+        ll_udf_family = fam.name in ("binomial", "poisson", "negbinomial")
+        ll_per_pass = (
+            bernoulli
+            or fam.name in ("gaussian", "gamma")
+            or getattr(fam, "quasi", False)
+        )
 
-            def sql_ll_expr(mu: Column) -> Column:
+        def ll_row(mu: Column) -> Column:
+            if bernoulli:
                 p = mu / m
-                return F.when(y > 0, y * F.log(p)).otherwise(F.lit(0.0)) + F.when(
-                    m - y > 0, (m - y) * F.log(F.lit(1.0) - p)
-                ).otherwise(F.lit(0.0))
-
-        elif fam.name in ("gaussian", "gamma") or getattr(fam, "quasi", False):
-            # gaussian/gamma derive ll from the deviance; quasi families
-            # have no likelihood at all (ll/AIC are NaN) — a zero
-            # placeholder keeps the piggybacked stats row reusable
-            def sql_ll_expr(mu: Column) -> Column:
+                return F.when(y > 0, y * F.log(p)).otherwise(
+                    F.lit(0.0)
+                ) + F.when(m - y > 0, (m - y) * F.log(F.lit(1.0) - p)).otherwise(
+                    F.lit(0.0)
+                )
+            if not ll_udf_family:
                 return F.lit(0.0)
+            from pyspark.sql.functions import pandas_udf
 
-        else:
-            sql_ll_expr = None
+            name, a = fam.name, getattr(fam, "alpha", 1.0)
+
+            @pandas_udf("double")
+            def _ll(*cols: pd.Series) -> pd.Series:
+                # (y, m, μ) for grouped binomial, else (y, μ)
+                yv, *mv, muv = (c.to_numpy() for c in cols)
+                return pd.Series(loglik_np(name, yv, muv, *mv, nb_alpha=a))
+
+            return _ll(y, m, mu) if name == "binomial" else _ll(y, mu)
 
         def _proj_cols(mu: Column, eta: Column) -> list[Column]:
             """The z/w/devt/stats projection for a given μ/η pair
@@ -211,13 +276,9 @@ class GLM:
             grad = lnk.lprime(mu, m)
             w = wr / (fam.variance(mu, m) * grad * grad)
             z = eta + (y - mu) * grad - offset
-            extra = [
-                (wr * (((y - mu) * (y - mu)) / fam.variance(mu, m))).alias(
-                    "__pear"
-                )
-            ]
-            if sql_ll_expr is not None:
-                extra.append((wr * sql_ll_expr(mu)).alias("__ll"))
+            extra = [pearson_row(mu).alias("__pear")]
+            if ll_per_pass:
+                extra.append((wr * ll_row(mu)).alias("__ll"))
             return [
                 *[F.col(c) for c in x_cols],
                 w.alias("__w"),
@@ -236,7 +297,7 @@ class GLM:
             # already evaluated them at the FINAL β, so no extra stats job
             # runs (GLM.scala:89-101,132-143 semantics, one pass earlier)
             aggs.append(F.sum(F.col("__pear")).alias("pearson"))
-            if sql_ll_expr is not None:
+            if ll_per_pass:
                 aggs.append(F.sum(F.col("__ll")).alias("ll"))
             return aggs
 
@@ -274,113 +335,39 @@ class GLM:
             )
             return frame.select(*_it_cache["proj"]).agg(*_it_cache["aggs"])
 
-        # ---- IRLS loop: ONE job per iteration ---------------------------
-        beta: np.ndarray | None = None
-        xtwxi: np.ndarray | None = None
-        dev_prev: float | None = None
-        null_dev: float | None = None
-        n_iter = 0
-        converged = False
-        if exact_iterations is not None:
-            max_iter = exact_iterations
-        while n_iter < max_iter:
-            agg_row = collect_small(zw_gram_frame(beta))[0]
-            dev_cur = float(agg_row["dev"])  # deviance of CURRENT β's μ
-            if null_dev is None:
-                null_dev = dev_cur  # deviance at μ = ȳ (GLM.scala:271-272,443-444)
-            if (
-                exact_iterations is None
-                and dev_prev is not None
-                and abs(dev_cur - dev_prev) <= tol
-            ):
-                converged = True
-                break
-            xtwx, xtwz = gram_unpack(agg_row, k)
-            beta, xtwxi = solve_normal(xtwx, xtwz)
-            dev_prev = dev_cur
-            n_iter += 1
+        def stats_at(beta: np.ndarray | None):
+            row = collect_small(zw_gram_frame(beta))[0]
+            return float(row["dev"]), row  # deviance of THIS β's μ
+
+        def solve(row):
             if verbose:
-                print(f"iter {n_iter}: deviance={dev_cur:.10g}")
-        if not converged and n_iter >= max_iter and exact_iterations is None:
+                print(f"IRLS solve at deviance={float(row['dev']):.10g}")
+            return solve_normal(*gram_unpack(row, k))
+
+        # ---- IRLS loop: ONE job per iteration ---------------------------
+        run = _irls(stats_at, solve, exact_iterations, tol, max_iter)
+        beta, xtwxi = run.beta, run.cov
+        if not run.converged and exact_iterations is None:
             import warnings
 
             warnings.warn(f"IRLS did not converge in {max_iter} iterations")
-        deviance = dev_prev if dev_prev is not None else float(null_dev)
 
         # ---- final stats ------------------------------------------------
         # convergence exit: the breaking aggregation already evaluated the
         # piggybacked Pearson/loglik sums at the FINAL β — reuse that row
         # and run no extra stats job. Fixed-iteration / UDF-loglik paths
         # still run one fused stats pass at the final β.
-        mu = mu_expr(beta)
-        if converged and sql_ll_expr is not None:
-            stat_row = agg_row
+        if run.converged and ll_per_pass:
+            stat_row = run.stats
         else:
-            stat_row = None
-        var = fam.variance(mu, m)
-        pearson_e = (y - mu) * (y - mu) / var  # GLM.scala:89-101
-        if fam.name == "binomial" and m_col is None:
-            # Bernoulli: log C(1,y) = 0 → pure SQL loglik (GLM.scala:132-143)
-            p = mu / m
-            ll_e = F.when(y > 0, y * F.log(p)).otherwise(F.lit(0.0)) + F.when(
-                m - y > 0, (m - y) * F.log(F.lit(1.0) - p)
-            ).otherwise(F.lit(0.0))
-        elif fam.name == "binomial":
-            # grouped binomial: needs lgamma → Arrow-batched pandas UDF
-            from pyspark.sql.functions import pandas_udf
-
-            @pandas_udf("double")
-            def _logpmf(yv: pd.Series, mv: pd.Series, muv: pd.Series) -> pd.Series:
-                return pd.Series(
-                    special.binom_logpmf(
-                        yv.to_numpy(), mv.to_numpy(), muv.to_numpy() / mv.to_numpy()
-                    )
-                )
-
-            ll_e = _logpmf(y, m, mu)
-        elif fam.name == "poisson":
-            # y·log μ − μ − log(y!): lgamma → Arrow-batched pandas UDF
-            from pyspark.sql.functions import pandas_udf
-
-            @pandas_udf("double")
-            def _pois_ll(yv: pd.Series, muv: pd.Series) -> pd.Series:
-                yv, muv = yv.to_numpy(), muv.to_numpy()
-                return pd.Series(
-                    np.where(yv > 0, yv * np.log(muv), 0.0)
-                    - muv
-                    - special.lgamma(yv + 1.0)
-                )
-
-            ll_e = _pois_ll(y, mu)
-        elif fam.name == "negbinomial":
-            # exact NB2 pmf with fixed alpha: lnΓ(y+1/α) − lnΓ(1/α)
-            # − lnΓ(y+1) + y·ln(αμ/(1+αμ)) − (1/α)·ln(1+αμ)
-            from pyspark.sql.functions import pandas_udf
-
-            a = fam.alpha
-
-            @pandas_udf("double")
-            def _nb_ll(yv: pd.Series, muv: pd.Series) -> pd.Series:
-                yv, muv = yv.to_numpy(), muv.to_numpy()
-                ia = 1.0 / a
-                return pd.Series(
-                    special.lgamma(yv + ia)
-                    - special.lgamma(np.full_like(yv, ia))
-                    - special.lgamma(yv + 1.0)
-                    + np.where(yv > 0, yv * np.log(a * muv / (1.0 + a * muv)), 0.0)
-                    - ia * np.log(1.0 + a * muv)
-                )
-
-            ll_e = _nb_ll(y, mu)
-        else:  # gaussian/gamma: ll derives from the deviance (driver side /
-            # one extra SQL pass with the estimated dispersion)
-            ll_e = F.lit(0.0)
-        if stat_row is None:
+            mu = mu_expr(beta)
             stat_row = collect_small(
                 work.agg(
-                    F.sum(wr * pearson_e).alias("pearson"),
-                    F.sum(wr * ll_e).alias("ll"),
-                    dev_agg_expr(beta),
+                    F.sum(pearson_row(mu)).alias("pearson"),
+                    F.sum(wr * ll_row(mu)).alias("ll"),
+                    (F.lit(2.0) * F.sum(wr * fam.deviance_term(y, mu, m))).alias(
+                        "dev"
+                    ),
                 )
             )[0]
         pearson = float(stat_row["pearson"])
@@ -414,7 +401,8 @@ class GLM:
             shape = 1.0 / disp
             import math
 
-            ll_row = collect_small(
+            mu = mu_expr(beta)
+            ll_gamma = collect_small(
                 work.agg(
                     F.sum(
                         wr
@@ -426,7 +414,7 @@ class GLM:
                     ).alias("llp")
                 )
             )[0]
-            ll = float(ll_row["llp"]) - nw * math.lgamma(shape)
+            ll = float(ll_gamma["llp"]) - nw * math.lgamma(shape)
             aic = -2.0 * ll + 2.0 * (k + 1)  # dispersion counts as a param
         elif fam.name == "tweedie":
             # no closed-form density (Dunn-Smyth series out of scope);
@@ -458,14 +446,14 @@ class GLM:
             df_residual=float(df_residual),
             df_null=float(n_obs - 1),
             deviance=deviance,
-            null_deviance=float(null_dev),
+            null_deviance=run.dev_start,
             p_dispersion=pearson / df_residual,  # GLM.scala:69
             pearson=pearson,
             loglik=ll,
             family=fam.name,
             link=lnk.name,
             aic=aic,
-            iter=n_iter,
+            iter=run.iters,
             nrow=n,
             cov_params=np.asarray(xtwxi, dtype=np.float64),
         )
@@ -680,6 +668,7 @@ def glm(
     GLM.scala:475-995 collapses to keyword args — SURVEY §2.11 M7).
     `weight_col`: per-row prior weights (`GLM.fit` — the R glm(weights=) /
     MLlib GeneralizedLinearRegression weightCol conventions)."""
+    _check_iterations(exact_iterations, max_iter)
     extra = [c for c in (m_col, offset_col, weight_col) if c]
     encoded, target, x_cols, levels = _glm_design(df, formula, extra, na_action)
     model = GLM.fit(
@@ -757,9 +746,8 @@ def glm_grouped(
     Returns long format: group_cols…, term, estimate, deviance,
     iterations, n_rows.
     """
-    from pyspark.sql import types as T
-
-    from sparkglm_spark.operators.lm import _design
+    from sparkglm_spark.operators.lm import _design, _group_arrays
+    from sparkglm_spark.plans.partitioning import apply_grouped
 
     _defaults = {
         "binomial": "logit",
@@ -785,55 +773,23 @@ def glm_grouped(
         raise ValueError(f"var_power must be in (1, 2), got {var_power!r}")
     if nb_alpha <= 0:
         raise ValueError(f"nb_alpha must be > 0, got {nb_alpha!r}")
+    _check_iterations(exact_iterations, max_iter)
 
     encoded, x_cols, target = _design(
         df, formula, group_cols, na_action=na_action, weight_col=weight_col,
         offset_col=offset_col,
     )
     k = len(x_cols)
-    out_schema = T.StructType(
-        [df.schema[c] for c in group_cols]
-        + [
-            T.StructField("term", T.StringType()),
-            T.StructField("estimate", T.DoubleType()),
-            T.StructField("deviance", T.DoubleType()),
-            T.StructField("iterations", T.IntegerType()),
-            T.StructField("n_rows", T.LongType()),
-        ]
-    )
     names = list(x_cols)
-    gcols = list(group_cols)
     fam = family
     p_tw, a_nb = float(var_power), float(nb_alpha)
-    # fixed-iteration mode: run exactly N solves per group (deterministic
-    # trajectory for the driver's SQL oracle); convergence logic disabled
-    n_exact = exact_iterations
-
-    wname = weight_col
-    oname = offset_col
+    logit = fam in ("binomial", "quasibinomial")
 
     def fit_group(pdf):
-        import pandas as pd
-
-        X = pdf[names].to_numpy(dtype=np.float64)
-        y = pdf[target].to_numpy(dtype=np.float64)
+        X, y, wv, ov, ok = _group_arrays(
+            pdf, names, target, weight_col, offset_col
+        )
         n = len(y)
-        if wname is not None:
-            wv = pdf[wname].to_numpy(dtype=np.float64)
-            # boolean twin of check_weight_domain — grouped NULL policy
-            ok_w = (
-                bool(np.all(np.isfinite(wv)))
-                and bool(np.all(wv >= 0.0))
-                and float(wv.sum()) > 0.0
-            )
-        else:
-            wv = np.ones(n)
-            ok_w = True
-        if oname is not None:
-            ov = pdf[oname].to_numpy(dtype=np.float64)
-            ok_w = ok_w and bool(np.all(np.isfinite(ov)))
-        else:
-            ov = np.zeros(n)
         beta, dev, it = None, None, 0
         # family response domains: out-of-domain groups degenerate to NULL
         in_domain = (
@@ -842,92 +798,125 @@ def glm_grouped(
             else np.all(y >= 0)
             if fam in ("poisson", "quasipoisson", "tweedie", "negbinomial")
             else np.all((y >= 0) & (y <= 1))
-            if fam in ("binomial", "quasibinomial")
+            if logit
             else True
         )
         if (
             n >= k
-            and ok_w
+            and ok
             and np.all(np.isfinite(y))
             and np.all(np.isfinite(X))
             and in_domain
         ):
-            try:
-                if fam == "gaussian":
+            if fam == "gaussian":
+                try:
                     # identity link: the offset subtracts from the response
-                    ya = y - ov if oname is not None else y
+                    ya = y - ov
                     Xw0 = X * wv[:, None]
                     beta = np.linalg.solve(X.T @ Xw0, Xw0.T @ ya)
                     dev = float((wv * (ya - X @ beta) ** 2).sum())
                     it = 1
+                except np.linalg.LinAlgError:
+                    beta = None
+            else:
+                # per-row start: the clamped (y+½)/2 logit start, else y+½
+                if logit:
+                    mu = np.clip((y + 0.5) / 2.0, 1e-10, 1 - 1e-10)
+                    eta = np.log(mu / (1 - mu)) - ov
                 else:
-                    logit = fam in ("binomial", "quasibinomial")
-                    if logit:
-                        mu = np.clip((y + 0.5) / 2.0, 1e-10, 1 - 1e-10)
-                        eta = np.log(mu / (1 - mu)) - ov
-                    else:
-                        mu = y + 0.5
-                        eta = np.log(mu) - ov
+                    mu = y + 0.5
+                    eta = np.log(mu) - ov
+                fit = _np_glm_irls(
+                    fam, y, X, wv, ov, (mu, eta), exact_iterations, tol,
+                    max_iter, p_tw, a_nb,
+                )
+                it = fit.finite
+                # a non-converged fit (outside the fixed-iteration mode)
+                # or a non-finite deviance degenerates to NULL
+                if np.isfinite(fit.dev) and (
+                    exact_iterations is not None or fit.converged
+                ):
+                    beta, dev = fit.beta, fit.dev
+        return [
+            (
+                name,
+                float(beta[i]) if beta is not None else None,
+                dev if beta is not None else None,
+                it,
+                n,
+            )
+            for i, name in enumerate(names)
+        ]
 
-                    def weights(mu):
-                        # (dμ/dη)² / V(μ) at the default link
-                        if logit:
-                            return mu * (1 - mu)
-                        if fam in ("poisson", "quasipoisson"):
-                            return mu
-                        if fam == "gamma":      # μ²/μ²
-                            return np.ones_like(mu)
-                        if fam == "tweedie":    # μ²/μ^p
-                            return mu ** (2.0 - p_tw)
-                        return mu / (1.0 + a_nb * mu)  # negbinomial
-
-                    dev_old, delta = 1e308, 1.0
-                    it_cap = n_exact if n_exact is not None else max_iter
-                    while (
-                        n_exact is not None or abs(delta) > tol
-                    ) and it < it_cap:
-                        w = weights(mu)
-                        z = eta + (y - mu) / w if logit or fam in (
-                            "poisson", "quasipoisson"
-                        ) else eta + (y - mu) / mu  # log link: dη/dμ = 1/μ
-                        # z uses the LINK weight w alone; the prior ω folds
-                        # only into the normal equations (glm convention)
-                        Xw = X * (wv * w)[:, None]
-                        beta = np.linalg.solve(X.T @ Xw, Xw.T @ z)
-                        eta = X @ beta  # the LINEAR part; μ adds the offset
-                        ef = eta + ov if oname is not None else eta
-                        if logit:
-                            mu = np.clip(1.0 / (1.0 + np.exp(-ef)), 1e-10, 1 - 1e-10)
-                        else:
-                            mu = np.exp(ef)
-                        dev = deviance_np(fam, y, mu, wv, p_tw, a_nb)
-                        if not np.isfinite(dev):
-                            beta = None
-                            break
-                        it += 1
-                        delta = dev - dev_old
-                        dev_old = dev
-                    if n_exact is None and it >= max_iter:
-                        beta = None
-            except np.linalg.LinAlgError:
-                beta = None
-        cols = {c: [] for c in gcols}
-        cols.update(term=[], estimate=[], deviance=[], iterations=[], n_rows=[])
-        for i, name in enumerate(names):
-            for c in gcols:
-                cols[c].append(pdf[c].iloc[0])
-            cols["term"].append(name)
-            cols["estimate"].append(float(beta[i]) if beta is not None else None)
-            cols["deviance"].append(dev if beta is not None else None)
-            cols["iterations"].append(it)
-            cols["n_rows"].append(n)
-        return pd.DataFrame(cols)
-
-    from sparkglm_spark.plans.partitioning import fanout_groups
-
-    return fanout_groups(encoded, gcols).groupBy(*gcols).applyInPandas(
-        fit_group, out_schema
+    return apply_grouped(
+        encoded, df.schema, group_cols,
+        [target, *x_cols, weight_col, offset_col],
+        "term string, estimate double, deviance double, "
+        "iterations int, n_rows bigint",
+        fit_group,
     )
+
+
+@dataclass
+class _NpIrlsFit:
+    """`_np_glm_irls`'s result: β, (X'WX)⁻¹ of the last solve (with
+    `cov=True`), μ and the deviance at the final β."""
+
+    beta: np.ndarray | None = None  # None: no solve ran, or X'WX singular
+    cov: np.ndarray | None = None
+    mu: np.ndarray | None = None
+    dev: float = float("nan")
+    finite: int = 0  # solves whose deviance came out finite
+    converged: bool = False
+    loglik: float = float("nan")  # set by the caller that needs it
+    diverged: bool = False  # the loop stopped on a non-finite deviance
+    at: object = None  # the β of the latest evaluation
+
+
+def _np_glm_irls(
+    fam, y, X, w, o, start, exact, tol, max_iter, var_power=1.5,
+    nb_alpha=1.0, cov=False,
+) -> _NpIrlsFit:
+    """`_irls` over one group's numpy arrays at the family's default link
+    (`families.irls_mu_np`/`irls_wz_np`): `start` is the caller's
+    (μ, η_lin) for the first pass, the prior ω folds into the normal
+    equations only (z uses the link weight alone, the glm convention), a
+    non-finite deviance ends the loop and a singular X'WX leaves β None."""
+    fit = _NpIrlsFit()
+
+    def at(beta):
+        if beta is None:
+            mu, eta = start
+        else:
+            eta = X @ beta  # the LINEAR part; μ adds the offset
+            mu = irls_mu_np(fam, eta + o)
+        fit.at, fit.mu = beta, mu
+        fit.dev = deviance_np(fam, y, mu, w, var_power, nb_alpha)
+        fit.finite += beta is not None and bool(np.isfinite(fit.dev))
+        return mu, eta
+
+    def stats_at(beta):
+        mu, eta = at(beta)
+        if not np.isfinite(fit.dev):
+            return None
+        wk, z = irls_wz_np(fam, y, mu, eta, var_power, nb_alpha)
+        Xw = X * (w * wk)[:, None]
+        return fit.dev, (X.T @ Xw, Xw.T @ z)
+
+    def solve(stats):
+        xtwx, xtwz = stats
+        beta = np.linalg.solve(xtwx, xtwz)
+        return beta, np.linalg.inv(xtwx) if cov else None
+
+    try:
+        run = _irls(stats_at, solve, exact, tol, max_iter)
+    except np.linalg.LinAlgError:
+        return fit
+    fit.beta, fit.cov, fit.converged = run.beta, run.cov, run.converged
+    fit.diverged = not np.isfinite(fit.dev)
+    if run.beta is not None and fit.at is not run.beta:
+        at(run.beta)  # the loop's last pass evaluated the previous β
+    return fit
 
 
 def likelihood_ratio_test(reduced: GLM, full: GLM) -> dict:
@@ -1025,41 +1014,44 @@ def _nb2_theta_step_stats(
         # the ψ/ψ′ sums must too — substitute 0 so the F.sum(wr * NULL)
         # skip happens via the companion NULL product instead of a NaN
         # poisoning the aggregate
-        @pandas_udf("double")
-        def _dig(yv: pd.Series) -> pd.Series:
-            v = yv.to_numpy(dtype=np.float64)
-            bad = ~np.isfinite(v)
-            out = special.digamma(thv + np.where(bad, 0.0, v))
-            return pd.Series(np.where(bad, 0.0, out))
+        def _at_theta_plus_y(fn):
+            @pandas_udf("double")
+            def _udf(yv: pd.Series) -> pd.Series:
+                v = yv.to_numpy(dtype=np.float64)
+                bad = ~np.isfinite(v)
+                out = fn(thv + np.where(bad, 0.0, v))
+                return pd.Series(np.where(bad, 0.0, out))
 
-        @pandas_udf("double")
-        def _tri(yv: pd.Series) -> pd.Series:
-            v = yv.to_numpy(dtype=np.float64)
-            bad = ~np.isfinite(v)
-            out = special.trigamma(thv + np.where(bad, 0.0, v))
-            return pd.Series(np.where(bad, 0.0, out))
+            return _udf
 
         aggs += [
-            F.sum(wr * _dig(y)).alias("s_dig"),
-            F.sum(wr * _tri(y)).alias("s_tri"),
+            F.sum(wr * _at_theta_plus_y(special.digamma)(y)).alias("s_dig"),
+            F.sum(wr * _at_theta_plus_y(special.trigamma)(y)).alias("s_tri"),
         ]
     # a NULL y row (na_action='keep') carries no θ information — drop it
     # from EVERY sum of this aggregation (Spark would skip it from the
     # y-dependent sums anyway; the filter keeps sw and the μ-only sums
     # consistent with that, and mirrors the histogram's dropped NULL key)
-    row = work.where(y.isNotNull()).agg(*aggs).collect()[0]
+    row = collect_small(work.where(y.isNotNull()).agg(*aggs))[0]
     sw = float(row["sw"])
     if hist is None:
         dig = float(row["s_dig"]) - sw * float(special.digamma(th))
         tri = sw * float(special.trigamma(th)) - float(row["s_tri"])
     else:
         dig, tri = _nb2_theta_terms(th, hist[0], hist[1], sw)
+    sums = [float(row[c]) for c in ("sw", "s_log", "s_rat", "s_rat2", "s_inv")]
+    return _nb2_score_info(th, sums, dig, tri)
+
+
+def _nb2_score_info(th: float, sums, dig: float, tri: float):
+    """The θ-score and observed information of `_nb2_theta_step_stats`
+    from its μ-sums (Σω, Σω·ln(θ+μ), Σω·r, Σω·r/(θ+μ), Σω/(θ+μ) with
+    r = (θ+y)/(θ+μ)) and the ψ/ψ′ terms (`_nb2_theta_terms`)."""
     import math
 
-    score = dig + sw * (math.log(th) + 1.0) - float(row["s_log"]) - float(
-        row["s_rat"]
-    )
-    info = tri - sw / th + 2.0 * float(row["s_inv"]) - float(row["s_rat2"])
+    sw, s_log, s_rat, s_rat2, s_inv = sums
+    score = dig + sw * (math.log(th) + 1.0) - s_log - s_rat
+    info = tri - sw / th + 2.0 * s_inv - s_rat2
     return score, info
 
 
@@ -1096,6 +1088,51 @@ def _nb2_theta_newton(
         if steps is None and abs(delta) <= tol * (1.0 + abs(th)):
             break
     return th, info
+
+
+def _nb2_pins(exact_iterations, max_iter, irls_iterations, theta_iterations):
+    """`glm_nb`'s iteration check and its pin-mode defaults: with
+    `exact_iterations` set, 4 IRLS solves and 2 θ-updates per round
+    unless given. Returns (irls_iterations, theta_iterations)."""
+    _check_iterations(exact_iterations, max_iter)
+    if exact_iterations is None:
+        return irls_iterations, theta_iterations
+    return (
+        4 if irls_iterations is None else irls_iterations,
+        2 if theta_iterations is None else theta_iterations,
+    )
+
+
+def _nb2_alternate(
+    fit_at, theta_stats_at, fit, th, exact, max_iter, tol, theta_iterations,
+    theta_tol, theta_max_iter,
+):
+    """MASS glm.nb's alternation, one for `glm_nb` and its numpy twin:
+    from the poisson `fit` and the moment start θ, each round runs the
+    θ-Newton at the current fit's μ (`theta_stats_at(fit) -> step_stats`)
+    and then the β-IRLS at α = 1/θ (`fit_at(α)`, None aborts the fit),
+    until |Δ(2ℓ)| ≤ `tol` on the fits' `loglik` — or exactly `exact`
+    rounds. Returns (fit, θ, observed info at the final (β̂, θ̂), rounds,
+    converged), or None."""
+    n, converged, ll_prev = 0, exact is not None, None
+    while n < (exact if exact is not None else max_iter):
+        th, _ = _nb2_theta_newton(
+            theta_stats_at(fit), th, theta_iterations, theta_tol,
+            theta_max_iter,
+        )
+        fit = fit_at(1.0 / th)
+        if fit is None:
+            return None
+        n += 1
+        if exact is None and ll_prev is not None and abs(
+            2.0 * (fit.loglik - ll_prev)
+        ) <= tol:
+            converged = True
+            break
+        ll_prev = fit.loglik
+    # β moved after the last θ-update: refresh the info once for SE(θ)
+    _, info = theta_stats_at(fit)(th)
+    return fit, th, info, n, converged
 
 
 def glm_nb(
@@ -1150,14 +1187,9 @@ def glm_nb(
 
     Extra attributes on the returned GLM: `theta`, `se_theta`,
     `nb_alpha` (= 1/θ̂), `outer_iter`."""
-    pin = exact_iterations is not None
-    if pin and exact_iterations < 1:
-        raise ValueError(f"exact_iterations must be >= 1, got {exact_iterations}")
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    if pin:
-        irls_iterations = 4 if irls_iterations is None else irls_iterations
-        theta_iterations = 2 if theta_iterations is None else theta_iterations
+    irls_iterations, theta_iterations = _nb2_pins(
+        exact_iterations, max_iter, irls_iterations, theta_iterations
+    )
     extra = [c for c in (offset_col, weight_col) if c]
     encoded, target, x_cols, levels = _glm_design(df, formula, extra, na_action)
     work = ensure_parallel(
@@ -1184,10 +1216,10 @@ def glm_nb(
         )
         if len(hrows) > hist_limit:
             hist = None  # fall back to the pandas-UDF ψ/ψ′ aggregation
-            grow = work.agg(
+            grow = collect_small(work.agg(
                 F.min(y).alias("miny"),
                 F.sum((y != F.floor(y)).cast("long")).alias("nonint"),
-            ).collect()[0]
+            ))[0]
             miny = grow["miny"]
             n_nonint = int(grow["nonint"] or 0)
         else:
@@ -1224,56 +1256,31 @@ def glm_nb(
                 nb_alpha=1.0 if alpha is None else alpha,
             )
 
-        def mu_of(beta: np.ndarray):
-            return F.exp(linear_combination(x_cols, beta) + offset)
+        def theta_stats_at(f: GLM):
+            mu = F.exp(linear_combination(x_cols, f.coefs) + offset)
+            return lambda t: _nb2_theta_step_stats(work, y, mu, wr, t, hist)
 
         # ---- init: poisson μ, moment θ₀ (MASS theta.ml start) --------
         pois = fit_at(None)
-        beta = pois.coefs
-        mu = mu_of(beta)
-        mrow = work.where(y.isNotNull()).agg(
+        mu = F.exp(linear_combination(x_cols, pois.coefs) + offset)
+        mrow = collect_small(work.where(y.isNotNull()).agg(
             F.sum(wr).alias("sw"),
             F.sum(wr * (y / mu - F.lit(1.0)) * (y / mu - F.lit(1.0))).alias(
                 "s2"
             ),
-        ).collect()[0]
+        ))[0]
         s2 = float(mrow["s2"])
         th = float(mrow["sw"]) / s2 if np.isfinite(s2) and s2 > 0 else 1.0
 
         # ---- alternate θ-Newton / β-IRLS ------------------------------
-        outer_cap = exact_iterations if pin else max_iter
-        ll_prev: float | None = None
-        fit: GLM | None = None
-        n_outer = 0
-        converged = pin
-        info = float("nan")
-        while n_outer < outer_cap:
-            mu = mu_of(beta)
-            th, info = _nb2_theta_newton(
-                lambda t: _nb2_theta_step_stats(work, y, mu, wr, t, hist),
-                th,
-                theta_iterations,
-                theta_tol,
-                theta_max_iter,
-            )
-            fit = fit_at(1.0 / th)
-            beta = fit.coefs
-            n_outer += 1
-            if (
-                not pin
-                and ll_prev is not None
-                and abs(2.0 * (fit.loglik - ll_prev)) <= tol
-            ):
-                converged = True
-                break
-            ll_prev = fit.loglik
+        fit, th, info, n_outer, converged = _nb2_alternate(
+            fit_at, theta_stats_at, pois, th, exact_iterations, max_iter,
+            tol, theta_iterations, theta_tol, theta_max_iter,
+        )
         if not converged:
             import warnings
 
             warnings.warn(f"glm_nb did not converge in {max_iter} alternations")
-        # observed info at the FINAL (β̂, θ̂) — β moved after the last
-        # θ-update, so refresh once for SE(θ) (one small job)
-        _, info = _nb2_theta_step_stats(work, y, mu_of(beta), wr, th, hist)
     finally:
         work.unpersist()
     fit.levels = levels
@@ -1314,14 +1321,9 @@ def _np_glm_nb(
     fixed-iteration runs agree with the distributed fit to float
     round-off. Used by `glm_nb_grouped`'s per-group kernel and the test
     twins. Returns None on a degenerate fit (singular / non-finite)."""
-    pin = exact_iterations is not None
-    if pin and exact_iterations < 1:
-        raise ValueError(f"exact_iterations must be >= 1, got {exact_iterations}")
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    if pin:
-        irls_iterations = 4 if irls_iterations is None else irls_iterations
-        theta_iterations = 2 if theta_iterations is None else theta_iterations
+    irls_iterations, theta_iterations = _nb2_pins(
+        exact_iterations, max_iter, irls_iterations, theta_iterations
+    )
     # integer-dtype y would truncate θ inside np.full_like (review r14 #3)
     y = np.asarray(y, dtype=np.float64)
     X = np.asarray(X, dtype=np.float64)
@@ -1329,156 +1331,60 @@ def _np_glm_nb(
     w = np.ones(n) if w is None else np.asarray(w, dtype=np.float64)
     offset = np.zeros(n) if offset is None else np.asarray(offset, dtype=np.float64)
     sw = float(w.sum())
+    # GLM.fit's start: μ = Σωy/Σω (constant), log link
+    mu0 = np.full(n, float((w * y).sum()) / sw)
+    start = (mu0, np.log(mu0) - offset)
 
-    def irls(alpha: float | None) -> tuple | None:
-        # mirrors GLM.fit: init μ = Σωy/Σω (constant), log link
-        beta, dev_prev, it = None, None, 0
-        xtwxi = None
-        cap = irls_iterations if irls_iterations is not None else irls_max_iter
-        while it < cap:
-            if beta is None:
-                mu = np.full(n, float((w * y).sum()) / sw)
-                eta = np.log(mu)
-            else:
-                eta = X @ beta + offset
-                mu = np.exp(eta)
-            if alpha is None:  # poisson
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    t1 = np.where(y > 0, y * np.log(y / mu), 0.0)
-                dev = float(2.0 * (w * (t1 - (y - mu))).sum())
-                wk = mu
-            else:
-                a = alpha
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    ratio = (1.0 + a * y) / (1.0 + a * mu)
-                    full = np.where(
-                        y > 0, y * np.log(np.where(y > 0, y, 1.0) / mu), 0.0
-                    ) - (y + 1.0 / a) * np.log(ratio)
-                    zero = (1.0 / a) * np.log(1.0 + a * mu)
-                dev = float(2.0 * (w * np.where(y == 0, zero, full)).sum())
-                wk = mu / (1.0 + a * mu)
-            if not np.isfinite(dev):
-                return None
-            if (
-                irls_iterations is None
-                and dev_prev is not None
-                and abs(dev - dev_prev) <= irls_tol
-            ):
-                break
-            z = eta + (y - mu) / mu - offset  # log link: dη/dμ = 1/μ
-            Xw = X * (w * wk)[:, None]
-            try:
-                xtwx = X.T @ Xw
-                beta = np.linalg.solve(xtwx, Xw.T @ z)
-                xtwxi = np.linalg.inv(xtwx)
-            except np.linalg.LinAlgError:
-                return None
-            dev_prev = dev
-            it += 1
-        if beta is None:
+    def irls(alpha: float | None) -> _NpIrlsFit | None:
+        fit = _np_glm_irls(
+            "poisson" if alpha is None else "negbinomial", y, X, w, offset,
+            start, irls_iterations, irls_tol, irls_max_iter,
+            nb_alpha=1.0 if alpha is None else alpha, cov=True,
+        )
+        if fit.beta is None or fit.diverged:
             return None
-        eta = X @ beta + offset
-        mu = np.exp(eta)
-        if alpha is None:
-            ll = float("nan")
-            with np.errstate(divide="ignore", invalid="ignore"):
-                t1 = np.where(y > 0, y * np.log(y / mu), 0.0)
-            dev = float(2.0 * (w * (t1 - (y - mu))).sum())
-        else:
-            a = alpha
-            ia = 1.0 / a
-            ll = float(
-                (
-                    w
-                    * (
-                        special.lgamma(y + ia)
-                        - special.lgamma(np.full_like(y, ia))
-                        - special.lgamma(y + 1.0)
-                        + np.where(
-                            y > 0, y * np.log(a * mu / (1.0 + a * mu)), 0.0
-                        )
-                        - ia * np.log(1.0 + a * mu)
-                    )
-                ).sum()
+        if alpha is not None:
+            fit.loglik = float(
+                (w * loglik_np("negbinomial", y, fit.mu, None, alpha)).sum()
             )
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ratio = (1.0 + a * y) / (1.0 + a * mu)
-                full = np.where(
-                    y > 0, y * np.log(np.where(y > 0, y, 1.0) / mu), 0.0
-                ) - (y + 1.0 / a) * np.log(ratio)
-                zero = (1.0 / a) * np.log(1.0 + a * mu)
-            dev = float(2.0 * (w * np.where(y == 0, zero, full)).sum())
-        return beta, mu, dev, ll, xtwxi, it
+        return fit
 
     def step_stats_at(mu):
         def step_stats(t):
-            score = float(
-                (
-                    w
-                    * (
-                        special.digamma(t + y)
-                        - special.digamma(np.full_like(y, t))
-                        + np.log(t)
-                        + 1.0
-                        - np.log(t + mu)
-                        - (t + y) / (t + mu)
-                    )
-                ).sum()
-            )
-            info = float(
-                (
-                    w
-                    * (
-                        special.trigamma(np.full_like(y, t))
-                        - special.trigamma(t + y)
-                        - 1.0 / t
-                        + 2.0 / (t + mu)
-                        - (t + y) / (t + mu) ** 2
-                    )
-                ).sum()
-            )
-            return score, info
+            ratio = (y + t) / (mu + t)
+            sums = [
+                sw,
+                float((w * np.log(mu + t)).sum()),
+                float((w * ratio).sum()),
+                float((w * ratio / (mu + t)).sum()),
+                float((w / (mu + t)).sum()),
+            ]
+            return _nb2_score_info(t, sums, *_nb2_theta_terms(t, y, w, sw))
 
         return step_stats
 
-    base = irls(None)
-    if base is None:
+    pois = irls(None)
+    if pois is None:
         return None
-    beta, mu = base[0], base[1]
-    s2 = float((w * (y / mu - 1.0) ** 2).sum())
+    s2 = float((w * (y / pois.mu - 1.0) ** 2).sum())
     th = sw / s2 if np.isfinite(s2) and s2 > 0 else 1.0
-    outer_cap = exact_iterations if pin else max_iter
-    ll_prev, n_outer, res = None, 0, None
-    converged = pin
-    while n_outer < outer_cap:
-        th, info = _nb2_theta_newton(
-            step_stats_at(np.exp(X @ beta + offset)),
-            th,
-            theta_iterations,
-            theta_tol,
-            theta_max_iter,
-        )
-        res = irls(1.0 / th)
-        if res is None:
-            return None
-        beta = res[0]
-        n_outer += 1
-        if not pin and ll_prev is not None and abs(2.0 * (res[3] - ll_prev)) <= tol:
-            converged = True
-            break
-        ll_prev = res[3]
-    _, info = step_stats_at(np.exp(X @ beta + offset))(th)
-    beta, _, dev, ll, xtwxi, it = res
+    got = _nb2_alternate(
+        irls, lambda f: step_stats_at(f.mu), pois, th, exact_iterations,
+        max_iter, tol, theta_iterations, theta_tol, theta_max_iter,
+    )
+    if got is None:
+        return None
+    fit, th, info, n_outer, converged = got
     return {
-        "beta": beta,
-        "se": np.sqrt(np.diag(xtwxi)),
+        "beta": fit.beta,
+        "se": np.sqrt(np.diag(fit.cov)),
         "theta": th,
         "se_theta": float(1.0 / np.sqrt(info))
         if np.isfinite(info) and info > 0 and th < 1e7
         else None,
-        "loglik": ll,
-        "deviance": dev,
-        "aic": -2.0 * ll + 2.0 * k + 2.0,
+        "loglik": fit.loglik,
+        "deviance": fit.dev,
+        "aic": -2.0 * fit.loglik + 2.0 * k + 2.0,
         "outer_iter": n_outer,
         "converged": converged,
     }
@@ -1509,56 +1415,24 @@ def glm_nb_grouped(
 
     Returns long format: group_cols…, term, estimate, se, theta,
     se_theta, loglik, deviance, iterations, n_rows."""
-    from pyspark.sql import types as T
+    from sparkglm_spark.operators.lm import _design, _group_arrays
+    from sparkglm_spark.plans.partitioning import apply_grouped
 
-    from sparkglm_spark.operators.lm import _design
-
+    _check_iterations(exact_iterations, max_iter)
     encoded, x_cols, target = _design(
         df, formula, group_cols, na_action=na_action, weight_col=weight_col,
         offset_col=offset_col,
     )
     k = len(x_cols)
-    out_schema = T.StructType(
-        [df.schema[c] for c in group_cols]
-        + [
-            T.StructField("term", T.StringType()),
-            T.StructField("estimate", T.DoubleType()),
-            T.StructField("se", T.DoubleType()),
-            T.StructField("theta", T.DoubleType()),
-            T.StructField("se_theta", T.DoubleType()),
-            T.StructField("loglik", T.DoubleType()),
-            T.StructField("deviance", T.DoubleType()),
-            T.StructField("iterations", T.IntegerType()),
-            T.StructField("n_rows", T.LongType()),
-        ]
-    )
     names = list(x_cols)
-    gcols = list(group_cols)
-    wname, oname = weight_col, offset_col
-    e_it, i_it, t_it = exact_iterations, irls_iterations, theta_iterations
-    tol_, max_ = tol, max_iter
 
     def fit_group(pdf):
-        X = pdf[names].to_numpy(dtype=np.float64)
-        yv = pdf[target].to_numpy(dtype=np.float64)
+        X, yv, wv, ov, ok = _group_arrays(
+            pdf, names, target, weight_col, offset_col
+        )
         n = len(yv)
-        ok = n >= k and bool(np.all(np.isfinite(X)))
+        ok = ok and n >= k and bool(np.all(np.isfinite(X)))
         ok = ok and bool(np.all(np.isfinite(yv))) and bool(np.all(yv >= 0))
-        if wname is not None:
-            wv = pdf[wname].to_numpy(dtype=np.float64)
-            ok = (
-                ok
-                and bool(np.all(np.isfinite(wv)))
-                and bool(np.all(wv >= 0.0))
-                and float(wv.sum()) > 0.0
-            )
-        else:
-            wv = None
-        if oname is not None:
-            ov = pdf[oname].to_numpy(dtype=np.float64)
-            ok = ok and bool(np.all(np.isfinite(ov)))
-        else:
-            ov = None
         res = None
         if ok:
             import warnings
@@ -1566,39 +1440,27 @@ def glm_nb_grouped(
             with warnings.catch_warnings():
                 warnings.simplefilter("ignore")
                 res = _np_glm_nb(
-                    yv, X, wv, ov, tol=tol_, max_iter=max_,
-                    exact_iterations=e_it, irls_iterations=i_it,
-                    theta_iterations=t_it,
+                    yv, X, wv, ov, tol=tol, max_iter=max_iter,
+                    exact_iterations=exact_iterations,
+                    irls_iterations=irls_iterations,
+                    theta_iterations=theta_iterations,
                 )
-        cols = {c: [] for c in gcols}
-        cols.update(
-            term=[], estimate=[], se=[], theta=[], se_theta=[], loglik=[],
-            deviance=[], iterations=[], n_rows=[],
-        )
-        for i, name in enumerate(names):
-            for c in gcols:
-                cols[c].append(pdf[c].iloc[0])
-            cols["term"].append(name)
-            cols["estimate"].append(
-                float(res["beta"][i]) if res is not None else None
+        if res is None:
+            return [(nm,) + (None,) * 6 + (0, n) for nm in names]
+        return [
+            (
+                nm, float(res["beta"][i]), float(res["se"][i]), res["theta"],
+                res["se_theta"], res["loglik"], res["deviance"],
+                int(res["outer_iter"]), n,
             )
-            cols["se"].append(float(res["se"][i]) if res is not None else None)
-            cols["theta"].append(res["theta"] if res is not None else None)
-            cols["se_theta"].append(
-                res["se_theta"] if res is not None else None
-            )
-            cols["loglik"].append(res["loglik"] if res is not None else None)
-            cols["deviance"].append(
-                res["deviance"] if res is not None else None
-            )
-            cols["iterations"].append(
-                int(res["outer_iter"]) if res is not None else 0
-            )
-            cols["n_rows"].append(n)
-        return pd.DataFrame(cols)
+            for i, nm in enumerate(names)
+        ]
 
-    from sparkglm_spark.plans.partitioning import fanout_groups
-
-    return fanout_groups(encoded, gcols).groupBy(*gcols).applyInPandas(
-        fit_group, out_schema
+    return apply_grouped(
+        encoded, df.schema, group_cols,
+        [target, *x_cols, weight_col, offset_col],
+        "term string, estimate double, se double, theta double, "
+        "se_theta double, loglik double, deviance double, "
+        "iterations int, n_rows bigint",
+        fit_group,
     )

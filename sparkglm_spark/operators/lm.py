@@ -566,6 +566,26 @@ def _design(
     return data.select(*exprs), x_cols, parsed.target
 
 
+def _group_arrays(pdf, names, target, weight_col=None, offset_col=None):
+    """One group's design arrays from its Arrow batch, as `_design` laid
+    them out: (X, y, ω, offset, ok) with ω all ones without `weight_col`
+    and the offset all zeros without `offset_col`. `ok` is the grouped
+    NULL verdict on ω and the offset — the boolean twin of
+    `check_weight_domain` (ω finite, ≥ 0, Σω > 0) plus a finite offset."""
+    X = pdf[names].to_numpy(dtype=np.float64)
+    y = pdf[target].to_numpy(dtype=np.float64)
+    n = len(y)
+    w = pdf[weight_col].to_numpy(dtype=np.float64) if weight_col else np.ones(n)
+    o = pdf[offset_col].to_numpy(dtype=np.float64) if offset_col else np.zeros(n)
+    ok = bool(
+        np.all(np.isfinite(w))
+        and np.all(w >= 0.0)
+        and float(w.sum()) > 0.0
+        and np.all(np.isfinite(o))
+    )
+    return X, y, w, o, ok
+
+
 def lm_grouped(
     df: DataFrame,
     formula: str,
@@ -1100,6 +1120,55 @@ class QuantileLM:
         return df.withColumn(output_col, expr)
 
 
+def _reweighted_ls(step_at, beta, exact, tol, max_iter):
+    """The robust reweighted-least-squares loop of `huber_lm`,
+    `quantile_lm` and their grouped twins: `step_at(β) -> β′` is one
+    reweighted solve, or None to stop with the current β (Huber's zero
+    scale). Stops once max|Δβ| ≤ tol·max(1, max|β|), or after exactly
+    `exact` steps with no test (reported converged). Returns
+    (β, steps, converged)."""
+    n, converged = 0, False
+    for _ in range(exact if exact is not None else max_iter):
+        new = step_at(beta)
+        if new is None:
+            break
+        step = float(np.max(np.abs(new - beta)))
+        beta = np.asarray(new, dtype=np.float64)
+        n += 1
+        if exact is None and step <= tol * max(1.0, float(np.max(np.abs(beta)))):
+            converged = True
+            break
+    return beta, n, converged or exact is not None
+
+
+def _robust_frame(df, formula, na_action, weight_col):
+    """The robust fitters' persisted working frame (response, design and
+    weight columns, fanned out once): (work, x_cols, target, levels)."""
+    from sparkglm_spark.plans.partitioning import ensure_parallel
+
+    encoded, x_cols, target, levels = _encode_formula(
+        df, formula, na_action,
+        extra_cols=[weight_col] if weight_col else None,
+    )
+    keep = [target, *x_cols] + ([weight_col] if weight_col else [])
+    return ensure_parallel(encoded.select(*keep)).persist(), x_cols, target, levels
+
+
+def _wls_step(work: DataFrame, x_cols: list[str], target: str, w: Column):
+    """One Spark reweighted solve: the weighted Gram under the weight
+    Column `w`, then the normal equations."""
+    g = gram_aggregate(
+        work.withColumn("__w", w), x_cols, y_col=target, weight_col="__w"
+    )
+    return solve_normal(g.xtx, g.xty)[0]
+
+
+def _np_wls(X, y, w):
+    """The numpy twin of `_wls_step` (a singular Gram raises)."""
+    Xw = X * w[:, None]
+    return np.linalg.solve(X.T @ Xw, Xw.T @ y)
+
+
 def quantile_lm(
     df: DataFrame,
     formula: str,
@@ -1154,17 +1223,11 @@ def quantile_lm(
     WLS start's shared guard."""
     if not 0.0 < q < 1.0:
         raise ValueError(f"q must be in (0, 1), got {q!r}")
-    from sparkglm_spark.plans.gram import gram_aggregate
-    from sparkglm_spark.plans.partitioning import ensure_parallel
-
-    encoded, x_cols, target, levels = _encode_formula(
-        df, formula, na_action,
-        extra_cols=[weight_col] if weight_col else None,
+    work, x_cols, target, levels = _robust_frame(
+        df, formula, na_action, weight_col
     )
     y = F.col(target).cast("double")
     wr = F.col(weight_col).cast("double") if weight_col else None
-    keep = [target, *x_cols] + ([weight_col] if weight_col else [])
-    work = ensure_parallel(encoded.select(*keep)).persist()
     try:
         start = LM.fit(work, y_col=target, x_cols=x_cols, weight_col=weight_col)
         beta = np.asarray(start.coefs, dtype=np.float64)
@@ -1174,36 +1237,23 @@ def quantile_lm(
             # aggregation, sets the smoothing floor relative to the noise
             abs_e0 = F.abs(y - linear_combination(x_cols, beta))
             if wr is not None:
-                srow = work.agg(
-                    (F.sum(wr * abs_e0) / F.sum(wr)).alias("s")
-                ).collect()[0]
+                s_e = F.sum(wr * abs_e0) / F.sum(wr)
             else:
-                srow = work.agg(F.avg(abs_e0).alias("s")).collect()[0]
+                s_e = F.avg(abs_e0)
+            srow = collect_small(work.agg(s_e.alias("s")))[0]
             delta = max(1e-6 * float(srow["s"]), 1e-12)
         if not delta > 0:
             raise ValueError(f"delta must be > 0, got {delta!r}")
-        n_iter = 0
-        converged = False
-        iters = exact_iterations if exact_iterations is not None else max_iter
-        for _ in range(iters):
-            resid = y - linear_combination(x_cols, beta)
+
+        def step_at(b):
+            resid = y - linear_combination(x_cols, b)
             asym = F.when(resid < 0, F.lit(1.0 - q)).otherwise(F.lit(q))
             w = asym / F.greatest(F.abs(resid), F.lit(float(delta)))
-            if wr is not None:
-                w = wr * w
-            g = gram_aggregate(
-                work.withColumn("__w", w), x_cols, y_col=target,
-                weight_col="__w",
-            )
-            new_beta, _ = solve_normal(g.xtx, g.xty)
-            step = float(np.max(np.abs(new_beta - beta)))
-            beta = np.asarray(new_beta, dtype=np.float64)
-            n_iter += 1
-            if exact_iterations is None and step <= tol * max(
-                1.0, float(np.max(np.abs(beta)))
-            ):
-                converged = True
-                break
+            return _wls_step(work, x_cols, target, w if wr is None else wr * w)
+
+        beta, n_iter, converged = _reweighted_ls(
+            step_at, beta, exact_iterations, tol, max_iter
+        )
     finally:
         work.unpersist()
     return QuantileLM(
@@ -1213,7 +1263,7 @@ def quantile_lm(
         q=float(q),
         iter=n_iter,
         nrow=n,
-        converged=converged or exact_iterations is not None,
+        converged=converged,
         levels=levels,
         call=f"quantile_lm({formula}, q={q})",
     )
@@ -1295,26 +1345,20 @@ def huber_lm(
             "median_mode='approx' does not support weight_col (the "
             "t-digest sketch has no frequency argument) — use 'exact'"
         )
-    from sparkglm_spark.plans.gram import gram_aggregate
-    from sparkglm_spark.plans.partitioning import ensure_parallel
-
-    encoded, x_cols, target, levels = _encode_formula(
-        df, formula, na_action,
-        extra_cols=[weight_col] if weight_col else None,
+    work, x_cols, target, levels = _robust_frame(
+        df, formula, na_action, weight_col
     )
     y = F.col(target).cast("double")
     wr = F.col(weight_col).cast("double") if weight_col else None
-    keep = [target, *x_cols] + ([weight_col] if weight_col else [])
-    work = ensure_parallel(encoded.select(*keep)).persist()
     try:
         if wr is not None:
             # frequency-weight domain: positive integers (one aggregation;
             # null/NaN/negative/Σω ≤ 0 raise via the WLS start's guard)
-            vrow = work.agg(
+            vrow = collect_small(work.agg(
                 F.sum(
                     ((wr != F.floor(wr)) | (wr < 1.0)).cast("long")
                 ).alias("bad")
-            ).collect()[0]
+            ))[0]
             if vrow["bad"]:
                 raise ValueError(
                     f"huber_lm weight_col {weight_col!r} must hold positive "
@@ -1329,12 +1373,11 @@ def huber_lm(
             median_mode == "approx"
             or (median_mode == "auto" and n >= 5_000_000)
         )
-        n_iter = 0
-        converged = False
         scale = float("nan")
-        iters = exact_iterations if exact_iterations is not None else max_iter
-        for _ in range(iters):
-            resid = y - linear_combination(x_cols, beta)
+
+        def step_at(b):
+            nonlocal scale
+            resid = y - linear_combination(x_cols, b)
             abs_e = F.abs(resid)
             if use_approx:
                 med = F.percentile_approx(abs_e, F.lit(0.5), F.lit(int(accuracy)))
@@ -1342,27 +1385,17 @@ def huber_lm(
                 med = F.percentile(abs_e, F.lit(0.5), wr.cast("bigint"))
             else:
                 med = F.percentile(abs_e, F.lit(0.5))
-            srow = work.agg(med.alias("mad")).collect()[0]
+            srow = collect_small(work.agg(med.alias("mad")))[0]
             scale = float(srow["mad"]) / 0.6745
             if not scale > 0.0:
-                break
+                return None
             cs = c * scale
             w = F.when(F.abs(resid) <= cs, 1.0).otherwise(F.lit(cs) / F.abs(resid))
-            if wr is not None:
-                w = wr * w
-            g = gram_aggregate(
-                work.withColumn("__w", w), x_cols, y_col=target,
-                weight_col="__w",
-            )
-            new_beta, _ = solve_normal(g.xtx, g.xty)
-            delta = float(np.max(np.abs(new_beta - beta)))
-            beta = np.asarray(new_beta, dtype=np.float64)
-            n_iter += 1
-            if exact_iterations is None and delta <= tol * max(
-                1.0, float(np.max(np.abs(beta)))
-            ):
-                converged = True
-                break
+            return _wls_step(work, x_cols, target, w if wr is None else wr * w)
+
+        beta, n_iter, converged = _reweighted_ls(
+            step_at, beta, exact_iterations, tol, max_iter
+        )
     finally:
         work.unpersist()
     return HuberLM(
@@ -1373,7 +1406,7 @@ def huber_lm(
         c=float(c),
         iter=n_iter,
         nrow=n,
-        converged=converged or exact_iterations is not None,
+        converged=converged,
         levels=levels,
         call=f"huber_lm({formula}, c={c})",
     )
@@ -1384,7 +1417,7 @@ def _irls_grouped(
     formula: str,
     group_cols: list[str],
     na_action: str,
-    extra_fields: list,
+    extra_field: str,
     fit_one,
     weight_col: str | None = None,
 ):
@@ -1403,7 +1436,7 @@ def _irls_grouped(
     `na_action='keep'`; the grouped NULL policy) emit NULL estimates
     rather than garbage (the `lm_grouped` convention). `fit_one(X, y, w) -> (beta|None, extras: dict,
     n_iter, converged)`; `w` is all-ones when no weight column."""
-    from pyspark.sql import types as T
+    from sparkglm_spark.plans.partitioning import apply_grouped
 
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
@@ -1411,72 +1444,40 @@ def _irls_grouped(
         df, formula, group_cols, na_action, weight_col=weight_col
     )
     k = len(x_cols)
-    gcols = list(group_cols)
     names = list(x_cols)
-    out_schema = T.StructType(
-        [df.schema[c] for c in gcols]
-        + [
-            T.StructField("term", T.StringType()),
-            T.StructField("estimate", T.DoubleType()),
-        ]
-        + extra_fields
-        + [
-            T.StructField("n_rows", T.LongType()),
-            T.StructField("iterations", T.IntegerType()),
-            T.StructField("converged", T.BooleanType()),
-        ]
-    )
-    extra_names = [f.name for f in extra_fields]
-
-    wname = weight_col
 
     def fit_group(pdf):
-        import pandas as pd
-
-        X = pdf[names].to_numpy(dtype=np.float64)
-        yv = pdf[target].to_numpy(dtype=np.float64)
+        X, yv, wv, _o, ok = _group_arrays(pdf, names, target, weight_col)
         n = len(yv)
-        wv = (
-            pdf[wname].to_numpy(dtype=np.float64)
-            if wname is not None
-            else np.ones(n)
-        )
         beta, extras, n_iter, conv = None, {}, 0, False
-        ok = n >= k and np.all(np.isfinite(X)) and np.all(np.isfinite(yv))
-        if ok and wname is not None:
-            # grouped NULL policy for weights (boolean twin of
-            # check_weight_domain, the glm_grouped convention)
-            ok = bool(np.all(np.isfinite(wv)) and np.all(wv >= 0.0)
-                      and wv.sum() > 0.0)
-        if ok:
+        if ok and n >= k and np.all(np.isfinite(X)) and np.all(np.isfinite(yv)):
             try:
                 beta, extras, n_iter, conv = fit_one(X, yv, wv)
             except np.linalg.LinAlgError:
                 beta = None
-        cols = {c: [] for c in gcols}
-        cols.update(term=[], estimate=[])
-        cols.update({e: [] for e in extra_names})
-        cols.update(n_rows=[], iterations=[], converged=[])
-        for i, name in enumerate(names):
-            for c in gcols:
-                cols[c].append(pdf[c].iloc[0])
-            cols["term"].append(name)
-            cols["estimate"].append(float(beta[i]) if beta is not None else None)
-            for e in extra_names:
-                cols[e].append(extras.get(e))
-            cols["n_rows"].append(n)
-            cols["iterations"].append(n_iter)
-            cols["converged"].append(bool(conv))
-        return pd.DataFrame(cols)
+        return [
+            (
+                name, float(beta[i]) if beta is not None else None,
+                extras.get(extra_field), n, n_iter, bool(conv),
+            )
+            for i, name in enumerate(names)
+        ]
 
-    from sparkglm_spark.plans.partitioning import fanout_groups
-
-    sel = [*gcols, target, *x_cols] + ([weight_col] if weight_col else [])
-    return (
-        fanout_groups(encoded.select(*sel), gcols)
-        .groupBy(*gcols)
-        .applyInPandas(fit_group, out_schema)
+    return apply_grouped(
+        encoded, df.schema, group_cols, [target, *x_cols, weight_col],
+        f"term string, estimate double, {extra_field} double, "
+        "n_rows bigint, iterations int, converged boolean",
+        fit_group,
     )
+
+
+def _np_ols_start(X, y, w, weighted: bool):
+    """The grouped robust fitters' (weighted) OLS start; a singular
+    design raises (the Cholesky probe routes it to the NULL row)."""
+    Xw0 = X * w[:, None] if weighted else X
+    xtx = X.T @ Xw0
+    np.linalg.cholesky(xtx)
+    return np.linalg.solve(xtx, Xw0.T @ y)
 
 
 def _weighted_median_expanded(values: np.ndarray, freqs: np.ndarray) -> float:
@@ -1529,56 +1530,39 @@ def huber_lm_grouped(
     percentile interpolation semantics (`_weighted_median_expanded`),
     so per-slice results match the distributed fitter and integer ω is
     exactly replication."""
-    from pyspark.sql import types as T
-
     if c <= 0:
         raise ValueError(f"c must be > 0, got {c!r}")
-    iters = exact_iterations if exact_iterations is not None else max_iter
     weighted = weight_col is not None
 
     def fit_one(X, yv, wv):
         if weighted and not bool(np.all((wv >= 1.0) & (wv == np.floor(wv)))):
             return None, {}, 0, False  # non-frequency weights: NULL group
-        Xw0 = X * wv[:, None] if weighted else X
-        xtx = X.T @ Xw0
-        np.linalg.cholesky(xtx)  # raises on singular -> degenerate group
-        beta = np.linalg.solve(xtx, Xw0.T @ yv)
-        n_iter, conv, scale = 0, False, float("nan")
-        for _ in range(iters):
-            e = yv - X @ beta
-            ae = np.abs(e)
+        scale = float("nan")
+
+        def step_at(b):
+            nonlocal scale
+            ae = np.abs(yv - X @ b)
             if weighted:
                 scale = _weighted_median_expanded(ae, wv) / 0.6745
             else:
                 scale = float(np.median(ae)) / 0.6745
             if not scale > 0.0:
-                break
+                return None
             cs = c * scale
-            w = np.ones(len(e))
+            w = np.ones(len(ae))
             mask = ae > cs
             w[mask] = cs / ae[mask]
-            if weighted:
-                w = wv * w
-            Xw = X * w[:, None]
-            new_beta = np.linalg.solve(X.T @ Xw, Xw.T @ yv)
-            step = float(np.max(np.abs(new_beta - beta)))
-            beta = new_beta
-            n_iter += 1
-            if exact_iterations is None and step <= tol * max(
-                1.0, float(np.max(np.abs(beta)))
-            ):
-                conv = True
-                break
-        return (
-            beta,
-            {"scale": scale if scale == scale else None},
-            n_iter,
-            conv or exact_iterations is not None,
+            return _np_wls(X, yv, wv * w if weighted else w)
+
+        beta, n_iter, conv = _reweighted_ls(
+            step_at, _np_ols_start(X, yv, wv, weighted), exact_iterations,
+            tol, max_iter,
         )
+        return beta, {"scale": scale if scale == scale else None}, n_iter, conv
 
     return _irls_grouped(
         df, formula, group_cols, na_action,
-        [T.StructField("scale", T.DoubleType())], fit_one,
+        "scale", fit_one,
         weight_col=weight_col,
     )
 
@@ -1610,22 +1594,14 @@ def quantile_lm_grouped(
     mean-|e| δ probe and every MM re-weighting; negative ω or Σω ≤ 0
     (and NaN ω under `na_action='keep'` — under 'omit' those rows
     drop first) degenerate the group to NULLs (the grouped policy)."""
-    from pyspark.sql import types as T
-
     if not 0.0 < q < 1.0:
         raise ValueError(f"q must be in (0, 1), got {q!r}")
     if delta is not None and not delta > 0:
         raise ValueError(f"delta must be > 0, got {delta!r}")
-    iters = exact_iterations if exact_iterations is not None else max_iter
     weighted = weight_col is not None
 
     def fit_one(X, yv, wv):
-        Xw0 = X * wv[:, None] if weighted else X
-        xtx = X.T @ Xw0
-        # positive-definiteness probe only — LinAlgError on a singular
-        # group design routes to NULL estimates in the caller
-        np.linalg.cholesky(xtx)
-        beta = np.linalg.solve(xtx, Xw0.T @ yv)
+        beta = _np_ols_start(X, yv, wv, weighted)
         if delta is None:
             ae0 = np.abs(yv - X @ beta)
             if weighted:
@@ -1634,33 +1610,20 @@ def quantile_lm_grouped(
                 d = max(1e-6 * float(np.mean(ae0)), 1e-12)
         else:
             d = float(delta)
-        n_iter, conv = 0, False
-        for _ in range(iters):
-            e = yv - X @ beta
-            asym = np.where(e < 0, 1.0 - q, q)
-            w = asym / np.maximum(np.abs(e), d)
-            if weighted:
-                w = wv * w
-            Xw = X * w[:, None]
-            new_beta = np.linalg.solve(X.T @ Xw, Xw.T @ yv)
-            step = float(np.max(np.abs(new_beta - beta)))
-            beta = new_beta
-            n_iter += 1
-            if exact_iterations is None and step <= tol * max(
-                1.0, float(np.max(np.abs(beta)))
-            ):
-                conv = True
-                break
-        return (
-            beta,
-            {"delta": d},
-            n_iter,
-            conv or exact_iterations is not None,
+
+        def step_at(b):
+            e = yv - X @ b
+            w = np.where(e < 0, 1.0 - q, q) / np.maximum(np.abs(e), d)
+            return _np_wls(X, yv, wv * w if weighted else w)
+
+        beta, n_iter, conv = _reweighted_ls(
+            step_at, beta, exact_iterations, tol, max_iter
         )
+        return beta, {"delta": d}, n_iter, conv
 
     return _irls_grouped(
         df, formula, group_cols, na_action,
-        [T.StructField("delta", T.DoubleType())], fit_one,
+        "delta", fit_one,
         weight_col=weight_col,
     )
 

@@ -57,7 +57,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparkglm_spark.plans.gram import gram_sums
-from sparkglm_spark.plans.partitioning import collect_small, fanout_groups
+from sparkglm_spark.plans.partitioning import (
+    apply_grouped,
+    collect_small,
+    fanout_groups,
+)
 from sparkglm_spark.plans.prefix import global_running_sum
 
 # Euler–Mascheroni constant: E[W] = −γ for the standard minimum
@@ -1574,8 +1578,6 @@ def coxph_grouped(
     Returns long format: group_cols…, term, estimate, se, loglik,
     n_rows, n_events, iterations, converged.
     """
-    from pyspark.sql import types as T
-
     if not x_cols:
         raise ValueError("x_cols must be non-empty")
     if not group_cols:
@@ -1596,28 +1598,11 @@ def coxph_grouped(
         )
         + [F.col(c).cast("double").alias(c) for c in x_cols]
     )
-    work = df.select(*sel)
-    out_schema = T.StructType(
-        [df.schema[c] for c in group_cols]
-        + [
-            T.StructField("term", T.StringType()),
-            T.StructField("estimate", T.DoubleType()),
-            T.StructField("se", T.DoubleType()),
-            T.StructField("loglik", T.DoubleType()),
-            T.StructField("n_rows", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("iterations", T.IntegerType()),
-            T.StructField("converged", T.BooleanType()),
-        ]
-    )
     names = list(x_cols)
-    gcols = list(group_cols)
     n_exact = exact_iterations
     has_entry = entry_col is not None
 
     def fit_group(pdf):
-        import pandas as pd
-
         t = pdf["__t"].to_numpy(dtype=np.float64)
         e = pdf["__e"].to_numpy(dtype=np.float64)
         X = pdf[names].to_numpy(dtype=np.float64)
@@ -1645,32 +1630,30 @@ def coxph_grouped(
         ):
             res = _cox_newton_dense(t, e, X, n_exact, tol, max_iter,
                                     entry=en)
-        cols = {c: [] for c in gcols}
-        cols.update(
-            term=[], estimate=[], se=[], loglik=[], n_rows=[], n_events=[],
-            iterations=[], converged=[],
-        )
         beta, cov, ll, _, it, conv = res if res is not None else (
             None, None, None, None, 0, False
         )
         se = np.sqrt(np.diag(cov)) if cov is not None else None
-        for i, name in enumerate(names):
-            for c in gcols:
-                cols[c].append(pdf[c].iloc[0])
-            cols["term"].append(name)
-            cols["estimate"].append(float(beta[i]) if beta is not None else None)
-            cols["se"].append(float(se[i]) if se is not None else None)
-            cols["loglik"].append(ll)
-            cols["n_rows"].append(n)
-            # count e == 1 rows, not the raw sum: a dirty group with
-            # e = 2.0 degenerates to NULLs but must not report 2 events
-            cols["n_events"].append(int((e_valid == 1.0).sum()))
-            cols["iterations"].append(it)
-            cols["converged"].append(bool(conv))
-        return pd.DataFrame(cols)
+        # count e == 1 rows, not the raw sum: a dirty group with
+        # e = 2.0 degenerates to NULLs but must not report 2 events
+        n_events = int((e_valid == 1.0).sum())
+        return [
+            (
+                name,
+                float(beta[i]) if beta is not None else None,
+                float(se[i]) if se is not None else None,
+                ll, n, n_events, it, bool(conv),
+            )
+            for i, name in enumerate(names)
+        ]
 
-    return fanout_groups(work, gcols).groupBy(*gcols).applyInPandas(
-        fit_group, out_schema
+    return apply_grouped(
+        df.select(*sel), df.schema, group_cols,
+        ["__t", "__e", "__en" if entry_col else None, *x_cols],
+        "term string, estimate double, se double, loglik double, "
+        "n_rows bigint, n_events bigint, iterations int, "
+        "converged boolean",
+        fit_group,
     )
 
 
@@ -3092,8 +3075,6 @@ def weibull_aft_grouped(
     Returns long format: group_cols…, term, estimate, se, scale,
     loglik, n_rows, n_events, iterations, converged — `se` covers β
     terms (the ln σ SE rides as the 'scale' term row's se)."""
-    from pyspark.sql import types as T
-
     dist = dist.lower()
     if dist not in _AFT_SD_W:
         raise ValueError(
@@ -3122,27 +3103,9 @@ def weibull_aft_grouped(
             if time2_col else []
         )
     )
-    work = df.select(*sel)
-    out_schema = T.StructType(
-        [df.schema[c] for c in group_cols]
-        + [
-            T.StructField("term", T.StringType()),
-            T.StructField("estimate", T.DoubleType()),
-            T.StructField("se", T.DoubleType()),
-            T.StructField("scale", T.DoubleType()),
-            T.StructField("loglik", T.DoubleType()),
-            T.StructField("n_rows", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("iterations", T.IntegerType()),
-            T.StructField("converged", T.BooleanType()),
-        ]
-    )
-    gcols = list(group_cols)
     terms = names + ["scale"]
 
     def fit_group(pdf):
-        import pandas as pd
-
         t = pdf["__t"].to_numpy(dtype=np.float64)
         e = pdf["__e"].to_numpy(dtype=np.float64)
         X = pdf[names].to_numpy(dtype=np.float64)
@@ -3208,22 +3171,19 @@ def weibull_aft_grouped(
             ll, it, conv, scale = None, 0, False, None
             est = [None] * (k + 1)
             ses = [None] * (k + 1)
-        cols = {c: [pdf[c].iloc[0]] * (k + 1) for c in gcols}
-        cols.update(
-            term=terms,
-            estimate=est,
-            se=ses,
-            scale=[scale] * (k + 1),
-            loglik=[ll] * (k + 1),
-            n_rows=[n] * (k + 1),
-            n_events=[ne] * (k + 1),
-            iterations=[it] * (k + 1),
-            converged=[bool(conv)] * (k + 1),
-        )
-        return pd.DataFrame(cols)
+        return [
+            (term, b, se, scale, ll, n, ne, it, bool(conv))
+            for term, b, se in zip(terms, est, ses)
+        ]
 
-    return fanout_groups(work, gcols).groupBy(*gcols).applyInPandas(
-        fit_group, out_schema
+    return apply_grouped(
+        df.select(*sel), df.schema, group_cols,
+        ["__t", "__e", *names, "__w" if weight_col else None,
+         "__t2" if time2_col else None],
+        "term string, estimate double, se double, scale double, "
+        "loglik double, n_rows bigint, n_events bigint, "
+        "iterations int, converged boolean",
+        fit_group,
     )
 
 

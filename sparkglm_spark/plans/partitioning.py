@@ -146,6 +146,38 @@ def fanout_groups(df: DataFrame, key_cols: list[str]) -> DataFrame:
     return df.repartition(n, *[F.col(c) for c in key_cols])
 
 
+def apply_grouped(
+    frame: DataFrame, key_schema, group_cols: list[str], cols, fields,
+    fit_group,
+) -> DataFrame:
+    """The grouped-fit harness: run `fit_group(pdf) -> rows` once per
+    group over the group keys plus `cols` (None entries skipped), fanned
+    out to the shuffle width (`fanout_groups`). Each returned row is a
+    tuple of the values of `fields` (a DDL column list); the harness
+    prepends the group key (read once per group) and builds the
+    long-format frame, whose schema is the key fields of `key_schema`
+    (the caller's input) then `fields`."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    gcols = list(group_cols)
+    schema = T.StructType(
+        [key_schema[c] for c in gcols] + T.StructType.fromDDL(fields).fields
+    )
+    names = schema.fieldNames()
+
+    def run(pdf):
+        key = tuple(pdf[c].iloc[0] for c in gcols)
+        return pd.DataFrame(
+            [key + tuple(r) for r in fit_group(pdf)], columns=names
+        )
+
+    sel = [*gcols, *[c for c in cols if c]]
+    return fanout_groups(frame.select(*sel), gcols).groupBy(
+        *gcols
+    ).applyInPandas(run, schema)
+
+
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 

@@ -771,6 +771,19 @@ def test_glm_grouped_domain_and_link_edges(spark):
     ok = glm_grouped(df.where(F.col("g") == "ok"), "y ~ x", ["g"],
                      family="poisson", link="Log").collect()
     assert any(r.estimate is not None for r in ok)
+    # binomial twin parity on one group: the per-row start differs from
+    # glm's mu = ybar start, so the converged fits are compared
+    one = df.where(F.col("g") == "ok")
+    got = {
+        r.term: r
+        for r in glm_grouped(one, "y ~ x", ["g"], tol=1e-12).collect()
+    }
+    solo = glm(one, "y ~ x", family="binomial", tol=1e-12)
+    for i, t in enumerate(solo.xnames):
+        assert got[t].estimate == pytest.approx(
+            float(solo.coefs[i]), rel=1e-8, abs=1e-10
+        ), t
+    assert got["x"].deviance == pytest.approx(solo.deviance, rel=1e-10)
 
 
 def test_glm_weighted_matches_mllib_glr(spark):
@@ -1357,9 +1370,27 @@ class TestGlmNB:
             + [-1.0, 2.0],
             "x": list(np.random.default_rng(2).normal(size=50)) + [0.1, 0.2],
         })
-        out = glm_nb_grouped(spark.createDataFrame(pdf), "y ~ x", ["seg"])
+        df = spark.createDataFrame(pdf)
+        out = glm_nb_grouped(df, "y ~ x", ["seg"])
         b = out.filter(F.col("seg") == "b").toPandas()
         assert b["estimate"].isna().all() and b["theta"].isna().all()
+        # twin parity on the healthy group: the numpy twin replays the
+        # distributed trajectory, so a pinned run agrees to round-off
+        from sparkglm_spark.operators.glm import glm_nb
+
+        a_df = df.filter(F.col("seg") == "a")
+        rows = glm_nb_grouped(
+            a_df, "y ~ x", ["seg"], exact_iterations=2
+        ).toPandas().set_index("term")
+        m = glm_nb(a_df, "y ~ x", exact_iterations=2)
+        np.testing.assert_allclose(
+            rows.loc[m.xnames, "estimate"], m.coefs, rtol=1e-9
+        )
+        np.testing.assert_allclose(
+            rows.loc[m.xnames, "se"], m.std_err, rtol=1e-8
+        )
+        assert rows["theta"].iloc[0] == pytest.approx(m.theta, rel=1e-9)
+        assert rows["loglik"].iloc[0] == pytest.approx(m.loglik, rel=1e-10)
 
     # ---- review-pass r14 regressions ---------------------------------
 
@@ -1453,3 +1484,36 @@ class TestGlmNB:
                    hist_limit=1)  # forced UDF fallback
         assert abs(a.theta - b.theta) < 1e-9
         np.testing.assert_allclose(a.coefs, b.coefs, rtol=1e-12)
+
+
+@pytest.mark.parametrize(
+    "fitter, kw",
+    [
+        ("glm", {"exact_iterations": 0}),
+        ("glm", {"max_iter": 0}),
+        ("glm_grouped", {"exact_iterations": 0}),
+        ("glm_grouped", {"max_iter": 0}),
+        ("glm_nb_grouped", {"exact_iterations": 0}),
+    ],
+)
+def test_iteration_counts_refused_before_any_job(spark, fitter, kw):
+    """A zero iteration count raises glm_nb's ValueError on the driver
+    before any Spark job — not a TypeError after the init job, all-NULL
+    rows, or a worker error at action time."""
+    from sparkglm_spark.operators import glm as G
+
+    df = spark.createDataFrame(
+        [("a", float(i % 4), float(i) / 10.0) for i in range(20)],
+        "g string, y double, x double",
+    )
+    args = (df, "y ~ x") if fitter == "glm" else (df, "y ~ x", ["g"])
+    if fitter != "glm_nb_grouped":
+        kw = {**kw, "family": "poisson"}
+    sc = spark.sparkContext
+    sc.setJobGroup("iter_guard", "iter_guard")
+    try:
+        with pytest.raises(ValueError, match=next(iter(kw)) + " must be >= 1"):
+            getattr(G, fitter)(*args, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("iter_guard") == []

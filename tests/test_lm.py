@@ -968,6 +968,19 @@ def test_huber_weighted_replication_and_guards(spark):
     }
     assert outb[("b", "x")].estimate is None
     assert outb[("a", "x")].estimate is not None
+    # unweighted twin parity on one group
+    one = df.where(F.col("g") == "a")
+    got = {
+        r.term: r
+        for r in huber_lm_grouped(one, "y ~ x", ["g"], exact_iterations=2)
+        .collect()
+    }
+    solo = huber_lm(one, "y ~ x", exact_iterations=2)
+    for i, t in enumerate(solo.xnames):
+        assert got[t].estimate == pytest.approx(
+            float(solo.coefs[i]), rel=1e-9
+        ), t
+    assert got["x"].scale == pytest.approx(solo.scale, rel=1e-9)
 
 
 def test_quantile_weighted_replication_and_grouped(spark):
@@ -1013,6 +1026,18 @@ def test_quantile_weighted_replication_and_grouped(spark):
         ).collect()
     }
     assert outb[("b", "x")].estimate is None
+    # unweighted twin parity on one group (the delta probe runs per group)
+    one = df.where(F.col("g") == "a")
+    got = {
+        r.term: r
+        for r in quantile_lm_grouped(one, "y ~ x", ["g"], exact_iterations=2)
+        .collect()
+    }
+    solo = quantile_lm(one, "y ~ x", exact_iterations=2)
+    for i, t in enumerate(solo.xnames):
+        assert got[t].estimate == pytest.approx(
+            float(solo.coefs[i]), rel=1e-9
+        ), t
     assert outb[("a", "x")].estimate is not None
 
 

@@ -692,12 +692,25 @@ def test_fitter_job_counts_pinned(spark, lineitem, orders):
         glm_elastic_net_grouped,
         glm_elastic_net_path,
     )
-    from sparkglm_spark.operators.glm import glm
-    from sparkglm_spark.operators.lm import lm, robust_standard_errors
+    from sparkglm_spark.operators.glm import (
+        glm,
+        glm_grouped,
+        glm_nb,
+        glm_nb_grouped,
+    )
+    from sparkglm_spark.operators.lm import (
+        huber_lm,
+        huber_lm_grouped,
+        lm,
+        quantile_lm,
+        robust_standard_errors,
+    )
     from sparkglm_spark.operators.survival import (
         concordance_index,
         coxph,
+        coxph_grouped,
         weibull_aft,
+        weibull_aft_grouped,
     )
 
     gl = orders.withColumn("is_f", (F.col("o_orderstatus") == "F").cast("double"))
@@ -723,6 +736,7 @@ def test_fitter_job_counts_pinned(spark, lineitem, orders):
         (F.col("l_discount") * 10.0).alias("x2"),
         (F.col("l_orderkey") % 2).cast("int").alias("f"),
         (F.col("l_orderkey") % 3).alias("g"),
+        F.col("l_linenumber").cast("double").alias("cnt"),
     )
     formula = "l_extendedprice ~ l_quantity + l_discount + l_returnflag"
     # fit outside the job groups: hc1/hc3 count the sandwich alone
@@ -770,11 +784,47 @@ def test_fitter_job_counts_pinned(spark, lineitem, orders):
         "elastic_net": _jobs_of(spark, "pin_enet", lambda: elastic_net(
             en, "x ~ x2 + y", 0.01, 0.5
         )),
+        # unpenalized reweighted fitters: the single fits count their
+        # passes, the grouped ones one applyInPandas shuffle
+        "glm_grouped": _jobs_of(spark, "pin_glm_grp", lambda: (
+            glm_grouped(en, "y ~ x + x2", ["g"]).collect()
+        )),
+        "glm_nb": _jobs_of(spark, "pin_glm_nb", lambda: glm_nb(
+            en, "cnt ~ x + x2", exact_iterations=1
+        )),
+        "glm_nb_grouped": _jobs_of(spark, "pin_glm_nb_grp", lambda: (
+            glm_nb_grouped(en, "cnt ~ x + x2", ["g"], exact_iterations=1)
+            .collect()
+        )),
+        "huber_lm": _jobs_of(spark, "pin_huber", lambda: huber_lm(
+            lineitem, formula, exact_iterations=2
+        )),
+        "quantile_lm": _jobs_of(spark, "pin_quantile", lambda: quantile_lm(
+            lineitem, formula, exact_iterations=2
+        )),
+        "huber_lm_grouped": _jobs_of(spark, "pin_huber_grp", lambda: (
+            huber_lm_grouped(en, "x ~ x2", ["g"], exact_iterations=2)
+            .collect()
+        )),
+        "coxph_grouped": _jobs_of(spark, "pin_coxph_grp", lambda: (
+            coxph_grouped(
+                cx.withColumn("g", F.col("x") > 0.5), "t", "ev", ["x"], ["g"]
+            ).collect()
+        )),
+        "weibull_aft_grouped": _jobs_of(spark, "pin_aft_grp", lambda: (
+            weibull_aft_grouped(
+                aft_in.withColumn("g", F.col("x") > 0.5), "t", "ev", ["x"],
+                ["g"],
+            ).collect()
+        )),
     }
     assert got == {
         "lm": 3, "glm": 8, "coxph": 11, "cindex": 10, "weibull_aft": 6,
         "hc1": 1, "hc3": 2, "glm_enet": 5, "glm_enet_cv": 8,
         "glm_enet_path": 8, "glm_enet_grouped": 2, "elastic_net": 1,
+        "glm_grouped": 2, "glm_nb": 20, "glm_nb_grouped": 2,
+        "huber_lm": 8, "quantile_lm": 7, "huber_lm_grouped": 2,
+        "coxph_grouped": 2, "weibull_aft_grouped": 2,
     }
 
 
