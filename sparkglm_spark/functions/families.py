@@ -203,6 +203,29 @@ FAMILIES = {
 }
 
 
+# the response domain each family's deviance is defined on: (lower
+# bound, whether the bound itself is allowed, upper bound) — binomial
+# responses are proportions; gaussian takes any response
+RESPONSE_DOMAIN = {
+    "gamma": (0.0, False, None),
+    "poisson": (0.0, True, None),
+    "quasipoisson": (0.0, True, None),
+    "tweedie": (0.0, True, None),
+    "negbinomial": (0.0, True, None),
+    "binomial": (0.0, True, 1.0),
+    "quasibinomial": (0.0, True, 1.0),
+}
+
+
+def response_in_domain(family: str, lo: float, hi: float | None = None) -> bool:
+    """Whether responses spanning [lo, hi] lie in `family`'s
+    `RESPONSE_DOMAIN`; `hi=None` checks the lower bound only."""
+    bound, closed, top = RESPONSE_DOMAIN.get(family, (None, True, None))
+    if bound is not None and (lo < bound or (lo == bound and not closed)):
+        return False
+    return top is None or hi is None or hi <= top
+
+
 def get_family(
     name: str, var_power: float | None = None, alpha: float | None = None
 ):

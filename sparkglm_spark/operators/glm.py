@@ -37,11 +37,13 @@ from sparkglm_spark.functions.encoding import (
     omit_na,
 )
 from sparkglm_spark.functions.families import (
+    RESPONSE_DOMAIN,
     deviance_np,
     get_family,
     irls_mu_np,
     irls_wz_np,
     loglik_np,
+    response_in_domain,
 )
 from sparkglm_spark.functions.links import get_link
 from sparkglm_spark.operators.lm import (
@@ -187,7 +189,11 @@ class GLM:
         work = ensure_parallel(df.select(*base_cols)).persist()
 
         # ---- init: μ = ȳ (GLM.scala:263,420-424), η = g(μ) --------------
-        init_aggs = [F.sum(wr * y).alias("sy"), F.count(F.lit(1)).alias("n")]
+        init_aggs = [
+            F.sum(wr * y).alias("sy"),
+            F.count(F.lit(1)).alias("n"),
+            F.min(y).alias("min_y"),
+        ]
         if wt is not None:
             init_aggs += [
                 F.sum(wt).alias("sw"),
@@ -201,6 +207,16 @@ class GLM:
             ]
         row = collect_small(work.agg(*init_aggs))[0]
         n = int(row["n"])
+        # an out-of-domain response is NULL in the deviance expression,
+        # which F.sum would skip while the IRLS Gram kept the row
+        if row["min_y"] is not None and not response_in_domain(
+            fam.name, row["min_y"]
+        ):
+            bound, closed, _ = RESPONSE_DOMAIN[fam.name]
+            raise ValueError(
+                f"family {fam.name!r} needs {y_col} {'>=' if closed else '>'} "
+                f"{bound:g}; got min({y_col}) = {row['min_y']!r}"
+            )
         if wt is not None:
             from sparkglm_spark.operators.lm import check_weight_domain
 
@@ -792,15 +808,7 @@ def glm_grouped(
         n = len(y)
         beta, dev, it = None, None, 0
         # family response domains: out-of-domain groups degenerate to NULL
-        in_domain = (
-            np.all(y > 0)
-            if fam == "gamma"
-            else np.all(y >= 0)
-            if fam in ("poisson", "quasipoisson", "tweedie", "negbinomial")
-            else np.all((y >= 0) & (y <= 1))
-            if logit
-            else True
-        )
+        in_domain = not n or response_in_domain(fam, y.min(), y.max())
         if (
             n >= k
             and ok

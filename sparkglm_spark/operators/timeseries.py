@@ -20,6 +20,7 @@ from declarative primitives so Catalyst keeps pushdown/pruning:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -157,6 +158,59 @@ def _drop_null_values(df: DataFrame, value_expr) -> DataFrame:
     (ewma_latest) or NaN-poison the rest of the key's recursion (Holt).
     A key whose values are all null/NaN disappears from the output."""
     return df.where(value_expr.isNotNull() & ~F.isnan(value_expr))
+
+
+def _ts_axis(df: DataFrame, ts_col: str):
+    """The family's time axis as a number, for ordering and for the
+    regular-grid checks: epoch micros of the instant for TIMESTAMP (LTZ),
+    epoch micros of the wall clock for TIMESTAMP_NTZ, the day count for
+    DATE, the value cast to double otherwise. No timestamp goes through
+    the session zone: Spark's LTZ−LTZ subtraction reads local wall
+    clocks (a regular hourly grid across a DST fall-back showed a
+    0-second spacing), `timestamp_diff` maps NTZ through the zone (02:00
+    and 03:00 on a spring-forward day came out equal), and pandas'
+    zone-local naive datetimes mis-sort the repeated fall-back hour.
+    NTZ − NTZ is a pure wall-clock interval, read out exactly as
+    decimal seconds."""
+    from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
+
+    c = F.col(ts_col)
+    t = df.schema[ts_col].dataType
+    if isinstance(t, TimestampType):
+        return F.unix_micros(c)
+    if isinstance(t, TimestampNTZType):
+        wall = c - F.expr("TIMESTAMP_NTZ '1970-01-01 00:00:00'")
+        secs = wall.cast("interval second").cast("decimal(20,6)")
+        return (secs * 1000000).cast("long")
+    if isinstance(t, DateType):
+        return F.unix_date(c)
+    return c.cast("double")
+
+
+def _fold_base(df, key_col, ts_col, value_col, tiebreak_col):
+    """The ordered per-key input of a sequential fold: family null policy,
+    then (key, __ts, __x[, __tb]). Returns (base, sort_cols, key_type)."""
+    df = _drop_null_values(df, F.col(value_col).cast("double"))
+    sort_cols = ["__ts"] + (["__tb"] if tiebreak_col else [])
+    base = df.select(
+        F.col(key_col),
+        F.col(ts_col).alias("__ts"),
+        F.col(value_col).cast("double").alias("__x"),
+        *([F.col(tiebreak_col).alias("__tb")] if tiebreak_col else []),
+    )
+    return base, sort_cols, base.schema[key_col].dataType.simpleString()
+
+
+def _interval_z(interval: bool, level: float):
+    """The two-sided normal quantile of a prediction interval at `level`,
+    None when no interval is asked (`level` is validated either way)."""
+    if not 0.0 < level < 1.0:
+        raise ValueError("level must be in (0, 1)")
+    if not interval:
+        return None
+    from sparkglm_spark.functions.special import norm_ppf
+
+    return float(norm_ppf(0.5 + level / 2.0))
 
 
 def resample_counts(
@@ -464,21 +518,10 @@ def ewma_forecast(
         raise ValueError("horizons must be >= 1")
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"alpha must be in (0, 1), got {alpha!r}")
-    if not 0.0 < level < 1.0:
-        raise ValueError("level must be in (0, 1)")
-    df = _drop_null_values(df, F.col(value_col).cast("double"))
     hs = [int(h) for h in horizons]
-    zq = None
-    if interval:
-        from sparkglm_spark.functions.special import norm_ppf
-
-        zq = float(norm_ppf(0.5 + level / 2.0))
-    sort_cols = ["__ts"] + (["__tb"] if tiebreak_col else [])
-    base = df.select(
-        F.col(key_col),
-        F.col(ts_col).alias("__ts"),
-        F.col(value_col).cast("double").alias("__x"),
-        *([F.col(tiebreak_col).alias("__tb")] if tiebreak_col else []),
+    zq = _interval_z(interval, level)
+    base, sort_cols, key_t = _fold_base(
+        df, key_col, ts_col, value_col, tiebreak_col
     )
     fcols = ", ".join(f"forecast_{h} double" for h in hs)
     if interval:
@@ -486,7 +529,7 @@ def ewma_forecast(
             f"se_{h} double, lo_{h} double, hi_{h} double" for h in hs
         )
     schema = (
-        f"{key_col} {base.schema[key_col].dataType.simpleString()}, "
+        f"{key_col} {key_t}, "
         f"n_events bigint, level double, {fcols}"
     )
 
@@ -529,25 +572,115 @@ def ewma_forecast(
 
 
 
-def _intermittent_base(df, key_col, ts_col, value_col, tiebreak_col):
-    """Shared scaffold of `croston_forecast`/`tsb_forecast`: family null
-    policy and the ordered per-key base frame. The non-negative-demand
-    domain (intermittent demand is non-negative by definition) is
-    enforced INSIDE each per-key fold — a key containing a negative
-    demand reports NULL state like every other grouped degeneracy
-    (VERDICT r11: the old eager pre-scan cost one full extra data pass
-    per call). Returns (base, sort_cols, key_type) — the folds differ,
-    the contract does not (code-review r11: the two copies must not
-    drift)."""
-    df = _drop_null_values(df, F.col(value_col).cast("double"))
-    sort_cols = ["__ts"] + (["__tb"] if tiebreak_col else [])
-    base = df.select(
-        F.col(key_col),
-        F.col(ts_col).alias("__ts"),
-        F.col(value_col).cast("double").alias("__x"),
-        *([F.col(tiebreak_col).alias("__tb")] if tiebreak_col else []),
+# (z, p, q, n, nd, bad, sse, me): size and interval/probability smoothers,
+# periods since the last demand, periods, demands, the negative-demand
+# flag and the interval error accumulators
+_INTERMITTENT_INIT = (None, None, 0, 0, 0, False, 0.0, 0)
+
+
+def _intermittent_step(method, state, x, alpha, beta, factor, interval):
+    """One Croston ("croston") or TSB ("tsb") fold over the ordered demands
+    `x` from `state` (`_INTERMITTENT_INIT` layout) — the batch forecasters
+    fold a key's whole history in one call, the streaming twins one
+    micro-batch per call, so both run the same scalar expressions in the
+    same order and agree bit for bit. A negative demand sets `bad` for
+    good (the key reports NULL state); later calls only count periods.
+    With `interval`, each period's one-step error against the state
+    ENTERING it accumulates into (sse, me) once state exists."""
+    z, p, q, n, nd, bad, sse, me = state
+    n += len(x)
+    if bad or bool(np.any(x < 0.0)):
+        return z, p, q, n, nd, True, sse, me
+    croston = method == "croston"
+    for v in x.tolist():
+        if interval and z is not None:
+            e = v - (factor * z / p if croston else p * z)
+            sse += e * e
+            me += 1
+        if croston:
+            q += 1
+            if v > 0.0:
+                nd += 1
+                if z is None:
+                    z, p = v, float(q)
+                else:
+                    z = alpha * v + (1.0 - alpha) * z
+                    p = alpha * float(q) + (1.0 - alpha) * p
+                q = 0
+        elif z is None:
+            q += 1
+            if v > 0.0:
+                nd += 1
+                z, p = v, 1.0 / float(q)
+        else:
+            p = beta * (1.0 if v > 0.0 else 0.0) + (1.0 - beta) * p
+            if v > 0.0:
+                nd += 1
+                z = alpha * v + (1.0 - alpha) * z
+    return z, p, q, n, nd, False, sse, me
+
+
+def _intermittent_row(method, state, factor, interval, zq):
+    """The output columns of an `_intermittent_step` state (no key):
+    n_periods, n_demands, size, interval|probability, forecast and, with
+    `interval`, se/lo/hi (NULL below 2 measured errors)."""
+    z, p, _q, n, nd, bad, sse, me = state
+    if bad:
+        nd = z = p = None
+    fc = None if z is None else factor * z / p if method == "croston" else p * z
+    row = {
+        "n_periods": n,
+        "n_demands": nd,
+        "size": z,
+        "interval" if method == "croston" else "probability": p,
+        "forecast": fc,
+    }
+    if interval:
+        se = float(np.sqrt(sse / (me - 1))) if fc is not None and me >= 2 else None
+        row["se"] = se
+        row["lo"] = None if se is None else fc - zq * se
+        row["hi"] = None if se is None else fc + zq * se
+    return row
+
+
+def _intermittent_forecast(
+    df, key_col, ts_col, value_col, tiebreak_col, method, alpha, beta,
+    factor, interval, level,
+):
+    """Batch driver of `croston_forecast`/`tsb_forecast`: family null
+    policy, one `_intermittent_step` over each key's ordered history,
+    one `_intermittent_row` per key."""
+    import pandas as pd
+
+    zq = _interval_z(interval, level)
+    base, sort_cols, key_t = _fold_base(
+        df, key_col, ts_col, value_col, tiebreak_col
     )
-    return base, sort_cols, base.schema[key_col].dataType.simpleString()
+    second = "interval" if method == "croston" else "probability"
+    schema = (
+        f"{key_col} {key_t}, "
+        f"n_periods bigint, n_demands bigint, size double, {second} double, "
+        "forecast double"
+        + (", se double, lo double, hi double" if interval else "")
+    )
+
+    def make_fold(pdf: pd.DataFrame):
+        ks = pdf[pdf.columns[0]].to_numpy()
+        xs = pdf["__x"].to_numpy(np.float64)
+
+        def fold(s, e):
+            st = _intermittent_step(
+                method, _INTERMITTENT_INIT, xs[s:e], alpha, beta, factor,
+                interval,
+            )
+            row = _intermittent_row(method, st, factor, interval, zq)
+            return {key_col: [ks[s]], **{c: [v] for c, v in row.items()}}
+
+        return fold
+
+    return _fold_partitions(
+        base, key_col, sort_cols, make_fold, schema
+    ).transform(_sorted_output, key_col)
 
 
 @_CACHES.scoped
@@ -604,89 +737,15 @@ def croston_forecast(
     NULL POLICY (family-wide — `_drop_null_values`): null/NaN value
     rows are dropped before the fold (they are MISSING periods, not
     zero-demand periods)."""
-    import numpy as np
-    import pandas as pd
-
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"alpha must be in (0, 1), got {alpha!r}")
     if variant not in ("classic", "sba"):
         raise ValueError(f"variant must be 'classic' or 'sba', got {variant!r}")
-    if not 0.0 < level < 1.0:
-        raise ValueError("level must be in (0, 1)")
-    zq = None
-    if interval:
-        from sparkglm_spark.functions.special import norm_ppf
-
-        zq = float(norm_ppf(0.5 + level / 2.0))
-    base, sort_cols, key_t = _intermittent_base(
-        df, key_col, ts_col, value_col, tiebreak_col
-    )
     factor = 1.0 - alpha / 2.0 if variant == "sba" else 1.0
-    schema = (
-        f"{key_col} {key_t}, "
-        "n_periods bigint, n_demands bigint, size double, interval double, "
-        "forecast double"
-        + (", se double, lo double, hi double" if interval else "")
+    return _intermittent_forecast(
+        df, key_col, ts_col, value_col, tiebreak_col, "croston", alpha, None,
+        factor, interval, level,
     )
-
-    def make_fold(pdf: pd.DataFrame):
-        ks = pdf[pdf.columns[0]].to_numpy()
-        xs = pdf["__x"].to_numpy(np.float64)
-        return lambda s, e: fold_one(ks, xs, s, e)
-
-    def fold_one(ks, xs, s, e):
-        x = xs[s:e]
-        n = e - s
-        if np.any(x < 0.0):  # negative demand: NULL-degrade this key
-            row = {
-                key_col: [ks[s]],
-                "n_periods": [n],
-                "n_demands": [None],
-                "size": [None],
-                "interval": [None],
-                "forecast": [None],
-            }
-            if interval:
-                row.update({"se": [None], "lo": [None], "hi": [None]})
-            return row
-        z = p = None
-        nd = 0
-        q = 0
-        sse = 0.0
-        m = 0
-        for v in x:
-            if interval and z is not None:
-                e_ = float(v) - factor * z / p
-                sse += e_ * e_
-                m += 1
-            q += 1
-            if v > 0.0:
-                nd += 1
-                if z is None:
-                    z, p = float(v), float(q)
-                else:
-                    z = alpha * float(v) + (1.0 - alpha) * z
-                    p = alpha * float(q) + (1.0 - alpha) * p
-                q = 0
-        fc = None if z is None else factor * z / p
-        row = {
-            key_col: [ks[s]],
-            "n_periods": [n],
-            "n_demands": [nd],
-            "size": [z],
-            "interval": [p],
-            "forecast": [fc],
-        }
-        if interval:
-            se = float(np.sqrt(sse / (m - 1))) if (fc is not None and m >= 2) else None
-            row["se"] = [se]
-            row["lo"] = [None if se is None else fc - zq * se]
-            row["hi"] = [None if se is None else fc + zq * se]
-        return row
-
-    return _fold_partitions(
-        base, key_col, sort_cols, make_fold, schema
-    ).transform(_sorted_output, key_col)
 
 
 @_CACHES.scoped
@@ -726,88 +785,13 @@ def tsb_forecast(
     empirical one-step per-period MSE (errors e_t = d_t − p·z measured
     against the state ENTERING period t, every period once state
     exists), normal-quantile bounds, NULL below 2 measured errors."""
-    import numpy as np
-    import pandas as pd
-
     for nm, v in (("alpha", alpha), ("beta", beta)):
         if not 0.0 < v < 1.0:
             raise ValueError(f"{nm} must be in (0, 1), got {v!r}")
-    if not 0.0 < level < 1.0:
-        raise ValueError("level must be in (0, 1)")
-    zq = None
-    if interval:
-        from sparkglm_spark.functions.special import norm_ppf
-
-        zq = float(norm_ppf(0.5 + level / 2.0))
-    base, sort_cols, key_t = _intermittent_base(
-        df, key_col, ts_col, value_col, tiebreak_col
+    return _intermittent_forecast(
+        df, key_col, ts_col, value_col, tiebreak_col, "tsb", alpha, beta,
+        1.0, interval, level,
     )
-    schema = (
-        f"{key_col} {key_t}, "
-        "n_periods bigint, n_demands bigint, size double, "
-        "probability double, forecast double"
-        + (", se double, lo double, hi double" if interval else "")
-    )
-
-    def make_fold(pdf: pd.DataFrame):
-        ks = pdf[pdf.columns[0]].to_numpy()
-        xs = pdf["__x"].to_numpy(np.float64)
-        return lambda s, e: fold_one(ks, xs, s, e)
-
-    def fold_one(ks, xs, s, e):
-        x = xs[s:e]
-        n = e - s
-        if np.any(x < 0.0):  # negative demand: NULL-degrade this key
-            row = {
-                key_col: [ks[s]],
-                "n_periods": [n],
-                "n_demands": [None],
-                "size": [None],
-                "probability": [None],
-                "forecast": [None],
-            }
-            if interval:
-                row.update({"se": [None], "lo": [None], "hi": [None]})
-            return row
-        z = p = None
-        nd = 0
-        q = 0
-        sse = 0.0
-        m = 0
-        for v in x:
-            if interval and z is not None:
-                e_ = float(v) - p * z
-                sse += e_ * e_
-                m += 1
-            if z is None:
-                q += 1
-                if v > 0.0:
-                    nd += 1
-                    z, p = float(v), 1.0 / float(q)
-            else:
-                p = beta * (1.0 if v > 0.0 else 0.0) + (1.0 - beta) * p
-                if v > 0.0:
-                    nd += 1
-                    z = alpha * float(v) + (1.0 - alpha) * z
-        fc = None if z is None else p * z
-        row = {
-            key_col: [ks[s]],
-            "n_periods": [n],
-            "n_demands": [nd],
-            "size": [z],
-            "probability": [p],
-            "forecast": [fc],
-        }
-        if interval:
-            se = float(np.sqrt(sse / (m - 1))) if (fc is not None and m >= 2) else None
-            row["se"] = [se]
-            row["lo"] = [None if se is None else fc - zq * se]
-            row["hi"] = [None if se is None else fc + zq * se]
-        return row
-
-    return _fold_partitions(
-        base, key_col, sort_cols, make_fold, schema
-    ).transform(_sorted_output, key_col)
 
 
 def holt_series(
@@ -859,16 +843,11 @@ def holt_series(
         raise ValueError(f"beta must be in (0, 1), got {beta!r}")
     if not 0.0 < phi <= 1.0:
         raise ValueError(f"phi must be in (0, 1], got {phi!r}")
-    df = _drop_null_values(df, F.col(value_col).cast("double"))
-    sort_cols = ["__ts"] + (["__tb"] if tiebreak_col else [])
-    base = df.select(
-        F.col(key_col),
-        F.col(ts_col).alias("__ts"),
-        F.col(value_col).cast("double").alias("__x"),
-        *([F.col(tiebreak_col).alias("__tb")] if tiebreak_col else []),
+    base, sort_cols, key_t = _fold_base(
+        df, key_col, ts_col, value_col, tiebreak_col
     )
     schema = (
-        f"{key_col} {base.schema[key_col].dataType.simpleString()}, "
+        f"{key_col} {key_t}, "
         f"__ts {base.schema['__ts'].dataType.simpleString()}, "
         "__x double, level double, trend double, fitted double"
     )
@@ -917,6 +896,31 @@ def holt_series(
         "trend",
         "fitted",
     )
+
+
+def _holt_step(state, x, alpha, beta, phi, with_sse):
+    """Fold the ordered values `x` into Holt state (level, trend, n, sse)
+    — `holt_forecast` folds a key's whole history from (0.0, 0.0, 0, 0.0),
+    `holt_state_stream` one micro-batch at a time, so the two agree bit
+    for bit. The simple init l₁ = x₁, b₁ = x₂ − x₁ needs x₂, so x₁ only
+    sets the level (trend 0 until x₂ arrives) and x₂ forms b₁ and then
+    folds through the standard update. With `with_sse`, the squared
+    one-step residual accumulates from x₃ on: x₂'s is init-spent (b₁ was
+    set from x₂ itself)."""
+    lvl, trd, n, sse = state
+    for v in x.tolist():
+        if n == 0:
+            lvl, trd = v, 0.0
+        else:
+            b = v - lvl if n == 1 else trd
+            prev = lvl
+            fit = lvl + phi * b
+            if with_sse and n > 1:
+                sse += (v - fit) * (v - fit)
+            lvl = alpha * v + (1.0 - alpha) * fit
+            trd = beta * (lvl - prev) + (1.0 - beta) * (phi * b)
+        n += 1
+    return lvl, trd, n, sse
 
 
 @_CACHES.scoped
@@ -980,9 +984,6 @@ def holt_forecast(
         raise ValueError(f"beta must be in (0, 1), got {beta!r}")
     if not 0.0 < phi <= 1.0:
         raise ValueError(f"phi must be in (0, 1], got {phi!r}")
-    if not 0.0 < level < 1.0:
-        raise ValueError("level must be in (0, 1)")
-    df = _drop_null_values(df, F.col(value_col).cast("double"))
     hs = [int(h) for h in horizons]
     # φ_j = Σ_{i=1..j} φ^i, computed by accumulation so φ=1 yields the
     # EXACT float j (1.0 sums are exact) — keeping the default path
@@ -990,17 +991,9 @@ def holt_forecast(
     phi_cum = {0: 0.0}
     for j in range(1, max(hs) + 1):
         phi_cum[j] = phi_cum[j - 1] + phi ** j
-    zq = None
-    if interval:
-        from sparkglm_spark.functions.special import norm_ppf
-
-        zq = float(norm_ppf(0.5 + level / 2.0))
-    sort_cols = ["__ts"] + (["__tb"] if tiebreak_col else [])
-    base = df.select(
-        F.col(key_col),
-        F.col(ts_col).alias("__ts"),
-        F.col(value_col).cast("double").alias("__x"),
-        *([F.col(tiebreak_col).alias("__tb")] if tiebreak_col else []),
+    zq = _interval_z(interval, level)
+    base, sort_cols, key_t = _fold_base(
+        df, key_col, ts_col, value_col, tiebreak_col
     )
     fcols = ", ".join(f"forecast_{h} double" for h in hs)
     if interval:
@@ -1008,7 +1001,7 @@ def holt_forecast(
             f"se_{h} double, lo_{h} double, hi_{h} double" for h in hs
         )
     schema = (
-        f"{key_col} {base.schema[key_col].dataType.simpleString()}, "
+        f"{key_col} {key_t}, "
         f"n_events bigint, level double, trend double, {fcols}"
     )
 
@@ -1018,22 +1011,9 @@ def holt_forecast(
         return lambda s, e: fold_one(ks, xs, s, e)
 
     def fold_one(ks, xs, s, e):
-        x = xs[s:e]
-        n = e - s
-        lvl = x[0]
-        trd = (x[1] - x[0]) if n > 1 else 0.0
-        sse = 0.0
-        for i in range(1, n):
-            prev = lvl
-            fit = lvl + phi * trd
-            # the t=2 (i=1) residual is init-spent, not an innovation:
-            # b₁ was SET from x₂ (lookahead), so its prediction "error"
-            # — exactly 0 at φ=1, (1−φ)(x₂−x₁) under damping — carries
-            # no information; σ̂² averages the n−2 genuine residuals
-            if i > 1:
-                sse += (x[i] - fit) * (x[i] - fit)
-            lvl = alpha * x[i] + (1.0 - alpha) * fit
-            trd = beta * (lvl - prev) + (1.0 - beta) * (phi * trd)
+        lvl, trd, n, sse = _holt_step(
+            (0.0, 0.0, 0, 0.0), xs[s:e], alpha, beta, phi, interval
+        )
         row = {
             key_col: [ks[s]],
             "n_events": [n],
@@ -1130,14 +1110,8 @@ def ar_forecast(
         raise ValueError("horizons must be non-empty")
     if any(int(h) < 1 for h in horizons):
         raise ValueError("horizons must be >= 1")
-    if not 0.0 < level < 1.0:
-        raise ValueError("level must be in (0, 1)")
     hs = [int(h) for h in horizons]
-    zq = None
-    if interval:
-        from sparkglm_spark.functions.special import norm_ppf
-
-        zq = float(norm_ppf(0.5 + level / 2.0))
+    zq = _interval_z(interval, level)
     df = _drop_null_values(df, F.col(value_col).cast("double"))
     base = df.select(
         F.col(key_col),
@@ -1150,19 +1124,9 @@ def ar_forecast(
     wp = Window.partitionBy(key_col)
     lag_cols = [F.lag("__x", j).over(w).alias(f"__l{j}") for j in range(1, p + 1)]
     grid_cols = []
-    grid_zero = F.lit(0.0)
     if not assume_contiguous:
-        # lag-1 ts spacing rides the SAME window exchange (the
-        # forecast_accuracy grid idiom — timestamps subtract directly
-        # as intervals, dates by day count; see its r13 DST note)
-        ts_t = base.schema["__ts"].dataType.simpleString()
-        if ts_t == "date":
-            tsd = F.unix_date(F.col("__ts")).cast("double")
-        elif ts_t.startswith("timestamp"):
-            tsd = F.col("__ts")
-            grid_zero = F.expr("INTERVAL '0' SECOND")
-        else:
-            tsd = F.col("__ts").cast("double")
+        # lag-1 spacing of the `_ts_axis` rides the SAME window exchange
+        tsd = _ts_axis(base, "__ts")
         grid_cols = [(tsd - F.lag(tsd, 1).over(w)).alias("__dt")]
     feat = base.select(
         key_col,
@@ -1218,7 +1182,7 @@ def ar_forecast(
         agg = agg.withColumn(
             "grid_ok",
             F.col("dt_min").eqNullSafe(F.col("dt_max"))
-            & (F.col("dt_max") > grid_zero)
+            & (F.col("dt_max") > 0)
             & (F.col("n") - F.col("dt_n") == 1),
         )
     else:
@@ -1238,27 +1202,17 @@ def ar_forecast(
         + ", "
         + fcols
     )
-    itc, hs_, p_, iv_ = intercept, list(hs), p, interval
+    # the flat sums layout `_ar_solve_from_sums` reads
+    sum_cols = (
+        ["s_y", "s_yy"]
+        + [f"s_l{i}" for i in range(1, p + 1)]
+        + [f"s_l{i}y" for i in range(1, p + 1)]
+        + [f"s_l{i}_{j}" for i in range(1, p + 1) for j in range(i, p + 1)]
+    )
 
     def solve(it):
         for pdf in it:
-            out = {c: [] for c in
-                   [key_col, "n_events", "n_fit"]
-                   + (["intercept"] if itc else [])
-                   + [f"ar_{i}" for i in range(1, p_ + 1)]
-                   + ["sigma2"]
-                   + [f"forecast_{h}" for h in hs_]
-                   + ([c for h in hs_ for c in (f"se_{h}", f"lo_{h}", f"hi_{h}")]
-                      if iv_ else [])}
-
-            def null_row(key, n, nf):
-                out[key_col].append(key)
-                out["n_events"].append(int(n))
-                out["n_fit"].append(int(nf))
-                for c in out:
-                    if c not in (key_col, "n_events", "n_fit"):
-                        out[c].append(None)
-
+            out = None
             # one row per key, but row-iterate via the dict form —
             # iterrows' per-row Series construction is the slowest
             # pandas path at ~1M keys (review r14 pass 2)
@@ -1266,54 +1220,26 @@ def ar_forecast(
                 nf = int(r["nf"] or 0)
                 sol = None
                 if bool(r["grid_ok"]) and nf >= k:
-                    s_l = np.array(
-                        [float(r[f"s_l{i}"]) for i in range(1, p_ + 1)]
-                    )
-                    s_ly = np.array(
-                        [float(r[f"s_l{i}y"]) for i in range(1, p_ + 1)]
-                    )
-                    s_ll = np.empty((p_, p_))
-                    for i in range(1, p_ + 1):
-                        for j in range(i, p_ + 1):
-                            s_ll[i - 1, j - 1] = s_ll[j - 1, i - 1] = float(
-                                r[f"s_l{i}_{j}"]
-                            )
                     sol = _ar_solve_from_sums(
-                        nf, float(r["s_y"]), float(r["s_yy"]), s_l, s_ly,
-                        s_ll, [d["x"] for d in r["tail"]], p_, itc, hs_,
-                        iv_, zq,
+                        nf, [r[c] for c in sum_cols],
+                        [d["x"] for d in r["tail"]], p, intercept, hs,
+                        interval, zq,
                     )
-                if sol is None:
-                    null_row(r[key_col], r["n"], nf)
-                    continue
-                out[key_col].append(r[key_col])
-                out["n_events"].append(int(r["n"]))
-                out["n_fit"].append(nf)
-                if itc:
-                    out["intercept"].append(sol["c0"])
-                for i in range(1, p_ + 1):
-                    out[f"ar_{i}"].append(sol["phi"][i - 1])
-                out["sigma2"].append(sol["sig2"])
-                for h in hs_:
-                    out[f"forecast_{h}"].append(sol["fcs"][h - 1])
-                if iv_:
-                    for h in hs_:
-                        se, lo, hi = sol["ses"][h]
-                        out[f"se_{h}"].append(se)
-                        out[f"lo_{h}"].append(lo)
-                        out[f"hi_{h}"].append(hi)
-            yield pd.DataFrame(out)
+                row = {key_col: r[key_col], "n_events": int(r["n"]),
+                       "n_fit": nf, **_ar_row(sol, p, intercept, hs, interval)}
+                if out is None:
+                    out = {c: [] for c in row}
+                for c, v in row.items():
+                    out[c].append(v)
+            if out is not None:
+                yield pd.DataFrame(out)
 
     return _sorted_output(agg.mapInPandas(solve, schema), key_col)
 
 
 def _ar_solve_from_sums(
     nf: int,
-    s_y: float,
-    s_yy: float,
-    s_l,
-    s_ly,
-    s_ll,
+    sums,
     tail: list,
     p: int,
     itc: bool,
@@ -1323,13 +1249,22 @@ def _ar_solve_from_sums(
 ) -> dict | None:
     """The AR(p) solve shared by `ar_forecast` and the streaming twin
     (one definition — the `_hw_fold` no-triplication rule): build the
-    k×k normal equations from the Gram sums (s_l/s_ly length-p arrays,
-    s_ll the p×p symmetric lag Gram), solve, derive σ̂² from the same
+    k×k normal equations from the flat Gram `sums` [s_y, s_yy,
+    s_l1..s_lp, s_l1y..s_lpy, the lag Gram's upper triangle row-major]
+    (2 + 2p + p(p+1)/2 values), solve, derive σ̂² from the same
     sums, iterate forecasts from the ascending last-p `tail`, ψ-weight
     intervals. Returns None on a singular/non-finite solve; `ses` maps
     horizon → (se, lo, hi) (None triple when σ̂² has no df)."""
     import numpy as np
 
+    s_y, s_yy = float(sums[0]), float(sums[1])
+    s_l, s_ly = sums[2:2 + p], sums[2 + p:2 + 2 * p]
+    s_ll = np.empty((p, p))
+    pos = 2 + 2 * p
+    for i in range(p):
+        for j in range(i, p):
+            s_ll[i, j] = s_ll[j, i] = float(sums[pos])
+            pos += 1
     k = p + (1 if itc else 0)
     G = np.empty((k, k))
     cy = np.empty(k)
@@ -1375,6 +1310,25 @@ def _ar_solve_from_sums(
                 se = float(np.sqrt(sig2 * sum(v * v for v in psi[:h])))
                 ses[h] = (se, fcs[h - 1] - zq * se, fcs[h - 1] + zq * se)
     return {"c0": c0, "phi": phi, "sig2": sig2, "fcs": fcs, "ses": ses}
+
+
+def _ar_row(sol, p, itc, hs, iv):
+    """The estimate columns of an AR output row from an
+    `_ar_solve_from_sums` result (all NULL when `sol` is None):
+    [intercept,] ar_1…ar_p, sigma2, forecast_<h>…[, se/lo/hi_<h>…]."""
+    row = {}
+    if itc:
+        row["intercept"] = sol["c0"] if sol else None
+    for i in range(1, p + 1):
+        row[f"ar_{i}"] = sol["phi"][i - 1] if sol else None
+    row["sigma2"] = sol["sig2"] if sol else None
+    for h in hs:
+        row[f"forecast_{h}"] = sol["fcs"][h - 1] if sol else None
+    if iv:
+        for h in hs:
+            se, lo, hi = sol["ses"][h] if sol else (None, None, None)
+            row[f"se_{h}"], row[f"lo_{h}"], row[f"hi_{h}"] = se, lo, hi
+    return row
 
 
 def _hw_fold(x, alpha, beta, gamma, m, state=None, phi=1.0, seasonal="add"):
@@ -1517,16 +1471,11 @@ def holt_winters_series(
     if period < 2:
         raise ValueError(f"period must be >= 2, got {period!r}")
     m = int(period)
-    df = _drop_null_values(df, F.col(value_col).cast("double"))
-    sort_cols = ["__ts"] + (["__tb"] if tiebreak_col else [])
-    base = df.select(
-        F.col(key_col),
-        F.col(ts_col).alias("__ts"),
-        F.col(value_col).cast("double").alias("__x"),
-        *([F.col(tiebreak_col).alias("__tb")] if tiebreak_col else []),
+    base, sort_cols, key_t = _fold_base(
+        df, key_col, ts_col, value_col, tiebreak_col
     )
     schema = (
-        f"{key_col} {base.schema[key_col].dataType.simpleString()}, "
+        f"{key_col} {key_t}, "
         f"__ts {base.schema['__ts'].dataType.simpleString()}, "
         "__x double, level double, trend double, seasonal double, "
         "fitted double"
@@ -1663,26 +1612,15 @@ def holt_winters_forecast(
         raise ValueError("horizons must be non-empty")
     if any(int(h) < 1 for h in horizons):
         raise ValueError("horizons must be >= 1")
-    if not 0.0 < level < 1.0:
-        raise ValueError("level must be in (0, 1)")
     m = int(period)
     hs = [int(h) for h in horizons]
     # φ_j accumulated so φ=1 yields the exact float j (see holt_forecast)
     phi_cum = {0: 0.0}
     for j in range(1, max(hs) + 1):
         phi_cum[j] = phi_cum[j - 1] + phi ** j
-    zq = None
-    if interval:
-        from sparkglm_spark.functions.special import norm_ppf
-
-        zq = float(norm_ppf(0.5 + level / 2.0))
-    df = _drop_null_values(df, F.col(value_col).cast("double"))
-    sort_cols = ["__ts"] + (["__tb"] if tiebreak_col else [])
-    base = df.select(
-        F.col(key_col),
-        F.col(ts_col).alias("__ts"),
-        F.col(value_col).cast("double").alias("__x"),
-        *([F.col(tiebreak_col).alias("__tb")] if tiebreak_col else []),
+    zq = _interval_z(interval, level)
+    base, sort_cols, key_t = _fold_base(
+        df, key_col, ts_col, value_col, tiebreak_col
     )
     fcols = ", ".join(f"forecast_{h} double" for h in hs)
     if interval:
@@ -1690,7 +1628,7 @@ def holt_winters_forecast(
             f"se_{h} double, lo_{h} double, hi_{h} double" for h in hs
         )
     schema = (
-        f"{key_col} {base.schema[key_col].dataType.simpleString()}, "
+        f"{key_col} {key_t}, "
         f"n_events bigint, level double, trend double, "
         f"season array<double>, {fcols}"
     )
@@ -1808,16 +1746,11 @@ def ljung_box(
     if lags < 1:
         raise ValueError(f"lags must be >= 1, got {lags!r}")
     h = int(lags)
-    df = _drop_null_values(df, F.col(value_col).cast("double"))
-    sort_cols = ["__ts"] + (["__tb"] if tiebreak_col else [])
-    base = df.select(
-        F.col(key_col),
-        F.col(ts_col).alias("__ts"),
-        F.col(value_col).cast("double").alias("__x"),
-        *([F.col(tiebreak_col).alias("__tb")] if tiebreak_col else []),
+    base, sort_cols, key_t = _fold_base(
+        df, key_col, ts_col, value_col, tiebreak_col
     )
     schema = (
-        f"{key_col} {base.schema[key_col].dataType.simpleString()}, "
+        f"{key_col} {key_t}, "
         "n bigint, q_stat double, df int, p_value double, max_abs_acf double"
     )
 
@@ -1902,16 +1835,11 @@ def seasonal_decompose(
         )
     mul = model == "multiplicative"
     m = int(period)
-    df = _drop_null_values(df, F.col(value_col).cast("double"))
-    sort_cols = ["__ts"] + (["__tb"] if tiebreak_col else [])
-    base = df.select(
-        F.col(key_col),
-        F.col(ts_col).alias("__ts"),
-        F.col(value_col).cast("double").alias("__x"),
-        *([F.col(tiebreak_col).alias("__tb")] if tiebreak_col else []),
+    base, sort_cols, key_t = _fold_base(
+        df, key_col, ts_col, value_col, tiebreak_col
     )
     schema = (
-        f"{key_col} {base.schema[key_col].dataType.simpleString()}, "
+        f"{key_col} {key_t}, "
         f"__ts {base.schema['__ts'].dataType.simpleString()}, "
         "__x double, trend double, seasonal double, resid double"
     )
@@ -2013,11 +1941,11 @@ def forecast_accuracy(
              later seasonal pair, so a wrong-but-plausible number would
              come back. When m > 1 the key's retained rows must sit on
              a REGULAR grid (all lag-1 ts spacings equal — checked on
-             the same window pass; timestamp axes subtract directly as
-             intervals, tz-independent; dates compare day counts;
-             duplicate or null ts rows also fail); a non-contiguous
-             key gets
-             mase NULL, never a phase-shifted value. Pass
+             the same window pass on the `_ts_axis`: epoch micros for
+             timestamps, so a DST transition is no gap; dates compare
+             day counts; duplicate or null ts rows also fail); a
+             non-contiguous key gets mase NULL, never a phase-shifted
+             value. Pass
              `assume_contiguous=True` to skip the check (e.g. integer
              period indices known gap-free, or float grids where exact
              spacing equality is too strict)
@@ -2049,23 +1977,9 @@ def forecast_accuracy(
     ylag = F.lag("__y", m).over(w)
     check_grid = m > 1 and not assume_contiguous
     grid_cols = []
-    grid_zero = F.lit(0.0)
     if check_grid:
-        # lag-1 ts spacing rides the SAME window exchange. Timestamp
-        # axes subtract DIRECTLY (a day-time INTERVAL): NTZ−NTZ is pure
-        # wall-clock and LTZ−LTZ pure instant arithmetic — epoch
-        # extraction (timestamp_diff/unix_micros) coerces NTZ through
-        # the SESSION zone, so a regular hourly grid crossing a DST
-        # transition looked irregular (review r13, pass 2). Dates use
-        # the day count (date → double is an invalid Spark 4 cast).
-        ts_t = base.schema["__ts"].dataType.simpleString()
-        if ts_t == "date":
-            tsd = F.unix_date(F.col("__ts")).cast("double")
-        elif ts_t.startswith("timestamp"):
-            tsd = F.col("__ts")
-            grid_zero = F.expr("INTERVAL '0' SECOND")
-        else:
-            tsd = F.col("__ts").cast("double")
+        # lag-1 spacing of the `_ts_axis` rides the SAME window exchange
+        tsd = _ts_axis(base, "__ts")
         grid_cols = [(tsd - F.lag(tsd, 1).over(w)).alias("__dt")]
     scored = base.select(
         key_col,
@@ -2112,7 +2026,7 @@ def forecast_accuracy(
         mase_ok = (
             mase_ok
             & F.col("__dt_min").eqNullSafe(F.col("__dt_max"))
-            & (F.col("__dt_max") > grid_zero)
+            & (F.col("__dt_max") > 0)
             & (F.col("n") - F.col("__dt_n") == 1)
         )
     return agg.select(

@@ -9,24 +9,48 @@ data (event-time semantics, not arrival-time).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
+
+from sparkglm_spark.operators.timeseries import _drop_null_values, _ts_axis
+
+_TYPES = {
+    "double": DoubleType(),
+    "long": LongType(),
+    "boolean": BooleanType(),
+    "array<double>": ArrayType(DoubleType()),
+    "array<long>": ArrayType(LongType()),
+}
+
+
+def _fields(**types: str) -> list[StructField]:
+    """Nullable StructFields from name=type keywords (`_TYPES` names)."""
+    return [StructField(n, _TYPES[t]) for n, t in types.items()]
+
+
+def _struct(**types: str) -> StructType:
+    return StructType(_fields(**types))
 
 
 def _watermark_time(df: DataFrame, ts_col: str) -> Column:
     """Structured Streaming watermarks require TIMESTAMP (LTZ). Testdata
     event times are TIMESTAMP_NTZ; map NTZ wall-clock to the UTC instant
-    with the same wall clock via pure µs arithmetic — timezone-independent,
-    unlike a cast through the session zone."""
-    c = F.col(ts_col)
+    with the same wall clock via `_ts_axis`'s wall-clock micros —
+    timezone-independent, unlike a cast through the session zone."""
     if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
-        return F.timestamp_micros(
-            F.timestamp_diff(
-                "MICROSECOND", F.expr("TIMESTAMP_NTZ '1970-01-01 00:00:00'"), c
-            )
-        )
-    return c
+        return F.timestamp_micros(_ts_axis(df, ts_col))
+    return F.col(ts_col)
 
 
 def _ntz_restore(col) -> Column:
@@ -39,6 +63,152 @@ def _ntz_restore(col) -> Column:
     return F.timestamp_add(
         "MICROSECOND", F.unix_micros(c), F.expr("TIMESTAMP_NTZ '1970-01-01 00:00:00'")
     )
+
+
+def _check_stream(name: str, events: DataFrame, cols) -> None:
+    """The stream operators' input checks: a streaming DataFrame holding
+    every named column."""
+    if not events.isStreaming:
+        raise ValueError("input must be a streaming DataFrame (readStream)")
+    missing = [c for c in cols if c not in events.columns]
+    if missing:
+        raise ValueError(
+            f"{name}: columns {missing} not in input schema "
+            f"{sorted(events.columns)}"
+        )
+
+
+def _state_stream(
+    name: str,
+    events: DataFrame,
+    key_col: str | None,
+    ts_col: str | None,
+    value_cols: list[str],
+    tiebreak_col: str | None,
+    state_schema: StructType,
+    out_fields: list[StructField],
+    init: tuple,
+    step,
+    drop_nulls: bool = True,
+) -> DataFrame:
+    """The one applyInPandasWithState harness of the per-key stream
+    operators; each operator supplies only its `step`.
+
+    - NULL POLICY (family-wide — `operators.timeseries._drop_null_values`):
+      rows with a null/NaN in any of `value_cols` are dropped before the
+      fold, exactly as in the batch twins (`drop_nulls=False` keeps them).
+    - ORDER CONTRACT: a group's micro-batch arrives as an ITERATOR of
+      Arrow chunks (~10k rows each); they are concatenated, then
+      mergesorted on (`_ts_axis`, tiebreak) — sorting chunk by chunk
+      would fold rows that cross a chunk boundary out of order. Rows
+      therefore fold in time order within a micro-batch and in arrival
+      order across micro-batches: a row arriving after a later one was
+      folded is folded late, so use the batch twin for out-of-order
+      backfills. The axis rides along as the double column `__t`
+      (epoch micros for timestamps, NULL ts → NaN, sorted last).
+      `ts_col=None` folds in arrival order.
+    - `step(state, pdf) -> (state, row | None)`: `state` is a tuple in
+      `state_schema` order (`init` for a new key); `row` maps the
+      `out_fields` names to values and is emitted behind the key (whose
+      field comes from the input schema), output mode 'update'; None
+      emits nothing.
+    - `key_col=None` folds the whole stream as one state and emits no
+      key."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    _check_stream(
+        name, events, [c for c in (key_col, ts_col, *value_cols, tiebreak_col) if c]
+    )
+    key_fields = [events.schema[key_col]] if key_col else []
+    if drop_nulls:
+        for c in value_cols:
+            events = _drop_null_values(events, F.col(c).cast("double"))
+    cols = list(dict.fromkeys(c for c in (key_col, *value_cols, tiebreak_col) if c))
+    sel = [F.col(c) for c in cols]
+    sort_cols = []
+    if ts_col:
+        sel.append(_ts_axis(events, ts_col).cast("double").alias("__t"))
+        sort_cols = ["__t"] + ([tiebreak_col] if tiebreak_col else [])
+    if not key_col:
+        # a literal grouping EXPRESSION doesn't resolve through
+        # applyInPandasWithState — materialize the dummy key as a column
+        sel.append(F.lit(0).alias("__g"))
+
+    def update(key, pdfs, state: GroupState):
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if not chunks:
+            return
+        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+        if sort_cols:
+            pdf = pdf.sort_values(sort_cols, kind="mergesort")
+        st, row = step(tuple(state.get) if state.exists else init, pdf)
+        state.update(st)
+        if row is not None:
+            if key_col:
+                row = {key_col: key[0], **row}
+            yield pd.DataFrame({c: [v] for c, v in row.items()})
+
+    return (
+        events.select(*sel)
+        .groupBy(key_col or "__g")
+        .applyInPandasWithState(
+            update,
+            outputStructType=StructType(key_fields + out_fields),
+            stateStructType=state_schema,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+
+
+def _last_ts(events: DataFrame, ts_col: str):
+    """The `last_ts_micros` update of the smoothing streams: the running
+    max of the folded rows' time axis — epoch micros of the instant for
+    TIMESTAMP, of the wall clock for TIMESTAMP_NTZ (the batch `last_ts`
+    as micros). Date and numeric axes are no instant: NULL."""
+    import pandas as pd
+
+    if ts_col not in events.columns or not isinstance(
+        events.schema[ts_col].dataType, (TimestampType, TimestampNTZType)
+    ):
+        return lambda last, pdf: None
+
+    def advance(last, pdf):
+        t = pdf["__t"].max()
+        if pd.isna(t):
+            return last
+        return int(t) if last is None else max(last, int(t))
+
+    return advance
+
+
+def _grid_track(prev_ts, dt_min, dt_max, t):
+    """Regular-grid tracker of the streams whose lag pairing is
+    positional (seasonal `forecast_accuracy_stream`, `ar_state_stream`):
+    folds the lag-1 spacings of the ordered axis values `t` — plus the
+    seam to the previous micro-batch's last value — into the running
+    (dt_min, dt_max). Returns the new (prev_ts, dt_min, dt_max). np.min/
+    max PROPAGATE NaN, so a null-ts row (NaN axis) poisons the tracker for
+    good, as the batch twins' null-spacing census NULLs such keys."""
+    dts = np.diff(t)
+    if prev_ts is not None:
+        dts = np.concatenate([[t[0] - prev_ts], dts])
+    if len(dts):
+        lo, hi = float(np.min(dts)), float(np.max(dts))
+        if dt_min is None:
+            dt_min, dt_max = lo, hi
+        elif np.isnan(lo) or np.isnan(dt_min):
+            dt_min = dt_max = float("nan")
+        else:
+            dt_min = min(dt_min, lo)
+            dt_max = max(dt_max, hi)
+    return float(t[-1]), dt_min, dt_max
+
+
+def _grid_ok(dt_min, dt_max) -> bool:
+    """Regular grid ⇔ every spacing so far equal and positive."""
+    return dt_min is not None and dt_min == dt_max and dt_max > 0.0
 
 
 def windowed_event_stats(
@@ -143,29 +313,19 @@ def user_running_totals_stream(events: DataFrame, user_col: str = "user_id") -> 
     State is O(1) per user (two numbers), Arrow-batched per group — the
     pattern for any custom accumulator Structured Streaming's built-in aggs
     can't express. Converges to the batch `user_running_totals` result once
-    the stream drains."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    the stream drains. Every row counts, as in the batch twin (no null
+    drop); the key column keeps its input type."""
+    def step(st, pdf):
+        n, s = st
+        n += len(pdf)
+        s += float(pdf["value"].sum())
+        return (n, s), {"n_events": n, "value_sum": s}
 
-    if not events.isStreaming:
-        raise ValueError("input must be a streaming DataFrame (readStream)")
-
-    def update(key, pdfs, state: GroupState):
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].sum())
-        state.update((n, s))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "value_sum": [s]}
-        )
-
-    return events.select(user_col, "value").groupBy(user_col).applyInPandasWithState(
-        update,
-        outputStructType="user_id long, n_events long, value_sum double",
-        stateStructType="n long, s double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _state_stream(
+        "user_running_totals_stream", events, user_col, None, ["value"], None,
+        _struct(n="long", s="double"),
+        _fields(n_events="long", value_sum="double"),
+        (0, 0.0), step, drop_nulls=False,
     )
 
 
@@ -194,27 +354,13 @@ def latest_state_stream(
     batch twin: include a unique tiebreaker)."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
 
     if not events.isStreaming:
         raise ValueError("input must be a streaming DataFrame (readStream)")
     if not key_cols or not order_cols:
         raise ValueError("key_cols and order_cols must be non-empty")
-
+    _check_stream("latest_state_stream", events, key_cols + order_cols + value_cols)
     in_fields = {f.name: f for f in events.schema.fields}
-    missing = [
-        c for c in key_cols + order_cols + value_cols if c not in in_fields
-    ]
-    if missing:
-        raise ValueError(
-            f"latest_state_stream: columns {missing} not in input schema "
-            f"{sorted(in_fields)}"
-        )
     out_cols = list(dict.fromkeys(key_cols + order_cols + value_cols))
     out_schema = StructType([in_fields[c] for c in out_cols])
     ts_like = (TimestampType, TimestampNTZType)
@@ -379,80 +525,25 @@ def ewma_state_stream(
     so a micro-batch of m ordered rows folds VECTORIZED (batch partial
     weighted sums + one (1−α)^m decay of the carried state) — state per
     key is 2 doubles + 2 longs, O(1) forever, no eviction needed. Each
-    batch EMITS the key's updated (n_events, ewma, last_ts) (output mode
-    'update'); the last update per key equals the batch `ewma_latest`
-    once the stream drains — asserted in tests/test_streaming.py over a
-    multi-micro-batch replay.
+    batch EMITS the key's updated (n_events, ewma, last_ts_micros)
+    (output mode 'update'); the last update per key equals the batch
+    `ewma_latest` once the stream drains — asserted in
+    tests/test_streaming.py over a multi-micro-batch replay.
+    `last_ts_micros` is the batch `last_ts` as epoch micros (the wall
+    clock's for TIMESTAMP_NTZ) and NULL on a date or numeric ts axis.
 
-    ORDER CONTRACT: rows are folded in (ts[, tiebreak]) order WITHIN each
-    micro-batch, and in arrival order across batches. A row arriving
-    after a later-ts row already folded is folded late (weighted as
-    newest) — the standard streaming-EWMA caveat; use the batch
-    `ewma_latest` for out-of-order backfills.
-
-    NULL POLICY (family-wide — `operators.timeseries._drop_null_values`):
-    rows with a null/NaN value are dropped before the fold, exactly as
-    in the batch twin, so streaming ≡ batch holds on dirty data too."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    if not events.isStreaming:
-        raise ValueError("input must be a streaming DataFrame (readStream)")
+    ORDER CONTRACT and NULL POLICY: the `_state_stream` harness's —
+    rows fold in (ts, tiebreak) order within a micro-batch and in
+    arrival order across batches (a late row is weighted as newest, the
+    standard streaming-EWMA caveat); null/NaN values are dropped before
+    the fold, exactly as in the batch twin."""
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"alpha must be in (0, 1), got {alpha!r}")
-    in_fields = {f.name: f for f in events.schema.fields}
-    need = [key_col, ts_col, value_col] + (
-        [tiebreak_col] if tiebreak_col else []
-    )
-    missing = [c for c in need if c not in in_fields]
-    if missing:
-        raise ValueError(
-            f"ewma_state_stream: columns {missing} not in input schema "
-            f"{sorted(in_fields)}"
-        )
-    out_schema = StructType(
-        [
-            in_fields[key_col],
-            StructField("n_events", LongType()),
-            StructField("ewma", DoubleType()),
-            StructField("last_ts_micros", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("num", DoubleType()),
-            StructField("den", DoubleType()),
-            StructField("n", LongType()),
-            StructField("last", LongType()),
-        ]
-    )
     decay = 1.0 - alpha
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    from sparkglm_spark.operators.timeseries import _drop_null_values
+    last_ts = _last_ts(events, ts_col)
 
-    events = _drop_null_values(events, F.col(value_col).cast("double"))
-
-    def update(key, pdfs, state: GroupState):
-        num, den, n, last = (
-            tuple(state.get) if state.exists else (0.0, 0.0, 0, None)
-        )
-        # a group's micro-batch arrives as an ITERATOR of Arrow chunks
-        # (~10k rows each): concatenate before sorting, or rows that cross
-        # a chunk boundary out of (ts, tiebreak) order would fold
-        # chunk-by-chunk and be weighted as newest — violating the
-        # within-batch order contract below
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
+    def step(st, pdf):
+        num, den, n, last = st
         x = pdf[value_col].to_numpy(dtype=np.float64)
         m = len(x)
         w = decay ** np.arange(m - 1, -1, -1, dtype=np.float64)
@@ -460,28 +551,17 @@ def ewma_state_stream(
         num = float((w * x).sum()) + carry * num
         den = float(w.sum()) + carry * den
         n += m
-        bt = int(pd.Timestamp(pdf[ts_col].iloc[-1]).value // 1000)
-        last = bt if last is None else max(last, bt)
-        state.update((num, den, n, last))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n_events": [n],
-                "ewma": [num / den],
-                "last_ts_micros": [last],
-            }
-        )
+        last = last_ts(last, pdf)
+        return (num, den, n, last), {
+            "n_events": n, "ewma": num / den, "last_ts_micros": last,
+        }
 
-    return (
-        events.select(*dict.fromkeys(need))
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _state_stream(
+        "ewma_state_stream", events, key_col, ts_col, [value_col],
+        tiebreak_col,
+        _struct(num="double", den="double", n="long", last="long"),
+        _fields(n_events="long", ewma="double", last_ts_micros="long"),
+        (0.0, 0.0, 0, None), step,
     )
 
 
@@ -498,141 +578,57 @@ def holt_state_stream(
     """Streaming twin of `operators.timeseries.holt_forecast`'s end state
     (per-key Holt level + trend) via applyInPandasWithState.
 
-    `phi` < 1 is the Gardner-McKenzie damped trend (see `holt_series`);
-    the default φ=1 path multiplies by 1.0 — bit-identical to undamped
-    Holt, so existing checkpointed streams continue exactly. The damped
-    recursion stays an O(1)-state exact continuation: x₂ folds through
-    the same one-step update as the batch loop's first iteration (with
-    b₁ = x₂ − x₁ from the carried x₁), so a key whose first two rows
-    arrive in different micro-batches lands on the batch trajectory at
-    any φ.
-
-    Holt's recursion is sequential, so each micro-batch's rows fold in
-    (ts[, tiebreak]) order through the carried (level, trend, n) state —
-    EXACT continuation of the batch recursion, including the simple
-    initialization (b₁ = x₂ − x₁ is formed when the second observation
-    arrives, then x₂ folds through the standard update — the batch
-    loop's own first step), so a key whose first two rows arrive in
-    DIFFERENT micro-batches still lands on the batch trajectory
-    (asserted in tests). State per key: 2 doubles + 2 longs, O(1)
-    forever.
-
-    ORDER CONTRACT (same as `ewma_state_stream`): within a micro-batch
-    rows fold in (ts, tiebreak) order across Arrow chunks; across
-    batches in arrival order — late rows fold late; use the batch
-    `holt_forecast` for out-of-order backfills.
+    Holt's recursion is sequential: each micro-batch's rows fold through
+    the carried (level, trend, n) state with `_holt_step` — the very
+    step `holt_forecast` runs over a key's whole history, including the
+    simple initialization (b₁ = x₂ − x₁ is formed when the second
+    observation arrives, then x₂ folds through the standard update), so
+    a key whose first two rows arrive in DIFFERENT micro-batches still
+    lands on the batch trajectory bit for bit at any φ (asserted in
+    tests). `phi` < 1 is the Gardner-McKenzie damped trend (see
+    `holt_series`); φ=1 multiplies by 1.0 — bit-identical to undamped
+    Holt. State per key: 2 doubles + 2 longs, O(1) forever.
 
     Emits the key's updated (n_events, level, trend, forecast_1 =
-    level + trend, last_ts_micros) per micro-batch ('update' mode); the
-    last update per key equals `holt_forecast` once the stream drains.
+    level + φ·trend, last_ts_micros) per micro-batch ('update' mode);
+    the last update per key equals `holt_forecast` once the stream
+    drains. `last_ts_micros` is the max ts as epoch micros (the wall
+    clock's for TIMESTAMP_NTZ), NULL on a date or numeric ts axis.
 
-    NULL POLICY (family-wide — `operators.timeseries._drop_null_values`):
-    rows with a null/NaN value are dropped before the fold — a null in
-    one micro-batch no longer NaN-poisons the key's carried (level,
-    trend) state for every later batch; streaming ≡ batch on dirty
-    data."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    ORDER CONTRACT and NULL POLICY: the `_state_stream` harness's
+    (within-batch (ts, tiebreak) order, arrival order across batches —
+    use the batch `holt_forecast` for out-of-order backfills; null/NaN
+    values dropped before the fold, so a null never NaN-poisons the
+    carried state)."""
+    from sparkglm_spark.operators.timeseries import _holt_step
 
-    if not events.isStreaming:
-        raise ValueError("input must be a streaming DataFrame (readStream)")
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"alpha must be in (0, 1), got {alpha!r}")
     if not 0.0 < beta < 1.0:
         raise ValueError(f"beta must be in (0, 1), got {beta!r}")
     if not 0.0 < phi <= 1.0:
         raise ValueError(f"phi must be in (0, 1], got {phi!r}")
-    in_fields = {f.name: f for f in events.schema.fields}
-    need = [key_col, ts_col, value_col] + (
-        [tiebreak_col] if tiebreak_col else []
-    )
-    missing = [c for c in need if c not in in_fields]
-    if missing:
-        raise ValueError(
-            f"holt_state_stream: columns {missing} not in input schema "
-            f"{sorted(in_fields)}"
-        )
-    out_schema = StructType(
-        [
-            in_fields[key_col],
-            StructField("n_events", LongType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-            StructField("forecast_1", DoubleType()),
-            StructField("last_ts_micros", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("lvl", DoubleType()),
-            StructField("trd", DoubleType()),
-            StructField("n", LongType()),
-            StructField("last", LongType()),
-        ]
-    )
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    from sparkglm_spark.operators.timeseries import _drop_null_values
+    last_ts = _last_ts(events, ts_col)
 
-    events = _drop_null_values(events, F.col(value_col).cast("double"))
+    def step(st, pdf):
+        lvl, trd, n, last = st
+        lvl, trd, n, _ = _holt_step(
+            (lvl, trd, n, 0.0), pdf[value_col].to_numpy(dtype=np.float64),
+            alpha, beta, phi, False,
+        )
+        last = last_ts(last, pdf)
+        return (lvl, trd, n, last), {
+            "n_events": n, "level": lvl, "trend": trd,
+            "forecast_1": lvl + phi * trd, "last_ts_micros": last,
+        }
 
-    def update(key, pdfs, state: GroupState):
-        lvl, trd, n, last = (
-            tuple(state.get) if state.exists else (0.0, 0.0, 0, None)
-        )
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        x = pdf[value_col].to_numpy(dtype=np.float64)
-        for v in x:
-            if n == 0:
-                lvl, trd = float(v), 0.0
-            elif n == 1:
-                # simple init b₁ = x₂ − x₁ (lookahead), then x₂ folds
-                # through the SAME one-step update as the batch loop's
-                # first iteration — bitwise-equal to holt_forecast at any
-                # φ (at φ=1 this lands on the (x₂, x₂−x₁) identity)
-                b1 = float(v) - lvl
-                prev = lvl
-                lvl = alpha * float(v) + (1.0 - alpha) * (lvl + phi * b1)
-                trd = beta * (lvl - prev) + (1.0 - beta) * (phi * b1)
-            else:
-                prev = lvl
-                lvl = alpha * float(v) + (1.0 - alpha) * (lvl + phi * trd)
-                trd = beta * (lvl - prev) + (1.0 - beta) * (phi * trd)
-            n += 1
-        bt = int(pd.Timestamp(pdf[ts_col].iloc[-1]).value // 1000)
-        last = bt if last is None else max(last, bt)
-        state.update((lvl, trd, n, last))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n_events": [n],
-                "level": [lvl],
-                "trend": [trd],
-                "forecast_1": [lvl + phi * trd],
-                "last_ts_micros": [last],
-            }
-        )
-
-    return (
-        events.select(*dict.fromkeys(need))
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _state_stream(
+        "holt_state_stream", events, key_col, ts_col, [value_col],
+        tiebreak_col,
+        _struct(lvl="double", trd="double", n="long", last="long"),
+        _fields(n_events="long", level="double", trend="double",
+                forecast_1="double", last_ts_micros="long"),
+        (0.0, 0.0, 0, None), step,
     )
 
 
@@ -667,22 +663,12 @@ def drift_state_stream(
 
     NULL POLICY (family-wide — `operators.timeseries._drop_null_values`):
     null/NaN values are dropped before binning, exactly as the batch
-    operator excludes them from its bin counts.
+    operator excludes them from its bin counts; NULL group keys are
+    dropped too, as `distribution_drift_grouped` does.
 
     Emits (group?, n_cur, psi, js_divergence) per micro-batch in
     'update' mode."""
     import math
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     if eps <= 0:
         raise ValueError("eps must be > 0")
@@ -692,8 +678,6 @@ def drift_state_stream(
                 "reference must be a distribution_drift() result dict "
                 f"(missing {key!r})"
             )
-    if not events.isStreaming:
-        raise ValueError("input must be a streaming DataFrame (readStream)")
     lo = float(reference["lo"])
     hi = float(reference["hi"])
     n_bins = int(reference["n_bins"])
@@ -703,44 +687,18 @@ def drift_state_stream(
     for b in reference["bins"]:
         p_ref[int(b["bin"])] = float(b["p_ref"])
     span = hi - lo
-    in_fields = {f.name: f for f in events.schema.fields}
-    need = ([group_col] if group_col else []) + [value_col]
-    missing = [c for c in need if c not in in_fields]
-    if missing:
-        raise ValueError(
-            f"drift_state_stream: columns {missing} not in input schema "
-            f"{sorted(in_fields)}"
-        )
-    out_schema = StructType(
-        ([in_fields[group_col]] if group_col else [])
-        + [
-            StructField("n_cur", LongType()),
-            StructField("psi", DoubleType()),
-            StructField("js_divergence", DoubleType()),
-        ]
-    )
-    state_schema = StructType([StructField("counts", ArrayType(LongType()))])
+    if group_col:
+        _check_stream("drift_state_stream", events, [group_col, value_col])
+        events = events.where(F.col(group_col).isNotNull())
 
-    def update(key, pdfs, state: GroupState):
-        counts = (
-            np.array(state.get[0], dtype=np.int64)
-            if state.exists
-            else np.zeros(n_bins, dtype=np.int64)
-        )
-        got = False
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            got = True
-            x = pdf[value_col].to_numpy(dtype=np.float64)
-            # the batch operator's binning expression, replayed on the
-            # same doubles: floor((x - lo) / (hi - lo) * n_bins), clamped
-            b = np.floor((x - lo) / span * n_bins)
-            b = np.clip(b, 0, n_bins - 1).astype(np.int64)
-            counts += np.bincount(b, minlength=n_bins)
-        if not got:
-            return
-        state.update(([int(c) for c in counts],))
+    def step(st, pdf):
+        counts = np.array(st[0], dtype=np.int64)
+        x = pdf[value_col].to_numpy(dtype=np.float64)
+        # the batch operator's binning expression, replayed on the
+        # same doubles: floor((x - lo) / (hi - lo) * n_bins), clamped
+        b = np.floor((x - lo) / span * n_bins)
+        b = np.clip(b, 0, n_bins - 1).astype(np.int64)
+        counts += np.bincount(b, minlength=n_bins)
         n_cur = float(counts.sum())
         psi = js = 0.0
         for i in range(n_bins):
@@ -753,33 +711,15 @@ def drift_state_stream(
                 js += 0.5 * p * math.log(p / m)
             if q > 0:
                 js += 0.5 * q * math.log(q / m)
-        row = {}
-        if group_col:
-            row[group_col] = [key[0]]
-        row.update(n_cur=[int(n_cur)], psi=[psi], js_divergence=[js])
-        yield pd.DataFrame(row)
+        return ([int(c) for c in counts],), {
+            "n_cur": int(n_cur), "psi": psi, "js_divergence": js,
+        }
 
-    from sparkglm_spark.operators.timeseries import _drop_null_values
-
-    clean = _drop_null_values(
-        events.select(*dict.fromkeys(need)),
-        F.col(value_col).cast("double"),
-    )
-    if group_col:
-        # NULL group keys are dropped, matching the batch twin
-        # (`distribution_drift_grouped` filters group_col.isNotNull())
-        clean = clean.where(F.col(group_col).isNotNull())
-        grouped = clean.groupBy(group_col)
-    else:
-        # a literal grouping EXPRESSION doesn't resolve through
-        # applyInPandasWithState — materialize the dummy key as a column
-        grouped = clean.withColumn("__g", F.lit(0)).groupBy("__g")
-    return grouped.applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _state_stream(
+        "drift_state_stream", events, group_col, None, [value_col], None,
+        _struct(counts="array<long>"),
+        _fields(n_cur="long", psi="double", js_divergence="double"),
+        ([0] * n_bins,), step,
     )
 
 
@@ -822,26 +762,16 @@ def holt_winters_state_stream(
     ts-ordered replay in tests). State per key: period + a bounded
     2·period-value init buffer, O(period) forever.
 
-    ORDER CONTRACT and NULL POLICY as `holt_state_stream` (rows fold in
-    (ts, tiebreak) order within a batch, arrival order across batches;
-    null/NaN values dropped before the fold).
+    ORDER CONTRACT and NULL POLICY: the `_state_stream` harness's (rows
+    fold in (ts, tiebreak) order within a batch, arrival order across
+    batches; null/NaN values dropped before the fold).
 
     Emits (key, n_events, level, trend, forecast_1, last_ts_micros) per
     micro-batch ('update' mode); level/trend/forecast_1 are NULL until
-    the key has seen 2·period values."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        BooleanType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from sparkglm_spark.operators.timeseries import _drop_null_values, _hw_fold
+    the key has seen 2·period values. `last_ts_micros` is the max ts as
+    epoch micros (the wall clock's for TIMESTAMP_NTZ), NULL on a date or
+    numeric ts axis."""
+    from sparkglm_spark.operators.timeseries import _hw_fold
 
     for name, v in (("alpha", alpha), ("beta", beta), ("gamma", gamma)):
         if not 0.0 < v < 1.0:
@@ -853,58 +783,11 @@ def holt_winters_state_stream(
     if period < 2:
         raise ValueError(f"period must be >= 2, got {period!r}")
     m = int(period)
-    if not events.isStreaming:
-        raise ValueError("input must be a streaming DataFrame (readStream)")
-    in_fields = {f.name: f for f in events.schema.fields}
-    need = [key_col, ts_col, value_col] + (
-        [tiebreak_col] if tiebreak_col else []
-    )
-    missing = [c for c in need if c not in in_fields]
-    if missing:
-        raise ValueError(
-            f"holt_winters_state_stream: columns {missing} not in input "
-            f"schema {sorted(in_fields)}"
-        )
-    out_schema = StructType(
-        [
-            in_fields[key_col],
-            StructField("n_events", LongType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-            StructField("forecast_1", DoubleType()),
-            StructField("last_ts_micros", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("buf", ArrayType(DoubleType())),
-            StructField("lvl", DoubleType()),
-            StructField("trd", DoubleType()),
-            StructField("season", ArrayType(DoubleType())),
-            StructField("phase", LongType()),
-            StructField("n", LongType()),
-            StructField("inited", BooleanType()),
-            StructField("last", LongType()),
-            StructField("bad", BooleanType()),
-        ]
-    )
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    events = _drop_null_values(events, F.col(value_col).cast("double"))
+    last_ts = _last_ts(events, ts_col)
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            buf, lvl, trd, season, phase, n, inited, last, bad = state.get
-            buf = list(buf or [])
-            season = list(season or [])
-        else:
-            buf, lvl, trd, season, phase, n, inited, last, bad = (
-                [], None, None, [], 0, 0, False, None, False
-            )
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
+    def step(st, pdf):
+        buf, lvl, trd, season, phase, n, inited, last, bad = st
+        buf, season = list(buf or []), list(season or [])
         xs = pdf[value_col].to_numpy(dtype=np.float64)
         n += len(xs)
         if bad:
@@ -933,39 +816,30 @@ def holt_winters_state_stream(
                 )
             else:
                 lvl, trd, season, phase, *_ = res
-        bt = int(pd.Timestamp(pdf[ts_col].iloc[-1]).value // 1000)
-        last = bt if last is None else max(last, bt)
-        state.update(
-            (buf, lvl, trd, [float(s) for s in season], int(phase), n,
-             inited, last, bad)
-        )
+        last = last_ts(last, pdf)
         if not inited:
             fc1 = None
         elif seasonal == "mul":
             fc1 = (lvl + phi * trd) * season[phase % m]
         else:
             fc1 = lvl + phi * trd + season[phase % m]
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n_events": [n],
-                "level": [lvl],
-                "trend": [trd],
-                "forecast_1": [fc1],
-                "last_ts_micros": [last],
-            }
-        )
+        return (
+            buf, lvl, trd, [float(s) for s in season], int(phase), n,
+            inited, last, bad,
+        ), {
+            "n_events": n, "level": lvl, "trend": trd, "forecast_1": fc1,
+            "last_ts_micros": last,
+        }
 
-    return (
-        events.select(*dict.fromkeys(need))
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _state_stream(
+        "holt_winters_state_stream", events, key_col, ts_col, [value_col],
+        tiebreak_col,
+        _struct(buf="array<double>", lvl="double", trd="double",
+                season="array<double>", phase="long", n="long",
+                inited="boolean", last="long", bad="boolean"),
+        _fields(n_events="long", level="double", trend="double",
+                forecast_1="double", last_ts_micros="long"),
+        ([], None, None, [], 0, 0, False, None, False), step,
     )
 
 
@@ -976,208 +850,61 @@ def _intermittent_state_stream(
     value_col: str,
     method: str,
     alpha: float,
-    beta: float,
+    beta: float | None,
     factor: float,
     tiebreak_col: str | None,
     interval: bool = False,
     level: float = 0.95,
 ) -> DataFrame:
-    """Shared builder of `croston_state_stream`/`tsb_state_stream` (the
-    `_intermittent_base` lesson: one scaffold, two folds). State per key
-    is (z, p, q, n, nd, bad) — six scalars, O(1) forever: the batch
-    folds are Markov in exactly that state, so replaying micro-batches
-    in (ts[, tiebreak]) order reproduces the batch trajectory BIT-FOR-BIT
-    (the fold runs the same scalar expressions in the same order; no
-    vectorized re-association). A NEGATIVE demand permanently degrades
-    its key (bad = 1): subsequent updates emit NULL state with
-    n_periods still counting — the streaming face of the batch NULL
-    policy (a batch re-run over the landed log reports the same NULLs).
+    """Shared builder of `croston_state_stream`/`tsb_state_stream`. State
+    per key is (z, p, q, n, nd, bad) — six scalars, O(1) forever — and
+    each micro-batch folds through `_intermittent_step`, the batch
+    forecasters' own step, so replaying micro-batches in (ts[, tiebreak])
+    order reproduces the batch result BIT-FOR-BIT. A NEGATIVE demand
+    permanently degrades its key (bad = 1): subsequent updates emit NULL
+    state with n_periods still counting — the streaming face of the
+    batch NULL policy (a batch re-run over the landed log reports the
+    same NULLs).
 
     `interval=True` (r14 — the batch twins' interval surface): the
-    state grows by the batch fold's (sse, m) error accumulators (still
-    O(1); the accumulation is Markov too, so stream ≡ batch stays
-    bit-exact) and each emit appends (se, lo, hi). The state schema
+    state grows by the step's (sse, me) error accumulators (still O(1)
+    and Markov) and each emit appends (se, lo, hi). The state schema
     changes ONLY when asked — interval=False checkpoints are untouched.
 
-    ORDER CONTRACT + NULL POLICY: as `ewma_state_stream` (within-batch
-    (ts, tiebreak) sort, arrival order across batches; null/NaN values
-    dropped before the fold)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
+    ORDER CONTRACT + NULL POLICY: the `_state_stream` harness's."""
+    from sparkglm_spark.operators.timeseries import (
+        _interval_z,
+        _intermittent_row,
+        _intermittent_step,
     )
 
-    if not events.isStreaming:
-        raise ValueError("input must be a streaming DataFrame (readStream)")
-    if not 0.0 < alpha < 1.0:
-        raise ValueError(f"alpha must be in (0, 1), got {alpha!r}")
-    if not 0.0 < beta < 1.0:
-        raise ValueError(f"beta must be in (0, 1), got {beta!r}")
-    if not 0.0 < level < 1.0:
-        raise ValueError("level must be in (0, 1)")
-    zq = None
-    if interval:
-        from sparkglm_spark.functions.special import norm_ppf
-
-        zq = float(norm_ppf(0.5 + level / 2.0))
-    in_fields = {f.name: f for f in events.schema.fields}
-    need = [key_col, ts_col, value_col] + (
-        [tiebreak_col] if tiebreak_col else []
-    )
-    missing = [c for c in need if c not in in_fields]
-    if missing:
-        raise ValueError(
-            f"{method}_state_stream: columns {missing} not in input "
-            f"schema {sorted(in_fields)}"
-        )
+    for nm, v in (("alpha", alpha), ("beta", beta)):
+        if v is not None and not 0.0 < v < 1.0:
+            raise ValueError(f"{nm} must be in (0, 1), got {v!r}")
+    zq = _interval_z(interval, level)
     second = "interval" if method == "croston" else "probability"
-    out_schema = StructType(
-        [
-            in_fields[key_col],
-            StructField("n_periods", LongType()),
-            StructField("n_demands", LongType()),
-            StructField("size", DoubleType()),
-            StructField(second, DoubleType()),
-            StructField("forecast", DoubleType()),
-        ]
-        + (
-            [
-                StructField("se", DoubleType()),
-                StructField("lo", DoubleType()),
-                StructField("hi", DoubleType()),
-            ]
-            if interval
-            else []
-        )
-    )
-    state_schema = StructType(
-        [
-            StructField("z", DoubleType()),
-            StructField("p", DoubleType()),
-            StructField("q", LongType()),
-            StructField("n", LongType()),
-            StructField("nd", LongType()),
-            StructField("bad", BooleanType()),
-        ]
-        + (
-            [
-                StructField("sse", DoubleType()),
-                StructField("me", LongType()),
-            ]
-            if interval
-            else []
-        )
-    )
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    from sparkglm_spark.operators.timeseries import _drop_null_values
+    acc = dict(sse="double", me="long") if interval else {}
 
-    events = _drop_null_values(events, F.col(value_col).cast("double"))
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            st = tuple(state.get)
-        else:
-            st = (None, None, 0, 0, 0, False) + ((0.0, 0) if interval else ())
-        z, p, q, n, nd, bad = st[:6]
-        sse, me = (st[6], st[7]) if interval else (0.0, 0)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
+    def step(st, pdf):
+        st = _intermittent_step(
+            method, st if interval else st + (0.0, 0),
+            pdf[value_col].to_numpy(dtype=np.float64), alpha, beta, factor,
+            interval,
         )
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        import numpy as np
+        row = _intermittent_row(method, st, factor, interval, zq)
+        return (st if interval else st[:6]), row
 
-        x = pdf[value_col].to_numpy(dtype=np.float64)
-        n += len(x)
-        if not bad and bool(np.any(x < 0.0)):
-            bad = True
-        if not bad:
-            # the batch per_key fold's exact scalar expressions — same
-            # order, bit-identical across the stream/batch boundary
-            # (incl. the interval accumulators: error against the state
-            # ENTERING each period, before its update)
-            if method == "croston":
-                for v in x:
-                    if interval and z is not None:
-                        e = float(v) - factor * z / p
-                        sse += e * e
-                        me += 1
-                    q += 1
-                    if v > 0.0:
-                        nd += 1
-                        if z is None:
-                            z, p = float(v), float(q)
-                        else:
-                            z = alpha * float(v) + (1.0 - alpha) * z
-                            p = alpha * float(q) + (1.0 - alpha) * p
-                        q = 0
-            else:
-                for v in x:
-                    if interval and z is not None:
-                        e = float(v) - p * z
-                        sse += e * e
-                        me += 1
-                    if z is None:
-                        q += 1
-                        if v > 0.0:
-                            nd += 1
-                            z, p = float(v), 1.0 / float(q)
-                    else:
-                        p = beta * (1.0 if v > 0.0 else 0.0) + (1.0 - beta) * p
-                        if v > 0.0:
-                            nd += 1
-                            z = alpha * float(v) + (1.0 - alpha) * z
-        state.update(
-            (z, p, q, n, nd, bad) + ((sse, me) if interval else ())
-        )
-        if bad:
-            out_nd, out_z, out_p, fc = None, None, None, None
-        else:
-            out_nd, out_z, out_p = nd, z, p
-            if z is None:
-                fc = None
-            elif method == "croston":
-                fc = factor * z / p
-            else:
-                fc = p * z
-        row = {
-            key_col: [key[0]],
-            "n_periods": [n],
-            "n_demands": [out_nd],
-            "size": [out_z],
-            second: [out_p],
-            "forecast": [fc],
-        }
-        if interval:
-            se = (
-                float(np.sqrt(sse / (me - 1)))
-                if (fc is not None and me >= 2)
-                else None
-            )
-            row["se"] = [se]
-            row["lo"] = [None if se is None else fc - zq * se]
-            row["hi"] = [None if se is None else fc + zq * se]
-        yield pd.DataFrame(row)
-
-    return (
-        events.select(*dict.fromkeys(need))
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _state_stream(
+        f"{method}_state_stream", events, key_col, ts_col, [value_col],
+        tiebreak_col,
+        _struct(z="double", p="double", q="long", n="long", nd="long",
+                bad="boolean", **acc),
+        _fields(n_periods="long", n_demands="long", size="double",
+                **{second: "double"}, forecast="double",
+                **(dict(se="double", lo="double", hi="double")
+                   if interval else {})),
+        (None, None, 0, 0, 0, False) + ((0.0, 0) if interval else ()),
+        step,
     )
 
 
@@ -1205,9 +932,8 @@ def croston_state_stream(
     if variant not in ("classic", "sba"):
         raise ValueError(f"variant must be 'classic' or 'sba', got {variant!r}")
     factor = 1.0 - alpha / 2.0 if variant == "sba" else 1.0
-    # beta unused by the croston fold — pass a valid in-range dummy
     return _intermittent_state_stream(
-        events, key_col, ts_col, value_col, "croston", alpha, 0.5,
+        events, key_col, ts_col, value_col, "croston", alpha, None,
         factor, tiebreak_col, interval=interval, level=level,
     )
 
@@ -1249,188 +975,37 @@ def forecast_accuracy_stream(
     LIVE model-quality monitor (each micro-batch emits every touched
     key's updated MAE/RMSE/MAPE/sMAPE/MASE over the whole stream so
     far; pair with `drift_state_stream` for the full scoring-health
-    panel). State per key is eight scalars + the previous actual for
-    the m = 1 naive denominator — O(1) forever; every metric is a
-    ratio of RUNNING SUMS, so the only stream-vs-batch difference is
-    float summation order (≲1e-15 relative; asserted at 1e-12 in
-    tests).
+    panel). Every metric is a ratio of RUNNING SUMS, so the only
+    stream-vs-batch difference is float summation order (≲1e-15
+    relative; asserted at 1e-12 in tests).
 
-    SEASONAL MASE (r13, VERDICT r12 #4): `m` > 1 scales by the lag-m
-    seasonal naive, carried as an m-deep ring buffer of the last m
-    actuals in the key state — m + 8 scalars + 3 grid trackers, still
-    O(1) in stream LENGTH. The batch operator's r13 contiguity
-    contract is replicated: the state tracks the running min/max lag-1
-    ts spacing (prev_ts + two scalars), and a key whose retained rows
-    ever leave a regular positive grid — a ts gap, a dropped-null
-    hole, a duplicate timestamp — reports mase NULL from then on,
-    never a phase-shifted number. Short keys (≤ m scored rows) are
-    NULL via the empty naive sum, the batch convention. HAZARD: the
-    spacing check sees rows in the family's processing order
-    (within-batch ts sort, ARRIVAL order across batches) — feed
-    ordered micro-batches, as every stream≡batch contract here
-    already requires; a date-typed ts axis is checked on its day
-    count like the batch twin.
+    The MASE denominator is the lag-m naive over a ring of the last m
+    actuals carried in the key state (for m = 1 the ring is the single
+    `prev_y` field) — eight scalars + the ring, O(1) in stream LENGTH.
+    SEASONAL MASE (m > 1) replicates the batch contiguity contract: the
+    state also tracks the running min/max lag-1 spacing of the
+    `_ts_axis` (prev_ts + two scalars, `_grid_track`), and a key whose
+    retained rows ever leave a regular positive grid — a ts gap, a
+    dropped-null hole, a duplicate or null timestamp — reports mase
+    NULL from then on, never a phase-shifted number. Short keys (≤ m
+    scored rows) are NULL via the empty naive sum, the batch
+    convention. HAZARD: the spacing check sees rows in the family's
+    processing order (within-batch ts sort, ARRIVAL order across
+    batches) — feed ordered micro-batches, as every stream≡batch
+    contract here already requires.
 
-    ORDER CONTRACT + NULL POLICY: as `ewma_state_stream` (within-batch
-    (ts, tiebreak) sort, arrival order across batches; rows with a
-    null/NaN actual OR forecast are dropped before scoring and do not
-    anchor the naive lag — the batch convention)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    if not events.isStreaming:
-        raise ValueError("input must be a streaming DataFrame (readStream)")
+    ORDER CONTRACT + NULL POLICY: the `_state_stream` harness's; rows
+    with a null/NaN actual OR forecast are dropped before scoring and
+    do not anchor the naive lag — the batch convention."""
     if not isinstance(m, int) or isinstance(m, bool) or m < 1:
         raise ValueError(f"m must be an int >= 1, got {m!r}")
-    in_fields = {f.name: f for f in events.schema.fields}
-    need = [key_col, ts_col, actual_col, forecast_col] + (
-        [tiebreak_col] if tiebreak_col else []
-    )
-    missing = [c for c in need if c not in in_fields]
-    if missing:
-        raise ValueError(
-            f"forecast_accuracy_stream: columns {missing} not in input "
-            f"schema {sorted(in_fields)}"
-        )
-    out_schema = StructType(
-        [
-            in_fields[key_col],
-            StructField("n", LongType()),
-            StructField("mae", DoubleType()),
-            StructField("rmse", DoubleType()),
-            StructField("mape", DoubleType()),
-            StructField("n_mape", LongType()),
-            StructField("smape", DoubleType()),
-            StructField("mase", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("sae", DoubleType()),
-            StructField("sse", DoubleType()),
-            StructField("sape", DoubleType()),
-            StructField("n_mape", LongType()),
-            StructField("ssm", DoubleType()),
-            StructField("snd", DoubleType()),
-            StructField("n_nd", LongType()),
-            StructField("prev_y", DoubleType()),
-        ]
-    )
-    if m > 1:
-        from pyspark.sql.types import ArrayType
 
-        # seasonal state: the ring buffer of the last ≤ m actuals plus
-        # the grid trackers (prev_ts and the running lag-1 spacing
-        # min/max — regularity is dt_min == dt_max > 0 at emit time,
-        # so one bad spacing poisons the key permanently)
-        state_schema = StructType(
-            [
-                StructField("n", LongType()),
-                StructField("sae", DoubleType()),
-                StructField("sse", DoubleType()),
-                StructField("sape", DoubleType()),
-                StructField("n_mape", LongType()),
-                StructField("ssm", DoubleType()),
-                StructField("snd", DoubleType()),
-                StructField("n_nd", LongType()),
-                StructField("tail", ArrayType(DoubleType())),
-                StructField("prev_ts", DoubleType()),
-                StructField("dt_min", DoubleType()),
-                StructField("dt_max", DoubleType()),
-            ]
-        )
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    ycol = F.col(actual_col).cast("double")
-    fcol = F.col(forecast_col).cast("double")
-    from sparkglm_spark.operators.timeseries import _drop_null_values
-
-    events = _drop_null_values(_drop_null_values(events, ycol), fcol)
-
-    def update(key, pdfs, state: GroupState):
-        n, sae, sse, sape, n_mape, ssm, snd, n_nd, prev_y = (
-            tuple(state.get)
-            if state.exists
-            else (0, 0.0, 0.0, 0.0, 0, 0.0, 0.0, 0, None)
-        )
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
+    def step(st, pdf):
+        n, sae, sse, sape, n_mape, ssm, snd, n_nd, ring, *grid = st
         y = pdf[actual_col].to_numpy(dtype=np.float64)
         f = pdf[forecast_col].to_numpy(dtype=np.float64)
         e = y - f
-        m = len(y)
-        n += m
-        sae += float(np.abs(e).sum())
-        sse += float((e * e).sum())
-        nz = y != 0.0
-        sape += float(np.abs(e[nz] / y[nz]).sum())
-        n_mape += int(nz.sum())
-        den = np.abs(y) + np.abs(f)
-        ssm += float(
-            np.where(den == 0.0, 0.0, 2.0 * np.abs(e) / np.where(den == 0.0, 1.0, den)).sum()
-        )
-        ylag = np.empty(m)
-        ylag[0] = prev_y if prev_y is not None else np.nan
-        ylag[1:] = y[:-1]
-        nd = np.abs(y - ylag)
-        good = ~np.isnan(nd)
-        snd += float(nd[good].sum())
-        n_nd += int(good.sum())
-        prev_y = float(y[-1])
-        state.update((n, sae, sse, sape, n_mape, ssm, snd, n_nd, prev_y))
-        mae = sae / n
-        naive = snd / n_nd if n_nd else None
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n": [n],
-                "mae": [mae],
-                "rmse": [float(np.sqrt(sse / n))],
-                "mape": [sape / n_mape if n_mape else None],
-                "n_mape": [n_mape],
-                "smape": [ssm / n],
-                "mase": [
-                    mae / naive if naive is not None and naive > 0.0 else None
-                ],
-            }
-        )
-
-    def update_seasonal(key, pdfs, state: GroupState):
-        if state.exists:
-            (n, sae, sse, sape, n_mape, ssm, snd, n_nd,
-             tail, prev_ts, dt_min, dt_max) = tuple(state.get)
-            tail = list(tail or [])
-        else:
-            n, sae, sse, sape, n_mape, ssm, snd, n_nd = 0, 0.0, 0.0, 0.0, 0, 0.0, 0.0, 0
-            tail, prev_ts, dt_min, dt_max = [], None, None, None
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        y = pdf[actual_col].to_numpy(dtype=np.float64)
-        f = pdf[forecast_col].to_numpy(dtype=np.float64)
-        e = y - f
-        nb = len(y)
-        n += nb
+        n += len(y)
         sae += float(np.abs(e).sum())
         sse += float((e * e).sum())
         nz = y != 0.0
@@ -1443,84 +1018,42 @@ def forecast_accuracy_stream(
                 2.0 * np.abs(e) / np.where(den == 0.0, 1.0, den),
             ).sum()
         )
-        # lag-m naive over [ring buffer ++ batch] — row i pairs with
+        # lag-m naive over [ring ++ batch] — row i pairs with
         # ext[len(tail) + i − m]; indices < 0 are pre-history
-        tail_arr = np.asarray(tail, dtype=np.float64)
-        ext = np.concatenate([tail_arr, y])
-        idx = len(tail_arr) + np.arange(nb) - m
+        tail = [] if ring is None else [ring] if m == 1 else list(ring)
+        ext = np.concatenate([np.asarray(tail, dtype=np.float64), y])
+        idx = len(tail) + np.arange(len(y)) - m
         valid = idx >= 0
-        if valid.any():
-            snd += float(np.abs(y[valid] - ext[idx[valid]]).sum())
-            n_nd += int(valid.sum())
-        tail = [float(v) for v in ext[-m:]]
-        # grid tracker: lag-1 ts spacings (within batch + the seam to
-        # the previous batch), running min/max — the batch operator's
-        # r13 contiguity check in streaming form
-        sv = pdf[ts_col]
-        if str(sv.dtype).startswith("datetime64") or sv.dtype == object:
-            # epoch MICROS, floored in int64 BEFORE the float cast:
-            # float64's ulp at 2026-era epoch NANOS is 256 ns, which
-            # would make a perfectly regular ms grid look irregular
-            # (review r13); micros stay < 2^53 and convert exactly —
-            # the batch twin's unix_micros semantics
-            ts_num = (
-                pd.to_datetime(sv).astype("int64") // 1000
-            ).to_numpy(dtype=np.float64)
-        else:
-            ts_num = sv.to_numpy(dtype=np.float64)
-        dts = np.diff(ts_num)
-        if prev_ts is not None:
-            dts = np.concatenate([[ts_num[0] - prev_ts], dts])
-        if len(dts):
-            # np.min/max PROPAGATE NaN — a null-ts row (NaN after the
-            # float conversion) must poison the tracker permanently,
-            # not be swallowed by Python min/max's False NaN compares
-            # (review r13): the batch twin's null-spacing census NULLs
-            # such keys, and the ring buffer has already absorbed the
-            # phantom position
-            lo, hi = float(np.min(dts)), float(np.max(dts))
-            if dt_min is None:
-                dt_min, dt_max = lo, hi
-            elif np.isnan(lo) or np.isnan(dt_min):
-                dt_min = dt_max = float("nan")
-            else:
-                dt_min = min(dt_min, lo)
-                dt_max = max(dt_max, hi)
-        prev_ts = float(ts_num[-1])
-        state.update(
-            (n, sae, sse, sape, n_mape, ssm, snd, n_nd,
-             tail, prev_ts, dt_min, dt_max)
-        )
+        snd += float(np.abs(y[valid] - ext[idx[valid]]).sum())
+        n_nd += int(valid.sum())
+        ring = float(y[-1]) if m == 1 else [float(v) for v in ext[-m:]]
+        if m > 1:
+            grid = _grid_track(*grid, pdf["__t"].to_numpy())
         mae = sae / n
         naive = snd / n_nd if n_nd else None
-        grid_ok = dt_min is not None and dt_min == dt_max and dt_max > 0.0
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n": [n],
-                "mae": [mae],
-                "rmse": [float(np.sqrt(sse / n))],
-                "mape": [sape / n_mape if n_mape else None],
-                "n_mape": [n_mape],
-                "smape": [ssm / n],
-                "mase": [
-                    mae / naive
-                    if naive is not None and naive > 0.0 and grid_ok
-                    else None
-                ],
-            }
-        )
+        ok = naive is not None and naive > 0.0 and (m == 1 or _grid_ok(*grid[1:]))
+        return (n, sae, sse, sape, n_mape, ssm, snd, n_nd, ring, *grid), {
+            "n": n, "mae": mae, "rmse": float(np.sqrt(sse / n)),
+            "mape": sape / n_mape if n_mape else None, "n_mape": n_mape,
+            "smape": ssm / n, "mase": mae / naive if ok else None,
+        }
 
-    return (
-        events.select(*dict.fromkeys(need))
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update_seasonal if m > 1 else update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    sums = _fields(n="long", sae="double", sse="double", sape="double",
+                   n_mape="long", ssm="double", snd="double", n_nd="long")
+    ring = (
+        _fields(prev_y="double") if m == 1
+        else _fields(tail="array<double>", prev_ts="double",
+                     dt_min="double", dt_max="double")
+    )
+    return _state_stream(
+        "forecast_accuracy_stream", events, key_col, ts_col,
+        [actual_col, forecast_col], tiebreak_col,
+        StructType(sums + ring),
+        _fields(n="long", mae="double", rmse="double", mape="double",
+                n_mape="long", smape="double", mase="double"),
+        (0, 0.0, 0.0, 0.0, 0, 0.0, 0.0, 0)
+        + ((None,) if m == 1 else ([], None, None, None)),
+        step,
     )
 
 
@@ -1549,218 +1082,83 @@ def ar_state_stream(
     stream length. Each batch emits the key's refit (same columns as
     the batch operator: n_events, n_fit, [intercept,] ar_1…ar_p,
     sigma2, forecast_<h>…[, se/lo/hi_<h>…]) via the SHARED
-    `_ar_solve_from_sums` — one solve definition, zero logic drift.
-    Stream-vs-batch differs only in float summation order (np pairwise
-    per batch + carried state vs the batch aggregate) — asserted at
-    1e-9 in tests.
+    `_ar_solve_from_sums` and `_ar_row` — one solve and one row
+    definition, zero logic drift. Stream-vs-batch differs only in float
+    summation order (np pairwise per batch + carried state vs the batch
+    aggregate) — asserted at 1e-9 in tests.
 
-    CONTIGUITY: the batch grid contract in streaming form (the
-    `forecast_accuracy_stream(m>1)` tracker): running lag-1 ts-spacing
-    min/max + the batch seam; one irregular spacing permanently fails
-    the regularity check (a null datetime converts to an absurd
-    sentinel spacing, a null numeric ts to NaN that min/max propagate —
-    either way the key stays failed) and NULLs every later estimate,
-    exactly like the batch guard. `assume_contiguous=True`
-    skips it. ORDER CONTRACT and NULL POLICY follow the family
-    (within-batch (ts[, tiebreak]) sort; null/NaN values drop before
-    the fold — note a dropped interior row is a GAP the grid tracker
-    then catches)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
+    CONTIGUITY: the batch grid contract in streaming form
+    (`_grid_track` over the `_ts_axis`): running lag-1 spacing min/max +
+    the batch seam; one irregular spacing (or a null ts) permanently
+    fails the regularity check and NULLs every later estimate, exactly
+    like the batch guard. `assume_contiguous=True` skips it. ORDER
+    CONTRACT and NULL POLICY: the `_state_stream` harness's (note a
+    dropped interior row is a GAP the grid tracker then catches)."""
     from sparkglm_spark.operators.timeseries import (
+        _ar_row,
         _ar_solve_from_sums,
-        _drop_null_values,
+        _interval_z,
     )
 
-    if not events.isStreaming:
-        raise ValueError("input must be a streaming DataFrame (readStream)")
     if p < 1:
         raise ValueError(f"p must be >= 1, got {p!r}")
     if not horizons:
         raise ValueError("horizons must be non-empty")
     if any(int(h) < 1 for h in horizons):
         raise ValueError("horizons must be >= 1")
-    if not 0.0 < level < 1.0:
-        raise ValueError("level must be in (0, 1)")
+    zq = _interval_z(interval, level)
     hs = [int(h) for h in horizons]
-    zq = None
-    if interval:
-        from sparkglm_spark.functions.special import norm_ppf
-
-        zq = float(norm_ppf(0.5 + level / 2.0))
-    in_fields = {f.name: f for f in events.schema.fields}
-    need = [key_col, ts_col, value_col] + (
-        [tiebreak_col] if tiebreak_col else []
-    )
-    missing = [c for c in need if c not in in_fields]
-    if missing:
-        raise ValueError(
-            f"ar_state_stream: columns {missing} not in input schema "
-            f"{sorted(in_fields)}"
-        )
     k = p + (1 if intercept else 0)
-    out_fields = [
-        in_fields[key_col],
-        StructField("n_events", LongType()),
-        StructField("n_fit", LongType()),
-    ]
-    if intercept:
-        out_fields.append(StructField("intercept", DoubleType()))
-    out_fields += [
-        StructField(f"ar_{i}", DoubleType()) for i in range(1, p + 1)
-    ]
-    out_fields.append(StructField("sigma2", DoubleType()))
-    out_fields += [
-        StructField(f"forecast_{h}", DoubleType()) for h in hs
-    ]
-    if interval:
-        for h in hs:
-            out_fields += [
-                StructField(f"se_{h}", DoubleType()),
-                StructField(f"lo_{h}", DoubleType()),
-                StructField(f"hi_{h}", DoubleType()),
-            ]
-    out_schema = StructType(out_fields)
-    # sums layout: [s_y, s_yy, s_l1..s_lp, s_l1y..s_lpy, s_ll upper
-    # triangle row-major] — 2 + 2p + p(p+1)/2 doubles
-    n_sums = 2 + 2 * p + p * (p + 1) // 2
-    state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("nf", LongType()),
-            StructField("sums", ArrayType(DoubleType())),
-            StructField("tail", ArrayType(DoubleType())),
-            StructField("prev_ts", DoubleType()),
-            StructField("dt_min", DoubleType()),
-            StructField("dt_max", DoubleType()),
-        ]
-    )
-    sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    events = _drop_null_values(events, F.col(value_col).cast("double"))
-    p_, itc, hs_, iv_, chk = p, intercept, hs, interval, not assume_contiguous
+    chk = not assume_contiguous
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            n, nf, sums, tail, prev_ts, dt_min, dt_max = tuple(state.get)
-            sums = np.array(sums, dtype=np.float64)
-            tail = list(tail or [])
-        else:
-            n, nf = 0, 0
-            sums = np.zeros(n_sums)
-            tail, prev_ts, dt_min, dt_max = [], None, None, None
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
+    def step(st, pdf):
+        n, nf, sums, tail, *grid = st
+        sums = np.array(sums, dtype=np.float64)
         x = pdf[value_col].to_numpy(dtype=np.float64)
-        nb = len(x)
         # lag seam: rows see [ring ++ batch]; ext index i aligns with
         # the GLOBAL position whenever the ring is still short (n < p),
         # and is ≥ p for every new row once it is full — so "full lags
         # available" is exactly ext-index ≥ p in both regimes
-        ext = np.concatenate([np.asarray(tail, dtype=np.float64), x])
-        start = len(tail)
-        idxs = np.arange(start, len(ext))
-        valid = idxs[idxs >= p_]
+        ext = np.concatenate([np.asarray(tail or [], dtype=np.float64), x])
+        idxs = np.arange(len(ext) - len(x), len(ext))
+        valid = idxs[idxs >= p]
         if len(valid):
+            # flat sums layout: see `_ar_solve_from_sums`
             yv = ext[valid]
-            lags = [ext[valid - j] for j in range(1, p_ + 1)]
+            lags = [ext[valid - j] for j in range(1, p + 1)]
             nf += len(valid)
             sums[0] += float(yv.sum())
             sums[1] += float((yv * yv).sum())
-            for j in range(p_):
+            for j in range(p):
                 sums[2 + j] += float(lags[j].sum())
-                sums[2 + p_ + j] += float((lags[j] * yv).sum())
-            pos = 2 + 2 * p_
-            for i in range(p_):
-                for j in range(i, p_):
+                sums[2 + p + j] += float((lags[j] * yv).sum())
+            pos = 2 + 2 * p
+            for i in range(p):
+                for j in range(i, p):
                     sums[pos] += float((lags[i] * lags[j]).sum())
                     pos += 1
-        n += nb
-        tail = [float(v) for v in ext[-p_:]]
+        n += len(x)
+        tail = [float(v) for v in ext[-p:]]
         if chk:
-            sv = pdf[ts_col]
-            if str(sv.dtype).startswith("datetime64") or sv.dtype == object:
-                # int64 epoch MICROS before the float cast (the
-                # forecast_accuracy_stream r13 ulp lesson)
-                ts_num = (
-                    pd.to_datetime(sv).astype("int64") // 1000
-                ).to_numpy(dtype=np.float64)
-            else:
-                ts_num = sv.to_numpy(dtype=np.float64)
-            dts = np.diff(ts_num)
-            if prev_ts is not None:
-                dts = np.concatenate([[ts_num[0] - prev_ts], dts])
-            if len(dts):
-                # np.min/max propagate NaN — a null-ts row poisons the
-                # tracker permanently (the batch null-spacing census)
-                lo, hi = float(np.min(dts)), float(np.max(dts))
-                if dt_min is None:
-                    dt_min, dt_max = lo, hi
-                elif np.isnan(lo) or np.isnan(dt_min):
-                    dt_min = dt_max = float("nan")
-                else:
-                    dt_min = min(dt_min, lo)
-                    dt_max = max(dt_max, hi)
-            prev_ts = float(ts_num[-1])
-        state.update(
-            (n, nf, [float(v) for v in sums], tail, prev_ts, dt_min, dt_max)
-        )
-        grid_ok = (not chk) or (
-            dt_min is not None and dt_min == dt_max and dt_max > 0.0
-        )
+            grid = _grid_track(*grid, pdf["__t"].to_numpy())
         sol = None
-        if grid_ok and nf >= k:
-            s_l = sums[2:2 + p_]
-            s_ly = sums[2 + p_:2 + 2 * p_]
-            s_ll = np.empty((p_, p_))
-            pos = 2 + 2 * p_
-            for i in range(p_):
-                for j in range(i, p_):
-                    s_ll[i, j] = s_ll[j, i] = sums[pos]
-                    pos += 1
+        if (not chk or _grid_ok(*grid[1:])) and nf >= k:
             sol = _ar_solve_from_sums(
-                nf, float(sums[0]), float(sums[1]), s_l, s_ly, s_ll,
-                tail, p_, itc, hs_, iv_, zq,
+                nf, sums, tail, p, intercept, hs, interval, zq
             )
-        row = {key_col: [key[0]], "n_events": [n], "n_fit": [nf]}
-        if itc:
-            row["intercept"] = [sol["c0"] if sol else None]
-        for i in range(1, p_ + 1):
-            row[f"ar_{i}"] = [sol["phi"][i - 1] if sol else None]
-        row["sigma2"] = [sol["sig2"] if sol else None]
-        for h in hs_:
-            row[f"forecast_{h}"] = [sol["fcs"][h - 1] if sol else None]
-        if iv_:
-            for h in hs_:
-                se, lo_, hi_ = sol["ses"][h] if sol else (None, None, None)
-                row[f"se_{h}"] = [se]
-                row[f"lo_{h}"] = [lo_]
-                row[f"hi_{h}"] = [hi_]
-        yield pd.DataFrame(row)
+        return (n, nf, [float(v) for v in sums], tail, *grid), {
+            "n_events": n, "n_fit": nf,
+            **_ar_row(sol, p, intercept, hs, interval),
+        }
 
-    return (
-        events.select(*dict.fromkeys(need))
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    est = _ar_row(None, p, intercept, hs, interval)
+    return _state_stream(
+        "ar_state_stream", events, key_col, ts_col, [value_col],
+        tiebreak_col,
+        _struct(n="long", nf="long", sums="array<double>",
+                tail="array<double>", prev_ts="double", dt_min="double",
+                dt_max="double"),
+        _fields(n_events="long", n_fit="long", **dict.fromkeys(est, "double")),
+        (0, 0, [0.0] * (2 + 2 * p + p * (p + 1) // 2), [], None, None, None),
+        step,
     )

@@ -1517,3 +1517,25 @@ def test_iteration_counts_refused_before_any_job(spark, fitter, kw):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("iter_guard") == []
+
+
+@pytest.mark.parametrize(
+    "family,bad", [("gamma", 0.0), ("gamma", -3.0), ("poisson", -1.0)]
+)
+def test_glm_refuses_out_of_domain_response(spark, family, bad):
+    """GLM.fit checks min(y) against the family's response domain on its
+    init aggregate (no extra job): a gamma response <= 0 is NULL in the
+    deviance's log(y/mu), which F.sum would skip while the IRLS Gram kept
+    the row, so the fit must refuse rather than report a deviance over
+    fewer rows than it fitted. A zero poisson count is in domain."""
+    rows = [(float(1 + i % 5), float(i) / 10.0) for i in range(30)]
+    df = spark.createDataFrame(rows + [(bad, 1.5)], "y double, x double")
+    df = df.withColumn("intercept", F.lit(1.0))
+    with pytest.raises(ValueError, match=f"family '{family}' needs y"):
+        GLM.fit(df, y_col="y", x_cols=["intercept", "x"], family=family)
+    ok = spark.createDataFrame(rows + [(0.0, 1.5)], "y double, x double")
+    model = GLM.fit(
+        ok.withColumn("intercept", F.lit(1.0)), y_col="y",
+        x_cols=["intercept", "x"], family="poisson",
+    )
+    assert model.nrow == len(rows) + 1 and np.all(np.isfinite(model.coefs))

@@ -1,6 +1,7 @@
 """Streaming: the same windowed core in batch and under readStream, with
 watermark semantics."""
 
+import datetime
 import os
 import tempfile
 
@@ -686,6 +687,11 @@ def test_ewma_state_stream_equals_batch(spark, sf_dir):
         b = batch[r.user_id]
         assert r.w["n"] == b.n_events, r.user_id
         assert r.w["e"] == pytest.approx(b.ewma, rel=1e-9), r.user_id
+        # NTZ last_ts as wall-clock epoch micros
+        epoch = datetime.datetime(1970, 1, 1)
+        assert r.w["l"] == (b.last_ts - epoch) // datetime.timedelta(
+            microseconds=1
+        ), r.user_id
 
 
 def test_ewma_state_stream_guards(spark, events):
@@ -1866,3 +1872,303 @@ def test_ar_state_stream_guards(spark):
     df = spark.range(1)  # not streaming
     with pytest.raises(ValueError, match="streaming"):
         ar_state_stream(df, "id", "id", "id")
+
+
+def _sf(spec):
+    """`StructField(...)` strings as Spark prints them, from "name:Type"
+    pairs (nullable fields)."""
+    return ", ".join(
+        f"StructField({n},{t},true)"
+        for n, t in (f.split(":") for f in spec.split())
+    )
+
+
+_HW_STATE = _sf(
+    "buf:ArrayType(DoubleType,true) lvl:DoubleType trd:DoubleType "
+    "season:ArrayType(DoubleType,true) phase:LongType n:LongType "
+    "inited:BooleanType last:LongType bad:BooleanType"
+)
+_INT_STATE = _sf(
+    "z:DoubleType p:DoubleType q:LongType n:LongType nd:LongType "
+    "bad:BooleanType"
+)
+_INT_IV_STATE = _INT_STATE + ", " + _sf("sse:DoubleType me:LongType")
+_FA_SUMS = _sf(
+    "n:LongType sae:DoubleType sse:DoubleType sape:DoubleType "
+    "n_mape:LongType ssm:DoubleType snd:DoubleType n_nd:LongType"
+)
+_FA_OUT = "user_idL, nL, mae, rmse, mape, n_mapeL, smape, mase"
+_HW_OUT = "user_idL, n_eventsL, level, trend, forecast_1, last_ts_microsL"
+
+# (operator, kwargs, output attributes, state fields) as the analyzed
+# FlatMapGroupsInPandasWithState node prints them, expression ids removed
+_STREAM_SCHEMAS = {
+    "ewma": (
+        "ewma_state_stream", dict(alpha=0.25),
+        "user_idL, n_eventsL, ewma, last_ts_microsL",
+        _sf("num:DoubleType den:DoubleType n:LongType last:LongType"),
+    ),
+    "holt": (
+        "holt_state_stream", dict(alpha=0.3, beta=0.2),
+        "user_idL, n_eventsL, level, trend, forecast_1, last_ts_microsL",
+        _sf("lvl:DoubleType trd:DoubleType n:LongType last:LongType"),
+    ),
+    "hw_add": (
+        "holt_winters_state_stream",
+        dict(alpha=0.3, beta=0.1, gamma=0.2, period=4), _HW_OUT, _HW_STATE,
+    ),
+    "hw_mul": (
+        "holt_winters_state_stream",
+        dict(alpha=0.3, beta=0.1, gamma=0.2, period=4, seasonal="mul"),
+        _HW_OUT, _HW_STATE,
+    ),
+    "croston": (
+        "croston_state_stream", dict(alpha=0.3),
+        "user_idL, n_periodsL, n_demandsL, size, interval, forecast",
+        _INT_STATE,
+    ),
+    "croston_interval": (
+        "croston_state_stream", dict(alpha=0.3, interval=True),
+        "user_idL, n_periodsL, n_demandsL, size, interval, forecast, "
+        "se, lo, hi",
+        _INT_IV_STATE,
+    ),
+    "tsb": (
+        "tsb_state_stream", dict(alpha=0.3, beta=0.2),
+        "user_idL, n_periodsL, n_demandsL, size, probability, forecast",
+        _INT_STATE,
+    ),
+    "tsb_interval": (
+        "tsb_state_stream", dict(alpha=0.3, beta=0.2, interval=True),
+        "user_idL, n_periodsL, n_demandsL, size, probability, forecast, "
+        "se, lo, hi",
+        _INT_IV_STATE,
+    ),
+    "accuracy_m1": (
+        "forecast_accuracy_stream", dict(m=1), _FA_OUT,
+        _FA_SUMS + ", " + _sf("prev_y:DoubleType"),
+    ),
+    "accuracy_m3": (
+        "forecast_accuracy_stream", dict(m=3), _FA_OUT,
+        _FA_SUMS + ", " + _sf(
+            "tail:ArrayType(DoubleType,true) prev_ts:DoubleType "
+            "dt_min:DoubleType dt_max:DoubleType"
+        ),
+    ),
+    "ar_p2": (
+        "ar_state_stream", dict(p=2, horizons=[1, 3], interval=True),
+        "user_idL, n_eventsL, n_fitL, intercept, ar_1, ar_2, sigma2, "
+        "forecast_1, forecast_3, se_1, lo_1, hi_1, se_3, lo_3, hi_3",
+        _sf(
+            "n:LongType nf:LongType sums:ArrayType(DoubleType,true) "
+            "tail:ArrayType(DoubleType,true) prev_ts:DoubleType "
+            "dt_min:DoubleType dt_max:DoubleType"
+        ),
+    ),
+    "drift": (
+        "drift_state_stream", {}, "n_curL, psi, js_divergence",
+        _sf("counts:ArrayType(LongType,true)"),
+    ),
+    "totals": (
+        "user_running_totals_stream", {}, "user_idL, n_eventsL, value_sum",
+        _sf("n:LongType s:DoubleType"),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_STREAM_SCHEMAS))
+def test_stream_state_and_output_schemas_pinned(spark, sf_dir, case):
+    """Checkpoint compatibility: every stream operator's state fields and
+    output attributes, read off the analyzed plan's
+    FlatMapGroupsInPandasWithState node, equal the strings a checkpoint
+    written by an earlier build carries — a changed state schema would
+    refuse to resume."""
+    import re
+
+    from sparkglm_spark.streaming import events as ev
+    from sparkglm_spark.streaming.events import stream_from_events_table
+
+    op, kw, want_out, want_state = _STREAM_SCHEMAS[case]
+    s = stream_from_events_table(spark, sf_dir).withColumn(
+        "fc", F.col("value") * 0.9
+    )
+    fn = getattr(ev, op)
+    if op == "drift_state_stream":
+        ref = {"lo": 0.0, "hi": 1.0, "n_bins": 2,
+               "bins": [{"bin": 0, "p_ref": 0.5}, {"bin": 1, "p_ref": 0.5}]}
+        out = fn(s, "value", ref)
+    elif op == "user_running_totals_stream":
+        out = fn(s)
+    elif op == "forecast_accuracy_stream":
+        out = fn(s, "user_id", "ts", "value", "fc", tiebreak_col="event_id", **kw)
+    else:
+        out = fn(s, "user_id", "ts", "value", tiebreak_col="event_id", **kw)
+    plan = out._jdf.queryExecution().analyzed().toString()
+    node = next(
+        ln for ln in plan.splitlines() if "FlatMapGroupsInPandasWithState" in ln
+    )
+    m = re.search(r"\[([^\[\]]*)\], \[(StructField\(.*\))\], Update", node)
+    assert re.sub(r"#\d+", "", m.group(1)) == want_out
+    assert m.group(2) == want_state
+
+
+def _replay(spark, parts, build, name):
+    """Write `parts` as one parquet file each, replay them as micro-batches
+    (one file per trigger) through `build(stream_df)` and return every
+    emitted update row."""
+    with tempfile.TemporaryDirectory() as d:
+        src = os.path.join(d, "src")
+        os.makedirs(src)
+        for i, p in enumerate(parts):
+            p.coalesce(1).write.parquet(os.path.join(src, f"b{i}.parquet"))
+        stream_in = (
+            spark.readStream.schema(parts[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(os.path.join(src, "*.parquet"))
+        )
+        q = (
+            build(stream_in).writeStream.format("memory")
+            .queryName(name)
+            .outputMode("update")
+            .option("checkpointLocation", os.path.join(d, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        return spark.sql(f"SELECT * FROM {name}").collect()
+
+
+def _last_updates(rows, key, n):
+    """The last update per key: the one with the largest running count."""
+    out = {}
+    for r in rows:
+        if r[key] not in out or r[n] > out[r[key]][n]:
+            out[r[key]] = r
+    return out
+
+
+def _fall_back_grid(spark):
+    """Two keys on a regular hourly TIMESTAMP (LTZ) grid, 12 hours each
+    from 2026-11-01 03:00 UTC — across the America/New_York fall-back at
+    06:00 UTC, when 01:00 local repeats. The tiebreak runs against time,
+    so a sort that sees the repeated local hour as a tie misorders it."""
+    t0 = 1793502000  # 2026-11-01 03:00:00 UTC
+    return spark.range(24).select(
+        (F.col("id") % 2).cast("string").alias("k"),
+        F.timestamp_seconds(F.lit(t0) + F.expr("id div 2") * 3600).alias("ts"),
+        (100 - F.col("id")).alias("eid"),
+        (10.0 + F.col("id") % 5 + F.sin(F.col("id"))).alias("y"),
+        (10.5 + F.col("id") % 3).alias("f"),
+    )
+
+
+def test_dst_fall_back_grid_is_regular_batch_and_stream(spark):
+    """On a regular hourly LTZ grid across a DST fall-back, Spark's
+    ts − lag(ts) shows one 0-second spacing (the repeated local hour),
+    which used to NULL seasonal mase and the AR estimates in batch, and
+    zone-local pandas datetimes did the same in the streams. The grid
+    checks read `_ts_axis` (epoch micros) instead, so both engines see
+    the grid as regular and agree."""
+    from sparkglm_spark.operators.timeseries import ar_forecast, forecast_accuracy
+    from sparkglm_spark.streaming.events import (
+        ar_state_stream,
+        forecast_accuracy_stream,
+    )
+
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        df = _fall_back_grid(spark)
+        # hourly tertiles: the two 01:00 local hours share micro-batch 0
+        cut = [F.unix_seconds("ts") < 1793502000 + 4 * 3600,
+               F.unix_seconds("ts") >= 1793502000 + 8 * 3600]
+        parts = [df.where(cut[0]), df.where(~cut[0] & ~cut[1]), df.where(cut[1])]
+        fa = {r.k: r for r in forecast_accuracy(
+            df, "k", "ts", "y", "f", tiebreak_col="eid", m=2).collect()}
+        ar = {r.k: r for r in ar_forecast(
+            df, "k", "ts", "y", p=1, tiebreak_col="eid").collect()}
+        fa_s = _last_updates(_replay(
+            spark, parts,
+            lambda s: forecast_accuracy_stream(
+                s, "k", "ts", "y", "f", tiebreak_col="eid", m=2),
+            "dst_fa"), "k", "n")
+        ar_s = _last_updates(_replay(
+            spark, parts,
+            lambda s: ar_state_stream(s, "k", "ts", "y", p=1, tiebreak_col="eid"),
+            "dst_ar"), "k", "n_events")
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    assert sorted(fa) == sorted(ar) == sorted(fa_s) == sorted(ar_s) == ["0", "1"]
+    for k in fa:
+        assert fa[k].mase is not None and ar[k].ar_1 is not None, k
+        assert fa_s[k].mase == pytest.approx(fa[k].mase, rel=1e-12), k
+        assert ar_s[k].ar_1 == pytest.approx(ar[k].ar_1, rel=1e-9), k
+        assert ar_s[k].forecast_1 == pytest.approx(ar[k].forecast_1, rel=1e-9), k
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_smoothing_streams_last_ts_micros(spark, tz):
+    """`last_ts_micros` of the EWMA, Holt and Holt-Winters streams is the
+    batch `last_ts` as epoch micros in any session zone (it used to read
+    zone-local pandas datetimes: 5 h off under America/New_York), and
+    NULL on a numeric ts axis (it used to read 0)."""
+    from sparkglm_spark.operators.timeseries import ewma_latest
+    from sparkglm_spark.streaming.events import (
+        ewma_state_stream,
+        holt_state_stream,
+        holt_winters_state_stream,
+    )
+
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        df = _fall_back_grid(spark)
+        want = {
+            r.k: r.us
+            for r in ewma_latest(df, "k", "ts", "y", 0.3, tiebreak_col="eid")
+            .select("k", F.unix_micros("last_ts").alias("us"))
+            .collect()
+        }
+        builds = {
+            "lt_ewma": lambda s: ewma_state_stream(
+                s, "k", "ts", "y", 0.3, tiebreak_col="eid"),
+            "lt_holt": lambda s: holt_state_stream(
+                s, "k", "ts", "y", 0.3, 0.2, tiebreak_col="eid"),
+            "lt_hw": lambda s: holt_winters_state_stream(
+                s, "k", "ts", "y", 0.3, 0.1, 0.2, period=2,
+                tiebreak_col="eid"),
+        }
+        got = {
+            name: _last_updates(_replay(spark, [df], b, name), "k", "n_events")
+            for name, b in builds.items()
+        }
+        numeric = _replay(
+            spark, [df.withColumn("ts", F.col("eid"))],
+            lambda s: ewma_state_stream(s, "k", "ts", "y", 0.3), "lt_num",
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    assert sorted(want) == ["0", "1"]
+    for name, rows in got.items():
+        assert {k: r.last_ts_micros for k, r in rows.items()} == want, name
+    assert numeric and all(r.last_ts_micros is None for r in numeric)
+
+
+def test_user_running_totals_stream_string_key(spark):
+    """A non-`user_id` key keeps its own name and type in the output (it
+    used to be hard-coded as `user_id long`, failing at action time for
+    a string key); every row counts, a null value included, and the sum
+    skips the null."""
+    from sparkglm_spark.streaming.events import user_running_totals_stream
+
+    df = spark.createDataFrame(
+        [("a", 1.0), ("b", 2.0), ("a", 3.0), ("a", None)],
+        "k string, value double",
+    )
+    rows = _replay(
+        spark, [df], lambda s: user_running_totals_stream(s, user_col="k"),
+        "totals_str",
+    )
+    got = {k: (r.n_events, r.value_sum)
+           for k, r in _last_updates(rows, "k", "n_events").items()}
+    assert got == {"a": (3, 4.0), "b": (1, 2.0)}
