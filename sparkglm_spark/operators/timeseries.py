@@ -163,13 +163,15 @@ def _drop_null_values(df: DataFrame, value_expr) -> DataFrame:
 def _ts_axis(df: DataFrame, ts_col: str):
     """The family's time axis as a number, for ordering and for the
     regular-grid checks: epoch micros of the instant for TIMESTAMP (LTZ),
-    epoch micros of the wall clock for TIMESTAMP_NTZ, the day count for
-    DATE, the value cast to double otherwise. No timestamp goes through
-    the session zone: Spark's LTZ−LTZ subtraction reads local wall
-    clocks (a regular hourly grid across a DST fall-back showed a
-    0-second spacing), `timestamp_diff` maps NTZ through the zone (02:00
-    and 03:00 on a spring-forward day came out equal), and pandas'
-    zone-local naive datetimes mis-sort the repeated fall-back hour.
+    epoch micros of the wall clock for TIMESTAMP_NTZ, epoch micros of
+    midnight for DATE (the unit the streams' grid trackers have always
+    stored in their checkpoints), the value cast to double otherwise.
+    No timestamp goes through the session zone: Spark's LTZ−LTZ
+    subtraction reads local wall clocks (a regular hourly grid across a
+    DST fall-back showed a 0-second spacing), `timestamp_diff` maps NTZ
+    through the zone (02:00 and 03:00 on a spring-forward day came out
+    equal), and pandas' zone-local naive datetimes mis-sort the repeated
+    fall-back hour.
     NTZ − NTZ is a pure wall-clock interval, read out exactly as
     decimal seconds."""
     from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
@@ -183,7 +185,7 @@ def _ts_axis(df: DataFrame, ts_col: str):
         secs = wall.cast("interval second").cast("decimal(20,6)")
         return (secs * 1000000).cast("long")
     if isinstance(t, DateType):
-        return F.unix_date(c)
+        return F.unix_date(c).cast("long") * 86400000000
     return c.cast("double")
 
 
@@ -898,15 +900,15 @@ def holt_series(
     )
 
 
-def _holt_step(state, x, alpha, beta, phi, with_sse):
+def _holt_step(state, x, alpha, beta, phi):
     """Fold the ordered values `x` into Holt state (level, trend, n, sse)
     — `holt_forecast` folds a key's whole history from (0.0, 0.0, 0, 0.0),
     `holt_state_stream` one micro-batch at a time, so the two agree bit
     for bit. The simple init l₁ = x₁, b₁ = x₂ − x₁ needs x₂, so x₁ only
     sets the level (trend 0 until x₂ arrives) and x₂ forms b₁ and then
-    folds through the standard update. With `with_sse`, the squared
-    one-step residual accumulates from x₃ on: x₂'s is init-spent (b₁ was
-    set from x₂ itself)."""
+    folds through the standard update. The squared one-step residual
+    accumulates from x₃ on: x₂'s is init-spent (b₁ was set from x₂
+    itself)."""
     lvl, trd, n, sse = state
     for v in x.tolist():
         if n == 0:
@@ -915,7 +917,7 @@ def _holt_step(state, x, alpha, beta, phi, with_sse):
             b = v - lvl if n == 1 else trd
             prev = lvl
             fit = lvl + phi * b
-            if with_sse and n > 1:
+            if n > 1:
                 sse += (v - fit) * (v - fit)
             lvl = alpha * v + (1.0 - alpha) * fit
             trd = beta * (lvl - prev) + (1.0 - beta) * (phi * b)
@@ -1012,7 +1014,7 @@ def holt_forecast(
 
     def fold_one(ks, xs, s, e):
         lvl, trd, n, sse = _holt_step(
-            (0.0, 0.0, 0, 0.0), xs[s:e], alpha, beta, phi, interval
+            (0.0, 0.0, 0, 0.0), xs[s:e], alpha, beta, phi
         )
         row = {
             key_col: [ks[s]],
@@ -1943,7 +1945,7 @@ def forecast_accuracy(
              a REGULAR grid (all lag-1 ts spacings equal — checked on
              the same window pass on the `_ts_axis`: epoch micros for
              timestamps, so a DST transition is no gap; dates compare
-             day counts; duplicate or null ts rows also fail); a
+             whole days; duplicate or null ts rows also fail); a
              non-contiguous key gets mase NULL, never a phase-shifted
              value. Pass
              `assume_contiguous=True` to skip the check (e.g. integer

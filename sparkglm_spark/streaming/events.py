@@ -13,9 +13,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
+    DateType,
     LongType,
     StructField,
     StructType,
@@ -24,23 +22,6 @@ from pyspark.sql.types import (
 )
 
 from sparkglm_spark.operators.timeseries import _drop_null_values, _ts_axis
-
-_TYPES = {
-    "double": DoubleType(),
-    "long": LongType(),
-    "boolean": BooleanType(),
-    "array<double>": ArrayType(DoubleType()),
-    "array<long>": ArrayType(LongType()),
-}
-
-
-def _fields(**types: str) -> list[StructField]:
-    """Nullable StructFields from name=type keywords (`_TYPES` names)."""
-    return [StructField(n, _TYPES[t]) for n, t in types.items()]
-
-
-def _struct(**types: str) -> StructType:
-    return StructType(_fields(**types))
 
 
 def _watermark_time(df: DataFrame, ts_col: str) -> Column:
@@ -85,8 +66,8 @@ def _state_stream(
     ts_col: str | None,
     value_cols: list[str],
     tiebreak_col: str | None,
-    state_schema: StructType,
-    out_fields: list[StructField],
+    state_ddl: str,
+    out_ddl: str,
     init: tuple,
     step,
     drop_nulls: bool = True,
@@ -104,12 +85,14 @@ def _state_stream(
       therefore fold in time order within a micro-batch and in arrival
       order across micro-batches: a row arriving after a later one was
       folded is folded late, so use the batch twin for out-of-order
-      backfills. The axis rides along as the double column `__t`
-      (epoch micros for timestamps, NULL ts → NaN, sorted last).
+      backfills. The axis rides along as the column `__t`: `_ts_axis`
+      as a double for TIMESTAMP, TIMESTAMP_NTZ and DATE (epoch micros;
+      a NULL ts is NaN, sorted last), the ts column itself for any
+      other type, sorted as the batch twin's window sorts it.
       `ts_col=None` folds in arrival order.
     - `step(state, pdf) -> (state, row | None)`: `state` is a tuple in
-      `state_schema` order (`init` for a new key); `row` maps the
-      `out_fields` names to values and is emitted behind the key (whose
+      `state_ddl` order (`init` for a new key); `row` maps the
+      `out_ddl` names to values and is emitted behind the key (whose
       field comes from the input schema), output mode 'update'; None
       emits nothing.
     - `key_col=None` folds the whole stream as one state and emits no
@@ -128,7 +111,11 @@ def _state_stream(
     sel = [F.col(c) for c in cols]
     sort_cols = []
     if ts_col:
-        sel.append(_ts_axis(events, ts_col).cast("double").alias("__t"))
+        temporal = (TimestampType, TimestampNTZType, DateType)
+        if isinstance(events.schema[ts_col].dataType, temporal):
+            sel.append(_ts_axis(events, ts_col).cast("double").alias("__t"))
+        else:
+            sel.append(F.col(ts_col).alias("__t"))
         sort_cols = ["__t"] + ([tiebreak_col] if tiebreak_col else [])
     if not key_col:
         # a literal grouping EXPRESSION doesn't resolve through
@@ -154,8 +141,10 @@ def _state_stream(
         .groupBy(key_col or "__g")
         .applyInPandasWithState(
             update,
-            outputStructType=StructType(key_fields + out_fields),
-            stateStructType=state_schema,
+            outputStructType=StructType(
+                key_fields + StructType.fromDDL(out_ddl).fields
+            ),
+            stateStructType=state_ddl,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
@@ -183,14 +172,21 @@ def _last_ts(events: DataFrame, ts_col: str):
     return advance
 
 
-def _grid_track(prev_ts, dt_min, dt_max, t):
+def _grid_track(prev_ts, dt_min, dt_max, axis):
     """Regular-grid tracker of the streams whose lag pairing is
     positional (seasonal `forecast_accuracy_stream`, `ar_state_stream`):
-    folds the lag-1 spacings of the ordered axis values `t` — plus the
-    seam to the previous micro-batch's last value — into the running
-    (dt_min, dt_max). Returns the new (prev_ts, dt_min, dt_max). np.min/
-    max PROPAGATE NaN, so a null-ts row (NaN axis) poisons the tracker for
-    good, as the batch twins' null-spacing census NULLs such keys."""
+    folds the lag-1 spacings of the ordered axis values `axis` (the
+    harness's `__t`) — plus the seam to the previous micro-batch's last
+    value — into the running (dt_min, dt_max). Returns the new (prev_ts,
+    dt_min, dt_max). A string axis is read as epoch micros of the parsed
+    wall clock. np.min/max PROPAGATE NaN, so a null-ts row (NaN axis)
+    poisons the tracker for good, as the batch twins' null-spacing census
+    NULLs such keys."""
+    import pandas as pd
+
+    if axis.dtype == object:
+        axis = pd.to_datetime(axis).astype("int64") // 1000
+    t = axis.to_numpy(dtype=np.float64)
     dts = np.diff(t)
     if prev_ts is not None:
         dts = np.concatenate([[t[0] - prev_ts], dts])
@@ -323,8 +319,7 @@ def user_running_totals_stream(events: DataFrame, user_col: str = "user_id") -> 
 
     return _state_stream(
         "user_running_totals_stream", events, user_col, None, ["value"], None,
-        _struct(n="long", s="double"),
-        _fields(n_events="long", value_sum="double"),
+        "n long, s double", "n_events long, value_sum double",
         (0, 0.0), step, drop_nulls=False,
     )
 
@@ -559,8 +554,8 @@ def ewma_state_stream(
     return _state_stream(
         "ewma_state_stream", events, key_col, ts_col, [value_col],
         tiebreak_col,
-        _struct(num="double", den="double", n="long", last="long"),
-        _fields(n_events="long", ewma="double", last_ts_micros="long"),
+        "num double, den double, n long, last long",
+        "n_events long, ewma double, last_ts_micros long",
         (0.0, 0.0, 0, None), step,
     )
 
@@ -614,7 +609,7 @@ def holt_state_stream(
         lvl, trd, n, last = st
         lvl, trd, n, _ = _holt_step(
             (lvl, trd, n, 0.0), pdf[value_col].to_numpy(dtype=np.float64),
-            alpha, beta, phi, False,
+            alpha, beta, phi,
         )
         last = last_ts(last, pdf)
         return (lvl, trd, n, last), {
@@ -625,9 +620,9 @@ def holt_state_stream(
     return _state_stream(
         "holt_state_stream", events, key_col, ts_col, [value_col],
         tiebreak_col,
-        _struct(lvl="double", trd="double", n="long", last="long"),
-        _fields(n_events="long", level="double", trend="double",
-                forecast_1="double", last_ts_micros="long"),
+        "lvl double, trd double, n long, last long",
+        "n_events long, level double, trend double, forecast_1 double, "
+        "last_ts_micros long",
         (0.0, 0.0, 0, None), step,
     )
 
@@ -717,8 +712,7 @@ def drift_state_stream(
 
     return _state_stream(
         "drift_state_stream", events, group_col, None, [value_col], None,
-        _struct(counts="array<long>"),
-        _fields(n_cur="long", psi="double", js_divergence="double"),
+        "counts array<long>", "n_cur long, psi double, js_divergence double",
         ([0] * n_bins,), step,
     )
 
@@ -834,11 +828,10 @@ def holt_winters_state_stream(
     return _state_stream(
         "holt_winters_state_stream", events, key_col, ts_col, [value_col],
         tiebreak_col,
-        _struct(buf="array<double>", lvl="double", trd="double",
-                season="array<double>", phase="long", n="long",
-                inited="boolean", last="long", bad="boolean"),
-        _fields(n_events="long", level="double", trend="double",
-                forecast_1="double", last_ts_micros="long"),
+        "buf array<double>, lvl double, trd double, season array<double>, "
+        "phase long, n long, inited boolean, last long, bad boolean",
+        "n_events long, level double, trend double, forecast_1 double, "
+        "last_ts_micros long",
         ([], None, None, [], 0, 0, False, None, False), step,
     )
 
@@ -883,7 +876,7 @@ def _intermittent_state_stream(
             raise ValueError(f"{nm} must be in (0, 1), got {v!r}")
     zq = _interval_z(interval, level)
     second = "interval" if method == "croston" else "probability"
-    acc = dict(sse="double", me="long") if interval else {}
+    iv = ", se double, lo double, hi double" if interval else ""
 
     def step(st, pdf):
         st = _intermittent_step(
@@ -897,12 +890,10 @@ def _intermittent_state_stream(
     return _state_stream(
         f"{method}_state_stream", events, key_col, ts_col, [value_col],
         tiebreak_col,
-        _struct(z="double", p="double", q="long", n="long", nd="long",
-                bad="boolean", **acc),
-        _fields(n_periods="long", n_demands="long", size="double",
-                **{second: "double"}, forecast="double",
-                **(dict(se="double", lo="double", hi="double")
-                   if interval else {})),
+        "z double, p double, q long, n long, nd long, bad boolean"
+        + (", sse double, me long" if interval else ""),
+        f"n_periods long, n_demands long, size double, {second} double, "
+        f"forecast double{iv}",
         (None, None, 0, 0, 0, False) + ((0.0, 0) if interval else ()),
         step,
     )
@@ -1028,7 +1019,7 @@ def forecast_accuracy_stream(
         n_nd += int(valid.sum())
         ring = float(y[-1]) if m == 1 else [float(v) for v in ext[-m:]]
         if m > 1:
-            grid = _grid_track(*grid, pdf["__t"].to_numpy())
+            grid = _grid_track(*grid, pdf["__t"])
         mae = sae / n
         naive = snd / n_nd if n_nd else None
         ok = naive is not None and naive > 0.0 and (m == 1 or _grid_ok(*grid[1:]))
@@ -1038,19 +1029,17 @@ def forecast_accuracy_stream(
             "smape": ssm / n, "mase": mae / naive if ok else None,
         }
 
-    sums = _fields(n="long", sae="double", sse="double", sape="double",
-                   n_mape="long", ssm="double", snd="double", n_nd="long")
     ring = (
-        _fields(prev_y="double") if m == 1
-        else _fields(tail="array<double>", prev_ts="double",
-                     dt_min="double", dt_max="double")
+        "prev_y double" if m == 1
+        else "tail array<double>, prev_ts double, dt_min double, dt_max double"
     )
     return _state_stream(
         "forecast_accuracy_stream", events, key_col, ts_col,
         [actual_col, forecast_col], tiebreak_col,
-        StructType(sums + ring),
-        _fields(n="long", mae="double", rmse="double", mape="double",
-                n_mape="long", smape="double", mase="double"),
+        "n long, sae double, sse double, sape double, n_mape long, "
+        f"ssm double, snd double, n_nd long, {ring}",
+        "n long, mae double, rmse double, mape double, n_mape long, "
+        "smape double, mase double",
         (0, 0.0, 0.0, 0.0, 0, 0.0, 0.0, 0)
         + ((None,) if m == 1 else ([], None, None, None)),
         step,
@@ -1140,7 +1129,7 @@ def ar_state_stream(
         n += len(x)
         tail = [float(v) for v in ext[-p:]]
         if chk:
-            grid = _grid_track(*grid, pdf["__t"].to_numpy())
+            grid = _grid_track(*grid, pdf["__t"])
         sol = None
         if (not chk or _grid_ok(*grid[1:])) and nf >= k:
             sol = _ar_solve_from_sums(
@@ -1155,10 +1144,9 @@ def ar_state_stream(
     return _state_stream(
         "ar_state_stream", events, key_col, ts_col, [value_col],
         tiebreak_col,
-        _struct(n="long", nf="long", sums="array<double>",
-                tail="array<double>", prev_ts="double", dt_min="double",
-                dt_max="double"),
-        _fields(n_events="long", n_fit="long", **dict.fromkeys(est, "double")),
+        "n long, nf long, sums array<double>, tail array<double>, "
+        "prev_ts double, dt_min double, dt_max double",
+        "n_events long, n_fit long, " + ", ".join(f"{c} double" for c in est),
         (0, 0, [0.0] * (2 + 2 * p + p * (p + 1) // 2), [], None, None, None),
         step,
     )

@@ -2106,6 +2106,84 @@ def test_dst_fall_back_grid_is_regular_batch_and_stream(spark):
         assert ar_s[k].forecast_1 == pytest.approx(ar[k].forecast_1, rel=1e-9), k
 
 
+def test_grid_streams_resume_date_axis_checkpoint(spark):
+    """A DATE-axis checkpoint of the grid-tracking streams resumes. Their
+    state has always stored the axis as epoch micros of midnight
+    (prev_ts, and spacings of 86400e6), so the checkpoint is seeded by
+    the same operator over the wall-clock-midnight TIMESTAMP_NTZ twin of
+    the column — the same number, read back from the state store — and
+    the stream then resumes on the DATE column. Seasonal mase and the AR
+    estimates stay non-NULL and equal the batch run over the whole
+    series (a day-count axis would put a huge negative seam spacing in
+    the tracker and NULL them for good)."""
+    import pandas as pd
+
+    from sparkglm_spark.operators.timeseries import ar_forecast, forecast_accuracy
+    from sparkglm_spark.streaming.events import (
+        ar_state_stream,
+        forecast_accuracy_stream,
+    )
+
+    df = spark.range(24).select(
+        (F.col("id") % 2).cast("string").alias("k"),
+        F.date_add(F.lit(datetime.date(2026, 1, 1)),
+                   F.expr("cast(id div 2 as int)")).alias("d"),
+        (10.0 + F.col("id") % 5 + F.sin(F.col("id"))).alias("y"),
+        (10.5 + F.col("id") % 3).alias("f"),
+    )
+    day = F.col("d")
+    parts = [df.where(day < "2026-01-05"),
+             df.where((day >= "2026-01-05") & (day < "2026-01-09")),
+             df.where(day >= "2026-01-09")]
+    seed = parts[0].withColumn("d", F.col("d").cast("timestamp_ntz"))
+    builds = {
+        "fa": (lambda s: forecast_accuracy_stream(s, "k", "d", "y", "f", m=3),
+               "n"),
+        "ar": (lambda s: ar_state_stream(s, "k", "d", "y", p=1), "n_events"),
+    }
+    got = {}
+    for name, (build, n_col) in builds.items():
+        with tempfile.TemporaryDirectory() as d:
+            src, sink, ck = (os.path.join(d, x) for x in ("src", "sink", "ck"))
+            os.makedirs(src)
+
+            def run(schema):
+                q = (
+                    build(spark.readStream.schema(schema)
+                          .option("maxFilesPerTrigger", 1)
+                          .parquet(os.path.join(src, "*.parquet")))
+                    .writeStream.foreachBatch(
+                        lambda bdf, bid: bdf.write.mode("append").parquet(sink))
+                    .outputMode("update")
+                    .option("checkpointLocation", ck)
+                    .trigger(availableNow=True).start()
+                )
+                q.awaitTermination(180)
+
+            seed.coalesce(1).write.parquet(os.path.join(src, "b0.parquet"))
+            run(seed.schema)
+            state = spark.read.format("statestore").load(ck).collect()
+            prev = {r.key.k: r.value.groupState.prev_ts for r in state}
+            for i, p in enumerate(parts[1:], 1):
+                p.coalesce(1).write.parquet(os.path.join(src, f"b{i}.parquet"))
+            run(df.schema)
+            got[name] = _last_updates(
+                spark.read.parquet(sink).collect(), "k", n_col)
+        # the unit a DATE axis has always stored: pandas midnight micros
+        assert prev == {
+            "0": pd.Timestamp("2026-01-04").value // 1000,
+            "1": pd.Timestamp("2026-01-04").value // 1000,
+        }, name
+    fa = {r.k: r for r in forecast_accuracy(df, "k", "d", "y", "f", m=3).collect()}
+    ar = {r.k: r for r in ar_forecast(df, "k", "d", "y", p=1).collect()}
+    assert sorted(got["fa"]) == sorted(got["ar"]) == sorted(fa) == ["0", "1"]
+    for k in fa:
+        assert fa[k].mase is not None and ar[k].ar_1 is not None, k
+        assert got["fa"][k].n == 12 and got["ar"][k].n_events == 12, k
+        assert got["fa"][k].mase == pytest.approx(fa[k].mase, rel=1e-12), k
+        assert got["ar"][k].ar_1 == pytest.approx(ar[k].ar_1, rel=1e-9), k
+
+
 @pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
 def test_smoothing_streams_last_ts_micros(spark, tz):
     """`last_ts_micros` of the EWMA, Holt and Holt-Winters streams is the
@@ -2152,6 +2230,37 @@ def test_smoothing_streams_last_ts_micros(spark, tz):
     for name, rows in got.items():
         assert {k: r.last_ts_micros for k, r in rows.items()} == want, name
     assert numeric and all(r.last_ts_micros is None for r in numeric)
+
+
+@pytest.mark.parametrize("axis", ["string", "long_2e60"])
+def test_state_stream_sorts_non_temporal_axis_raw(spark, axis):
+    """A non-temporal ts column is the sort key as it stands, as the
+    batch twin's window sorts it: an ISO string axis folds in string
+    order (a cast to double would raise under ANSI mode) and a long axis
+    past 2^53 keeps neighbouring values apart (as doubles they collide
+    and the reversed tiebreak would reorder them)."""
+    from sparkglm_spark.operators.timeseries import ewma_latest
+    from sparkglm_spark.streaming.events import ewma_state_stream
+
+    ts = (
+        F.format_string("2026-01-01 00:%02d", F.col("id"))
+        if axis == "string"
+        else F.lit(2**60) + F.col("id")
+    )
+    df = spark.range(12).select(
+        F.lit("a").alias("k"), ts.alias("ts"), (100 - F.col("id")).alias("eid"),
+        (F.col("id") * F.col("id") % 7).cast("double").alias("y"),
+    )
+    want = ewma_latest(df, "k", "ts", "y", 0.3, tiebreak_col="eid").collect()[0]
+    rows = _replay(
+        spark, [df],
+        lambda s: ewma_state_stream(s, "k", "ts", "y", 0.3, tiebreak_col="eid"),
+        f"raw_axis_{axis}",
+    )
+    got = _last_updates(rows, "k", "n_events")["a"]
+    assert got.n_events == want.n_events == 12
+    assert got.ewma == pytest.approx(want.ewma, rel=1e-12)
+    assert got.last_ts_micros is None
 
 
 def test_user_running_totals_stream_string_key(spark):
